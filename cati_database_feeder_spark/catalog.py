@@ -1,4 +1,4 @@
-"""Table catalog: load the canonical parquet tables and register views.
+"""Table catalog: load the canonical parquet tables.
 
 The reference reads one Excel sheet at a time into pandas
 (feeder.py:121-122); the engine's canonical storage is parquet on
@@ -55,9 +55,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every canonical table as a dict of DataFrames."""
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view so plans can be spark.sql too."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

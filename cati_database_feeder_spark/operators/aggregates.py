@@ -39,13 +39,3 @@ def dsum(col: Column) -> Column:
 def davg(col: Column) -> Column:
     """Order-insensitive double mean: exact decimal sum / count."""
     return F.sum(col.cast(_DEC)).cast("double") / F.count(col)
-
-
-def dsum_sql(expr: str) -> str:
-    """DuckDB oracle fragment matching :func:`dsum`."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE)"
-
-
-def davg_sql(expr: str) -> str:
-    """DuckDB oracle fragment matching :func:`davg`."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE) / COUNT({expr})"

@@ -12,8 +12,9 @@ feeder.py:157-160) into the family a pretraining-data pipeline needs:
 
 Scale posture: every candidate-generation step is an equi-join on a
 derived key (fingerprint, band hash, shared rare token) — never an
-O(n²) crossJoin. Signatures are computed per-row with higher-order
-functions (JVM, codegen); the only Python anywhere is none.
+O(n²) crossJoin. MinHash banding (``rep_band_buckets``) runs as one
+vectorized Arrow kernel per batch (functions/kernels.py), the only
+Python in this module; everything else is JVM expressions.
 
 Hash portability: signatures use md5-derived 60-bit ints
 (functions/text.py:hash64) so the DuckDB oracle can reproduce them
@@ -26,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cati_database_feeder_spark.functions import kernels as K
 from cati_database_feeder_spark.functions import text as T
 
 
@@ -126,9 +128,15 @@ def expand_group_pairs(rep_pairs: DataFrame, mem: DataFrame,
 
 def minhash_signature(hashes_col: Column, num_hashes: int = 16) -> Column:
     """MinHash signature from pre-computed base hashes (``token_hashes``
-    materialized as a column so codegen computes the md5s once, not once
-    per seed): element i = min over tokens of (a_i·h + b_i) mod P.
-    P[sig_i(A) == sig_i(B)] = Jaccard(A,B) — Broder 1997."""
+    materialized as a column so the md5s run once, not once per seed):
+    element i = min over tokens of (a_i·h + b_i) mod P.
+    P[sig_i(A) == sig_i(B)] = Jaccard(A,B) — Broder 1997.
+
+    Interpreted, not codegen: ``transform`` is ``CodegenFallback``, so
+    each array element goes through the expression interpreter.
+    Banding uses the Arrow kernel behind ``rep_band_buckets`` instead;
+    this Column form stays for ``minhash_calibration_check`` (queryset)
+    and as the oracle the kernel is tested against."""
 
     # closure factory, NOT a default-arg lambda (a 2-param lambda makes
     # Spark pass (element, index))
@@ -172,23 +180,24 @@ def rep_band_buckets(memb: DataFrame, num_hashes: int = 16,
     production pipeline this is the frame you MATERIALIZE per corpus
     snapshot: every future batch probes it instead of re-signing the
     corpus (incremental_near_dup_pairs)."""
-    r = num_hashes // bands
-    # the hash array is its own projection: the signature references it
-    # num_hashes times, so CollapseProject keeps the md5 pass separate
-    # instead of inlining it per seed.
-    th = (memb.filter(F.col("id") == F.col("gid"))
-          .select("id", F.transform("toks", lambda t: T.hash64(t) % F.lit(MINHASH_P))
-                         .alias("th")))
-    sig = th.select("id", minhash_signature(F.col("th"), num_hashes).alias("sig"))
-    banded = sig.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws(",", *[F.element_at("sig", b * r + j + 1).cast("string")
-                                              for j in range(r)])).alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"))
-    return banded.select("id", "bb.band", "bb.bucket")
+    from pyspark.sql.types import (IntegerType, StringType, StructField,
+                                   StructType)
+
+    # one Arrow kernel signs and bands each batch of representatives —
+    # bit-identical to md5 of the joined band values of
+    # minhash_signature(token_hashes(...)), which Spark would interpret
+    # element by element (transform is CodegenFallback)
+    coeffs = [minhash_coeffs(i) for i in range(num_hashes // bands * bands)]
+    schema = StructType([StructField("id", memb.schema["id"].dataType),
+                         StructField("band", IntegerType(), False),
+                         StructField("bucket", StringType(), False)])
+
+    def kernel(batches):
+        for batch in batches:
+            yield K.minhash_band_buckets(batch, coeffs, bands, MINHASH_P)
+
+    return (memb.filter(F.col("id") == F.col("gid"))
+            .select("id", "toks").mapInArrow(kernel, schema))
 
 
 def _bucket_pairs(buckets: DataFrame, key_cols: list[str], id_col: str,

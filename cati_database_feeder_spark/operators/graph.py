@@ -30,7 +30,6 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cati_database_feeder_spark.session import local_frame
 
 _warned_rdd_ids = False
 
@@ -149,7 +148,7 @@ def _star_components(edges_sym: DataFrame, max_rounds: int = 100) -> DataFrame:
     return out
 
 
-def _driver_union_find(srcs, dsts) -> dict[int, int]:
+def _driver_union_find(srcs, dsts):
     """Min-label components over driver-local edge arrays, vectorized:
     numpy min-propagation along the edges plus pointer doubling until
     fixpoint. The fixpoint of 'label := min(own label, neighbors'
@@ -160,13 +159,13 @@ def _driver_union_find(srcs, dsts) -> dict[int, int]:
     ~10× on the 1M-edge cap-sized graphs the bootstrap closure pulls
     to the driver). Node ids map to dense indices via np.unique
     (sorted, so index order == id order and the index minimum IS the
-    id minimum)."""
+    id minimum). Returns (nodes, labels): int64 arrays, nodes ascending."""
     import numpy as np
 
     s = np.asarray(srcs, dtype=np.int64)
     d = np.asarray(dsts, dtype=np.int64)
     if len(s) == 0:
-        return {}
+        return s, s
     nodes, idx = np.unique(np.concatenate([s, d]), return_inverse=True)
     si, di = idx[:len(s)], idx[len(s):]
     n = len(nodes)
@@ -199,7 +198,24 @@ def _driver_union_find(srcs, dsts) -> dict[int, int]:
             break
         enc = np.unique(s2[keep] * np.int64(n) + d2[keep])
         si, di = enc // n, enc % n
-    return {int(nodes[i]): int(nodes[lbl[i]]) for i in range(n)}
+    return nodes, nodes[lbl]
+
+
+def _driver_components(e: DataFrame, id_type) -> DataFrame:
+    """(id, component) of the (src, dst) edge frame ``e``, solved on the
+    driver. The labels come back as an Arrow-built frame: it is decoded
+    in the JVM, so scanning it starts no Python worker (a
+    ``local_frame`` re-runs its Python conversion on every scan)."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    edges = e.toArrow()
+    nodes, labels = _driver_union_find(edges.column("src").to_numpy(),
+                                       edges.column("dst").to_numpy())
+    schema = StructType([StructField("id", id_type),
+                         StructField("component", id_type)])
+    return e.sparkSession.createDataFrame(
+        pa.table({"id": nodes, "component": labels}), schema)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -211,17 +227,17 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     Size-gated hybrid, the same shape AQE applies to joins (broadcast
     below a threshold, shuffle above): when the edge list fits
-    ``driver_edge_cap`` it is pulled once (``limit(cap+1).toPandas()``
-    — a single Arrow-batched pass that doubles as the size probe, no
-    second execution) and solved by union-find on the driver — exact,
-    label-identical, and free of the per-round job constants that
-    dominate small-graph cost (measured ~6 s of fixed overhead for a
-    sub-second graph at sf0.1). Above the cap — or with
-    ``driver_edge_cap=None`` — the distributed path runs. The cap
-    bounds driver memory explicitly (4M edges ≈ 64 MB of Arrow longs —
-    the same bound class as the session's broadcast threshold;
-    the same bounded-driver-state class as IVF centroids and the
-    global-order bucket offsets), and the DISTRIBUTED path remains the
+    ``driver_edge_cap`` (a ``limit(cap+1).count()`` probe over the
+    persisted edges) it is pulled once as Arrow and solved by
+    union-find on the driver — exact, label-identical, and free of the
+    per-round job constants that dominate small-graph cost (measured
+    ~6 s of fixed overhead for a sub-second graph at sf0.1); the labels
+    return as an Arrow-built frame in the input id dtype. Above the
+    cap — or with ``driver_edge_cap=None`` — the distributed path
+    runs. The cap bounds driver memory explicitly (4M edges ≈ 64 MB of
+    Arrow longs — the same bound class as the session's broadcast
+    threshold; the same bounded-driver-state class as IVF centroids and
+    the global-order bucket offsets), and the DISTRIBUTED path remains the
     scale story: at 100 TB the pair graph exceeds any cap and min-label
     propagation / star-contraction do the work.
 
@@ -239,11 +255,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     sc = pairs.sparkSession.sparkContext
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
 
-    from pyspark.sql.types import (ByteType, IntegerType, LongType, ShortType,
-                                   StructField, StructType)
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
     id_type = e.schema[0].dataType
     # the driver fast path is gated on an integral id dtype:
-    # _driver_union_find's dict arithmetic assumes ints, and string/other
+    # _driver_union_find's int64 arrays assume integral ids, and string/other
     # orderable id types must keep working through the distributed path
     # (they did before the fast path existed) rather than raising
     probe_cached = False
@@ -265,13 +280,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # same question shuffle-free, and the under-cap case re-reads
         # the persisted/checkpointed edges for the actual transfer
         if e.limit(driver_edge_cap + 1).count() <= driver_edge_cap:
-            probe = e.toPandas()
-            comp = _driver_union_find(probe["src"].values, probe["dst"].values)
-            schema = StructType([StructField("id", id_type),
-                                 StructField("component", id_type)])
-            rows = sorted(comp.items())
+            out = _driver_components(e, id_type)
             e.unpersist()
-            return local_frame(pairs.sparkSession, rows, schema)
+            return out
         # Over the cap: contract with large-star rounds (Kiveris et al.
         # SoCC'14 — the same step _star_components iterates) before
         # giving up on the driver path. One round is two shuffles of the
@@ -305,14 +316,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             _release_rdds(sc, star_rdds)
             e, star_rdds = contracted, new_rdds
             if e.limit(driver_edge_cap + 1).count() <= driver_edge_cap:
-                probe = e.toPandas()
-                comp = _driver_union_find(probe["src"].values,
-                                          probe["dst"].values)
-                schema = StructType([StructField("id", id_type),
-                                     StructField("component", id_type)])
-                rows = sorted(comp.items())
+                out = _driver_components(e, id_type)
                 _release_rdds(sc, star_rdds)
-                return local_frame(pairs.sparkSession, rows, schema)
+                return out
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().persist()

@@ -37,17 +37,6 @@ def skipped_semi_join(new: DataFrame, existing_keys: DataFrame, on: str | list[s
     return new.join(keys, on=on, how="left_semi")
 
 
-def equi_join(left: DataFrame, right: DataFrame, on, how: str = "inner") -> DataFrame:
-    """E1: plain equi-join; Catalyst/AQE picks broadcast vs sort-merge."""
-    return left.join(right, on=on, how=how)
-
-
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
-    """E3: explicit broadcast hint for dimension joins (nation/region/
-    label lookups) — never shuffle the fact side for a dimension."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
-
-
 def range_join(probe: DataFrame, buckets: DataFrame, cond: Column) -> DataFrame:
     """E4: theta/range join; build side broadcast → nested-loop without
     a shuffle of the probe side."""

@@ -88,7 +88,13 @@ def local_frame(spark: SparkSession, rows, schema):
     ``schema`` must be a DDL string or ``StructType`` whenever
     ``rows`` may be empty: ``createDataFrame([], [names])`` has no
     types to infer from and raises. The assert below turns that
-    latent confusing failure (round-12 advice) into a named one."""
+    latent confusing failure (round-12 advice) into a named one.
+
+    The frame wraps a Python RDD: every scan re-runs its row
+    conversion in a Python worker. A frame scanned more than once
+    (joined, counted and written, say) should not be built with this;
+    build it from a pyarrow Table (``spark.createDataFrame(table,
+    schema)``), which the JVM decodes without Python."""
     if not rows:
         assert not isinstance(schema, (list, tuple)), (
             "local_frame with empty rows needs a typed schema (DDL "

@@ -107,20 +107,3 @@ def read_snapshot(spark: SparkSession, state_dir: str,
         live_store(os.path.join(state_dir, "snapshot")))
             .filter(F.col(op_col) != delete_op)
             .drop("__bucket"))
-
-
-def start_cdc_apply(stream_df: DataFrame, state_dir: str,
-                    checkpoint_dir: str, key_col: str, seq_cols,
-                    op_col: str = "op", trigger_seconds: int = 10):
-    """foreachBatch wiring: every micro-batch folds into the snapshot
-    store — at-least-once delivery from the checkpoint composes with
-    the fold's algebraic idempotence to effective exactly-once state."""
-    def _apply(batch_df, _batch_id):
-        apply_changes_batch(batch_df.sparkSession, batch_df, state_dir,
-                            key_col, seq_cols, op_col)
-    return (stream_df.writeStream
-            .foreachBatch(_apply)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .outputMode("update")
-            .start())

@@ -3,12 +3,14 @@
 The reference's only 'streaming' is a poll-sleep loop
 (feeder.py:103-116: ``while True: sleep(10)``). The engine restates
 continuous ingestion properly: watermarked event-time windows, session
-windows, within-watermark dedup, and a foreachBatch upsert sink — each
-the scalable twin of a reference behavior:
+windows and within-watermark dedup — each the scalable twin of a
+reference behavior:
 
-- poll-then-load            → readStream + foreachBatch jdbc upsert
 - per-wave batch dedup      → dropDuplicatesWithinWatermark
-- (no reference analog)     → tumbling/sliding/session event windows
+- (no reference analog)     → tumbling/session event windows
+
+Keyed upserts of a stream go through ``writeStream.foreachBatch`` with
+sinks/jdbc.py:merge_upsert as the batch function.
 
 The batch queries in queryset.py (events_tumbling_window,
 events_session_window) use the *same* window()/session_window()
@@ -36,17 +38,6 @@ def tumbling_window_counts(events: DataFrame, window_size: str = "5 minutes",
             .select(F.col("w.start").alias("window_start"),
                     F.col("w.end").alias("window_end"),
                     "event_type", "n_events", "value_sum"))
-
-
-def sliding_window_rates(events: DataFrame, window_size: str = "10 minutes",
-                         slide: str = "5 minutes",
-                         watermark: str = "10 minutes") -> DataFrame:
-    """Sliding windows — each event lands in window_size/slide buckets."""
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window_size, slide).alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events"))
 
 
 def session_window_stats(events: DataFrame, gap: str = "30 minutes",
@@ -103,21 +94,6 @@ def stateful_running_counts(events: DataFrame,
                 stateStructType="n long, total double",
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def start_foreach_batch_upsert(stream_df: DataFrame, upsert_fn,
-                               checkpoint_dir: str, trigger_seconds: int = 10):
-    """foreachBatch sink: every micro-batch is handed to ``upsert_fn``
-    (batch_df, batch_id) — in production sinks/jdbc.py:merge_upsert,
-    giving exactly-once-per-key keyed updates into Postgres. This is
-    the scalable restatement of the reference's poll-then-UPDATE loop
-    (add_q5010.py:33-41)."""
-    return (stream_df.writeStream
-            .foreachBatch(upsert_fn)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .outputMode("update")
-            .start())
 
 
 def enrich_with_dimension(events: DataFrame, dim: DataFrame,

@@ -1243,13 +1243,6 @@ def _sk_merge_delta(spark, state_dir: str, name: str, delta: DataFrame,
                                  extra_rows=ledger), sk_dir)
 
 
-def _cms_merge_delta(spark, state_dir: str, delta: DataFrame,
-                     depth: int = CMS_DEPTH,
-                     width: int = CMS_WIDTH) -> None:
-    _sk_merge_delta(spark, state_dir, "cms", delta, _cms_of, depth,
-                    width)
-
-
 def _sk_gc_pending(state_dir: str, name: str) -> None:
     """Drop the ``name`` sidecar after the corpus commit marker: its
     delta is now corpus-true, so takedown no longer needs it (the
@@ -1497,8 +1490,8 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # the banding table is persisted ONCE and feeds both the
         # buckets store write (pool) and candidate generation in the
         # verify below (rep_candidates=) — unpersisted, the signature
-        # pass (md5 + 16 minhash transforms over every rep token ran
-        # twice per bootstrap
+        # kernel (md5 + minhash over every rep token) ran twice per
+        # bootstrap
         bb = dedup.rep_band_buckets(memb, num_hashes, bands).persist()
         bb.count()
         store_futs = [

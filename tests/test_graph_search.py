@@ -4,6 +4,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pytest
 from pyspark.sql import functions as F
 
 from cati_database_feeder_spark.operators.graph import connected_components
@@ -63,6 +64,22 @@ def test_connected_components_contraction_preserves_chains(spark):
                for r in connected_components(
                    pairs, driver_edge_cap=cap).collect()}
         assert got == {i: 0 for i in range(7)}, f"cap={cap}: {got}"
+
+
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_connected_components_driver_labels_are_jvm_frame(spark, id_type):
+    # the driver path's labels keep the input id dtype, equal the
+    # union-find, and scanning them runs no Python worker
+    from cati_database_feeder_spark.operators.graph import _driver_union_find
+    edges = [(1, 2), (2, 3), (10, 11), (7, 3), (20, 21), (21, 22), (5, 30)]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    out = connected_components(pairs)
+    assert out.schema.simpleString() == (
+        f"struct<id:{id_type},component:{id_type}>")
+    nodes, labels = _driver_union_find(*zip(*edges))
+    assert {r["id"]: r["component"] for r in out.collect()} == dict(
+        zip(nodes.tolist(), labels.tolist()))
+    assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
 
 
 def test_components_from_rep_pairs_matches_expanded_closure(spark):
