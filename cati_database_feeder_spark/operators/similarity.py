@@ -12,18 +12,62 @@ Three tiers, trading recall for scale:
    This is the 100 TB shape: the corpus is partitioned by cell id
    once (write-time layout), and each query touches a few cells.
 
-All scoring is the deterministic double-precision cosine from
-functions/vectors.py (JVM higher-order functions, no Python).
+Scoring is the deterministic double-precision cosine of
+functions/vectors.py (JVM higher-order functions). Nearest-cell
+assignment, JL projection and multi-table LSH signatures run as Arrow
+kernels (functions/kernels.py) with the model broadcast as a numpy
+array, so no plan embeds a model; they fold in the same order as the
+JVM forms, so every value is bit-identical to them.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
+                               StringType, StructField, StructType)
 
-from cati_database_feeder_spark.session import local_frame
-
+from cati_database_feeder_spark.functions import kernels as K
 from cati_database_feeder_spark.functions import vectors as V
+
+
+def _with_kernel_column(df: DataFrame, field: StructField,
+                        column_of) -> DataFrame:
+    """``df`` with ``field`` set to ``column_of(batch)`` for every Arrow
+    batch — one functions/kernels.py kernel in one map-only
+    ``mapInArrow``. A column of the same name is replaced in place, as
+    ``withColumn`` does."""
+    fields = [field if f.name == field.name else f for f in df.schema.fields]
+    if field.name not in df.columns:
+        fields.append(field)
+    names = [f.name for f in fields]
+
+    def batches(it):
+        for b in it:
+            cols = dict(zip(b.schema.names, b.columns))
+            cols[field.name] = column_of(b)
+            yield pa.RecordBatch.from_arrays([cols[n] for n in names],
+                                             names=names)
+
+    return df.mapInArrow(batches, StructType(fields))
+
+
+def _with_nearest_cells(df: DataFrame,
+                        centroid_rows: list[tuple[int, list[float]]],
+                        vec_col: str, out_col: str, n: int,
+                        by: str) -> DataFrame:
+    """``out_col`` = array of the ``n`` nearest cell ids per row,
+    nearest first (functions/kernels.py:nearest_cells). ``by='l2'``
+    ranks by euclidean distance, ``by='ip'`` by negated inner product;
+    ties go to the smaller cell id. The centroids travel as one
+    broadcast numpy pair, so the plan is the same size at 16 cells or
+    2^15, and there is no join and no shuffle."""
+    model = df.sparkSession.sparkContext.broadcast(K.cell_model(centroid_rows))
+    return _with_kernel_column(
+        df, StructField(out_col, ArrayType(IntegerType(), False)),
+        lambda b: K.nearest_cells(b, vec_col, *model.value, n, by))
 
 
 def _two_level_rank(scored: DataFrame, part_col: str, order_cols,
@@ -94,9 +138,7 @@ def gaussian_hyperplanes(dim: int, n_bits: int = 8,
     seed (legacy MT19937 RandomState — its standard_normal stream is
     frozen by numpy's compatibility policy, so the planes are stable
     across versions, runs and engines). Generated once on the driver,
-    embedded as plan literals — the same determinism trick as the IVF
-    centroid literals (:func:`_centroid_literal`): no broadcast, no
-    join, and a SQL oracle can carry the identical constants verbatim.
+    so a SQL oracle can carry the identical constants verbatim.
 
     This is the production bucketing for :func:`with_lsh_bucket`:
     coordinate-sign planes (the ``hyperplanes=None`` fallback) degrade
@@ -105,7 +147,6 @@ def gaussian_hyperplanes(dim: int, n_bits: int = 8,
     of buckets; Gaussian directions split any direction of variance
     with probability proportional to the angle (Charikar 2002), so
     bucket balance tracks the data's actual spread."""
-    import numpy as np
     rs = np.random.RandomState(seed)
     return [[float(x) for x in row]
             for row in rs.standard_normal((n_bits, dim))]
@@ -168,97 +209,32 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
 
 def with_lsh_table_buckets(df: DataFrame, vec_col: str, id_col: str,
                            hyperplanes: list[list[float]],
-                           n_bits: int, n_tables: int,
-                           kernel: str = "hof") -> DataFrame:
+                           n_bits: int, n_tables: int) -> DataFrame:
     """(id, tbl, bucket) signature rows for multi-TABLE LSH: table t
     buckets by the signs of planes [t·n_bits, (t+1)·n_bits). One
-    map-only projection per row exploding to ``n_tables`` rows — the
-    standard L-tables recall amplifier (collide in ANY table ⇒
-    candidate): per-table collision p^b becomes 1-(1-p^b)^L.
+    map-only Arrow kernel (functions/kernels.py:sign_buckets) emits
+    ``n_tables`` rows per input row — the standard L-tables recall
+    amplifier (collide in ANY table ⇒ candidate): per-table collision
+    p^b becomes 1-(1-p^b)^L.
 
-    Two kernels, same output contract:
-
-    - ``"hof"`` (default): plane dots as sequential JVM folds over
-      literals — bit-reproducible in a SQL oracle. The signature pass
-      is Catalyst-HOF-interpreted, ~3.2 s for 2k×64-plane at sf0.1.
-    - ``"arrow"``: one Arrow-batched numpy matmul per partition
-      (``mapInPandas`` — the documented legitimate Python tier, like
-      the multimodal decoders): measured 0.48 s on the same input,
-      6.7×, zero bucket disagreements on the test corpus. CAVEAT:
-      BLAS reorders the accumulation, so a knife-edge dot (|⟨v,h⟩|
-      within float error of 0) can flip a sign vs the sequential
-      fold — buckets are NOT bit-contractual across kernels. Use hof
-      wherever a SQL oracle replays the signatures value-by-value;
-      arrow for serving paths and recall-gated contracts, where a
-      boundary flip moves one candidate, not a verdict."""
+    Each bit is "1" when the sequential-fold dot with its plane is
+    >= 0, the same sum as ``V.dot``, so buckets are bit-reproducible in
+    a SQL oracle. A null, short or null-holding vector gets all-"0"
+    buckets. The planes travel as a broadcast numpy array."""
     if len(hyperplanes) != n_bits * n_tables:
         raise ValueError(f"need n_bits*n_tables={n_bits * n_tables} "
                          f"hyperplanes, got {len(hyperplanes)}")
-    if kernel == "arrow":
-        return _table_buckets_arrow(df, vec_col, id_col, hyperplanes,
-                                    n_bits, n_tables)
-    if kernel != "hof":
-        raise ValueError(f"kernel must be 'hof' or 'arrow', got {kernel!r}")
-    # ONE transform over a 2-D plane literal instead of n_bits*n_tables
-    # inlined dot-product folds: the inlined form compiles ~L·b separate
-    # zip_with/aggregate chains per row (measured: codegen+eval made the
-    # recall gate the 2nd most expensive bench entry); the HOF loop
-    # compiles once and evaluates the same sequential-fold dots. Staged
-    # as its own projection so the bits compute once per row, then each
-    # table's bucket is a slice+join of the staged array.
-    planes = V.lit_nested([[float(x) for x in p] for p in hyperplanes])
-    bits = F.transform(
-        planes,
-        lambda p: F.when(V.dot(F.col(vec_col), p) >= 0,
-                         F.lit("1")).otherwise(F.lit("0")))
-    staged = df.select(F.col(id_col), bits.alias("__bits"))
-    rows = [F.struct(F.lit(t).alias("tbl"),
-                     F.array_join(F.slice("__bits", t * n_bits + 1, n_bits),
-                                  "").alias("bucket"))
-            for t in range(n_tables)]
-    return (staged.select(id_col, F.explode(F.array(*rows)).alias("s"))
-            .select(id_col, "s.tbl", "s.bucket"))
-
-
-def _table_buckets_arrow(df: DataFrame, vec_col: str, id_col: str,
-                         hyperplanes: list[list[float]],
-                         n_bits: int, n_tables: int) -> DataFrame:
-    """Arrow kernel for :func:`with_lsh_table_buckets`: per Arrow
-    batch, ONE numpy (rows × dim)·(dim × planes) matmul computes every
-    sign bit, then per-table buckets slice the bit matrix. Plane
-    matrix ships by broadcast (a few KB); output is the same
-    (id, tbl, bucket) contract as the HOF kernel."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                   StructType)
-
-    id_type = df.schema[id_col].dataType
-    schema = StructType([StructField(id_col, id_type),
-                         StructField("tbl", IntegerType()),
-                         StructField("bucket", StringType())])
-    bplanes = df.sparkSession.sparkContext.broadcast(
-        np.asarray(hyperplanes, dtype=np.float64).T)
+    planes = df.sparkSession.sparkContext.broadcast(
+        np.asarray(hyperplanes, dtype=np.float64))
+    schema = StructType([StructField(id_col, df.schema[id_col].dataType),
+                         StructField("tbl", IntegerType(), False),
+                         StructField("bucket", StringType(), False)])
 
     def batches(it):
-        P = bplanes.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.stack(pdf[vec_col].values).astype(np.float64)
-            S = (V @ P) >= 0
-            ids = pdf[id_col].values
-            frames = []
-            for t in range(n_tables):
-                chunk = S[:, t * n_bits:(t + 1) * n_bits]
-                frames.append(pd.DataFrame({
-                    id_col: ids,
-                    "tbl": t,
-                    "bucket": ["".join("1" if b else "0" for b in row)
-                               for row in chunk]}))
-            yield pd.concat(frames, ignore_index=True)
+        for b in it:
+            yield K.sign_buckets(b, planes.value, n_bits, n_tables)
 
-    return df.select(id_col, vec_col).mapInPandas(batches, schema)
+    return df.select(id_col, vec_col).mapInArrow(batches, schema)
 
 
 def lsh_topk_tables(queries: DataFrame, corpus: DataFrame,
@@ -266,8 +242,7 @@ def lsh_topk_tables(queries: DataFrame, corpus: DataFrame,
                     n_bits: int = 4, n_tables: int = 16,
                     q_id: str = "q_id", q_vec: str = "q_vec",
                     c_id: str = "vec_id",
-                    c_vec: str = "embedding",
-                    kernel: str = "hof") -> DataFrame:
+                    c_vec: str = "embedding") -> DataFrame:
     """Approximate top-k with L-table LSH: candidates collide in at
     least one of ``n_tables`` independent ``n_bits``-bit sign
     signatures, then exact cosine rerank. The production recall knob
@@ -282,9 +257,9 @@ def lsh_topk_tables(queries: DataFrame, corpus: DataFrame,
     no crossJoin anywhere; AQE broadcasts the query side of each join
     when genuinely small."""
     qs = with_lsh_table_buckets(queries, q_vec, q_id,
-                                hyperplanes, n_bits, n_tables, kernel)
+                                hyperplanes, n_bits, n_tables)
     cs = with_lsh_table_buckets(corpus, c_vec, c_id,
-                                hyperplanes, n_bits, n_tables, kernel)
+                                hyperplanes, n_bits, n_tables)
     cands = (qs.join(cs, ["tbl", "bucket"])
              .select(q_id, c_id).distinct())
     qv = queries.withColumn("__qn", V.norm(F.col(q_vec)))
@@ -420,146 +395,33 @@ def incremental_semdedup_pairs(delta: DataFrame, corpus_assigned: DataFrame,
     return within.unionByName(cross)
 
 
-def _centroid_literal(centroid_rows: list[tuple[int, list[float]]]):
-    """Driver-side centroid table as TWO flat literal columns (cells:
-    ``array<int>``, centroids: ``array<array<double>>``) zipped into
-    structs. ``F.lit`` on the nested list produces a single Literal
-    node, so plan analysis cost is independent of n_cells·dim — a
-    per-element ``F.array(F.lit(...)...)`` tree costs ~1k expression
-    nodes per use and dominates iteration time. A few KB of constants
-    shipped with the plan — no join, no broadcast exchange."""
-    cells = V.lit_nested([int(c) for c, _ in centroid_rows])
-    cents = V.lit_nested([[float(x) for x in vec] for _, vec in centroid_rows])
-    return F.zip_with(cells, cents,
-                      lambda c, v: F.struct(c.alias("cell"), v.alias("centroid")))
-
-
-def _nearest_cells_expr(vec, cent_arr, n: int = 1, by: str = "l2"):
-    """Array of the ``n`` nearest cell ids for one vector against ANY
-    ``array<struct<cell,centroid>>`` column expression (a plan literal
-    or a broadcast-joined data column — the two centroid-distribution
-    tiers share this exact argmin, which is what makes them bit-equal):
-    transform to ``(distance, cell)`` structs, ``array_sort`` (distance
-    asc, cell asc tie-break), slice. Zero shuffle, zero window."""
-    if by == "ip":
-        dist = lambda c: -V.dot(vec, c["centroid"])
-    else:
-        dist = lambda c: V.l2_distance(vec, c["centroid"])
-    pairs = F.transform(cent_arr,
-                        lambda c: F.struct(dist(c).alias("d"),
-                                           c["cell"].alias("cell")))
-    return F.transform(F.slice(F.array_sort(pairs), 1, n), lambda p: p["cell"])
-
-
-def nearest_cells(vec, centroid_rows: list[tuple[int, list[float]]],
-                  n: int = 1, by: str = "l2"):
-    """Array of the ``n`` nearest cell ids for one vector, computed
-    PER ROW over the literal centroid array — the scale-safe
-    replacement for the crossJoin+row_number argmin the round-1 verdict
-    flagged (it shuffled corpus×n_cells rows per use).
-
-    ``by='l2'`` ranks by euclidean distance; ``by='ip'`` by (negated)
-    inner product — the latter is bit-reproducible in DuckDB via
-    ``list_dot_product``, which makes fixed-centroid assignment fully
-    SQL-oracle-able.
-
-    Model-size ceiling: the literal array ships n_cells·dim doubles
-    INSIDE the plan — a few KB at small models, but a production IVF
-    (n_cells ≈ 2^14–2^17 × 1k dims) would hand the analyzer a
-    ~250 MB plan. Past a few hundred cells use the broadcast-data
-    tier (:func:`assign_cells_joined` / :func:`with_nearest_cells_joined`),
-    which ships the same array as a broadcast ROW instead."""
-    return _nearest_cells_expr(vec, _centroid_literal(centroid_rows), n, by)
-
-
-def centroid_frame(spark, centroid_rows: list[tuple[int, list[float]]]) -> DataFrame:
-    """Driver-side centroid list as a (cell int, centroid
-    array<double>) DataFrame — the model-as-data form the broadcast
-    tier joins. In production this is simply the trained-centroid
-    table read from storage; no driver literal ever holds it."""
-    return local_frame(
-        spark, [(int(c), [float(x) for x in vec]) for c, vec in centroid_rows],
-        "cell int, centroid array<double>")
-
-
-def with_nearest_cells_joined(df: DataFrame, centroids: DataFrame,
-                              vec_col: str, out_col: str,
-                              n: int = 1, by: str = "l2") -> DataFrame:
-    """``out_col`` = array of the ``n`` nearest cell ids per row, with
-    the centroid model delivered as BROADCAST DATA instead of a plan
-    literal (round-10 verdict item 2 — the production-model-size tier):
-    the centroid frame is collapsed to ONE row holding the sorted
-    ``array<struct<cell,centroid>>``, broadcast, and joined on a
-    constant key. Catalyst constant-folds the key and plans a
-    BroadcastNestedLoopJoin with a SINGLE build row — the right
-    physical shape: one broadcast variable, zero shuffle on the probe
-    side, zero per-row fan-out (each corpus row meets exactly one
-    build row), no hash table needed. The SAME argmin
-    expression the literal tier uses then runs per row. Bit-equal to
-    :func:`nearest_cells` on the same centroid set (pytest-pinned):
-    the collect_list order is normalized by array_sort and the
-    (distance, cell) ranking is order-independent anyway.
-
-    Plan cost is O(1) in model size — n_cells·dim doubles travel in a
-    broadcast variable, never through the analyzer — so this is the
-    form that survives n_cells ≈ 2^15 × 1k dims, where the literal
-    tier's ~250 MB plan would kill the driver. Crossover measured in
-    SCALING.md (the literal tier stays marginally cheaper only while
-    the model is a few KB)."""
-    one = (centroids.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct(
-            F.col("cell").cast("int").alias("cell"),
-            F.col("centroid").alias("centroid")))).alias("__cents"))
-        .withColumn("__ck", F.lit(1)))
-    joined = (df.withColumn("__ck", F.lit(1))
-              .join(F.broadcast(one), "__ck")
-              .drop("__ck"))
-    return (joined.withColumn(
-        out_col,
-        _nearest_cells_expr(F.col(vec_col), F.col("__cents"), n, by))
-        .drop("__cents"))
-
-
-def assign_cells_joined(corpus: DataFrame, centroids: DataFrame,
-                        c_vec: str = "embedding", by: str = "l2",
-                        out_col: str = "cell") -> DataFrame:
-    """Broadcast-data twin of :func:`assign_cells`: tag every corpus
-    row with its nearest centroid cell, with the model joined as data
-    (see :func:`with_nearest_cells_joined`). Bit-equal output; the
-    plan no longer embeds the model."""
-    tagged = with_nearest_cells_joined(corpus, centroids, c_vec,
-                                       "__nc", 1, by)
-    return (tagged.withColumn(out_col, F.element_at("__nc", 1))
-            .drop("__nc"))
-
-
 def assign_cells(corpus: DataFrame, centroid_rows: list[tuple[int, list[float]]],
                  c_vec: str = "embedding", by: str = "l2",
                  out_col: str = "cell") -> DataFrame:
     """Tag every corpus row with its nearest centroid cell — a narrow
-    per-row projection (map-only stage). At 100 TB this runs once at
-    write time and the corpus parquet is partitioned by ``cell``."""
-    return corpus.withColumn(
-        out_col, F.element_at(nearest_cells(F.col(c_vec), centroid_rows, 1, by), 1))
+    per-row kernel (map-only stage, :func:`_with_nearest_cells`). At
+    100 TB this runs once at write time and the corpus parquet is
+    partitioned by ``cell``."""
+    return (_with_nearest_cells(corpus, centroid_rows, c_vec, "__nc", 1, by)
+            .withColumn(out_col, F.element_at("__nc", 1)).drop("__nc"))
 
 
 def train_ivf_centroids(corpus: DataFrame, n_cells: int = 16,
                         c_id: str = "vec_id", c_vec: str = "embedding",
                         iterations: int = 2,
                         max_share: float | None = None,
-                        return_stats: bool = False,
-                        joined_assign: bool | None = None):
+                        return_stats: bool = False):
     """K-means-ish coarse quantizer: seed cells by id hash, then Lloyd
-    iterations of assign (per-row literal-centroid argmin, map-only)
-    + re-center (one groupBy per iteration). No corpus-wide window, no
-    crossJoin — the only shuffle per iteration is the n_cells-group
-    aggregate.
+    iterations of assign (:func:`assign_cells` — the per-row argmin
+    kernel, map-only) + re-center (one groupBy per iteration). No
+    corpus-wide window, no crossJoin — the only shuffle per iteration
+    is the n_cells-group aggregate.
 
     Centroids are COLLECTED to the driver after every iteration
-    (n_cells·dim doubles — a few KB, bounded) and re-embedded as plan
-    literals: state lives on the driver, data never leaves executors,
-    and each iteration's plan stays flat instead of nesting the
-    previous iteration's plan inside it.
+    (n_cells·dim doubles, bounded) and broadcast to the next
+    assignment: state lives on the driver, data never leaves
+    executors, and each iteration's plan stays flat instead of nesting
+    the previous iteration's plan inside it.
 
     ``max_share`` is the occupancy-aware training hook (round-8
     verdict item 8): per-cell MASS rides the same (cell, pos)
@@ -630,26 +492,12 @@ def train_ivf_centroids(corpus: DataFrame, n_cells: int = 16,
                 out.append(vec)
         return [(i, v) for i, v in enumerate(out)], shares
 
-    def _assign(centroids):
-        # centroid-distribution tier: plan literals while the model is
-        # a few KB, the broadcast-data join past a few hundred cells
-        # (production IVF wants n_cells ≈ √N — a 2^15-cell literal is
-        # a ~250 MB plan; the two tiers are bit-equal, pytest-pinned).
-        # joined_assign=None auto-switches; True/False forces a tier.
-        use_joined = (len(centroids) > 256 if joined_assign is None
-                      else joined_assign)
-        if use_joined:
-            return assign_cells_joined(
-                corpus, centroid_frame(corpus.sparkSession, centroids),
-                c_vec)
-        return assign_cells(corpus, centroids, c_vec)
-
     stats: list[dict[int, float]] = []
     centroids, _ = _centroids_of(
         corpus.select(c_id, c_vec, (F.col(c_id) % n_cells).alias("cell")))
     did_split = False
     for _ in range(iterations):
-        assigned = _assign(centroids)
+        assigned = assign_cells(corpus, centroids, c_vec)
         centroids, mass = _centroids_of(assigned)
         if max_share is not None:
             new_c, shares = _split_hot(assigned, centroids, mass)
@@ -671,7 +519,7 @@ def train_ivf_centroids(corpus: DataFrame, n_cells: int = 16,
     extra = 0
     while max_share is not None and did_split and extra < 8:
         extra += 1
-        assigned = _assign(centroids)
+        assigned = assign_cells(corpus, centroids, c_vec)
         centroids, mass = _centroids_of(assigned)
         new_c, shares = _split_hot(assigned, centroids, mass)
         did_split = new_c != centroids
@@ -687,39 +535,16 @@ def ivf_topk(queries: DataFrame, corpus_assigned: DataFrame,
              k: int = 10, nprobe: int = 4, q_id: str = "q_id", q_vec: str = "q_vec",
              c_id: str = "vec_id", c_vec: str = "embedding",
              by: str = "l2") -> DataFrame:
-    """Probe the ``nprobe`` nearest cells per query (per-row literal
-    argmin — no crossJoin, no window on the query side), exact cosine
+    """Probe the ``nprobe`` nearest cells per query (per-row argmin
+    kernel — no crossJoin, no window on the query side), exact cosine
     rerank inside the probed cells. ``corpus_assigned`` must carry a
     ``cell`` column (write-time layout: partition the corpus parquet by
     cell, so the probe join prunes partitions). The probe join is
     hint-free — AQE broadcasts a small probe set on its own, and a
     corpus-derived (linearly scaling) query frame degrades to a
     shuffle join on ``cell`` instead of an unconditional broadcast."""
-    probes = (queries
-              .withColumn("cell", F.explode(
-                  nearest_cells(F.col(q_vec), centroid_rows, nprobe, by)))
-              .withColumn("__qn", V.norm(F.col(q_vec)))
-              .select(q_id, q_vec, "__qn", "cell"))
-    scored = (corpus_assigned.withColumn("__cn", V.norm(F.col(c_vec)))
-              .join(probes, on="cell")
-              .withColumn("cosine", V.cosine_from_norms(
-                  F.col(c_vec), F.col(q_vec), F.col("__cn"), F.col("__qn"))))
-    return _topk_output(scored, q_id, c_id, k)
-
-
-def ivf_topk_joined(queries: DataFrame, corpus_assigned: DataFrame,
-                    centroids: DataFrame,
-                    k: int = 10, nprobe: int = 4,
-                    q_id: str = "q_id", q_vec: str = "q_vec",
-                    c_id: str = "vec_id", c_vec: str = "embedding",
-                    by: str = "l2") -> DataFrame:
-    """:func:`ivf_topk` with the probe argmin fed by the BROADCAST
-    centroid frame instead of the plan literal — the serving half of
-    the production-model-size tier (the corpus side already reads a
-    stored ``cell`` column either way). Bit-equal to :func:`ivf_topk`
-    on the same centroid set; plan cost O(1) in n_cells·dim."""
-    probes = (with_nearest_cells_joined(queries, centroids, q_vec,
-                                        "__pc", nprobe, by)
+    probes = (_with_nearest_cells(queries, centroid_rows, q_vec, "__pc",
+                                  nprobe, by)
               .withColumn("cell", F.explode("__pc"))
               .withColumn("__qn", V.norm(F.col(q_vec)))
               .select(q_id, q_vec, "__qn", "cell"))
@@ -964,7 +789,7 @@ def ivf_topk_quantized(queries: DataFrame, corpus_codes: DataFrame,
     Two-stage shape:
 
     1. Coarse, int8-resident: probe the ``nprobe`` nearest cells per
-       query (per-row literal argmin, map-only), score candidates by
+       query (per-row argmin kernel, map-only), score candidates by
        cosine over the MIDPOINT-DEQUANTIZED codes
        (functions/vectors.py:dequantize_int8 — deterministic IEEE
        double HOFs, no Python), keep the top ``rerank`` per query
@@ -978,14 +803,14 @@ def ivf_topk_quantized(queries: DataFrame, corpus_codes: DataFrame,
        exact cosine, top ``k``.
 
     ``lo``/``hi`` are the corpus-global quantization range: two
-    driver-side doubles (the same bounded model state as the centroid
-    literals). Recall is gated, not assumed —
+    driver-side doubles (the same bounded model state as the
+    centroids). Recall is gated, not assumed —
     ``ivf_quantized_recall_check`` hash-pins mean recall@k vs exact
     brute force, the contract that catches a quantizer (or range)
     regression as a value mismatch."""
-    probes = (queries
-              .withColumn("cell", F.explode(
-                  nearest_cells(F.col(q_vec), centroid_rows, nprobe, by)))
+    probes = (_with_nearest_cells(queries, centroid_rows, q_vec, "__pc",
+                                  nprobe, by)
+              .withColumn("cell", F.explode("__pc"))
               .withColumn("__qn", V.norm(F.col(q_vec)))
               .select(q_id, q_vec, "__qn", "cell"))
     deq = V.dequantize_int8(F.col(codes_col), F.lit(float(lo)),
@@ -1079,54 +904,20 @@ def jl_project(df: DataFrame, vec_col: str,
                planes: list[list[float]],
                out_col: str = "proj") -> DataFrame:
     """Johnson–Lindenstrauss random projection (extension E59):
-    ``out[i] = ⟨v, r_i⟩`` over a seeded-Gaussian literal matrix
+    ``out[i] = ⟨v, r_i⟩`` over a seeded-Gaussian matrix
     (:func:`gaussian_hyperplanes` rows — JL needs only a random
     Gaussian matrix, and the constant 1/√d scale drops out of every
-    cosine, so the planes are reused verbatim). One ``transform``
-    over a single 2-D plane literal — the compiled-once form that
-    fixed lsh_recall_check in round 8 — map-only, JVM-side, and each
-    output element is one sequential-fold dot, so a SQL oracle
-    replays the projected vectors bit-for-bit from the same
-    literals."""
-    pl = V.lit_nested([[float(x) for x in p] for p in planes])
-    return df.withColumn(
-        out_col, F.transform(pl, lambda p: V.dot(F.col(vec_col), p)))
-
-
-def planes_frame(spark, planes: list[list[float]]) -> DataFrame:
-    """Driver-side JL plane matrix as an (idx int, plane
-    array<double>) DataFrame — the EXACT schema the ingest store's
-    ``planes/`` table uses (streaming/ingest_embeddings.py), so a
-    store-backed pipeline passes its planes table here directly."""
-    return local_frame(
-        spark, [(i, [float(x) for x in p]) for i, p in enumerate(planes)],
-        "idx int, plane array<double>")
-
-
-def jl_project_joined(df: DataFrame, planes: DataFrame, vec_col: str,
-                      out_col: str = "proj") -> DataFrame:
-    """:func:`jl_project` with the plane matrix delivered as BROADCAST
-    DATA instead of a plan literal — the same model-size tier as
-    :func:`assign_cells_joined` (E84), applied to the projection
-    model: the planes frame is collapsed to one idx-ordered
-    ``array<struct<idx,plane>>`` row, broadcast, joined on a constant
-    key (single-build-row BroadcastNestedLoopJoin after constant
-    folding), and the SAME sequential-fold dot runs per row — bit-
-    equal to the literal form (pytest-pinned). At production dims a
-    d'=32 × 4k-dim literal is ~1 MB of plan PER USE; here it is one
-    broadcast variable. The literal form remains the SQL-oracle path
-    (the oracle replays those literals)."""
-    one = (planes.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct(
-            F.col("idx").cast("int").alias("idx"),
-            F.col("plane").alias("plane")))).alias("__planes"))
-        .withColumn("__pk", F.lit(1)))
-    joined = (df.withColumn("__pk", F.lit(1))
-              .join(F.broadcast(one), "__pk").drop("__pk"))
-    return (joined.withColumn(
-        out_col, F.transform(F.col("__planes"),
-                             lambda s: V.dot(F.col(vec_col), s["plane"])))
-        .drop("__planes"))
+    cosine, so the planes are reused verbatim). One map-only Arrow
+    kernel (functions/kernels.py:project) with the planes broadcast as
+    a numpy array; each output element is one sequential-fold dot, so
+    a SQL oracle replays the projected vectors bit-for-bit from the
+    same planes. A null, short or null-holding vector projects to a
+    list of nulls."""
+    pl = df.sparkSession.sparkContext.broadcast(
+        np.asarray(planes, dtype=np.float64))
+    return _with_kernel_column(
+        df, StructField(out_col, ArrayType(DoubleType(), True)),
+        lambda b: K.project(b, vec_col, pl.value))
 
 
 def jl_topk(queries: DataFrame, corpus: DataFrame,
@@ -1165,15 +956,10 @@ def jl_topk(queries: DataFrame, corpus: DataFrame,
     avoid; a fixed budget keeps rerank cost constant and surfaces any
     recall dilution in the gate instead of hiding it in the plan.
 
-    Determinism: projected values are sequential-fold dots of plan
-    literals; both ranking stages break ties on ascending id — an
-    oracle replays the exact candidate set and the exact top-k.
-    (Model-size note: the plane literal here is n_planes·dim doubles
-    per use — fine at test dims, ~1 MB of plan at 32×4k. Past that,
-    project through :func:`jl_project_joined` — bit-equal, broadcast
-    data — and feed the result in via ``corpus_proj``; the planes
-    stay SQL-oracle-able only on the literal path, which is why the
-    registered queries keep it.)
+    Determinism: projected values are sequential-fold dots
+    (:func:`jl_project`); both ranking stages break ties on ascending
+    id — an oracle replays the exact candidate set and the exact
+    top-k.
 
     ``corpus_proj`` (optional): a PRE-PROJECTED corpus frame
     ``(c_id, proj_col)`` — e.g. the ingest-maintained store
@@ -1193,7 +979,7 @@ def jl_topk(queries: DataFrame, corpus: DataFrame,
         # streaming/ingest_embeddings.projected_serving_frames): the
         # coarse tier reads the stored narrow column instead of
         # projecting the full vectors at serve time. Stored values are
-        # jl_project outputs under the SAME plane literals, so the
+        # jl_project outputs under the SAME planes, so the
         # result is bit-identical to the in-plan form (pinned by test).
         cp = (corpus_proj.select(c_id, F.col(proj_col).alias("__cp"))
               .withColumn("__cpn", V.norm(F.col("__cp"))))
@@ -1308,18 +1094,19 @@ def jl_ivf_topk(queries: DataFrame, corpus_assigned: DataFrame,
     narrow column — the probe join prunes partitions (DPP) and the
     coarse scan prunes columns.
 
-    Pipeline: per-query literal-argmin probe (map-only, no window) →
+    Pipeline: per-query argmin-kernel probe (map-only, no window) →
     projected-cosine scoring restricted by the cell join → the
     family-wide two-level top-k to ``coarse_k`` → exact full-width
     rerank of the bounded candidate set. Determinism: every score a
-    sequential-fold dot of plan literals, both ranks id-tie-broken —
+    sequential-fold dot, both ranks id-tie-broken —
     an oracle replays candidates and top-k exactly. Recall is gated
     by ``jl_ivf_recall_check`` at the fixed (nprobe, coarse_k)
     budget, the same contract every serving tier here holds."""
     qp = (jl_project(queries, q_vec, planes, "__qp")
           .withColumn("__qpn", V.norm(F.col("__qp"))))
-    probes = (qp.withColumn("cell", F.explode(
-                  nearest_cells(F.col(q_vec), centroid_rows, nprobe, by)))
+    probes = (_with_nearest_cells(qp, centroid_rows, q_vec, "__pc",
+                                  nprobe, by)
+              .withColumn("cell", F.explode("__pc"))
               .select(q_id, "__qp", "__qpn", "cell"))
     cp = (jl_project(corpus_assigned.select(c_id, c_vec, "cell"),
                      c_vec, planes, "__cp")
@@ -1355,11 +1142,12 @@ def jl_ivf_topk(queries: DataFrame, corpus_assigned: DataFrame,
 
 def _pq_codebook_literal(codebooks: list[list[list[float]]]):
     """The [m][ks][dsub] codebook tensor as ONE plan literal
-    (array<array<array<double>>>) — same single-Literal-node economics
-    as :func:`_centroid_literal`. A PQ model is m·ks·dsub doubles
-    (8·16·8 = 1 KB here; 8·256·128 = 2 MB at a production 1024-dim /
-    8-bit setup) — small enough for the literal tier at test size;
-    past a few hundred KB ship it like the centroid broadcast tier."""
+    (array<array<array<double>>>): ``lit_nested`` makes it a single
+    Literal node, so plan analysis cost is independent of its size. A
+    PQ model is m·ks·dsub doubles (8·16·8 = 1 KB here; 8·256·128 =
+    2 MB at a production 1024-dim / 8-bit setup) — small enough for a
+    literal at test size; past a few hundred KB ship it as a broadcast
+    numpy array like the centroids (:func:`_with_nearest_cells`)."""
     return V.lit_nested([[[float(x) for x in code] for code in sub]
                          for sub in codebooks])
 
@@ -1381,9 +1169,10 @@ def pq_codebooks_from_seeds(seed_vecs: list[list[float]],
 
 def _pq_code_expr(sub_vec, cb_sub):
     """Code for one subspace: argmax inner product against the
-    subspace's codebook entries, smallest index on ties — the exact
-    (-ip, j) struct-sort argmin :func:`_nearest_cells_expr` uses, so
-    a SQL oracle replays it with ROW_NUMBER(ORDER BY ip DESC, j)."""
+    subspace's codebook entries, smallest index on ties — a (-ip, j)
+    struct ``array_sort``, the same order the nearest-cell kernel
+    ranks by, so a SQL oracle replays it with
+    ROW_NUMBER(ORDER BY ip DESC, j)."""
     pairs = F.transform(cb_sub, lambda c, j: F.struct(
         (-V.dot(sub_vec, c)).alias("d"), j.cast("int").alias("j")))
     return F.element_at(F.array_sort(pairs), 1)["j"]
@@ -1566,7 +1355,7 @@ def ivfpq_topk(queries: DataFrame, codes_assigned: DataFrame,
 
     ``codes_assigned``: (c_id, cell, codes) — the write-time layout
     frame (cell assignment and PQ codes are both ingest-time
-    artifacts). Determinism: probes are literal-argmin, codes exact
+    artifacts). Determinism: probes are the argmin kernel, codes exact
     argmax, ADC a fixed-order fold, both ranks id-tie-broken — fully
     SQL-replayable under fixed codebooks/centroids; the trained form
     holds a recall gate instead (the family discipline)."""
@@ -1575,8 +1364,9 @@ def ivfpq_topk(queries: DataFrame, codes_assigned: DataFrame,
     cb = _pq_codebook_literal(codebooks)
     ql = queries.select(q_id, q_vec).withColumn(
         "__luts", _pq_lut_expr(F.col(q_vec), cb, m, dsub))
-    probes = (ql.withColumn("cell", F.explode(
-                  nearest_cells(F.col(q_vec), centroid_rows, nprobe, by)))
+    probes = (_with_nearest_cells(ql, centroid_rows, q_vec, "__pc",
+                                  nprobe, by)
+              .withColumn("cell", F.explode("__pc"))
               .select(q_id, "__luts", "cell"))
     coarse = (codes_assigned.select(c_id, "cell", codes_col)
               .join(probes, "cell")

@@ -242,9 +242,9 @@ def _cell_assign_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cati_database_feeder_spark.operators.similarity import assign_cells
     return shared_stage(
         spark, f"cell_assign16:{sf_dir}",
-        # spread(): 16 interpreted-HOF dots per vector over a footer-
-        # sized scan — fans the assignment out AND leaves the persisted
-        # frame multi-block for every downstream consumer; no-op at scale
+        # spread(): the argmin kernel over a footer-sized scan — fans
+        # the assignment out AND leaves the persisted frame multi-block
+        # for every downstream consumer; no-op at scale
         lambda: assign_cells(spread(spark, sf_dir, "embeddings"),
                              _cents16(spark, sf_dir), by="ip"))
 
@@ -1997,13 +1997,8 @@ def lsh_recall_check(spark, sf_dir):
     q = e.filter(F.col("vec_id") % 100 == 0) \
          .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     planes = gaussian_hyperplanes(_LSH_DIM, 4 * 16)
-    # the ARROW signature kernel: one numpy matmul per Arrow batch,
-    # measured 6.7x the HOF fold at sf0.1 — safe here precisely
-    # because this query's contract is the recall BOOLEAN (a
-    # knife-edge sign flip moves one candidate, not the verdict);
-    # value-hashed signature consumers stay on the hof kernel
     ap = lsh_topk_tables(q, e, planes, k=10, n_bits=4,
-                         n_tables=16, kernel="arrow").select("q_id", "vec_id")
+                         n_tables=16).select("q_id", "vec_id")
     ex = _brute_topk10_stage(spark, sf_dir).select("q_id", "vec_id")
     return (ex.agg(F.count_distinct("q_id").alias("n_queries"))
             .crossJoin(ex.join(ap, ["q_id", "vec_id"])
@@ -2370,7 +2365,7 @@ FROM embeddings WHERE vec_id % 100 = 0
 def ivf_recall_check(spark, sf_dir):
     """E7 100 TB shape, hash-gated: the full trained-IVF pipeline —
     train a coarse quantizer (2 Lloyd iterations, 16 cells; assignment
-    is a per-row argmin over the literal centroid array, so each
+    is a per-row argmin kernel over the broadcast centroids, so each
     iteration is map-only plus one n_cells-group aggregate — no
     crossJoin, no corpus-wide window), assign the corpus to cells
     (write-time layout in production: partition parquet by cell),
@@ -2463,8 +2458,9 @@ def ivf_assign_topk(spark, sf_dir):
     k-means centroids), assignment + probe rank cells by inner product
     (``list_dot_product`` is bit-reproducible in DuckDB), exact cosine
     rerank inside the 4 probed cells. Assignment and probing are
-    per-row argmins over the literal centroid array — no crossJoin, no
-    corpus-wide window, no shuffle until the k-sized rerank."""
+    per-row argmin kernels over the broadcast centroids — no
+    crossJoin, no corpus-wide window, no shuffle until the k-sized
+    rerank."""
     from cati_database_feeder_spark.operators.similarity import (
         ivf_topk)
     e = T(spark, sf_dir, "embeddings")
@@ -2477,25 +2473,16 @@ def ivf_assign_topk(spark, sf_dir):
 
 @register("ivf_assign_topk_bcast", sql=_IVF_ASSIGN_SQL)
 def ivf_assign_topk_bcast(spark, sf_dir):
-    """E84 broadcast-centroid serving twin: byte-identical output to
-    ``ivf_assign_topk`` (the oracle SQL is shared VERBATIM), but the
-    query-side probe argmin receives the centroid model as ONE
-    broadcast data row (operators/similarity.py:ivf_topk_joined)
-    instead of a plan literal — the tier that survives production
-    model sizes (n_cells ≈ 2^15 × 1k dims, where the literal is a
-    ~250 MB plan). The corpus side reads the session's shared
-    cell-assignment stage — the write-time partition-by-cell layout,
-    identical under either tier (bit-equality pytest-pinned in
-    tests/test_scale.py) — so this times exactly what production
-    serving pays: the probe and the rerank, never the assignment."""
-    from cati_database_feeder_spark.operators.similarity import (
-        centroid_frame, ivf_topk_joined)
+    """Same query and oracle SQL as ``ivf_assign_topk``. It once ran the
+    broadcast-row centroid tier (E84); that tier is gone, because
+    ``ivf_topk``'s argmin kernel broadcasts the model at every size.
+    The name stays registered so the oracle gate keeps checking it."""
+    from cati_database_feeder_spark.operators.similarity import ivf_topk
     e = T(spark, sf_dir, "embeddings")
-    cf = centroid_frame(spark, _cents16(spark, sf_dir))
     q = e.filter(F.col("vec_id") % 100 == 0) \
          .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return ivf_topk_joined(q, _cell_assign_stage(spark, sf_dir), cf,
-                           k=10, nprobe=4, by="ip")
+    return ivf_topk(q, _cell_assign_stage(spark, sf_dir),
+                    _cents16(spark, sf_dir), k=10, nprobe=4, by="ip")
 
 
 # =====================================================================
@@ -4862,8 +4849,8 @@ def _jl_topk10_stage(spark, sf_dir):
     from cati_database_feeder_spark.operators.similarity import jl_topk
 
     def build():
-        # spread(): 32 interpreted-HOF plane dots per vector — the
-        # projection and the coarse scoring otherwise run single-task
+        # spread(): 32 plane dots per vector and the coarse scoring
+        # otherwise run single-task
         e = spread(spark, sf_dir, "embeddings")
         q = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 100 == 0) \
              .select(F.col("vec_id").alias("q_id"),
@@ -4921,8 +4908,8 @@ def embedding_jl_topk(spark, sf_dir):
     union — bit-identical to the oracle's single window, which is
     exactly the shape the Spark side refuses to run; plan-pinned in
     tests/test_dedup_similarity.py). Projection rows are
-    seeded-Gaussian plan literals (seed independent of the LSH
-    planes), every score a sequential-fold dot, both rank stages
+    seeded-Gaussian planes (seed independent of the LSH planes),
+    every score a sequential-fold dot, both rank stages
     id-tie-broken — the oracle replays candidate set and top-k
     bit-for-bit. Recall of the family is gated by ``jl_recall_check``
     (operators/similarity.py:jl_project, jl_topk)."""
@@ -8628,7 +8615,7 @@ def embedding_ivfpq_topk(spark, sf_dir):
     probe of 6/16 cells for candidate generation, PQ asymmetric-
     distance scoring of the probed candidates (m-byte codes + per-
     query LUT), fixed 128-candidate budget, exact float rerank to
-    top-10. Every stage is deterministic (literal-argmin probes,
+    top-10. Every stage is deterministic (argmin-kernel probes,
     exact argmax codes, fixed-order ADC folds, id tie-breaks), so
     DuckDB replays the whole pipeline bit-for-bit. IVF shrinks the
     scan, PQ shrinks the bytes the surviving scan reads — at 100 TB

@@ -112,28 +112,32 @@ def test_gaussian_hyperplanes_deterministic_and_balanced(spark, sf_dir):
 
 
 def test_lsh_signature_kernels_agree(spark, sf_dir):
-    """The Arrow (numpy matmul) and HOF (sequential fold) signature
-    kernels must produce identical (id, tbl, bucket) rows on the test
-    corpus — BLAS reordering can only diverge on knife-edge dots,
-    which real Gaussian planes make measure-zero; a systematic
-    disagreement means a kernel bug, not float noise."""
+    """The Arrow signature kernel must produce exactly the (id, tbl,
+    bucket) rows of the sequential-fold Column form it replaced (one
+    ``V.dot >= 0`` bit per plane, sliced per table) on the test
+    corpus: both fold in the same order, so not even a knife-edge dot
+    may differ."""
     emb = load_table(spark, sf_dir, "embeddings")
     planes = similarity.gaussian_hyperplanes(64, 4 * 8)
-    hof = {(r["vec_id"], r["tbl"]): r["bucket"]
-           for r in similarity.with_lsh_table_buckets(
-               emb, "embedding", "vec_id", planes, 4, 8).collect()}
-    arrow = {(r["vec_id"], r["tbl"]): r["bucket"]
-             for r in similarity.with_lsh_table_buckets(
-                 emb, "embedding", "vec_id", planes, 4, 8,
-                 kernel="arrow").collect()}
-    assert hof == arrow
-    with pytest.raises(ValueError, match="kernel"):
+    bits = F.transform(
+        V.lit_nested(planes),
+        lambda p: F.when(V.dot(F.col("embedding"), p) >= 0,
+                         F.lit("1")).otherwise(F.lit("0")))
+    column_form = {
+        (r["vec_id"], t): "".join(r["bits"][t * 4:(t + 1) * 4])
+        for r in emb.select("vec_id", bits.alias("bits")).collect()
+        for t in range(8)}
+    kernel = {(r["vec_id"], r["tbl"]): r["bucket"]
+              for r in similarity.with_lsh_table_buckets(
+                  emb, "embedding", "vec_id", planes, 4, 8).collect()}
+    assert kernel == column_form
+    with pytest.raises(ValueError, match="n_bits\\*n_tables"):
         similarity.with_lsh_table_buckets(
-            emb, "embedding", "vec_id", planes, 4, 8, kernel="nope")
+            emb, "embedding", "vec_id", planes, 4, 4)
 
 
 def test_arrow_lsh_kernel_partition_independent(spark, sf_dir):
-    """The Arrow signature kernel computes per-row matmuls, so Arrow
+    """The Arrow signature kernel computes per-row folds, so Arrow
     batch boundaries (hence input partitioning) must not change any
     bucket — pinned at partitions ∈ {1, 7}."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -142,8 +146,8 @@ def test_arrow_lsh_kernel_partition_independent(spark, sf_dir):
     def run(df):
         return sorted((r["vec_id"], r["tbl"], r["bucket"])
                       for r in similarity.with_lsh_table_buckets(
-                          df, "embedding", "vec_id", planes, 4, 4,
-                          kernel="arrow").collect())
+                          df, "embedding", "vec_id", planes, 4,
+                          4).collect())
 
     assert run(emb.coalesce(1)) == run(emb.repartition(7))
 

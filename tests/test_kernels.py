@@ -3,13 +3,16 @@ they replace: outputs must be bit-identical, not just close."""
 
 import hashlib
 import random
+import struct
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from cati_database_feeder_spark.functions import kernels as K
-from cati_database_feeder_spark.operators import dedup
+from cati_database_feeder_spark.functions import vectors as V
+from cati_database_feeder_spark.operators import dedup, similarity
 
 _EDGE_TEXTS = [None, "", "   ", "\t \n", "a", "a a a b", "b a",
                "héllo wörld ñandú", "日本語 テキスト 日本語", "emoji 🙂 x",
@@ -111,3 +114,187 @@ def test_rep_band_buckets_equals_column_form(spark, num_hashes, bands):
     assert got.count() == n_reps * bands
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+# ---------------------------------------------------------------------
+# Vector kernels: nearest cells, JL projection, LSH sign buckets
+# ---------------------------------------------------------------------
+
+def _oracle_nearest(vec, centroid_rows, n, by):
+    """The Column form the nearest-cell kernel replaced: (distance,
+    cell) structs over a centroid literal, struct ``array_sort``
+    (distance asc, cell asc), slice."""
+    cents = F.zip_with(
+        V.lit_nested([int(c) for c, _ in centroid_rows]),
+        V.lit_nested([[float(x) for x in v] for _, v in centroid_rows]),
+        lambda c, v: F.struct(c.alias("cell"), v.alias("centroid")))
+    if by == "ip":
+        dist = lambda c: -V.dot(vec, c["centroid"])
+    else:
+        dist = lambda c: V.l2_distance(vec, c["centroid"])
+    pairs = F.transform(cents, lambda c: F.struct(dist(c).alias("d"),
+                                                  c["cell"].alias("cell")))
+    return F.transform(F.slice(F.array_sort(pairs), 1, n), lambda p: p["cell"])
+
+
+def _oracle_project(vec, planes):
+    """The Column form of the JL projection: one fold per plane."""
+    return F.transform(V.lit_nested(planes), lambda p: V.dot(vec, p))
+
+
+def _oracle_sign_bits(vec, planes):
+    """The Column form of the LSH signature: "1" where the fold is >= 0."""
+    return F.array_join(F.transform(
+        V.lit_nested(planes),
+        lambda p: F.when(V.dot(vec, p) >= 0, F.lit("1")).otherwise(F.lit("0"))),
+        "")
+
+
+_NAN = float("nan")
+_EDGE_VECS = [
+    [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
+    [0.5, 0.5, 0.0, 0.0],             # equidistant from cells 2, 5, 9
+    [0.0, 0.0, 0.0, 0.0], [-0.0, -0.0, -0.0, -0.0],
+    [_NAN, 0.0, 0.0, 0.0], [_NAN] * 4,
+    None, [1.0, None, 0.0, 0.0], [1.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0, 0.0],
+    [1e308, -1e308, 3.0, 4.0], [0.3, -1.7, 2.2, 0.1], [-2.5, 0.75, 0.0, 1.0],
+]
+# unsorted ids; 5 and 9 share a centroid, so they tie everywhere. From
+# [1, 0, 0, 0], cell 1's squared L2 distance is 1 + 2^-52 and cell 4's
+# is 1.0: only the sqrt makes them tie, so cell 1 ranks first.
+_EDGE_CELLS = [(5, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+               (9, [1.0, 0.0, 0.0, 0.0]), (4, [0.0, 0.0, 0.0, 0.0]),
+               (7, [-1.0, 0.5, 0.0, 2.0]), (3, [0.25, -0.75, 1.5, 0.0]),
+               (1, [0.0, 2.0 ** -26, 0.0, 0.0])]
+# the third plane is orthogonal to the first two rows: a 0.0 dot is "1"
+_EDGE_PLANES = [[0.1, -0.2, 0.3, 0.4], [-1.5, 0.25, 0.0, 2.0],
+                [0.0, 0.0, 1.0, 0.0], [0.7, 0.7, -0.7, 0.7]]
+
+
+def _bits(values):
+    """Float lists compared bit for bit (NaN and -0.0 included)."""
+    return [None if v is None else
+            [None if x is None else struct.pack("<d", x) for x in v]
+            for v in values]
+
+
+@pytest.fixture(scope="module", params=["double", "float"])
+def edge_case(request, spark):
+    """(value type, Spark frame of the edge vectors, the oracle rows by
+    id). Every oracle is computed once per value type."""
+    value_type = {"double": pa.float64(), "float": pa.float32()}[request.param]
+    table = pa.table({"id": pa.array(range(len(_EDGE_VECS)), pa.int64()),
+                      "vec": pa.array(_EDGE_VECS, pa.list_(value_type))})
+    df = spark.createDataFrame(table)
+    vec = F.col("vec")
+    cols = {f"{by}{n}": _oracle_nearest(vec, _EDGE_CELLS, n, by)
+            for by in ("l2", "ip") for n in (1, 3, 6, 8)}
+    cols["proj"] = _oracle_project(vec, _EDGE_PLANES)
+    cols["bits"] = _oracle_sign_bits(vec, _EDGE_PLANES)
+    rows = df.select("id", *[c.alias(k) for k, c in cols.items()]).collect()
+    return value_type, table, {r["id"]: r for r in rows}
+
+
+def _edge_batches(value_type, table):
+    """The edge batch as list and large_list, whole and sliced."""
+    for list_type in (pa.list_(value_type), pa.large_list(value_type)):
+        batch = pa.RecordBatch.from_arrays(
+            [table.column("id").combine_chunks(),
+             table.column("vec").combine_chunks().cast(list_type)],
+            names=["id", "vec"])
+        yield from (batch, batch.slice(2, 7), batch.slice(7))
+
+
+@pytest.mark.parametrize("by", ["l2", "ip"])
+@pytest.mark.parametrize("n", [1, 3, 6, 8])
+def test_nearest_cells_batch_matches_column_form(edge_case, by, n):
+    value_type, table, want = edge_case
+    cells, cents = K.cell_model(_EDGE_CELLS)
+    assert cells.tolist() == [1, 2, 3, 4, 5, 7, 9]
+    for batch in _edge_batches(value_type, table):
+        got = K.nearest_cells(batch, "vec", cells, cents, n, by)
+        assert got.type == pa.list_(pa.int32())
+        ids = batch.column(0).to_pylist()
+        assert got.to_pylist() == [list(want[i][f"{by}{n}"]) for i in ids]
+
+
+def test_project_batch_matches_column_form(edge_case):
+    value_type, table, want = edge_case
+    planes = np.array(_EDGE_PLANES)
+    for batch in _edge_batches(value_type, table):
+        got = K.project(batch, "vec", planes)
+        assert got.type == pa.list_(pa.float64())
+        ids = batch.column(0).to_pylist()
+        assert _bits(got.to_pylist()) == _bits([want[i]["proj"] for i in ids])
+
+
+def test_sign_buckets_batch_matches_column_form(edge_case):
+    value_type, table, want = edge_case
+    planes = np.array(_EDGE_PLANES)
+    for batch in _edge_batches(value_type, table):
+        got = K.sign_buckets(batch, planes, 2, 2)
+        assert got.schema.names == ["id", "tbl", "bucket"]
+        ids = batch.column(0).to_pylist()
+        assert got.column(0).to_pylist() == [i for i in ids for _ in range(2)]
+        assert got.column(1).to_pylist() == [0, 1] * len(ids)
+        assert got.column(2).to_pylist() == [
+            want[i]["bits"][t * 2:(t + 1) * 2] for i in ids for t in range(2)]
+
+
+def _model(n_rows, dim, seed):
+    rng = random.Random(seed)
+    return [(c, [rng.uniform(-1, 1) for _ in range(dim)])
+            for c in rng.sample(range(10 * n_rows), n_rows)]
+
+
+def _vector_frames(spark, dim):
+    """(corpus, queries) as array<float> frames, with a null vector, a
+    short one and one holding a null on both sides."""
+    rng = random.Random(dim)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(120)]
+    rows += [(120, None), (121, [0.5] * (dim - 1)),
+             (122, [None] + [0.5] * (dim - 1))]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = corpus.filter((F.col("vec_id") % 20 == 0)
+                            | (F.col("vec_id") >= 120)).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    return corpus, queries
+
+
+def _same_rows(got, want):
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("n_cells,dim", [(16, 64), (512, 16)])
+@pytest.mark.parametrize("by", ["l2", "ip"])
+def test_vector_operators_equal_column_form(spark, n_cells, dim, by):
+    model = _model(n_cells, dim, n_cells)
+    corpus, queries = _vector_frames(spark, dim)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")   # every partition spans several batches
+    try:
+        assigned = similarity.assign_cells(corpus, model, by=by)
+        want_assigned = corpus.withColumn("cell", F.element_at(
+            _oracle_nearest(F.col("embedding"), model, 1, by), 1))
+        _same_rows(assigned, want_assigned)
+
+        got = similarity.ivf_topk(queries, assigned, model, k=5, nprobe=3,
+                                  by=by)
+        probes = (queries.withColumn("cell", F.explode(
+            _oracle_nearest(F.col("q_vec"), model, 3, by)))
+            .withColumn("__qn", V.norm(F.col("q_vec"))))
+        scored = (want_assigned.withColumn("__cn", V.norm(F.col("embedding")))
+                  .join(probes, "cell")
+                  .withColumn("cosine", V.cosine_from_norms(
+                      F.col("embedding"), F.col("q_vec"),
+                      F.col("__cn"), F.col("__qn"))))
+        _same_rows(got, similarity._topk_output(scored, "q_id", "vec_id", 5))
+
+        planes = [v for _, v in model]
+        _same_rows(similarity.jl_project(corpus, "embedding", planes),
+                   corpus.withColumn("proj", _oracle_project(
+                       F.col("embedding"), planes)))
+    finally:
+        spark.conf.set(key, old)
