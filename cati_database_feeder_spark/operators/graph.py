@@ -8,7 +8,7 @@ over the pair graph with DataFrame ops only:
 - each node starts labeled with itself;
 - every round, a node's label becomes the min of its own and its
   neighbors' labels (one shuffle: edges⋈labels, groupBy dst, min);
-- stop when no label changed (or after ``max_iter`` rounds).
+- stop when no label changed (or after ``_PROPAGATION_ROUNDS`` rounds).
 
 Rounds needed = graph diameter. Dup clusters in a pretraining corpus
 are dense blobs (near-cliques around a template), so diameter is small
@@ -30,6 +30,13 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+
+# Min-label propagation rounds before the diameter-independent star
+# fallback takes over (dup clusters converge in single digits).
+_PROPAGATION_ROUNDS = 50
+# Edge count up to which the closure is solved on the driver: 4M edges
+# ≈ 64 MB of Arrow longs, the bound class of the broadcast threshold.
+_DRIVER_EDGE_CAP = 4_000_000
 
 _warned_rdd_ids = False
 
@@ -74,6 +81,25 @@ def _release_rdds(sc, ids: set[int]) -> None:
         pass
 
 
+def _large_star(e: DataFrame) -> DataFrame:
+    """One large-star step over the (src, dst) edges ``e``, read as
+    undirected: for each node u, connect every strictly larger neighbor
+    v to m = min(Γ(u) ∪ {u}). Emits distinct (v, m) edges with v > m.
+    Every node with a neighbor other than itself keeps an edge to a
+    node of its own component that is no larger — a component minimum
+    r keeps its (v, r) edges — so all such nodes stay and the component
+    partition is preserved exactly. Self-loops are dropped, and with
+    them a node whose only edge is a self-loop."""
+    sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    mins = sym.groupBy("src").agg(F.min("dst").alias("mn"))
+    return (sym.join(mins, "src")
+            .filter(F.col("dst") > F.col("src"))
+            .select(F.col("dst").alias("src"),
+                    F.least("mn", "src").alias("dst"))
+            .distinct())
+
+
 def _star_components(edges_sym: DataFrame, max_rounds: int = 100) -> DataFrame:
     """Connected components by alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -106,14 +132,7 @@ def _star_components(edges_sym: DataFrame, max_rounds: int = 100) -> DataFrame:
     e_rdds = _checkpointed_rdd_ids(e)
     n_edges = e.count()
     for _ in range(max_rounds):
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        lmin = sym.groupBy("src").agg(F.min("dst").alias("mn"))
-        large = (sym.join(lmin, "src")
-                 .filter(F.col("dst") > F.col("src"))
-                 .select(F.col("dst").alias("src"),
-                         F.least("mn", "src").alias("dst"))
-                 .distinct())
+        large = _large_star(e)
         smin = large.groupBy("src").agg(F.min("dst").alias("mn"))
         small = (large.join(smin, "src")
                  .select(F.explode(F.array(
@@ -219,103 +238,86 @@ def _driver_components(e: DataFrame, id_type) -> DataFrame:
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 50,
-                         driver_edge_cap: int | None = 4_000_000) -> DataFrame:
+                         id_b: str = "id_b") -> DataFrame:
     """(id, component) for every node in ``pairs``; component = min node
     id reachable through the pair graph. Deterministic for any input
     order — min() is order-insensitive.
 
     Size-gated hybrid, the same shape AQE applies to joins (broadcast
-    below a threshold, shuffle above): when the edge list fits
-    ``driver_edge_cap`` (a ``limit(cap+1).count()`` probe over the
+    below a threshold, shuffle above): when an integral-id edge list
+    fits ``_DRIVER_EDGE_CAP`` (a ``limit(cap+1).count()`` probe over the
     persisted edges) it is pulled once as Arrow and solved by
     union-find on the driver — exact, label-identical, and free of the
     per-round job constants that dominate small-graph cost (measured
     ~6 s of fixed overhead for a sub-second graph at sf0.1); the labels
-    return as an Arrow-built frame in the input id dtype. Above the
-    cap — or with ``driver_edge_cap=None`` — the distributed path
-    runs. The cap bounds driver memory explicitly (4M edges ≈ 64 MB of
-    Arrow longs — the same bound class as the session's broadcast
-    threshold; the same bounded-driver-state class as IVF centroids and
-    the global-order bucket offsets), and the DISTRIBUTED path remains the
-    scale story: at 100 TB the pair graph exceeds any cap and min-label
-    propagation / star-contraction do the work.
+    return as an Arrow-built frame in the input id dtype. Above the cap
+    the edges are first contracted by up to two large-star rounds
+    (:func:`_large_star`), and the driver solves them if that brings
+    them under the cap; otherwise — and always for non-integral ids —
+    the distributed path runs. The cap bounds driver memory explicitly
+    (4M edges ≈ 64 MB of Arrow longs — the same bound class as the
+    session's broadcast threshold; the same bounded-driver-state class
+    as IVF centroids and the global-order bucket offsets), and the
+    DISTRIBUTED path remains the scale story: at 100 TB the pair graph
+    exceeds any cap and min-label propagation / star-contraction do the
+    work.
 
     Distributed path: min-label propagation needs one round per hop of
     graph diameter. Dup clusters in a pretraining corpus are dense
     blobs (near-cliques around a template) that converge in single
     digits, so propagation is the cheap common path; if labels are
-    still changing after ``max_iter`` rounds (an adversarial
+    still changing after ``_PROPAGATION_ROUNDS`` rounds (an adversarial
     path-shaped graph), the computation switches to the
     diameter-independent large-star/small-star algorithm
     (:func:`_star_components`) instead of failing — same per-round
     shuffle shape, O(log²n) rounds regardless of diameter."""
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     sc = pairs.sparkSession.sparkContext
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
 
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
     id_type = e.schema[0].dataType
+    cap = _DRIVER_EDGE_CAP
     # the driver fast path is gated on an integral id dtype:
     # _driver_union_find's int64 arrays assume integral ids, and string/other
     # orderable id types must keep working through the distributed path
     # (they did before the fast path existed) rather than raising
-    probe_cached = False
     star_rdds: set[int] = set()
-    if driver_edge_cap is not None and isinstance(
-            id_type, (ByteType, ShortType, IntegerType, LongType)):
+    if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
         # persist around the probe: limit(cap+1) executes (part of) the
         # upstream pair plan — typically an expensive dedup join — and
         # without the cache an over-cap graph would pay that plan twice
-        # (once for the probe, once for the distributed path). The cache
-        # is released as soon as either path has materialized its first
-        # checkpoint.
+        # (once for the probe, once for the contraction). The cache is
+        # released once the first contraction round is checkpointed.
         e = e.persist()
-        probe_cached = True
-        # size-probe with a COUNT, not a row transfer: the old
-        # limit(cap+1).toPandas() shipped cap+1 rows (~16 MB of Arrow
-        # longs at the default cap) to the driver just to learn "over
-        # cap" before every contraction round; the count answers the
-        # same question shuffle-free, and the under-cap case re-reads
-        # the persisted/checkpointed edges for the actual transfer
-        if e.limit(driver_edge_cap + 1).count() <= driver_edge_cap:
+        # size-probe with a COUNT, not a row transfer: the count answers
+        # "over cap?" shuffle-free, and the under-cap case re-reads the
+        # persisted/checkpointed edges for the actual transfer
+        if e.limit(cap + 1).count() <= cap:
             out = _driver_components(e, id_type)
             e.unpersist()
             return out
-        # Over the cap: contract with large-star rounds (Kiveris et al.
-        # SoCC'14 — the same step _star_components iterates) before
-        # giving up on the driver path. One round is two shuffles of the
-        # edge list and collapses a dense near-clique blob — the dup
-        # corpus shape that produces over-cap edge counts in the first
-        # place — into a star, so the contracted graph is usually
-        # node-count-sized and finishes exactly on the driver.
-        # Correctness: a large-star round emits, per node u, edges
-        # (v, min(Γ(u) ∪ {u})) for neighbors v > u — every non-minimum
-        # node keeps an edge to a strictly smaller node of its own
-        # component and a component minimum r keeps its (v, r) edges, so
-        # the node set and the component partition are both preserved
-        # exactly (graph module docstring; proof in the paper). Rounds
-        # that fail to get under the cap fall through to propagation on
-        # the CONTRACTED edges — never worse than the original graph.
-        for _ in range(2):
-            sym = e.unionByName(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            mins = (sym.groupBy("src").agg(F.min("dst").alias("mn"))
-                    .select("src", F.least("mn", "src").alias("mn")))
-            contracted = (sym.join(mins, "src")
-                          .filter(F.col("dst") > F.col("src"))
-                          .select(F.col("dst").alias("src"),
-                                  F.col("mn").alias("dst"))
-                          .filter(F.col("src") != F.col("dst"))
-                          .distinct().localCheckpoint(eager=True))
+        # Over the cap: contract with large-star rounds before giving up
+        # on the driver path. One round is two shuffles of the edge list
+        # and collapses a dense near-clique blob — the dup corpus shape
+        # that produces over-cap edge counts in the first place — into a
+        # star, so the contracted graph is usually node-count-sized and
+        # finishes exactly on the driver. A large-star round preserves
+        # the component partition but drops self-loops, so a node whose
+        # only edge is a self-loop is carried over as that self-loop.
+        # Rounds that fail to get under the cap fall through to
+        # propagation on the CONTRACTED edges — never worse than the
+        # original graph.
+        for round_ in range(2):
+            contracted = (_large_star(e)
+                          .unionByName(e.filter(F.col("src") == F.col("dst"))
+                                       .distinct())
+                          .localCheckpoint(eager=True))
             new_rdds = _checkpointed_rdd_ids(contracted)
-            if probe_cached:
+            if round_ == 0:
                 e.unpersist()
-                probe_cached = False
             _release_rdds(sc, star_rdds)
             e, star_rdds = contracted, new_rdds
-            if e.limit(driver_edge_cap + 1).count() <= driver_edge_cap:
+            if e.limit(cap + 1).count() <= cap:
                 out = _driver_components(e, id_type)
                 _release_rdds(sc, star_rdds)
                 return out
@@ -333,16 +335,14 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id"))
               .localCheckpoint(eager=True))
-    # the eager checkpoint above materialized `edges` into its own cache
-    # (reading the probe cache, not recomputing the pair plan) — the
-    # probe cache (or the last pre-contraction checkpoint, when the
-    # large-star rounds ran but stayed over the cap) is dead from here
-    if probe_cached:
-        e.unpersist()
+    # the eager checkpoint above materialized `edges` into its own cache,
+    # so the last contraction checkpoint (when the large-star rounds ran
+    # but stayed over the cap) is dead from here
     _release_rdds(sc, star_rdds)
     label_rdds = _checkpointed_rdd_ids(labels)
 
-    for _ in range(max_iter):
+    rounds = _PROPAGATION_ROUNDS
+    for _ in range(rounds):
         nbr_min = (edges.join(labels.withColumnRenamed("id", "src"), "src")
                    .groupBy("dst").agg(F.min("label").alias("nbr_label"))
                    .withColumnRenamed("dst", "id"))
@@ -369,14 +369,14 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         if changed == 0:
             break
     else:
-        # diameter > max_iter: propagation would need one round per hop,
-        # so hand the ORIGINAL edge set to the O(log²n) star algorithm
-        # (restarting loses at most max_iter cheap rounds of progress
+        # diameter > rounds: propagation would need one round per hop,
+        # so hand the edge set to the O(log²n) star algorithm
+        # (restarting loses at most `rounds` cheap rounds of progress
         # and keeps the fallback's correctness argument self-contained)
         warnings.warn(
             f"connected_components: {changed} labels still changing "
-            f"after {max_iter} propagation rounds (graph diameter > "
-            f"max_iter) — switching to large-star/small-star",
+            f"after {rounds} propagation rounds (graph diameter > "
+            f"{rounds}) — switching to large-star/small-star",
             RuntimeWarning)
         _release_rdds(sc, label_rdds)
         out = _star_components(edges)
@@ -387,10 +387,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     return labels.select(F.col("id"), F.col("label").alias("component"))
 
 
-def components_from_rep_pairs(rep_pairs: DataFrame, mem: DataFrame,
-                              max_iter: int = 50,
-                              driver_edge_cap: int | None = 4_000_000
-                              ) -> DataFrame:
+def components_from_rep_pairs(rep_pairs: DataFrame,
+                              mem: DataFrame) -> DataFrame:
     """Components of the EXPANDED member-pair graph (what
     dedup.expand_group_pairs(rep_pairs, mem) would emit), computed on
     the CONTRACTED graph: rep-level pairs plus one star edge
@@ -415,29 +413,30 @@ def components_from_rep_pairs(rep_pairs: DataFrame, mem: DataFrame,
       splits. Identical partitions ⇒ identical min-id labels.
 
     ``mem`` is the (gid, id) membership restricted exactly as the
-    expansion would be (e.g. non-empty token sets only)."""
+    expansion would be (e.g. non-empty token sets only). The closure
+    itself is :func:`connected_components` — driver union-find under
+    its edge cap, distributed above it."""
     star = (mem.filter(F.col("id") != F.col("gid"))
             .select(F.col("gid").alias("id_a"), F.col("id").alias("id_b")))
     edges = rep_pairs.select("id_a", "id_b").unionByName(star)
-    return connected_components(edges, max_iter=max_iter,
-                                driver_edge_cap=driver_edge_cap)
+    return connected_components(edges)
 
 
 def incremental_components(labels: DataFrame, new_pairs: DataFrame,
-                           id_a: str = "id_a", id_b: str = "id_b",
-                           max_iter: int = 50,
-                           driver_edge_cap: int | None = 4_000_000) -> DataFrame:
+                           id_a: str = "id_a",
+                           id_b: str = "id_b") -> DataFrame:
     """Update an existing (id, component) labeling with NEW edges
     without reprocessing the old graph — the ingest-time companion of
     :func:`connected_components` (and the consumer of
-    dedup.incremental_near_dup_pairs' delta pair output): at 100 TB the
-    corpus graph's closure is computed once, and each batch must only
-    pay for what the batch touches.
+    dedup.incremental_near_dup_pairs_from_store's delta pair output):
+    at 100 TB the corpus graph's closure is computed once, and each
+    batch must only pay for what the batch touches.
 
     Contraction argument: each existing component is collapsed to one
     super-node (its label), the NEW edges are mapped into super-node
-    space, and min-label propagation runs on that contracted graph —
-    whose size is bounded by the new edge count, not the corpus. The
+    space, and :func:`connected_components` closes that contracted
+    graph — whose size is bounded by the new edge count, not the
+    corpus, so it normally stays under the driver cap. The
     result expands back through the old labeling. Contracting a
     connected subgraph preserves connectivity, so the output equals
     ``connected_components(old_edges ∪ new_edges)`` exactly.
@@ -445,7 +444,7 @@ def incremental_components(labels: DataFrame, new_pairs: DataFrame,
     PRECONDITION: ``labels`` is a correct components labeling with
     component == min member id (exactly what connected_components
     emits); then super-node ids are min member ids and the contracted
-    propagation's min-label equals the full graph's min member id.
+    closure's min label equals the full graph's min member id.
     Endpoints absent from ``labels`` enter as singletons, so the output
     covers labels ∪ new-edge endpoints."""
     e = new_pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -455,8 +454,7 @@ def incremental_components(labels: DataFrame, new_pairs: DataFrame,
                    .select(F.coalesce("csrc", "src").alias("id_a"),
                            F.coalesce("cdst", "dst").alias("id_b"))
                    .filter(F.col("id_a") != F.col("id_b")))
-    sup = connected_components(super_edges, max_iter=max_iter,
-                               driver_edge_cap=driver_edge_cap)
+    sup = connected_components(super_edges)
     singletons = (e.select(F.col("src").alias("id"))
                   .unionByName(e.select(F.col("dst").alias("id")))
                   .distinct()

@@ -1643,31 +1643,20 @@ WHERE round(len(list_intersect(ta.toks, tb.toks))
 def near_dup_incremental(spark, sf_dir):
     """E7 incremental: dedup a NEW ingest batch (1-in-50 doc_ids play
     the delta — a ~2% ingest against a 98% corpus) without
-    re-enumerating corpus×corpus pairs (operators/dedup.py:
-    incremental_near_dup_pairs: the candidate join probes the corpus
-    banding table with only the delta-containing groups' buckets, and
-    within-group 1.0-pairs are generated only for delta-containing
-    groups). Output is provably the full verified near-dup pair set
-    restricted to pairs touching the delta — which is exactly what the
-    oracle states: the near_dup_pairs SQL plus a delta-membership
-    predicate. Membership and the banding table are injected persisted
-    corpus-snapshot stages (corpus ∪ delta here IS the documents table,
-    so they are shared with the full near-dup queries — the
-    probe-a-materialized-table economics this operator exists for)."""
+    re-enumerating corpus×corpus pairs. Output is provably the full
+    verified near-dup pair set restricted to pairs touching the delta —
+    which is exactly what the oracle states: the near_dup_pairs SQL plus
+    a delta-membership predicate. Runs the corpus-frame wrapper
+    (operators/dedup.py:incremental_near_dup_pairs) with no injected
+    stages: it tokenizes the corpus, builds the members/reps/buckets
+    stores from it and runs the store path that
+    ``near_dup_incremental_store`` (below) and ingest run."""
     from cati_database_feeder_spark.operators.dedup import incremental_near_dup_pairs
     d = T(spark, sf_dir, "documents")
     return incremental_near_dup_pairs(
         corpus=d.filter(F.col("doc_id") % 50 != 0),
         delta=d.filter(F.col("doc_id") % 50 == 0),
-        threshold=0.7,
-        groups=_tokset_groups_stage(spark, sf_dir),
-        buckets=_band_buckets_stage(spark, sf_dir),
-        # covering invariant holds BY CONSTRUCTION: the injected stage
-        # is built from exactly this documents table in-process, so the
-        # corpus-staleness probe (one extra job, measured ~0.7 s at
-        # sf0.1) is skipped here — the default stays on for library
-        # callers injecting externally materialized snapshots
-        validate_buckets=False)
+        threshold=0.7)
 
 
 def _corpus_store_stage(spark, sf_dir):

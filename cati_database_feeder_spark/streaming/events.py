@@ -114,10 +114,11 @@ def ingest_dedup_against_corpus(stream: DataFrame, corpus_keys: DataFrame,
     in the corpus snapshot — the streaming twin of the feeder's
     existing-keys anti-join (reference feeder.py:157-160) and the
     entry point of the incremental-ingest path (what survives here
-    feeds dedup.incremental_near_dup_pairs / graph.incremental_components
-    in the batch layer). Stream-static left_anti keeps NO join state:
-    the static side is re-resolved per micro-batch, so a corpus-snapshot
-    refresh lands in the next batch automatically. No broadcast hint —
+    feeds dedup.incremental_near_dup_pairs_from_store /
+    graph.incremental_components in the batch layer). Stream-static
+    left_anti keeps NO join state: the static side is re-resolved per
+    micro-batch, so a corpus-snapshot refresh lands in the next batch
+    automatically. No broadcast hint —
     the key snapshot scales with the corpus, so broadcast-vs-shuffle is
     AQE's per-batch call by measured size (same rule as the batch
     feeder, plans/feeder.py)."""

@@ -390,41 +390,6 @@ def test_incremental_near_dup_empty_delta_and_corpus_only_clusters(spark):
     assert empty.count() == 0
 
 
-def test_incremental_near_dup_stale_buckets_auto_repaired(spark):
-    """Advisor repro (round 5): the documented production shape injects
-    a banding table materialized per corpus SNAPSHOT — i.e. one that
-    predates the delta. Two delta shapes are then absent from it: a
-    novel token set (id 30), and a delta id that becomes its group's
-    new rep/gid (id 0 < every corpus member). Without auto-repair both
-    probe into nothing and their pairs silently vanish; with it the
-    stale-injected run must equal the fresh-buckets run exactly."""
-    rows = [
-        (1, "alpha beta gamma delta"),
-        (2, "alpha beta gamma delta"),
-        (5, "foo bar baz qux"),
-        (0, "delta gamma beta alpha"),   # delta: same set as 1-2, NEW gid
-        (30, "foo bar baz qux quux"),    # delta: novel set, near-dup of 5
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    corpus = df.filter(F.col("doc_id").isin(1, 2, 5))
-    delta = df.filter(F.col("doc_id").isin(0, 30))
-    memb = dedup.tokset_groups(corpus.unionByName(delta))
-    stale = dedup.rep_band_buckets(dedup.tokset_groups(corpus))
-
-    def pairs(buckets):
-        return {(r["id_a"], r["id_b"], r["jaccard"])
-                for r in dedup.incremental_near_dup_pairs(
-                    corpus, delta, threshold=0.6, groups=memb,
-                    buckets=buckets).collect()}
-
-    got_stale = pairs(stale)
-    got_fresh = pairs(None)
-    assert got_stale == got_fresh
-    # the new-gid group's within-pairs must be present — these are the
-    # ones a stale probe loses entirely
-    assert {(0, 1, 1.0), (0, 2, 1.0)} <= got_stale
-
-
 def test_keep_best_per_cluster_policy(spark):
     """One survivor per cluster: highest score wins, score ties go to
     the smallest id, every clustered doc gets a row, unclustered docs
@@ -456,41 +421,6 @@ def test_keep_best_per_cluster_unscored_labeled_id_raises(spark):
     scores = spark.createDataFrame([(1, 10)], ["doc_id", "score"])
     with pytest.raises(Exception, match="has no score row"):
         dedup.keep_best_per_cluster(labels, scores).collect()
-
-
-def test_incremental_near_dup_corpus_stale_buckets_raises(spark):
-    """Round-7 verdict item 6: a banding table stale w.r.t. the CORPUS
-    itself (corpus docs added after the snapshot, not in the delta) is
-    beyond the delta-side auto-repair and would silently lose
-    corpus-side candidates — the default validation must refuse it
-    descriptively. A covering table (even delta-stale) stays accepted,
-    and validate_buckets=False restores the old trusting behavior."""
-    rows = [
-        (1, "alpha beta gamma delta"),
-        (2, "alpha beta gamma delta epsilon"),
-        (5, "foo bar baz qux"),          # added AFTER the snapshot
-        (30, "foo bar baz qux quux"),    # delta: near-dup of 5
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    corpus = df.filter(F.col("doc_id").isin(1, 2, 5))
-    delta = df.filter(F.col("doc_id") == 30)
-    # snapshot taken before doc 5 joined the corpus
-    stale = dedup.rep_band_buckets(
-        dedup.tokset_groups(df.filter(F.col("doc_id").isin(1, 2))))
-    with pytest.raises(ValueError, match="stale w.r.t. the CORPUS"):
-        dedup.incremental_near_dup_pairs(
-            corpus, delta, threshold=0.6, buckets=stale).collect()
-    # the trusting opt-out still runs (and silently loses the 5-30 pair
-    # — exactly the behavior the default guards against)
-    got = {(r["id_a"], r["id_b"]) for r in dedup.incremental_near_dup_pairs(
-        corpus, delta, threshold=0.6, buckets=stale,
-        validate_buckets=False).collect()}
-    assert (5, 30) not in got
-    # a covering snapshot passes validation and finds the pair
-    ok = dedup.rep_band_buckets(dedup.tokset_groups(corpus))
-    got_ok = {(r["id_a"], r["id_b"]) for r in dedup.incremental_near_dup_pairs(
-        corpus, delta, threshold=0.6, buckets=ok).collect()}
-    assert (5, 30) in got_ok
 
 
 def test_subsplit_hot_cells_degenerate_centroids_guard_reacts(spark):

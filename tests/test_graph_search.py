@@ -7,6 +7,7 @@ sys.path.insert(0, "/root/repo")
 import pytest
 from pyspark.sql import functions as F
 
+from cati_database_feeder_spark.operators import graph
 from cati_database_feeder_spark.operators.graph import connected_components
 from cati_database_feeder_spark.operators.search import bm25_topk
 
@@ -20,14 +21,15 @@ def test_connected_components_basic(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     # path graph 0-1-2-...-9: worst case for min-label propagation;
-    # must still converge within the default max_iter
+    # must still converge within the default propagation rounds
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["id_a", "id_b"])
-    # driver_edge_cap=None: this test pins the DISTRIBUTED propagation
-    # loop (the default cap would route a 9-edge graph to the driver)
-    got = connected_components(pairs, driver_edge_cap=None).collect()
+    # cap 0: this test pins the DISTRIBUTED path (the default cap would
+    # route a 9-edge graph to the driver)
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
+    got = connected_components(pairs).collect()
     assert all(r["component"] == 0 for r in got)
     assert len(got) == 10
 
@@ -40,19 +42,20 @@ def test_connected_components_deterministic_min_canonical(spark):
     assert got == {5: 5, 7: 5, 9: 5}
 
 
-def test_connected_components_large_star_contraction_path(spark):
+def test_connected_components_large_star_contraction_path(spark, monkeypatch):
     # over-cap graph whose ONE large-star round collapses it under the
     # cap: K4 on {1..4} (6 edges) + {10,11} = 7 edges, cap 4. Round 1
     # emits {(2,1),(3,1),(4,1),(11,10)} = 4 edges → driver union-find
     # finishes; labels must equal the plain closure.
     k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     pairs = spark.createDataFrame(k4 + [(10, 11)], ["id_a", "id_b"])
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 4)
     got = {r["id"]: r["component"]
-           for r in connected_components(pairs, driver_edge_cap=4).collect()}
+           for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_contraction_preserves_chains(spark):
+def test_connected_components_contraction_preserves_chains(spark, monkeypatch):
     # a path graph is the adversarial shape for contraction (nothing
     # collapses to a star in one hop) — the rounds must stay
     # component-exact whether they end under the cap or fall through
@@ -60,9 +63,9 @@ def test_connected_components_contraction_preserves_chains(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], ["id_a", "id_b"])
     for cap in (3, 4, 5):
+        monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", cap)
         got = {r["id"]: r["component"]
-               for r in connected_components(
-                   pairs, driver_edge_cap=cap).collect()}
+               for r in connected_components(pairs).collect()}
         assert got == {i: 0 for i in range(7)}, f"cap={cap}: {got}"
 
 
@@ -173,22 +176,24 @@ def test_chunk_documents_windows(spark):
     assert len(by_doc[3]) == 1 and by_doc[3][0]["chunk_text"] == ""
 
 
-def test_connected_components_star_fallback_on_long_path(spark):
-    """Diameter > max_iter no longer hard-stops: propagation hands the
-    original edges to large-star/small-star (Kiveris et al. SoCC'14),
-    which converges in O(log²n) rounds on the adversarial path graph —
-    here a 121-hop chain under max_iter=3."""
+def test_connected_components_star_fallback_on_long_path(spark, monkeypatch):
+    """Diameter > the propagation rounds no longer hard-stops:
+    propagation hands the edges to large-star/small-star (Kiveris et
+    al. SoCC'14), which converges in O(log²n) rounds on the adversarial
+    path graph — here a 121-hop chain under 3 propagation rounds."""
     import pytest
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], ["id_a", "id_b"])
+    monkeypatch.setattr(graph, "_PROPAGATION_ROUNDS", 3)
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
     with pytest.warns(RuntimeWarning, match="large-star"):
-        got = connected_components(pairs, max_iter=3,
-                                   driver_edge_cap=None).collect()
+        got = connected_components(pairs).collect()
     assert len(got) == 121
     assert all(r["component"] == 0 for r in got)
 
 
-def test_connected_components_star_fallback_matches_propagation(spark):
+def test_connected_components_star_fallback_matches_propagation(
+        spark, monkeypatch):
     """The fallback must agree with propagation exactly on a mixed
     graph: several components, listed high-to-low, plus a self-loop
     singleton."""
@@ -202,21 +207,40 @@ def test_connected_components_star_fallback_matches_propagation(spark):
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     want = {(r["id"], r["component"])
             for r in connected_components(pairs).collect()}
+    monkeypatch.setattr(graph, "_PROPAGATION_ROUNDS", 1)
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
     with pytest.warns(RuntimeWarning, match="large-star"):
         got = {(r["id"], r["component"])
-               for r in connected_components(
-                   pairs, max_iter=1, driver_edge_cap=None).collect()}
+               for r in connected_components(pairs).collect()}
     assert got == want and (99, 99) in got
 
 
-def test_connected_components_rejects_nonpositive_max_iter(spark):
-    import pytest
-    pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with pytest.raises(ValueError, match="max_iter"):
-        connected_components(pairs, max_iter=0)
+def test_connected_components_string_ids_distributed(spark):
+    # string ids never take the driver path: propagation over a mixed
+    # graph (chain, clique, self-loop singleton, pair) must equal a
+    # Python union-find with the lexicographic minimum as the label
+    edges = [("n3", "n1"), ("n1", "n2"), ("n2", "n0"),
+             ("b", "c"), ("c", "d"), ("b", "d"),
+             ("z", "z"), ("y", "x")]
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {n: find(n) for n in list(parent)}
+    out = connected_components(
+        spark.createDataFrame(edges, "id_a string, id_b string"))
+    assert out.schema.simpleString() == "struct<id:string,component:string>"
+    assert {r["id"]: r["component"] for r in out.collect()} == want
 
 
-def test_connected_components_releases_per_round_storage(spark):
+def test_connected_components_releases_per_round_storage(spark, monkeypatch):
     # per-round localCheckpoint frames must not accumulate in the block
     # manager: after the run, live persisted RDDs return to (near) the
     # pre-run count — the path graph forces ~9 rounds, so a leak would
@@ -228,7 +252,8 @@ def test_connected_components_releases_per_round_storage(spark):
 
     baseline = len(persisted())
     pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], ["id_a", "id_b"])
-    out = connected_components(pairs, driver_edge_cap=None)
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
+    out = connected_components(pairs)
     assert out.count() == 10
     leaked = len(persisted()) - baseline
     # the returned frame's own checkpoint (and nothing else) may remain

@@ -13,11 +13,13 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cati_database_feeder_spark.operators.dedup import (
     jaccard_similarity_join, simhash_near_dup_pairs)
+from cati_database_feeder_spark.operators import graph
 from cati_database_feeder_spark.operators.graph import connected_components
 
 # derandomize: the driver's gate must be reproducible run-to-run — a
@@ -82,10 +84,12 @@ def _union_find_components(edges):
 def test_connected_components_equals_union_find(spark, edges):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     want = _union_find_components(edges)
-    # DISTRIBUTED path pinned (the default cap would route these small
-    # graphs to the driver fast path) ...
-    got = {r["id"]: r["component"]
-           for r in connected_components(df, driver_edge_cap=None).collect()}
+    # DISTRIBUTED path pinned by a zero cap (the default cap would
+    # route these small graphs to the driver fast path) ...
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "_DRIVER_EDGE_CAP", 0)
+        got = {r["id"]: r["component"]
+               for r in connected_components(df).collect()}
     assert got == want
     # ... and the driver fast path must agree label-for-label
     got_fast = {r["id"]: r["component"]
@@ -171,6 +175,33 @@ def test_incremental_near_dup_equals_filtered_full_for_any_corpus(
     want = {(a, b, j) for a, b, j in full
             if a % delta_mod == 0 or b % delta_mod == 0}
     assert got == want
+
+
+@given(docs=st.lists(_doc, min_size=2, max_size=10),
+       delta_mod=st.sampled_from([2, 3, 4]))
+@settings(max_examples=8, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_incremental_near_dup_redelivered_ids_emit_no_self_pairs(
+        spark, docs, delta_mod):
+    """An at-least-once redelivery puts corpus docs (same id, same
+    text) back into the delta. The wrapper must emit no (x, x) pair for
+    them, and its pair set must still be the full near-dup pairs that
+    touch a delta id (redelivered ids count as delta ids)."""
+    from cati_database_feeder_spark.operators.dedup import (
+        incremental_near_dup_pairs, near_dup_pairs)
+
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    corpus = df.filter(F.col("doc_id") % delta_mod != 0)
+    redelivered = corpus.filter(F.col("doc_id") % 2 == 1)
+    delta = df.filter(F.col("doc_id") % delta_mod == 0).unionByName(redelivered)
+    delta_ids = {r["doc_id"] for r in delta.collect()}
+    rows = incremental_near_dup_pairs(corpus, delta, threshold=0.6).collect()
+    assert all(r["id_a"] != r["id_b"] for r in rows)
+    got = {(r["id_a"], r["id_b"], r["jaccard"]) for r in rows}
+    full = {(r["id_a"], r["id_b"], r["jaccard"])
+            for r in near_dup_pairs(df, threshold=0.6).collect()}
+    assert got == {(a, b, j) for a, b, j in full
+                   if a in delta_ids or b in delta_ids}
 
 
 @given(docs=st.lists(_doc, min_size=0, max_size=12),

@@ -8,16 +8,15 @@ cost batch-proportional — no corpus tokenize pass. This measures it:
 - state B: corpus = sf0.1 documents (minus the batch slice) — 10x A
 - batch:   the SAME fixed slice of sf0.01 documents in both runs
 
-and times (1) the full `ingest_batch` call (store-backed path), and
-(2) the round-6 shape for comparison: `incremental_near_dup_pairs`
-with `groups=tokset_groups(corpus ∪ delta)` — the corpus-tokenizing
-membership rebuild the store retired.
+and times (1) the batch's pairs through the store path
+(`_incremental_frames`, frames only) and (2) the full `ingest_batch`
+call (pairs + closure + commits).
 
-A flat (1) across 10x corpus growth, against a growing (2), is the
-measured form of the claim. Store scans (members/reps/buckets ids and
-rep toks) DO grow with the corpus — linearly, as compact columnar
-reads — so "flat" here means "no corpus-proportional tokenize/window
-term", not literally constant.
+A flat (1) across 10x corpus growth is the measured form of the
+claim. Store scans (members/reps/buckets ids and rep toks) DO grow with
+the corpus — linearly, as compact columnar reads — so "flat" here
+means "no corpus-proportional tokenize/window term", not literally
+constant.
 
 The ``--embeddings`` lane (round-10 verdict item 5) runs the same
 protocol over the EMBEDDING ingest store (ingest_embeddings_batch):
@@ -45,7 +44,6 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from cati_database_feeder_spark.catalog import load_table
-from cati_database_feeder_spark.operators import dedup
 from cati_database_feeder_spark.session import get_session
 from cati_database_feeder_spark.streaming.ingest import ingest_batch
 
@@ -124,8 +122,8 @@ def main() -> None:
             ingest_batch(spark, corpus, state)           # bootstrap
             boot = time.time() - t0
 
-            # (1) PAIRS via the store path — frames only, like-for-like
-            # with (2): no closure update, no state writes
+            # (1) PAIRS via the store path — frames only: no closure
+            # update, no state writes
             from cati_database_feeder_spark.streaming.ingest import (
                 _incremental_frames)
             t0 = time.time()
@@ -133,18 +131,7 @@ def main() -> None:
             fr["new_pairs"].write.format("noop").mode("overwrite").save()
             pairs_store = time.time() - t0
 
-            # (2) PAIRS via the round-6 shape: membership rebuilt by
-            # tokenizing corpus ∪ delta, banding table re-signed
-            t0 = time.time()
-            memb = dedup.tokset_groups(corpus.unionByName(batch)).persist()
-            pairs = dedup.incremental_near_dup_pairs(
-                corpus, batch, groups=memb,
-                buckets=dedup.rep_band_buckets(dedup.tokset_groups(corpus)))
-            pairs.write.format("noop").mode("overwrite").save()
-            memb.unpersist()
-            pairs_rebuild = time.time() - t0
-
-            # (3) the COMPLETE ingest_batch (pairs + closure + commits),
+            # (2) the COMPLETE ingest_batch (pairs + closure + commits),
             # for context — dominated by the iterative closure constants
             t0 = time.time()
             ingest_batch(spark, batch, state)
@@ -153,7 +140,6 @@ def main() -> None:
                 "corpus_rows": corpus.count(), "batch_rows": n_batch,
                 "bootstrap_s": round(boot, 2),
                 "pairs_store_s": round(pairs_store, 2),
-                "pairs_tokenize_rebuild_s": round(pairs_rebuild, 2),
                 "full_ingest_batch_s": round(full_batch, 2),
             }
         finally:
