@@ -20,17 +20,18 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-# Memo for lit_nested below: model literals (JL planes, IVF centroids,
-# PQ codebooks) are identical across every consumer's plan build in a
-# session, so each distinct value is rendered and parsed exactly once
-# per process. Columns wrap gateway-wide expression trees, not session
-# state, so reuse across sessions in one process is safe. Bounded
-# (round-13 advice): keys are deep copies of the nested values and the
-# Columns pin JVM expression trees for process lifetime, so a driver
-# feeding EVOLVING model literals through here (e.g. per-corpus
-# sub-split seeds in a long-lived ingest) must not grow without bound
-# — evict oldest-inserted past the cap (dict preserves insertion
-# order; the working set per session is ~a dozen model literals).
+# Memo for lit_nested below: its literals (the bloom word list in
+# functions/sketches.py, the centroid and PQ codebook literals of
+# queryset's cell-profile and PQ-distortion queries) are identical
+# across every consumer's plan build in a session, so each distinct
+# value is rendered and parsed exactly once per process. Columns wrap
+# gateway-wide expression trees, not session state, so reuse across
+# sessions in one process is safe. Bounded (round-13 advice): keys are
+# deep copies of the nested values and the Columns pin JVM expression
+# trees for process lifetime, so a long-lived driver feeding ever-new
+# literals through here must not grow without bound — evict
+# oldest-inserted past the cap (dict preserves insertion order; the
+# working set per session is a few literals).
 _LIT_CACHE: dict = {}
 _LIT_CACHE_MAX = 256
 

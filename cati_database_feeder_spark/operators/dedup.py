@@ -18,8 +18,7 @@ Python in this module; everything else is JVM expressions.
 
 Hash portability: signatures use md5-derived 60-bit ints
 (functions/text.py:hash64) so the DuckDB oracle can reproduce them
-exactly; xxhash64 would be faster but engine-private. Swap via the
-``hasher`` argument in production.
+exactly; xxhash64 would be faster but engine-private.
 """
 
 from __future__ import annotations
@@ -385,12 +384,6 @@ def jaccard_similarity_join(documents: DataFrame, id_col: str = "doc_id",
     # cost more than the recompute it saved; routing verification
     # through ``ordered`` was tried and rejected too (its join+agg
     # upstream is heavier than re-tokenizing).
-    # hashed_verify_frame was tried here and REJECTED (paired at
-    # sf0.1: shingle 2.7 -> 3.4 s, char-ngram exec a wash, token flat)
-    # — prefix filtering keeps the candidate set small relative to the
-    # rep count, so the per-rep hash transform (recomputed per verify
-    # branch) costs more than the per-pair string intersects it saves.
-    # The minhash verify keeps it: 3 M candidates over 3,935 reps.
     t_a = toks.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     t_b = toks.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
     rep_pairs = (cands.join(t_a, "id_a").join(t_b, "id_b")
@@ -606,66 +599,6 @@ def token_jaccard(a_tokens: Column, b_tokens: Column) -> Column:
     return inter / F.nullif(union, F.lit(0.0))
 
 
-# Injectivity-probe verdicts for hashed_verify_frame, memoized per
-# (applicationId, analyzed-plan semanticHash): a persisted stage frame
-# keeps one analyzed plan for the session, so the probe job runs once,
-# not once per consumer rebuild. Evicted by applicationId like every
-# other session cache (queryset._STAGE_CACHE discipline).
-_HASHED_VERIFY_OK: dict[tuple, bool] = {}
-
-
-def hashed_verify_frame(frame: DataFrame, toks_col: str = "toks") -> DataFrame:
-    """Candidate-verify acceleration: replace a verify-side frame's
-    string token arrays with their per-element ``xxhash64`` values —
-    the pair-verify then intersects 8-byte longs instead of strings
-    (no per-pair string hashing, ~3-5x fewer bytes materialized per
-    candidate row; measured 2.3 -> 1.1 s on the sf0.1 minhash verify).
-
-    EXACTNESS IS UNCONDITIONAL, not probabilistic: one tiny aggregate
-    probe (distinct tokens vs distinct hashes over the frame's observed
-    vocabulary, plus a no-null-element check) proves the hash injective
-    on every value the verify can ever compare — then element-wise
-    hashing is a bijection A -> h(A) per row, so array lengths,
-    intersection sizes, and every downstream :func:`token_jaccard`
-    value are bit-identical. If the probe ever finds a collision (or a
-    null element) the frame is returned UNCHANGED — the optimization
-    silently does not apply; results never depend on hash luck. The
-    probe verdict is memoized per (session, analyzed plan), so stage
-    frames pay it once per session.
-
-    Scale shape: the probe is explode -> distinct -> one aggregate over
-    the verify-side vocabulary — corpus-token-linear with map-side
-    partials, the same cost class as the token-df aggregate the
-    AllPairs join already runs; the per-candidate verify it accelerates
-    is candidate-linear, which banding/prefix collisions make the
-    dominant term exactly when this operator matters."""
-    sess = frame.sparkSession
-    app = sess.sparkContext.applicationId
-    for stale in [k for k in _HASHED_VERIFY_OK if k[0] != app]:
-        del _HASHED_VERIFY_OK[stale]
-    try:
-        plan_key = frame._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        plan_key = None
-    key = (app, plan_key, toks_col)
-    if plan_key is None or key not in _HASHED_VERIFY_OK:
-        row = (frame.select(F.explode(toks_col).alias("__t")).distinct()
-               .agg(F.count(F.lit(1)).alias("rows"),
-                    F.count("__t").alias("n"),
-                    F.count_distinct(F.xxhash64("__t")).alias("nh"))
-               .collect()[0])
-        ok = row["rows"] == row["n"] == row["nh"]
-        if plan_key is None:
-            return frame.withColumn(
-                toks_col,
-                F.transform(toks_col, lambda t: F.xxhash64(t))) if ok else frame
-        _HASHED_VERIFY_OK[key] = ok
-    if _HASHED_VERIFY_OK[key]:
-        return frame.withColumn(
-            toks_col, F.transform(toks_col, lambda t: F.xxhash64(t)))
-    return frame
-
-
 def near_dup_rep_pairs(documents: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", threshold: float = 0.7,
                        num_hashes: int = 16, bands: int = 4,
@@ -682,10 +615,7 @@ def near_dup_rep_pairs(documents: DataFrame, id_col: str = "doc_id",
     memb = groups if groups is not None else tokset_groups(documents, id_col, text_col)
     cands = rep_candidates if rep_candidates is not None else minhash_lsh_candidates(
         documents, id_col, text_col, num_hashes, bands, groups=memb, expand=False)
-    # hashed verify arrays (hashed_verify_frame): candidates intersect
-    # longs, not strings — bit-identical by the injectivity probe
-    reps = hashed_verify_frame(
-        memb.filter(F.col("id") == F.col("gid")).select("id", "toks"))
+    reps = memb.filter(F.col("id") == F.col("gid")).select("id", "toks")
     t_a = reps.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
     t_b = reps.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
     return (cands.join(t_a, "id_a").join(t_b, "id_b")
@@ -853,12 +783,6 @@ def incremental_near_dup_pairs_from_store(
                  # of the sf0.1 demo). Pin the verify parallelism; the
                  # join on id_a reuses this exchange.
                  .repartition(spark.sparkContext.defaultParallelism, "id_a"))
-    # hashed_verify_frame was tried here and REJECTED (paired at
-    # sf0.1: 2.2 -> 3.2 s) — the candidate set is delta-bounded, so the
-    # per-rep hash transform outweighs the per-pair savings; it would
-    # also re-probe the full reps store per batch, against this
-    # operator's batch-bounded-cost contract. The full-corpus verify
-    # (near_dup_rep_pairs) keeps it.
     reps_all = (reps.select("gid", "toks")
                 .unionByName(new_reps.select("gid", "toks")))
     t_a = reps_all.select(F.col("gid").alias("id_a"), F.col("toks").alias("toks_a"))

@@ -13,11 +13,11 @@ Three tiers, trading recall for scale:
    once (write-time layout), and each query touches a few cells.
 
 Scoring is the deterministic double-precision cosine of
-functions/vectors.py (JVM higher-order functions). Nearest-cell
-assignment, JL projection and multi-table LSH signatures run as Arrow
-kernels (functions/kernels.py) with the model broadcast as a numpy
-array, so no plan embeds a model; they fold in the same order as the
-JVM forms, so every value is bit-identical to them.
+functions/vectors.py (JVM higher-order functions). Every model — IVF
+centroids, LSH and JL planes, hot-cell sub-split seeds, PQ codebooks —
+is broadcast as numpy to an Arrow kernel (functions/kernels.py), so no
+plan embeds a model; the kernels fold in the same order as the JVM
+forms, so every value is bit-identical to them.
 """
 
 from __future__ import annotations
@@ -106,6 +106,43 @@ def _topk_output(scored: DataFrame, q_id: str, c_id: str,
                          F.round("cosine", 6).alias("cosine"), "rank")
 
 
+def _exact_rerank(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
+                  k: int, q_id: str, q_vec: str, c_id: str,
+                  c_vec: str) -> DataFrame:
+    """The exact tail of the compressed tiers: fetch both vectors of
+    every (q_id, c_id) candidate by id, score the exact cosine, keep
+    each query's top ``k`` under (cosine desc, id asc). The candidate
+    set is already bounded per query, so one per-query window ranks
+    it."""
+    scored = (cand.join(corpus.select(c_id, c_vec), c_id)
+              .join(queries.select(q_id, q_vec), q_id)
+              .withColumn("cosine", V.cosine_from_norms(
+                  F.col(c_vec), F.col(q_vec),
+                  V.norm(F.col(c_vec)), V.norm(F.col(q_vec)))))
+    w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(q_id, F.col(c_id),
+                    F.round("cosine", 6).alias("cosine"), "rank"))
+
+
+def _cosine_pairs(cands: DataFrame, corpus: DataFrame, threshold: float,
+                  c_id: str, c_vec: str) -> DataFrame:
+    """The verify tail of the embedding near-dup family: the (id_a,
+    id_b) candidates whose cosine is >= ``threshold``, vectors fetched
+    by id with norms once per vector, the threshold on the raw value,
+    the cosine emitted rounded to 6."""
+    v_a = corpus.select(F.col(c_id).alias("id_a"), F.col(c_vec).alias("va"),
+                        V.norm(F.col(c_vec)).alias("na"))
+    v_b = corpus.select(F.col(c_id).alias("id_b"), F.col(c_vec).alias("vb"),
+                        V.norm(F.col(c_vec)).alias("nb"))
+    return (cands.join(v_a, "id_a").join(v_b, "id_b")
+            .withColumn("cos_raw", V.cosine_from_norms(
+                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")))
+            .filter(F.col("cos_raw") >= threshold)
+            .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine")))
+
+
 def brute_force_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
                      q_id: str = "q_id", q_vec: str = "q_vec",
                      c_id: str = "vec_id", c_vec: str = "embedding",
@@ -155,34 +192,27 @@ def gaussian_hyperplanes(dim: int, n_bits: int = 8,
 def with_lsh_bucket(df: DataFrame, vec_col: str, n_bits: int = 8,
                     out_col: str = "bucket",
                     hyperplanes: list[list[float]] | None = None) -> DataFrame:
-    """Random-hyperplane signature: bit i = sign of ⟨v, h_i⟩ over the
-    literal plane matrix (one sequential-fold dot per bit, JVM-side,
-    bit-reproducible against a SQL oracle's ``list_dot_product``).
-    With ``hyperplanes=None`` falls back to the first ``n_bits``
-    coordinate signs — deterministic and cheap, but balance-fragile on
-    anisotropic embeddings; pass :func:`gaussian_hyperplanes` output
-    for the production bucketing (its docstring has the argument)."""
+    """Random-hyperplane signature: bit i = "1" when ⟨v, h_i⟩ >= 0,
+    one map-only Arrow kernel (functions/kernels.py:sign_bucket) with
+    the planes broadcast as numpy. Each dot is a sequential fold, so
+    buckets are bit-reproducible against a SQL oracle's
+    ``list_dot_product``; a null, short or null-holding vector gets
+    all "0". With ``hyperplanes=None`` falls back to the first
+    ``n_bits`` coordinate signs — deterministic and cheap, but
+    balance-fragile on anisotropic embeddings; pass
+    :func:`gaussian_hyperplanes` output for the production bucketing
+    (its docstring has the argument)."""
     if hyperplanes is None:
         return df.withColumn(
             out_col, F.substring(V.simhash_sign(F.col(vec_col)), 1, n_bits))
     if len(hyperplanes) != n_bits:
         raise ValueError(
             f"hyperplanes count {len(hyperplanes)} != n_bits {n_bits}")
-    # ONE transform over a 2-D plane literal, not n_bits inlined
-    # dot-product folds: the inlined form compiles n_bits separate
-    # zip_with/aggregate chains per row (the same finding that fixed
-    # lsh_recall_check 9.3→6.5 s in round 8; measured here round 9:
-    # warm-min 1.43→1.12 s on embedding_lsh_topk at sf0.1 — the rest
-    # of the Gaussian-vs-coordinate gap is the irreducible
-    # n_bits×dim multiply-adds per row that buy the recall).
-    # Arithmetic is the identical sequential-fold dot per plane, so
-    # bucket values — and the SQL oracle — are unchanged.
-    planes = V.lit_nested([[float(x) for x in p] for p in hyperplanes])
-    bits = F.transform(
-        planes,
-        lambda p: F.when(V.dot(F.col(vec_col), p) >= 0,
-                         F.lit("1")).otherwise(F.lit("0")))
-    return df.withColumn(out_col, F.array_join(bits, ""))
+    planes = df.sparkSession.sparkContext.broadcast(
+        np.asarray(hyperplanes, dtype=np.float64))
+    return _with_kernel_column(
+        df, StructField(out_col, StringType(), False),
+        lambda b: K.sign_bucket(b, vec_col, planes.value))
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -284,16 +314,7 @@ def cosine_near_dup_pairs(corpus: DataFrame, threshold: float = 0.9,
     from cati_database_feeder_spark.operators.dedup import _bucket_pairs
     cb = with_lsh_bucket(corpus, c_vec, n_bits, hyperplanes=hyperplanes)
     cands = _bucket_pairs(cb.selectExpr(f"{c_id} as id", "bucket"), ["bucket"], "id")
-    # norms once per vector, not once per pair (V.cosine_from_norms)
-    v_a = corpus.select(F.col(c_id).alias("id_a"), F.col(c_vec).alias("va"),
-                        V.norm(F.col(c_vec)).alias("na"))
-    v_b = corpus.select(F.col(c_id).alias("id_b"), F.col(c_vec).alias("vb"),
-                        V.norm(F.col(c_vec)).alias("nb"))
-    return (cands.join(v_a, "id_a").join(v_b, "id_b")
-            .withColumn("cos_raw", V.cosine_from_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")))
-            .filter(F.col("cos_raw") >= threshold)
-            .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine")))
+    return _cosine_pairs(cands, corpus, threshold, c_id, c_vec)
 
 
 def semdedup_pairs(corpus: DataFrame,
@@ -328,15 +349,7 @@ def semdedup_pairs(corpus: DataFrame,
         assigned = assign_cells(corpus, centroid_rows, c_vec, by)
     cands = _bucket_pairs(
         assigned.select(F.col(c_id).alias("id"), "cell"), ["cell"], "id")
-    v_a = corpus.select(F.col(c_id).alias("id_a"), F.col(c_vec).alias("va"),
-                        V.norm(F.col(c_vec)).alias("na"))
-    v_b = corpus.select(F.col(c_id).alias("id_b"), F.col(c_vec).alias("vb"),
-                        V.norm(F.col(c_vec)).alias("nb"))
-    return (cands.join(v_a, "id_a").join(v_b, "id_b")
-            .withColumn("cos_raw", V.cosine_from_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")))
-            .filter(F.col("cos_raw") >= threshold)
-            .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine")))
+    return _cosine_pairs(cands, corpus, threshold, c_id, c_vec)
 
 
 def incremental_semdedup_pairs(delta: DataFrame, corpus_assigned: DataFrame,
@@ -596,11 +609,12 @@ def subsplit_hot_cells(assigned: DataFrame, cap: int,
        the gate threshold is integer arithmetic end-to-end.
     3. Seeds are collected (Σ n_sub rows ≤ ``max_seeds``, raised
        loudly otherwise — driver model state stays bounded like the
-       IVF centroid collects) and re-embedded as plan LITERALS; the
-       sub-assignment is a map-only per-row argmin by inner product
-       over the row's own cell's seeds (``F.filter`` on the literal
-       struct array — zero shuffle, zero join), tie-break by sub index
-       ascending. Non-hot rows see an empty filtered array → 0.
+       IVF centroid collects) and broadcast as numpy, keyed by cell;
+       the sub-assignment is one map-only Arrow kernel
+       (functions/kernels.py:nearest_in_group) — a per-row argmax by
+       inner product over the row's OWN cell's seeds only, zero
+       shuffle, zero join, tie-break by sub index ascending. Rows of a
+       cell with no seeds get 0.
 
     Recall contract: pairs crossing a subcell boundary are LOST — the
     same accepted, bounded recall loss as SemDeDup's own cell
@@ -663,51 +677,18 @@ def subsplit_hot_cells(assigned: DataFrame, cap: int,
                  .collect())
     if not seed_rows:
         return assigned.withColumn("subcell", F.lit(0))
-    # Seeds indexed BY CELL through one element_at on per-cell 2-D/3-D
-    # literals — NOT a filter over an all-seeds struct array keyed by
-    # ``s["cell"] == col(cell)``. The filter form references the cell
-    # column INSIDE a lambda: syntactically once (so CollapseProject
-    # happily inlines the full argmin-over-centroids expression that
-    # computes ``cell``), but evaluated once PER SEED ELEMENT at
-    # runtime — the assignment argmin re-ran ~|seeds| times per row,
-    # and the join-key ``isnotnull(subcell)`` pushdown duplicated the
-    # whole tree into the scan filter on top of that (measured: 30.7 s
-    # for 2000 rows at sf0.1; this form: 0.9 s, identical output).
-    # Here ``cell`` is referenced only by the __subidx when-chain —
-    # more than once and outside any lambda, which both blocks the
-    # project collapse (argmin evaluates once per row) and bounds the
-    # per-row HOF work to the row's OWN cell's seeds.
-    from collections import defaultdict
-    by_cell: dict = defaultdict(list)
-    for r in seed_rows:
-        by_cell[r[cell_col]].append(
-            (int(r["__rn"]), [float(x) for x in r[c_vec]]))
-    hot_sorted = sorted(by_cell)
-    # trailing EMPTY entry = the non-hot sentinel: rows of cells with no
-    # seeds index it, ride zip_with([],[]) → [] → F.get(...) null →
-    # coalesce 0. Arrays are never NULL anywhere in the chain (a null
-    # array into zip_with/array_sort NPEs in generated code), and the
-    # sentinel keeps element_at in bounds under ANSI semantics.
-    subs_2d = V.lit_nested([[s for s, _ in sorted(by_cell[c])]
-                            for c in hot_sorted] + [[]])
-    vecs_3d = V.lit_nested([[v for _, v in sorted(by_cell[c])]
-                            for c in hot_sorted] + [[]])
-    idx = F.lit(len(hot_sorted) + 1)
-    for i, c in enumerate(hot_sorted):
-        idx = F.when(F.col(cell_col) == c, F.lit(i + 1)).otherwise(idx)
-    staged = assigned.withColumn("__subidx", idx)
-    ranked = F.zip_with(
-        F.element_at(vecs_3d, F.col("__subidx")),
-        F.element_at(subs_2d, F.col("__subidx")),
-        lambda v, s: F.struct((-V.dot(F.col(c_vec), v)).alias("d"),
-                              s.alias("sub")))
-    # coalesce(..., 0) is non-nullable → no isnotnull(subcell) join-key
-    # filter gets pushed below this projection (the pushed copy would
-    # re-evaluate the whole tree per row); F.get is 0-based and
-    # null-safe on the empty sentinel array
-    subcell = F.coalesce(F.get(F.array_sort(ranked), F.lit(0))["sub"],
-                         F.lit(0))
-    return staged.withColumn("subcell", subcell).drop("__subidx")
+    by_cell: dict = {}
+    for r in sorted(seed_rows, key=lambda r: r["__rn"]):
+        by_cell.setdefault(r[cell_col], []).append(r)
+    cells = sorted(by_cell)
+    models = [(np.array([r["__rn"] for r in by_cell[c]], dtype=np.int32),
+               [np.array([float(x) for x in r[c_vec]]) for r in by_cell[c]])
+              for c in cells]
+    model = assigned.sparkSession.sparkContext.broadcast(
+        (pa.array(cells), models))
+    return _with_kernel_column(
+        assigned, StructField("subcell", IntegerType(), False),
+        lambda b: K.nearest_in_group(b, c_vec, cell_col, *model.value))
 
 
 def semdedup_pairs_guarded(corpus: DataFrame,
@@ -762,15 +743,7 @@ def semdedup_pairs_guarded(corpus: DataFrame,
     cands = _bucket_pairs(
         split.select(F.col(c_id).alias("id"), "cell", "subcell"),
         ["cell", "subcell"], "id")
-    v_a = corpus.select(F.col(c_id).alias("id_a"), F.col(c_vec).alias("va"),
-                        V.norm(F.col(c_vec)).alias("na"))
-    v_b = corpus.select(F.col(c_id).alias("id_b"), F.col(c_vec).alias("vb"),
-                        V.norm(F.col(c_vec)).alias("nb"))
-    return (cands.join(v_a, "id_a").join(v_b, "id_b")
-            .withColumn("cos_raw", V.cosine_from_norms(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")))
-            .filter(F.col("cos_raw") >= threshold)
-            .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine")))
+    return _cosine_pairs(cands, corpus, threshold, c_id, c_vec)
 
 
 def ivf_topk_quantized(queries: DataFrame, corpus_codes: DataFrame,
@@ -825,17 +798,8 @@ def ivf_topk_quantized(queries: DataFrame, corpus_codes: DataFrame,
         coarse.select(q_id, c_id, "approx"), q_id,
         [F.desc("approx"), F.asc(c_id)], rerank,
         rank_col="__r").select(q_id, c_id)
-    qv = queries.withColumn("__qn", V.norm(F.col(q_vec)))
-    cv = corpus_vec.select(F.col(c_id), F.col(c_vec),
-                           V.norm(F.col(c_vec)).alias("__cn"))
-    scored = (survivors.join(cv, c_id).join(qv, q_id)
-              .withColumn("cosine", V.cosine_from_norms(
-                  F.col(c_vec), F.col(q_vec), F.col("__cn"), F.col("__qn"))))
-    w2 = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (scored.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select(q_id, F.col(c_id),
-                    F.round("cosine", 6).alias("cosine"), "rank"))
+    return _exact_rerank(survivors, queries, corpus_vec, k,
+                         q_id, q_vec, c_id, c_vec)
 
 
 def lsh_topk_multiprobe(queries: DataFrame, corpus: DataFrame,
@@ -857,42 +821,23 @@ def lsh_topk_multiprobe(queries: DataFrame, corpus: DataFrame,
     buckets are distinct single-bit flips, and a corpus vector lives
     in exactly one bucket, so candidates need no dedup); exact cosine
     rerank with the deterministic (cosine desc, id asc) tie-break.
-    Everything is sequential-fold dot arithmetic over literal planes —
-    bit-reproducible against a SQL oracle, same as lsh_topk.
-
-    HOF-lambda note (the subsplit_hot_cells lesson): the flip lambda
-    references the base-bucket EXPRESSION per probe element, which
-    re-evaluates its n_bits sign dots n_flip more times — bounded and
-    query-side only (total ≤ (2 + n_flip)·n_bits dots per query row),
-    unlike the corpus-side per-seed argmin that motivated the staged
-    form there."""
+    The probe list is one map-only Arrow kernel
+    (functions/kernels.py:probe_buckets) over the broadcast planes,
+    and the corpus buckets are :func:`with_lsh_bucket`'s — every sign
+    a sequential-fold dot, bit-reproducible against a SQL oracle, same
+    as lsh_topk."""
     n_bits = len(hyperplanes)
     if not 0 <= n_flip <= n_bits:
         raise ValueError(f"n_flip must be in [0, {n_bits}], got {n_flip}")
-    planes = V.lit_nested([[float(x) for x in p] for p in hyperplanes])
-
-    def bucket_of(vec_col_name: str):
-        return F.array_join(F.transform(
-            planes, lambda p: F.when(V.dot(F.col(vec_col_name), p) >= 0,
-                                     F.lit("1")).otherwise(F.lit("0"))), "")
-
-    # (|margin|, bit index) per plane, smallest margins first
-    margins = F.array_sort(F.transform(
-        planes, lambda p, i: F.struct(
-            F.abs(V.dot(F.col(q_vec), p)).alias("a"),
-            (i + 1).alias("i"))))
-    flips = F.slice(margins, 1, n_flip)
-    base = bucket_of(q_vec)
-    probes = F.concat(
-        F.array(base),
-        F.transform(flips, lambda s: F.concat(
-            F.substring(base, F.lit(1), s["i"] - 1),
-            F.when(F.substring(base, s["i"], F.lit(1)) == "1",
-                   F.lit("0")).otherwise(F.lit("1")),
-            F.substring(base, s["i"] + 1, F.lit(n_bits)))))
-    qb = (queries.withColumn("bucket", F.explode(probes))
+    planes = queries.sparkSession.sparkContext.broadcast(
+        np.asarray(hyperplanes, dtype=np.float64))
+    qb = (_with_kernel_column(
+              queries, StructField("bucket", ArrayType(StringType(), False),
+                                   False),
+              lambda b: K.probe_buckets(b, q_vec, planes.value, n_flip))
+          .withColumn("bucket", F.explode("bucket"))
           .withColumn("__qn", V.norm(F.col(q_vec))))
-    cb = (corpus.withColumn("bucket", bucket_of(c_vec))
+    cb = (with_lsh_bucket(corpus, c_vec, n_bits, hyperplanes=hyperplanes)
           .withColumn("__cn", V.norm(F.col(c_vec))))
     scored = (cb.join(qb, on="bucket")
               .withColumn("cosine", V.cosine_from_norms(
@@ -1004,20 +949,7 @@ def jl_topk(queries: DataFrame, corpus: DataFrame,
     cand = _two_level_rank(coarse, q_id,
                            [F.desc("__ccos"), F.asc(c_id)], coarse_k,
                            rank_col="__crank").select(q_id, c_id)
-    full = (cand
-            .join(corpus.select(c_id, c_vec), c_id)
-            .join(queries.select(q_id, q_vec), q_id))
-    scored = (full
-              .withColumn("__cn", V.norm(F.col(c_vec)))
-              .withColumn("__qn", V.norm(F.col(q_vec)))
-              .withColumn("cosine", V.cosine_from_norms(
-                  F.col(c_vec), F.col(q_vec),
-                  F.col("__cn"), F.col("__qn"))))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, F.col(c_id),
-                    F.round("cosine", 6).alias("cosine"), "rank"))
+    return _exact_rerank(cand, queries, corpus, k, q_id, q_vec, c_id, c_vec)
 
 
 def semantic_decontaminate(corpus: DataFrame, bench: DataFrame,
@@ -1120,36 +1052,23 @@ def jl_ivf_topk(queries: DataFrame, corpus_assigned: DataFrame,
     cand = _two_level_rank(coarse, q_id,
                            [F.desc("__ccos"), F.asc(c_id)], coarse_k,
                            rank_col="__crank").select(q_id, c_id)
-    full = (cand
-            .join(corpus_assigned.select(c_id, c_vec), c_id)
-            .join(queries.select(q_id, q_vec), q_id))
-    scored = (full
-              .withColumn("__cn", V.norm(F.col(c_vec)))
-              .withColumn("__qn", V.norm(F.col(q_vec)))
-              .withColumn("cosine", V.cosine_from_norms(
-                  F.col(c_vec), F.col(q_vec),
-                  F.col("__cn"), F.col("__qn"))))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, F.col(c_id),
-                    F.round("cosine", 6).alias("cosine"), "rank"))
+    return _exact_rerank(cand, queries, corpus_assigned, k,
+                         q_id, q_vec, c_id, c_vec)
 
 
 # ---------------------------------------------------------------------
 # Product quantization (E102): m-subspace codebooks, ADC serving
 # ---------------------------------------------------------------------
 
-def _pq_codebook_literal(codebooks: list[list[list[float]]]):
-    """The [m][ks][dsub] codebook tensor as ONE plan literal
-    (array<array<array<double>>>): ``lit_nested`` makes it a single
-    Literal node, so plan analysis cost is independent of its size. A
-    PQ model is m·ks·dsub doubles (8·16·8 = 1 KB here; 8·256·128 =
-    2 MB at a production 1024-dim / 8-bit setup) — small enough for a
-    literal at test size; past a few hundred KB ship it as a broadcast
-    numpy array like the centroids (:func:`_with_nearest_cells`)."""
-    return V.lit_nested([[[float(x) for x in code] for code in sub]
-                         for sub in codebooks])
+def _pq_model(df: DataFrame, codebooks: list[list[list[float]]]):
+    """(broadcast codebooks — per subspace, a list of float64 entry
+    arrays — and the subspace width ``dsub``): the model every PQ
+    kernel (functions/kernels.py) takes. Subspace s of a vector is its
+    elements [s·dsub, (s+1)·dsub)."""
+    books = df.sparkSession.sparkContext.broadcast(
+        [[np.asarray(code, dtype=np.float64) for code in sub]
+         for sub in codebooks])
+    return books, len(codebooks[0][0])
 
 
 def pq_codebooks_from_seeds(seed_vecs: list[list[float]],
@@ -1167,17 +1086,6 @@ def pq_codebooks_from_seeds(seed_vecs: list[list[float]],
              for v in seed_vecs] for s in range(m)]
 
 
-def _pq_code_expr(sub_vec, cb_sub):
-    """Code for one subspace: argmax inner product against the
-    subspace's codebook entries, smallest index on ties — a (-ip, j)
-    struct ``array_sort``, the same order the nearest-cell kernel
-    ranks by, so a SQL oracle replays it with
-    ROW_NUMBER(ORDER BY ip DESC, j)."""
-    pairs = F.transform(cb_sub, lambda c, j: F.struct(
-        (-V.dot(sub_vec, c)).alias("d"), j.cast("int").alias("j")))
-    return F.element_at(F.array_sort(pairs), 1)["j"]
-
-
 def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
               vec_col: str = "embedding",
               out_col: str = "codes") -> DataFrame:
@@ -1186,28 +1094,30 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
     vector's s-th slice. Map-only, zero shuffle — at 100 TB this runs
     once at write time and the m-byte codes column is stored next to
     (or instead of) the float vectors: dim·4 bytes → m bytes, a 32×
-    cut at dim=64/m=8 (512× at production 1k dims)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    cb = _pq_codebook_literal(codebooks)
-    v = F.col(vec_col)
-    codes = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: _pq_code_expr(F.slice(v, s * dsub + 1, dsub),
-                                F.element_at(cb, s + 1)))
-    return df.withColumn(out_col, codes)
+    cut at dim=64/m=8 (512× at production 1k dims).
+
+    One Arrow kernel (functions/kernels.py:pq_codes) with the
+    codebooks broadcast as numpy: ties go to the smaller index, and a
+    slice that is null, short or holds a null gets code 0 — each
+    subspace on its own, so a short vector keeps its leading codes."""
+    books, dsub = _pq_model(df, codebooks)
+    return _with_kernel_column(
+        df, StructField(out_col, ArrayType(IntegerType(), True), False),
+        lambda b: K.pq_codes(b, vec_col, books.value, dsub))
 
 
-def _pq_lut_expr(q_vec, cb, m: int, dsub: int):
-    """Per-query ADC lookup table: luts[s][j] = <q_s, codebook[s][j]>
-    — m·ks doubles computed ONCE per query (map-only on the bounded
-    query frame), so scoring a candidate is m array lookups + m adds,
-    never a dim-length fold."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.transform(
-            F.element_at(cb, s + 1),
-            lambda c: V.dot(F.slice(q_vec, s * dsub + 1, dsub), c)))
+def _with_pq_luts(df: DataFrame, codebooks: list[list[list[float]]],
+                  vec_col: str, out_col: str) -> DataFrame:
+    """Per-query ADC lookup tables: ``out_col[s][j]`` = <q_s,
+    codebook[s][j]> (functions/kernels.py:pq_luts), null where the
+    query's slice s is invalid — m·ks doubles computed ONCE per query
+    (map-only on the bounded query frame), so scoring a candidate is m
+    array lookups + m adds, never a dim-length fold."""
+    books, dsub = _pq_model(df, codebooks)
+    return _with_kernel_column(
+        df, StructField(out_col, ArrayType(ArrayType(DoubleType(), True),
+                                           False), False),
+        lambda b: K.pq_luts(b, vec_col, books.value, dsub))
 
 
 def _pq_adc_score(codes_col, luts_col):
@@ -1238,17 +1148,14 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame,
     emits the final top-k — the compressed tier never decides the
     final order, only the candidate set. Without them, the raw ADC
     ranking itself is returned (the value-checked form: every score is
-    a fixed-order fold of literal-codebook dot products, so DuckDB
-    replays codes, LUTs, scores, and ranks bit-for-bit).
+    a fixed-order fold of codebook dot products, so DuckDB replays
+    codes, LUTs, scores, and ranks bit-for-bit).
 
     Compose with the IVF cell restriction for sublinearity — PQ
     compresses the scan, IVF shrinks it; production ANN (IVFADC) is
     exactly that composition."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    cb = _pq_codebook_literal(codebooks)
-    ql = queries.select(q_id, q_vec).withColumn(
-        "__luts", _pq_lut_expr(F.col(q_vec), cb, m, dsub))
+    ql = _with_pq_luts(queries.select(q_id, q_vec), codebooks, q_vec,
+                       "__luts")
     scored = (codes.select(c_id, codes_col)
               .crossJoin(ql.select(q_id, "__luts"))
               .withColumn("__adc",
@@ -1264,18 +1171,7 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame,
     cand = _two_level_rank(scored, q_id,
                            [F.desc("__adc"), F.asc(c_id)], budget,
                            rank_col="__crank").select(q_id, c_id)
-    full = (cand.join(corpus.select(c_id, c_vec), c_id)
-            .join(queries.select(q_id, q_vec), q_id))
-    scored = (full.withColumn("__cn", V.norm(F.col(c_vec)))
-              .withColumn("__qn", V.norm(F.col(q_vec)))
-              .withColumn("cosine", V.cosine_from_norms(
-                  F.col(c_vec), F.col(q_vec),
-                  F.col("__cn"), F.col("__qn"))))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, F.col(c_id),
-                    F.round("cosine", 6).alias("cosine"), "rank"))
+    return _exact_rerank(cand, queries, corpus, k, q_id, q_vec, c_id, c_vec)
 
 
 def train_pq_codebooks(corpus: DataFrame, dim: int, m: int = 8,
@@ -1285,11 +1181,12 @@ def train_pq_codebooks(corpus: DataFrame, dim: int, m: int = 8,
     """Per-subspace Lloyd training, all m subspaces in ONE distributed
     job per iteration (the train_ivf_centroids discipline applied to
     PQ): explode each vector into (s, subvec) rows once, assign codes
-    per row against the literal codebook tensor (map-only), re-center
-    with a single (s, code, pos) aggregate — m·ks·dsub collected rows
-    per iteration (1 KB here), re-embedded as the next iteration's
-    literals. Seeding is id % ks (deterministic); a code cell that
-    loses all members keeps its previous entry."""
+    per row against subspace s's codebook (map-only Arrow kernel,
+    functions/kernels.py:nearest_in_group with group = subspace),
+    re-center with a single (s, code, pos) aggregate — m·ks·dsub
+    collected rows per iteration (1 KB here), broadcast as the next
+    iteration's model. Seeding is id % ks (deterministic); a code cell
+    that loses all members keeps its previous entry."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
@@ -1326,10 +1223,14 @@ def train_pq_codebooks(corpus: DataFrame, dim: int, m: int = 8,
     zero = [[[0.0] * dsub for _ in range(ks)] for _ in range(m)]
     books = _rebuild(seeded, zero)
     for _ in range(iterations):
-        cb = _pq_codebook_literal(books)
-        assigned = subs.withColumn(
-            "code", _pq_code_expr(F.col("sv"),
-                                  F.element_at(cb, F.col("s") + 1)))
+        model = corpus.sparkSession.sparkContext.broadcast(
+            (pa.array(range(m), pa.int32()),
+             [(np.arange(len(sub), dtype=np.int32),
+               [np.asarray(code, dtype=np.float64) for code in sub])
+              for sub in books]))
+        assigned = _with_kernel_column(
+            subs, StructField("code", IntegerType(), False),
+            lambda b: K.nearest_in_group(b, "sv", "s", *model.value))
         books = _rebuild(assigned, books)
     return books
 
@@ -1359,11 +1260,8 @@ def ivfpq_topk(queries: DataFrame, codes_assigned: DataFrame,
     argmax, ADC a fixed-order fold, both ranks id-tie-broken — fully
     SQL-replayable under fixed codebooks/centroids; the trained form
     holds a recall gate instead (the family discipline)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    cb = _pq_codebook_literal(codebooks)
-    ql = queries.select(q_id, q_vec).withColumn(
-        "__luts", _pq_lut_expr(F.col(q_vec), cb, m, dsub))
+    ql = _with_pq_luts(queries.select(q_id, q_vec), codebooks, q_vec,
+                       "__luts")
     probes = (_with_nearest_cells(ql, centroid_rows, q_vec, "__pc",
                                   nprobe, by)
               .withColumn("cell", F.explode("__pc"))
@@ -1376,15 +1274,4 @@ def ivfpq_topk(queries: DataFrame, codes_assigned: DataFrame,
     cand = _two_level_rank(coarse, q_id,
                            [F.desc("__adc"), F.asc(c_id)], budget,
                            rank_col="__crank").select(q_id, c_id)
-    full = (cand.join(corpus.select(c_id, c_vec), c_id)
-            .join(queries.select(q_id, q_vec), q_id))
-    scored = (full.withColumn("__cn", V.norm(F.col(c_vec)))
-              .withColumn("__qn", V.norm(F.col(q_vec)))
-              .withColumn("cosine", V.cosine_from_norms(
-                  F.col(c_vec), F.col(q_vec),
-                  F.col("__cn"), F.col("__qn"))))
-    w = Window.partitionBy(q_id).orderBy(F.desc("cosine"), F.asc(c_id))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(q_id, F.col(c_id),
-                    F.round("cosine", 6).alias("cosine"), "rank"))
+    return _exact_rerank(cand, queries, corpus, k, q_id, q_vec, c_id, c_vec)

@@ -8857,11 +8857,11 @@ def embedding_pq_distortion(spark, sf_dir):
     corpus-linear map stage, one 8-group aggregate."""
     from cati_database_feeder_spark.functions import vectors as V
     from cati_database_feeder_spark.operators.similarity import (
-        _pq_codebook_literal, pq_codebooks_from_seeds)
+        pq_codebooks_from_seeds)
     e = T(spark, sf_dir, "embeddings")
     cbs = pq_codebooks_from_seeds(
         [v for _, v in _cents16(spark, sf_dir)], _PQ_M)
-    cb = _pq_codebook_literal(cbs)
+    cb = V.lit_nested(cbs)
     coded = _pq_codes_stage(spark, sf_dir).join(e, "vec_id")
     errs = coded.select(F.explode(F.transform(
         F.sequence(F.lit(0), F.lit(_PQ_M - 1)),

@@ -872,15 +872,15 @@ def test_ivfpq_recall_vs_brute_force(spark, sf_dir):
 def test_lit_nested_matches_f_lit(spark):
     """lit_nested (one-parse nested literal, functions/vectors.py) must
     be value- AND schema-identical to the element-wise F.lit it
-    replaced — including the empty-array sentinel subsplit_hot_cells
-    appends, int vs double element types, and the non-finite fallback."""
+    replaced — including empty-array entries, int vs double element
+    types, and the non-finite fallback."""
     from pyspark.sql import functions as F
     from cati_database_feeder_spark.functions import vectors as V
 
     cases = [
         [[1.5, -2.25e-7], [0.0, 3.0]],              # 2-D doubles
-        [[[1.5, 2.5]], []],                          # 3-D with sentinel
-        [[1, 2], []],                                # 2-D ints + sentinel
+        [[[1.5, 2.5]], []],                          # 3-D, empty entry
+        [[1, 2], []],                                # 2-D ints, empty entry
         [7, 8, 9],                                   # 1-D ints
         [float("nan"), 1.0],                         # fallback path
     ]
@@ -897,40 +897,3 @@ def test_lit_nested_matches_f_lit(spark):
         assert str(a) == str(b), f"case {i} values"  # str: NaN-safe
     # memo returns the identical Column object for an equal value
     assert V.lit_nested([[1.5]]) is V.lit_nested([[1.5]])
-
-
-def test_hashed_verify_frame_bijective_and_null_fallback(spark):
-    # injective vocabulary: arrays are hashed to longs, and every
-    # pairwise intersection size (hence token_jaccard) is preserved
-    rows = [(1, ["a", "b", "c"]), (2, ["b", "c", "d"]), (3, ["x"]),
-            (4, [])]
-    df = spark.createDataFrame(rows, "id long, toks array<string>")
-    hashed = dedup.hashed_verify_frame(df)
-    assert dict(hashed.dtypes)["toks"] == "array<bigint>"
-    raw = {r["id"]: r["toks"] for r in df.collect()}
-    hv = {r["id"]: r["toks"] for r in hashed.collect()}
-    for i in raw:
-        assert len(raw[i]) == len(hv[i])
-        for j in raw:
-            assert (len(set(raw[i]) & set(raw[j]))
-                    == len(set(hv[i]) & set(hv[j])))
-    # a null element defeats the injectivity argument (xxhash64(null)
-    # is the non-null seed) — the probe must refuse and return the
-    # frame unchanged, so exactness never depends on hash behavior
-    rows_null = [(1, ["a", None]), (2, ["b"])]
-    dfn = spark.createDataFrame(rows_null, "id long, toks array<string>")
-    out = dedup.hashed_verify_frame(dfn)
-    assert dict(out.dtypes)["toks"] == "array<string>"
-
-
-def test_hashed_verify_frame_memoizes_probe(spark):
-    df = spark.createDataFrame([(1, ["a"]), (2, ["b"])],
-                               "id long, toks array<string>")
-    dedup._HASHED_VERIFY_OK.clear()
-    dedup.hashed_verify_frame(df)
-    assert len(dedup._HASHED_VERIFY_OK) == 1
-    # same analyzed plan -> no second probe entry
-    dedup.hashed_verify_frame(
-        spark.createDataFrame([(1, ["a"]), (2, ["b"])],
-                              "id long, toks array<string>"))
-    assert len(dedup._HASHED_VERIFY_OK) <= 2

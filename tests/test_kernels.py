@@ -117,7 +117,8 @@ def test_rep_band_buckets_equals_column_form(spark, num_hashes, bands):
 
 
 # ---------------------------------------------------------------------
-# Vector kernels: nearest cells, JL projection, LSH sign buckets
+# Vector kernels: nearest cells, JL projection, LSH sign buckets and
+# probes, nearest entry within a group, PQ codes and lookup tables
 # ---------------------------------------------------------------------
 
 def _oracle_nearest(vec, centroid_rows, n, by):
@@ -150,6 +151,70 @@ def _oracle_sign_bits(vec, planes):
         "")
 
 
+def _oracle_probes(vec, planes, n_flip):
+    """The Column form of the multi-probe list: the sign bucket, then
+    one bucket per flipped bit, bits taken in (|dot|, bit index) struct
+    ``array_sort`` order."""
+    n_bits = len(planes)
+    margins = F.array_sort(F.transform(
+        V.lit_nested(planes), lambda p, i: F.struct(
+            F.abs(V.dot(vec, p)).alias("a"), (i + 1).alias("i"))))
+    base = _oracle_sign_bits(vec, planes)
+    return F.concat(F.array(base), F.transform(
+        F.slice(margins, 1, n_flip), lambda s: F.concat(
+            F.substring(base, F.lit(1), s["i"] - 1),
+            F.when(F.substring(base, s["i"], F.lit(1)) == "1",
+                   F.lit("0")).otherwise(F.lit("1")),
+            F.substring(base, s["i"] + 1, F.lit(n_bits)))))
+
+
+def _oracle_in_group(vec, group, keys, models):
+    """The Column form of the nearest entry within the row's group (the
+    hot-cell sub-split and PQ training assignment): per-group id and
+    vector literals with an empty trailing entry for rows of no group,
+    indexed by one ``element_at``; (-dot, id) structs, struct
+    ``array_sort``, first id, else 0."""
+    ids_2d = V.lit_nested([[int(i) for i in ids] for ids, _ in models] + [[]])
+    vecs_3d = V.lit_nested([[[float(x) for x in v] for v in vs]
+                            for _, vs in models] + [[]])
+    idx = F.lit(len(keys) + 1)
+    for i, key in enumerate(keys):
+        idx = F.when(group == key, F.lit(i + 1)).otherwise(idx)
+    ranked = F.zip_with(
+        F.element_at(vecs_3d, idx), F.element_at(ids_2d, idx),
+        lambda v, s: F.struct((-V.dot(vec, v)).alias("d"), s.alias("sub")))
+    return F.coalesce(F.get(F.array_sort(ranked), F.lit(0))["sub"], F.lit(0))
+
+
+def _oracle_pq_codes(vec, codebooks):
+    """The Column form of PQ encoding: per subspace, the slice's (-ip,
+    j) structs over the codebook literal, struct ``array_sort``, first
+    j."""
+    cb = V.lit_nested(codebooks)
+    dsub = len(codebooks[0][0])
+
+    def code(sub_vec, cb_sub):
+        pairs = F.transform(cb_sub, lambda c, j: F.struct(
+            (-V.dot(sub_vec, c)).alias("d"), j.cast("int").alias("j")))
+        return F.element_at(F.array_sort(pairs), 1)["j"]
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(len(codebooks) - 1)),
+        lambda s: code(F.slice(vec, s * dsub + 1, dsub),
+                       F.element_at(cb, s + 1)))
+
+
+def _oracle_pq_luts(vec, codebooks):
+    """The Column form of the ADC lookup tables: per subspace, the
+    slice's fold with every codebook entry."""
+    cb = V.lit_nested(codebooks)
+    dsub = len(codebooks[0][0])
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(len(codebooks) - 1)),
+        lambda s: F.transform(
+            F.element_at(cb, s + 1),
+            lambda c: V.dot(F.slice(vec, s * dsub + 1, dsub), c)))
+
+
 _NAN = float("nan")
 _EDGE_VECS = [
     [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
@@ -169,6 +234,28 @@ _EDGE_CELLS = [(5, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
 # the third plane is orthogonal to the first two rows: a 0.0 dot is "1"
 _EDGE_PLANES = [[0.1, -0.2, 0.3, 0.4], [-1.5, 0.25, 0.0, 2.0],
                 [0.0, 0.0, 1.0, 0.0], [0.7, 0.7, -0.7, 0.7]]
+# each edge row's group: both parities, a null group and group 2, which
+# no model below has
+_EDGE_GROUPS = [0, 1, 0, 1, None, 1, 0, 1, 0, 1, 0, 1, 0, 2]
+# (keys, models): uniform-length entries with a duplicate (tie) and a
+# NaN entry, then entries of three lengths in one group, where a row's
+# null dot products rank first
+_EDGE_GROUP_MODELS = {
+    "uniform": ([0, 1, 5], [
+        ([1, 2, 3, 4], [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
+                        [1.0, 0.0, 0.0, 0.0], [_NAN, 0.0, 0.0, 0.0]]),
+        ([2, 5, 7], [[0.5, 0.5, 0.0, 0.0], [0.0, 0.0, 0.0, 0.0],
+                     [-1.0, 0.5, 0.0, 2.0]]),
+        ([9], [[1.0, 1.0, 1.0, 1.0]])]),
+    "mixed": ([1, 0], [
+        ([1, 2, 3], [[1.0, 0.0, 0.0], [0.3, -1.7, 2.2, 0.1],
+                     [1.0, 0.0, 0.0, 0.0, 0.0]]),
+        ([0, 4], [[0.0, 1.0, 0.0, 0.0], [1.0, 0.0, 0.0]])]),
+}
+# two subspaces of width 2 with 4 and 3 entries: a duplicate entry (tie)
+# and a zero entry (every dot 0.0)
+_EDGE_BOOKS = [[[1.0, 0.0], [0.0, 1.0], [1.0, 0.0], [0.5, -0.5]],
+               [[0.0, 0.0], [-1.0, 2.0], [0.3, -0.3]]]
 
 
 def _bits(values):
@@ -184,13 +271,20 @@ def edge_case(request, spark):
     id). Every oracle is computed once per value type."""
     value_type = {"double": pa.float64(), "float": pa.float32()}[request.param]
     table = pa.table({"id": pa.array(range(len(_EDGE_VECS)), pa.int64()),
-                      "vec": pa.array(_EDGE_VECS, pa.list_(value_type))})
+                      "vec": pa.array(_EDGE_VECS, pa.list_(value_type)),
+                      "grp": pa.array(_EDGE_GROUPS, pa.int32())})
     df = spark.createDataFrame(table)
     vec = F.col("vec")
     cols = {f"{by}{n}": _oracle_nearest(vec, _EDGE_CELLS, n, by)
             for by in ("l2", "ip") for n in (1, 3, 6, 8)}
     cols["proj"] = _oracle_project(vec, _EDGE_PLANES)
     cols["bits"] = _oracle_sign_bits(vec, _EDGE_PLANES)
+    for n_flip in (0, 2, 4):
+        cols[f"probes{n_flip}"] = _oracle_probes(vec, _EDGE_PLANES, n_flip)
+    for name, (keys, models) in _EDGE_GROUP_MODELS.items():
+        cols[name] = _oracle_in_group(vec, F.col("grp"), keys, models)
+    cols["codes"] = _oracle_pq_codes(vec, _EDGE_BOOKS)
+    cols["luts"] = _oracle_pq_luts(vec, _EDGE_BOOKS)
     rows = df.select("id", *[c.alias(k) for k, c in cols.items()]).collect()
     return value_type, table, {r["id"]: r for r in rows}
 
@@ -200,8 +294,9 @@ def _edge_batches(value_type, table):
     for list_type in (pa.list_(value_type), pa.large_list(value_type)):
         batch = pa.RecordBatch.from_arrays(
             [table.column("id").combine_chunks(),
-             table.column("vec").combine_chunks().cast(list_type)],
-            names=["id", "vec"])
+             table.column("vec").combine_chunks().cast(list_type),
+             table.column("grp").combine_chunks()],
+            names=["id", "vec", "grp"])
         yield from (batch, batch.slice(2, 7), batch.slice(7))
 
 
@@ -239,6 +334,74 @@ def test_sign_buckets_batch_matches_column_form(edge_case):
         assert got.column(1).to_pylist() == [0, 1] * len(ids)
         assert got.column(2).to_pylist() == [
             want[i]["bits"][t * 2:(t + 1) * 2] for i in ids for t in range(2)]
+
+
+def test_sign_bucket_and_probes_batch_match_column_form(edge_case):
+    value_type, table, want = edge_case
+    planes = np.array(_EDGE_PLANES)
+    for batch in _edge_batches(value_type, table):
+        ids = batch.column(0).to_pylist()
+        got = K.sign_bucket(batch, "vec", planes)
+        assert got.type == pa.string()
+        assert got.to_pylist() == [want[i]["bits"] for i in ids]
+        for n_flip in (0, 2, 4):
+            got = K.probe_buckets(batch, "vec", planes, n_flip)
+            assert got.to_pylist() == [list(want[i][f"probes{n_flip}"])
+                                       for i in ids]
+
+
+def test_first_orders_like_struct_array_sort(spark):
+    """The (key, index) order of a struct ``array_sort``: null keys
+    first, -0.0 equal to 0.0, NaN last, ties to the smaller index."""
+    inf = float("inf")
+    keys = [[None, 1.0, -0.0, 0.0], [0.0, -0.0, 1.0, _NAN],
+            [-0.0, 0.0, _NAN, -1.0], [_NAN, 1.0, _NAN, 1.0],
+            [inf, -inf, _NAN, -inf], [2.0, 2.0, None, None],
+            [_NAN] * 4, [None] * 4]
+    df = spark.createDataFrame([(i, k) for i, k in enumerate(keys)],
+                               "id int, k array<double>")
+    want = [r["first"] for r in df.orderBy("id").select(F.element_at(
+        F.array_sort(F.transform("k", lambda d, j: F.struct(
+            d.alias("d"), j.alias("j")))), 1)["j"].alias("first")).collect()]
+    null = np.array([[x is None for x in k] for k in keys])
+    key = np.array([[_NAN if x is None else x for x in k] for k in keys])
+    assert K._first(key, null).tolist() == want
+
+
+def test_nearest_in_group_batch_matches_column_form(edge_case):
+    value_type, table, want = edge_case
+    for name, (keys, models) in _EDGE_GROUP_MODELS.items():
+        model = [(np.array(ids, dtype=np.int32),
+                  [np.array(v, dtype=np.float64) for v in vs])
+                 for ids, vs in models]
+        for batch in _edge_batches(value_type, table):
+            got = K.nearest_in_group(batch, "vec", "grp", pa.array(keys),
+                                     model)
+            assert got.type == pa.int32()
+            ids = batch.column(0).to_pylist()
+            assert got.to_pylist() == [want[i][name] for i in ids], name
+
+
+def test_pq_codes_and_luts_batch_match_column_form(edge_case):
+    """Each subspace is valid on its own: the short vector keeps its
+    first code, the long one's fifth element is never read, and the
+    null element at index 1 nulls only subspace 0."""
+    value_type, table, want = edge_case
+    books = [[np.array(e) for e in sub] for sub in _EDGE_BOOKS]
+    for batch in _edge_batches(value_type, table):
+        ids = batch.column(0).to_pylist()
+        codes = K.pq_codes(batch, "vec", books, 2)
+        assert codes.type == pa.list_(pa.int32())
+        assert codes.to_pylist() == [list(want[i]["codes"]) for i in ids]
+        luts = K.pq_luts(batch, "vec", books, 2)
+        assert luts.type == pa.list_(pa.list_(pa.float64()))
+        assert [_bits(t) for t in luts.to_pylist()] == [
+            _bits(want[i]["luts"]) for i in ids]
+    rows = {r: want[r] for r in (8, 9, 10)}
+    assert rows[8]["codes"][0] == 0 and rows[8]["luts"][0] == [None] * 4
+    assert rows[8]["luts"][1] == [0.0, 0.0, 0.0]
+    assert rows[9]["luts"][0][0] == 1.0 and rows[9]["luts"][1] == [None] * 3
+    assert rows[10]["luts"] == want[0]["luts"]
 
 
 def _model(n_rows, dim, seed):
@@ -296,5 +459,61 @@ def test_vector_operators_equal_column_form(spark, n_cells, dim, by):
         _same_rows(similarity.jl_project(corpus, "embedding", planes),
                    corpus.withColumn("proj", _oracle_project(
                        F.col("embedding"), planes)))
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_model_operators_equal_column_form(spark):
+    """with_lsh_bucket, lsh_topk_multiprobe (its probe list),
+    subsplit_hot_cells, pq_encode and the PQ lookup tables on
+    multi-batch partitions against the Column forms they replaced."""
+    dim = 8
+    corpus, queries = _vector_frames(spark, dim)
+    planes = [v for _, v in _model(6, dim, 3)]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")   # every partition spans several batches
+    try:
+        _same_rows(similarity.with_lsh_bucket(corpus, "embedding", 6,
+                                              hyperplanes=planes),
+                   corpus.withColumn("bucket", _oracle_sign_bits(
+                       F.col("embedding"), planes)))
+
+        qb = (queries.withColumn("bucket", F.explode(
+            _oracle_probes(F.col("q_vec"), planes, 2)))
+            .withColumn("__qn", V.norm(F.col("q_vec"))))
+        cb = (corpus.withColumn("bucket", _oracle_sign_bits(
+            F.col("embedding"), planes))
+            .withColumn("__cn", V.norm(F.col("embedding"))))
+        scored = cb.join(qb, "bucket").withColumn(
+            "cosine", V.cosine_from_norms(F.col("embedding"), F.col("q_vec"),
+                                          F.col("__cn"), F.col("__qn")))
+        _same_rows(similarity.lsh_topk_multiprobe(queries, corpus, planes,
+                                                  k=5, n_flip=2),
+                   similarity._topk_output(scored, "q_id", "vec_id", 5))
+
+        # cells 0-2 (41-42 members, the edge vectors among them) are
+        # hot at cap 30, cell 3 is not; an oversample this large gates
+        # every member, so each hot cell's seeds are its 2 smallest ids
+        assigned = corpus.withColumn("cell", F.when(
+            F.col("vec_id") % 10 == 9, 3).otherwise(F.col("vec_id") % 3))
+        vecs = {r["vec_id"]: r["embedding"] for r in corpus.collect()}
+        keys = [0, 1, 2]
+        models = [([1, 2], [vecs[i] for i in sorted(
+            i for i in vecs if i % 10 != 9 and i % 3 == c)[:2]])
+            for c in keys]
+        _same_rows(similarity.subsplit_hot_cells(assigned, cap=30,
+                                                 oversample=10 ** 6),
+                   assigned.withColumn("subcell", _oracle_in_group(
+                       F.col("embedding"), F.col("cell"), keys, models)))
+
+        books = similarity.pq_codebooks_from_seeds(
+            [vecs[i] for i in range(5)], 4)
+        _same_rows(similarity.pq_encode(corpus, books),
+                   corpus.withColumn("codes", _oracle_pq_codes(
+                       F.col("embedding"), books)))
+        _same_rows(similarity._with_pq_luts(queries, books, "q_vec", "luts"),
+                   queries.withColumn("luts", _oracle_pq_luts(
+                       F.col("q_vec"), books)))
     finally:
         spark.conf.set(key, old)
