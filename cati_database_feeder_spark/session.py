@@ -7,6 +7,20 @@ skew-join splitting, partition coalescing), broadcast threshold for
 dimension joins, Arrow for any pandas-UDF exchange, UTC session time
 zone so timestamp semantics are stable across drivers and match the
 DuckDB oracle.
+
+Python workers fork from the package's own daemon,
+``cati_database_feeder_spark.pyworker``, not from ``pyspark.daemon``.
+Every worker task calls ``importlib.invalidate_caches()``, and on CPython
+< 3.13 that re-reads the central directory of every zip archive on the
+worker's import path (``pyspark.zip``, the py4j zip, the Spark core jar):
+0.15-0.2 s per task on a 4-CPU host, a fixed cost on every
+``mapInArrow``/``mapInPandas`` task and every Python-RDD scan. The daemon
+re-reads an archive only when it changed, as CPython 3.13 does; on 3.13
+and later it is ``pyspark.daemon`` unchanged. Spark starts it as
+``python -m cati_database_feeder_spark.pyworker``, so the package must be
+importable by the Python workers: from the working directory, from
+``PYTHONPATH`` or as an installed package. The Arrow kernels need the
+same, since workers unpickle them by reference to package modules.
 """
 
 from __future__ import annotations
@@ -66,6 +80,10 @@ def get_session(app_name: str = "cati-feeder-spark", master: str | None = None,
         # that need it.
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing")
+        # --- Python workers fork from the package's daemon, which
+        # skips the per-task zip re-read (see the module docstring) ---
+        .config("spark.python.daemon.module",
+                "cati_database_feeder_spark.pyworker")
     )
     return builder.getOrCreate()
 
@@ -77,13 +95,17 @@ def local_frame(spark: SparkSession, rows, schema):
     ``defaultParallelism`` pickled partitions; a later ``coalesce(1)``
     (the usual small-table write shape) then streams ALL of them
     through one sequential Python worker — measured ~5-6 s per tiny
-    frame at local[32], which dominated the embedding-store bootstrap
-    (boot:emb:params 22 s for four one-to-128-row writes) and taxed
-    every metrics append and literal-offset join. Driver-local
-    model/offset/sentinel frames are small BY CONSTRUCTION, so one
-    slice is the only sensible layout — one Python task, ~0.3 s.
-    On a cluster the same argument holds: these frames broadcast or
-    coalesce anyway, so parallelism was never buying anything.
+    frame at local[32]: 32 tasks, each paying the per-task zip re-read
+    that the worker daemon skips (module docstring). That dominated
+    the embedding-store bootstrap (boot:emb:params 22 s for four
+    one-to-128-row writes) and taxed every metrics append and
+    literal-offset join. Driver-local model/offset/sentinel frames are
+    small BY CONSTRUCTION, so one slice is the only sensible layout —
+    one Python task. Warm scans at local[2] on a 4-CPU host, with the
+    daemon: a one-row frame from here 0.08-0.10 s, a ten-row
+    ``createDataFrame(list)`` (two slices) 0.08-0.10 s. On a cluster
+    the same argument holds: these frames broadcast or coalesce
+    anyway, so parallelism was never buying anything.
 
     ``schema`` must be a DDL string or ``StructType`` whenever
     ``rows`` may be empty: ``createDataFrame([], [names])`` has no

@@ -1,15 +1,22 @@
 """Arrow batch kernels (functions/kernels.py) against the Column forms
-they replace: outputs must be bit-identical, not just close."""
+they replace: outputs must be bit-identical, not just close. Also the
+worker daemon (pyworker.py) the kernels run under."""
 
 import hashlib
+import importlib
+import os
 import random
 import struct
+import sys
+import zipfile
+import zipimport
 
 import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from cati_database_feeder_spark import pyworker
 from cati_database_feeder_spark.functions import kernels as K
 from cati_database_feeder_spark.functions import vectors as V
 from cati_database_feeder_spark.operators import dedup, similarity
@@ -517,3 +524,58 @@ def test_model_operators_equal_column_form(spark):
                        F.col("q_vec"), books)))
     finally:
         spark.conf.set(key, old)
+
+
+# --- worker daemon (pyworker): the stamped zip-directory re-read ---
+
+def _zip_with(path, names):
+    with zipfile.ZipFile(path, "w") as z:
+        for name in names:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def test_stamped_invalidate_caches_rereads_only_a_changed_archive(
+        tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    _zip_with(archive, ["m1"])
+    importer = zipimport.zipimporter(archive)
+    reads = []
+    stock_read = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda path: reads.append(path) or stock_read(path))
+    invalidate = pyworker.stamped_invalidate_caches(
+        zipimport.zipimporter.invalidate_caches)
+    invalidate(importer)        # no stamp yet: the stock re-read
+    assert reads == [archive]
+    for _ in range(3):          # unchanged archive: no re-read
+        invalidate(importer)
+    assert reads == [archive]
+    assert importer.find_spec("m2") is None
+
+    _zip_with(archive, ["m1", "m2"])
+    invalidate(importer)
+    invalidate(importer)
+    assert reads == [archive, archive]
+    assert importer.find_spec("m2") is not None
+
+    os.remove(archive)
+    invalidate(importer)        # stat fails: the stock path, which clears
+    assert reads == [archive] * 3
+    assert importer.find_spec("m1") is None
+
+
+def test_importing_pyworker_patches_nothing():
+    importlib.reload(pyworker)
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
+def test_workers_fork_from_the_package_daemon(spark):
+    def report(batches):
+        name = zipimport.zipimporter.invalidate_caches.__module__
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"m": [name] * b.num_rows})
+
+    (row,) = spark.range(1).mapInArrow(report, "m string").collect()
+    expected = ("cati_database_feeder_spark.pyworker"
+                if sys.version_info < (3, 13) else "zipimport")
+    assert row.m == expected
