@@ -87,8 +87,11 @@ def tokset_groups(documents: DataFrame, id_col: str = "doc_id",
     # the separator (tokens come from a \\s+ split and U+001F is not
     # regex whitespace, so e.g. {'a\x1fb'} vs {'a','b'} would collide
     # into one group), while array equality is collision-free by
-    # construction and skips the concat+md5 pass entirely.
-    fp = F.array_sort("toks")
+    # construction and skips the concat+md5 pass entirely. sort_array,
+    # not array_sort: array_sort's default comparator is an interpreted
+    # lambda, sort_array is codegen, and the two agree on null-free
+    # arrays (a token array never holds a null).
+    fp = F.sort_array("toks")
     return toks.withColumn("gid", F.min("id").over(Window.partitionBy(fp)))
 
 
@@ -342,8 +345,9 @@ def jaccard_similarity_join(documents: DataFrame, id_col: str = "doc_id",
 
     # --- collapse identical sets (within block) to one representative
     # (partition by the sorted array itself — see tokset_groups for why
-    # a concat_ws string encoding would be collision-prone)
-    fp = F.array_sort("toks")
+    # a concat_ws string encoding would be collision-prone, and for
+    # sort_array over array_sort)
+    fp = F.sort_array("toks")
     wg = Window.partitionBy(*blk_cols, fp)
     memb = all_toks.withColumn("gid", F.min("id").over(wg))
     toks = (memb.filter(F.col("id") == F.col("gid"))
@@ -661,7 +665,7 @@ def tokset_key(toks: Column) -> Column:
     32 hex chars regardless of document size: the reps store's key
     column (scanned by every per-batch membership probe) stays
     narrow no matter how large documents get."""
-    return F.md5(F.coalesce(F.to_json(F.array_sort(toks)), F.lit("null")))
+    return F.md5(F.coalesce(F.to_json(F.sort_array(toks)), F.lit("null")))
 
 
 def delta_membership(delta: DataFrame, reps: DataFrame,
@@ -701,10 +705,10 @@ def delta_membership(delta: DataFrame, reps: DataFrame,
     # collision). A mismatch is an invariant violation — md5 collision
     # or a corrupted reps store — and silently splitting the group would
     # corrupt the store just as badly (duplicate key rows), so it fails
-    # loud instead. Cost: one array_sort pair per MATCHED delta doc —
+    # loud instead. Cost: one sort_array pair per MATCHED delta doc —
     # batch-bounded, store rows are only ever read, never sorted en masse.
     collision = (F.col("sgid").isNotNull()
-                 & (F.array_sort("toks") != F.array_sort("__rtoks")))
+                 & (F.sort_array("toks") != F.sort_array("__rtoks")))
     known = (F.when(F.col("sgid").isNull(), F.lit(False))
              .when(~collision, F.lit(True))
              .otherwise(F.raise_error(F.concat(
@@ -899,14 +903,17 @@ def keep_best_per_cluster(labels: DataFrame, scores: DataFrame,
     docs outside any cluster are implicitly kept and not emitted.
 
     Scale shape: one equi-join of the labeling with the score column,
-    then two per-COMPONENT aggregates (max score; min id among the
-    max-score members) and a join back on component — every shuffle
-    past the score join carries one row per CLUSTER, not per doc, with
-    map-side partial aggregation. No window over the corpus, no skew
-    trap: a pathological million-member cluster contributes one
-    aggregate row. The two-aggregate form (rather than a packed
-    max-of-(score,-id) struct) keeps the id type fully generic —
-    string/date/any orderable id works, nothing assumes numeric.
+    then ONE window over ``component`` ordered by score descending, id
+    ascending, whose ``first(id)`` is the survivor — a single exchange
+    and sort, no aggregate joined back (with a partitioned write of
+    the result, 4 Spark jobs for a 2,000-doc dedup pass). Ties follow
+    Spark's ordering of the score type: -0.0 and 0.0 compare equal
+    (smallest id wins), NaN sorts above every number, as with
+    ``F.max``. Nothing assumes a numeric id: string/date/any orderable
+    id works. The trade-off is the window's: each component's members
+    are sorted in one task, so a pathological million-member cluster
+    is one task's sort, where an aggregate would have folded it
+    map-side into one row.
 
     PRECONDITION, enforced loud: every labeled id must have a score
     row. The score join is a LEFT join with a ``raise_error`` on a
@@ -928,11 +935,9 @@ def keep_best_per_cluster(labels: DataFrame, scores: DataFrame,
                          "compete for survivor and silently dropping "
                          "it would keep the wrong member)")))
                ).otherwise(F.col("__score"))))
-    best_score = lab.groupBy("component").agg(F.max("__score").alias("__ms"))
-    kept = (lab.join(best_score, "component")
-            .filter(F.col("__score") == F.col("__ms"))
-            .groupBy("component").agg(F.min("id").alias("kept_id")))
-    return (lab.join(kept, "component")
+    best = Window.partitionBy("component").orderBy(F.desc("__score"),
+                                                   F.asc("id"))
+    return (lab.withColumn("kept_id", F.first("id").over(best))
             .select(F.col("id").alias(id_col), "component", "kept_id",
                     (F.col("id") == F.col("kept_id")).alias("keep")))
 

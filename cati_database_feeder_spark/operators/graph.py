@@ -220,20 +220,19 @@ def _driver_union_find(srcs, dsts):
     return nodes, nodes[lbl]
 
 
-def _driver_components(e: DataFrame, id_type) -> DataFrame:
-    """(id, component) of the (src, dst) edge frame ``e``, solved on the
-    driver. The labels come back as an Arrow-built frame: it is decoded
-    in the JVM, so scanning it starts no Python worker (a
+def _driver_components(spark, edges, id_type) -> DataFrame:
+    """(id, component) of the (src, dst) Arrow edge table ``edges``,
+    solved on the driver. The labels come back as an Arrow-built frame:
+    it is decoded in the JVM, so scanning it starts no Python worker (a
     ``local_frame`` re-runs its Python conversion on every scan)."""
     import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
-    edges = e.toArrow()
     nodes, labels = _driver_union_find(edges.column("src").to_numpy(),
                                        edges.column("dst").to_numpy())
     schema = StructType([StructField("id", id_type),
                          StructField("component", id_type)])
-    return e.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table({"id": nodes, "component": labels}), schema)
 
 
@@ -245,15 +244,19 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     Size-gated hybrid, the same shape AQE applies to joins (broadcast
     below a threshold, shuffle above): when an integral-id edge list
-    fits ``_DRIVER_EDGE_CAP`` (a ``limit(cap+1).count()`` probe over the
-    persisted edges) it is pulled once as Arrow and solved by
-    union-find on the driver — exact, label-identical, and free of the
-    per-round job constants that dominate small-graph cost (measured
-    ~6 s of fixed overhead for a sub-second graph at sf0.1); the labels
-    return as an Arrow-built frame in the input id dtype. Above the cap
-    the edges are first contracted by up to two large-star rounds
-    (:func:`_large_star`), and the driver solves them if that brings
-    them under the cap; otherwise — and always for non-integral ids —
+    fits ``_DRIVER_EDGE_CAP`` it is solved by union-find on the driver
+    from ONE pull of the persisted edges, ``limit(cap+1).toArrow()``:
+    the pull that answers "under the cap?" is the table the driver
+    solves, so an under-cap closure is one Spark job. That is exact,
+    label-identical, and free of the per-round job constants that
+    dominate small-graph cost (measured ~6 s of fixed overhead for a
+    sub-second graph at sf0.1); the labels return as an Arrow-built
+    frame in the input id dtype. An over-cap pull moves cap+1 edges
+    for nothing (~64 MB at the default cap). Above the cap the edges
+    are first contracted by up to two large-star rounds
+    (:func:`_large_star`), each probed with ``limit(cap+1).count()``,
+    and the driver solves them if that brings them under the cap;
+    otherwise — and always for non-integral ids —
     the distributed path runs. The cap bounds driver memory explicitly
     (4M edges ≈ 64 MB of Arrow longs — the same bound class as the
     session's broadcast threshold; the same bounded-driver-state class
@@ -283,19 +286,21 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # (they did before the fast path existed) rather than raising
     star_rdds: set[int] = set()
     if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        # persist around the probe: limit(cap+1) executes (part of) the
+        # persist around the pull: limit(cap+1) executes (part of) the
         # upstream pair plan — typically an expensive dedup join — and
         # without the cache an over-cap graph would pay that plan twice
-        # (once for the probe, once for the contraction). The cache is
+        # (once for the pull, once for the contraction). The cache is
         # released once the first contraction round is checkpointed.
         e = e.persist()
-        # size-probe with a COUNT, not a row transfer: the count answers
-        # "over cap?" shuffle-free, and the under-cap case re-reads the
-        # persisted/checkpointed edges for the actual transfer
-        if e.limit(cap + 1).count() <= cap:
-            out = _driver_components(e, id_type)
+        # the pull is the size probe: under the cap it is the driver's
+        # input, so an under-cap closure is one job; a separate count
+        # probe would add a job and its AQE stages
+        pulled = e.limit(cap + 1).toArrow()
+        if pulled.num_rows <= cap:
+            out = _driver_components(e.sparkSession, pulled, id_type)
             e.unpersist()
             return out
+        del pulled
         # Over the cap: contract with large-star rounds before giving up
         # on the driver path. One round is two shuffles of the edge list
         # and collapses a dense near-clique blob — the dup corpus shape
@@ -318,7 +323,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             _release_rdds(sc, star_rdds)
             e, star_rdds = contracted, new_rdds
             if e.limit(cap + 1).count() <= cap:
-                out = _driver_components(e, id_type)
+                out = _driver_components(e.sparkSession, e.toArrow(), id_type)
                 _release_rdds(sc, star_rdds)
                 return out
     edges = e.unionByName(

@@ -3922,11 +3922,12 @@ def dedup_keep_best(spark, sf_dir):
     """E38: the DELETE-LIST — clusters from the shared verified-pair
     closure, one survivor per cluster selected by quality (longest
     n_chars, ties to min doc_id — keep the most complete near-dup
-    variant, not an arbitrary id). The aggregate carries one row per
-    CLUSTER (max of a (score,-id) struct with map-side partials), so
-    a million-member boilerplate cluster costs one row, never a
-    corpus-wide window; the oracle replays the same selection with a
-    rank-1 window over the recursive-CTE closure
+    variant, not an arbitrary id). The survivor is ``first(id)`` of
+    one window over ``component`` ordered by n_chars descending, id
+    ascending: one exchange and sort, each cluster's members sorted in
+    one task (a million-member boilerplate cluster is one task's
+    sort); the oracle replays the same selection with a rank-1 window
+    over the recursive-CTE closure
     (operators/dedup.py:keep_best_per_cluster). The keep/delete list
     is a session STAGE: three registered consumers read it (this
     query, the impact report, the release composition) — the

@@ -4,6 +4,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,6 +84,23 @@ def test_connected_components_driver_labels_are_jvm_frame(spark, id_type):
     assert {r["id"]: r["component"] for r in out.collect()} == dict(
         zip(nodes.tolist(), labels.tolist()))
     assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_connected_components_under_cap_runs_one_job(spark):
+    # an under-cap closure is ONE pull of the persisted edges: the pull
+    # that answers "under the cap?" is the table the driver solves, so
+    # a size probe or a second transfer added back shows up here as an
+    # extra job. Jobs are counted by job-id range: the closure is eager,
+    # its labels frame is not.
+    pairs = spark.createDataFrame(pa.table({
+        "id_a": pa.array([1, 2, 4, 7, 8], pa.int64()),
+        "id_b": pa.array([2, 3, 5, 8, 9], pa.int64())}))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = connected_components(pairs)
+    assert dag.nextJobId() - j0 == 1
+    assert {r["id"]: r["component"] for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 7: 7, 8: 7, 9: 7}
 
 
 def test_components_from_rep_pairs_matches_expanded_closure(spark):

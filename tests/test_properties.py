@@ -270,6 +270,110 @@ def test_keep_best_per_cluster_equals_reference(spark, edges, scores):
         assert got[node] == (c, kept_id, node == kept_id)
 
 
+def _keep_best_by_aggregates(labels, scores):
+    """The two-aggregate keep-best form (max score per component, then
+    min id among the members at that max) as the reference the window
+    form must reproduce on every tie rule Spark's ordering has."""
+    lab = labels.join(scores.withColumnRenamed("doc_id", "id"), "id")
+    best = lab.groupBy("component").agg(F.max("score").alias("ms"))
+    kept = (lab.join(best, "component")
+            .filter(F.col("score") == F.col("ms"))
+            .groupBy("component").agg(F.min("id").alias("kept_id")))
+    return {r["id"]: (r["component"], r["kept_id"], r["id"] == r["kept_id"])
+            for r in lab.join(kept, "component").collect()}
+
+
+@pytest.mark.parametrize("case", ["float", "string_ids"])
+def test_keep_best_per_cluster_tie_rules(spark, case):
+    """Keep-best on the score and id shapes the integer property test
+    does not reach: float ties, -0.0 against 0.0 (equal, so the
+    smallest id wins whichever sign it carries), NaN (counts as the
+    maximum, above +inf, as with F.max) and string ids (compared as
+    strings: "10" < "9")."""
+    from cati_database_feeder_spark.operators.dedup import keep_best_per_cluster
+
+    nan, inf = float("nan"), float("inf")
+    if case == "float":
+        rows = [(1, 1, 0.5), (2, 1, 2.5), (3, 1, 2.5), (4, 1, 1.0),
+                (10, 10, -0.0), (11, 10, 0.0), (12, 10, -1.0),
+                (20, 20, 0.0), (21, 20, -0.0),
+                (30, 30, 5.0), (31, 30, nan), (32, 30, nan), (33, 30, inf)]
+        types = "id long, component long", "doc_id long, score double"
+        want_kept = {1: 2, 10: 10, 20: 20, 30: 31}
+    else:
+        rows = [("9", "10", 1.0), ("10", "10", 1.0), ("b", "10", 0.5),
+                ("x", "x", 2.0), ("y", "x", 3.0)]
+        types = "id string, component string", "doc_id string, score double"
+        want_kept = {"10": "10", "x": "y"}
+    labels = spark.createDataFrame([(i, c) for i, c, _ in rows], types[0])
+    scores = spark.createDataFrame([(i, s) for i, _, s in rows], types[1])
+    got = {r["doc_id"]: (r["component"], r["kept_id"], r["keep"])
+           for r in keep_best_per_cluster(labels, scores).collect()}
+    assert got == {i: (c, want_kept[c], i == want_kept[c])
+                   for i, c, _ in rows}
+    assert got == _keep_best_by_aggregates(labels, scores)
+
+
+def _java_tokens(text):
+    """T.tokens on the driver: trim spaces, split on Java's \\s class
+    (which, unlike Python's, excludes U+001C-U+001F)."""
+    import re
+    t = text.strip(" ")
+    return set(re.split(r"[ \t\n\x0b\f\r]+", t)) if t else set()
+
+
+# empty and whitespace-only docs, a token holding U+001F against the
+# two tokens it joins, non-ASCII tokens and repeated tokens
+_TOKSET_EDGE_DOCS = ["", "   ", "a\x1fb", "a b", "b a", "a a b b",
+                     "é ü", "ü é é", "日本 語", "語 日本 日本", "a"]
+
+
+def test_tokset_key_sort_array_matches_array_sort(spark):
+    """The token-set key sorts with sort_array (codegen); it must group
+    exactly as the array_sort form did, and as set equality does."""
+    from pyspark.sql import Window
+
+    from cati_database_feeder_spark.operators.dedup import (
+        tokset_groups, tokset_key)
+
+    df = spark.createDataFrame(list(enumerate(_TOKSET_EDGE_DOCS)),
+                               "doc_id long, text string")
+    memb = tokset_groups(df)
+    old = memb.withColumn(
+        "old_gid", F.min("id").over(Window.partitionBy(F.array_sort("toks"))))
+    keys = old.select("id", "gid", "old_gid", tokset_key(F.col("toks")).alias("key"),
+                      F.md5(F.to_json(F.array_sort("toks"))).alias("old_key"))
+    got = {r["id"]: r for r in keys.collect()}
+    sets = [_java_tokens(t) for t in _TOKSET_EDGE_DOCS]
+    want = {i: min(j for j, s in enumerate(sets) if s == sets[i])
+            for i in range(len(sets))}
+    assert {i: r["gid"] for i, r in got.items()} == want
+    assert all(r["gid"] == r["old_gid"] and r["key"] == r["old_key"]
+               for r in got.values())
+    # the groups the edge docs exist to test
+    assert want[1] == 0 and want[4] == 3 and want[5] == 3
+    assert want[2] == 2 and want[7] == 6 and want[9] == 8
+
+
+def test_jaccard_join_groups_tokset_edge_docs(spark):
+    """jaccard_similarity_join collapses identical sets by the same
+    sorted-array key: within-group pairs come back at exactly 1.0 and a
+    wrong merge (e.g. {'a\\x1fb'} with {'a','b'}) would add a pair, so
+    the output must equal brute force over the driver-side sets."""
+    df = spark.createDataFrame(
+        [(i, t, "s") for i, t in enumerate(_TOKSET_EDGE_DOCS)],
+        "doc_id long, text string, source string")
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in jaccard_similarity_join(df, threshold=0.5).collect()}
+    sets = [_java_tokens(t) for t in _TOKSET_EDGE_DOCS]
+    want = {(i, j): len(sets[i] & sets[j]) / len(sets[i] | sets[j])
+            for i in range(len(sets)) for j in range(i + 1, len(sets))
+            if sets[i] and sets[j]
+            and len(sets[i] & sets[j]) / len(sets[i] | sets[j]) >= 0.5}
+    assert got == want
+    assert got[(3, 4)] == 1.0 and (2, 3) not in got
+
+
 @given(w=st.sampled_from([0.0, 0.4, 1.0, 1.7, 2.0, 3.3]),
        n=st.integers(5, 40))
 @settings(**_SETTINGS)
