@@ -620,8 +620,17 @@ def near_dup_rep_pairs(documents: DataFrame, id_col: str = "doc_id",
     cands = rep_candidates if rep_candidates is not None else minhash_lsh_candidates(
         documents, id_col, text_col, num_hashes, bands, groups=memb, expand=False)
     reps = memb.filter(F.col("id") == F.col("gid")).select("id", "toks")
-    t_a = reps.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
-    t_b = reps.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
+    return _verified_rep_pairs(cands, reps, threshold)
+
+
+def _verified_rep_pairs(cands: DataFrame, rep_toks: DataFrame,
+                        threshold: float) -> DataFrame:
+    """The rep-pair verify tail shared by the batch and store paths:
+    (id_a, id_b) candidates joined to both reps' token arrays
+    (``rep_toks``: id, toks), exact Jaccard rounded to 6 places, kept
+    at >= ``threshold`` — (id_a, id_b, jaccard)."""
+    t_a = rep_toks.select(F.col("id").alias("id_a"), F.col("toks").alias("toks_a"))
+    t_b = rep_toks.select(F.col("id").alias("id_b"), F.col("toks").alias("toks_b"))
     return (cands.join(t_a, "id_a").join(t_b, "id_b")
             .withColumn("jaccard", F.round(token_jaccard(F.col("toks_a"), F.col("toks_b")), 6))
             .filter(F.col("jaccard") >= threshold)
@@ -789,13 +798,8 @@ def incremental_near_dup_pairs_from_store(
                  .repartition(spark.sparkContext.defaultParallelism, "id_a"))
     reps_all = (reps.select("gid", "toks")
                 .unionByName(new_reps.select("gid", "toks")))
-    t_a = reps_all.select(F.col("gid").alias("id_a"), F.col("toks").alias("toks_a"))
-    t_b = reps_all.select(F.col("gid").alias("id_b"), F.col("toks").alias("toks_b"))
-    rep_pairs = (rep_cands.join(t_a, "id_a").join(t_b, "id_b")
-                 .withColumn("jaccard",
-                             F.round(token_jaccard(F.col("toks_a"), F.col("toks_b")), 6))
-                 .filter(F.col("jaccard") >= threshold)
-                 .select("id_a", "id_b", "jaccard"))
+    rep_pairs = _verified_rep_pairs(
+        rep_cands, reps_all.withColumnRenamed("gid", "id"), threshold)
     # Expansion (not expand_group_pairs): every emitted pair touches
     # the delta BY CONSTRUCTION, never by overgenerate-then-filter —
     # expanding full member products and dropping the old×old majority
@@ -1172,6 +1176,36 @@ def winnow_fingerprints(documents: DataFrame, k: int = 4, w: int = 4,
     tk = (documents.select(F.col(id_col), T.tokens(F.col(text_col))
                            .alias("tk"))
           .filter(F.size("tk") >= k + w - 1))
+    # explode_outer, deliberately: plain explode makes the optimizer
+    # infer `size(fps) > 0 AND isnotnull(fps)` (InferFiltersFromGenerate)
+    # and push that filter below the projections with the ENTIRE
+    # tokenize→shingle→md5→winnow tree inlined into the condition —
+    # the whole fingerprint pass ran ~4× per row (measured 7.8 s vs
+    # 1.0 s at sf0.1). After the token-count filter above, `fps` is
+    # provably non-empty (≥ 1 window), so outer emits no null row and
+    # the output is bit-identical.
+    return (_winnow_sets(tk, k, w, id_col)
+            .select(id_col, F.explode_outer("fps").alias("fp")))
+
+
+def winnow_fingerprint_sets(documents: DataFrame, k: int = 4, w: int = 4,
+                            id_col: str = "doc_id",
+                            text_col: str = "text") -> DataFrame:
+    """One ``(doc_id, fps)`` row per document: the distinct winnowing
+    fingerprints of :func:`winnow_fingerprints` as one array, which
+    exploded gives exactly that function's rows. A document shorter
+    than ``k + w - 1`` tokens has no full window and gets an empty
+    array (where :func:`winnow_fingerprints` emits no row), so every
+    input document is represented — the shape an id-keyed store
+    appends whole (streaming/ingest.py)."""
+    return _winnow_sets(
+        documents.select(F.col(id_col), T.tokens(F.col(text_col)).alias("tk")),
+        k, w, id_col)
+
+
+def _winnow_sets(tk: DataFrame, k: int, w: int, id_col: str) -> DataFrame:
+    """(id, tk token array) → (id, fps distinct window minima); a row
+    with fewer than ``k + w - 1`` tokens yields an empty array."""
     sh = tk.select(id_col, T.shingles_from_tokens(F.col("tk"), k)
                    .alias("sh"))
     h = sh.select(id_col, F.transform("sh", T.hash64).alias("h"))
@@ -1184,27 +1218,18 @@ def winnow_fingerprints(documents: DataFrame, k: int = 4, w: int = 4,
     # 2.6 s at sf0.1 for this exact operator. The slices reference
     # `h` outside any lambda (≤ w evaluations, constant), the same
     # idiom shingles_from_tokens uses for the k-gram build.
-    # greatest(..., 0): the filter above prunes short docs, but the
-    # collapsed projection's slice expressions can still be EVALUATED
-    # for filtered rows inside the same codegen stage, and slice
-    # raises on a negative length — clamp instead of trusting
-    # evaluation order (reproduced: 5-token docs crashed the stage)
+    # greatest(..., 0): a short row (unfiltered here, or pruned by
+    # winnow_fingerprints' filter but still EVALUATED inside the same
+    # codegen stage) would give slice a negative length, which raises
+    # — clamp instead of trusting evaluation order (reproduced: 5-token
+    # docs crashed the stage); a clamped row gets an empty array
     m = F.greatest(F.size("h") - F.lit(w - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice("h", j + 1, m) for j in range(w)])
-    wm = h.select(
+    return h.select(
         id_col,
         F.array_distinct(F.transform(
             zipped, lambda s: F.least(*[s[str(j)] for j in range(w)])))
         .alias("fps"))
-    # explode_outer, deliberately: plain explode makes the optimizer
-    # infer `size(fps) > 0 AND isnotnull(fps)` (InferFiltersFromGenerate)
-    # and push that filter below the projections with the ENTIRE
-    # tokenize→shingle→md5→winnow tree inlined into the condition —
-    # the whole fingerprint pass ran ~4× per row (measured 7.8 s vs
-    # 1.0 s at sf0.1). After the token-count filter above, `fps` is
-    # provably non-empty (≥ 1 window), so outer emits no null row and
-    # the output is bit-identical.
-    return wm.select(id_col, F.explode_outer("fps").alias("fp"))
 
 
 def winnow_fingerprint_pairs(documents: DataFrame, k: int = 4,

@@ -6279,9 +6279,10 @@ HAVING COUNT(*) >= 2
 def text_winnow_overlap_store(spark, sf_dir):
     """E73+ store-backed serving twin: the overlap pairs computed from
     the MAINTAINED ``wfp/`` fingerprint store (streaming/ingest.py —
-    appended per batch behind an id anti-join, exact-row takedown,
-    geometry pinned at bootstrap), reading NO document text at query
-    time. The oracle replays the full tokenize→4-gram-hash→window-min
+    one (doc_id, fps) row per document appended per batch behind an id
+    anti-join, exact-row takedown, geometry pinned at bootstrap;
+    ``read_wfp`` explodes it to (doc_id, fp)), reading NO document
+    text at query time. The oracle replays the full tokenize→4-gram-hash→window-min
     pipeline over the store's corpus slice (doc_id % 40 != 0, the
     bench session's ingest bootstrap), so store CONTENT drift — not
     just pair counts — hash-mismatches. Same serving-twin discipline

@@ -79,7 +79,17 @@ late GC); production maps it onto the table format's own commit:
   idempotent form the re-apply-full-tombstone-set contract needs; at
   100 TB a SMALL delete would instead SUBTRACT the deleted docs'
   sketch — linearity gives deletion for free — but subtraction
-  re-applied on a crash retry would double-subtract).
+  re-applied on a crash retry would double-subtract). ``cbloom/``
+  (the counting-Bloom decontamination gate) shares this discipline,
+  ``cms_pending/`` and ``cbloom_pending/`` included; ``hll/`` (distinct
+  shingle count) merges by register max and needs neither.
+- ``wfp/``, ``dhash/``, ``afp/`` — the fingerprint family (text
+  winnowing sets, image and audio perceptual hashes): id-keyed tables
+  with ONE row per document, appended per batch behind an id
+  anti-join, so a crash mid-append leaves whole docs or nothing and
+  the redelivery appends exactly the missing ones. A sentinel row pins
+  the hash geometry at bootstrap. One table (``_FP_STORES``) drives
+  their bootstrap, migration, append, compaction and takedown.
 
 ``foreachBatch`` is the right harness because each micro-batch runs
 arbitrary BATCH DataFrame code with exactly-once-per-batch-id
@@ -129,8 +139,7 @@ from cati_database_feeder_spark.operators.graph import (
 
 _STORES = ("labels", "corpus", "buckets", "members", "reps", "metrics",
            "pairs", "deleted", "cms", "cbloom", "cms_pending",
-           "cbloom_pending", "hll", "wfp", "wfp_pending", "dhash",
-           "afp")
+           "cbloom_pending", "hll", "wfp", "dhash", "afp")
 
 _LOCK_NAME = "_LOCK"
 _DELETE_PENDING = "_DELETE_PENDING"
@@ -843,144 +852,38 @@ def _hll_merge_delta(spark, state_dir: str, delta: DataFrame) -> None:
     _swap_write(merged.coalesce(1), hll_dir)
 
 
-# wfp/ store: maintained winnowing fingerprints (extension E73+) —
-# the incremental contamination/overlap index. Unlike the linear
-# sketches this is a plain id-keyed TABLE (doc_id, fp), so every
-# hazard the sketch stores buy off with sentinels and sidecars is
-# structural here: redelivery is absorbed by an id anti-join (append
-# is idempotent), takedown is an exact row delete (no subtraction
-# algebra), and the serving read needs no replay fingerprint. The one
-# pinned invariant is the (k, w) geometry — fingerprints from a
-# different geometry are silently incomparable, so it rides a
-# sentinel row (doc_id = _WFP_DIMS_ID) checked like the sketch dims.
+# ---------------------------------------------------------------------
+# The fingerprint family: wfp/ (text winnowing, E73+), dhash/ (image
+# perceptual hash, E72+) and afp/ (audio envelope hash, E83+) — the
+# incremental contamination/overlap and media near-dup indexes, served
+# by hamming_near_dup_pairs and winnow_fingerprint_pairs. Each is an
+# id-keyed TABLE with exactly ONE row per document: wfp/ stores a
+# doc's whole winnowing set as one ``fps`` array
+# (dedup.winnow_fingerprint_sets; empty for a doc shorter than one
+# window) and :func:`read_wfp` explodes it. One row per doc makes
+# every hazard the linear sketches buy off with sentinels and sidecars
+# structural here:
+#
+# - crash mid-append: a plain parquet append moves task files into the
+#   store one rename at a time, so a crash lands WHOLE rows for some
+#   docs and nothing for the rest — no doc is ever half-fingerprinted —
+#   and the redelivered batch's id anti-join appends exactly the
+#   missing docs;
+# - redelivery: the same anti-join makes the append idempotent;
+# - takedown: an exact row delete (the sentinel's negative id can
+#   never match a tombstone);
+# - the one pinned invariant is the hash geometry — fingerprints of a
+#   different (k, w), grid or bit width are silently incomparable — so
+#   each store carries a sentinel row at doc_id = _FP_SENTINEL_ID,
+#   written at bootstrap and checked by :func:`_ensure_fp_store`.
+#
+# One table drives every step, as _SKETCH_STORES drives cms/ and
+# cbloom/: name → (rows builder over (doc_id, text) docs, row DDL,
+# sentinel row). Builders and sentinels read the geometry at call time.
+# ---------------------------------------------------------------------
 WFP_K = 4
 WFP_W = 4
-_WFP_DIMS_ID = -2  # sentinel row: fp = k*1000 + w
-
-
-def _wfp_frame(spark, docs: DataFrame, k: int, w: int) -> DataFrame:
-    fps = dedup.winnow_fingerprints(docs, k=k, w=w)
-    dims = local_frame(
-        spark, [(_WFP_DIMS_ID, k * 1000 + w)], "doc_id long, fp long")
-    return fps.unionByName(dims)
-
-
-def read_wfp(spark, state_dir: str) -> DataFrame:
-    """The maintained fingerprint table, sentinel stripped. If a crash
-    left a committed ``wfp_pending/`` sidecar behind (see
-    :func:`_wfp_append_delta`), the sidecar is OVERLAID read-only —
-    rows for its doc_ids come from the sidecar, not from the possibly
-    partial append — so serving never observes incomplete fingerprints
-    even before the next state-mutating op runs :func:`_wfp_recover`."""
-    wfp = (spark.read.parquet(live_store(os.path.join(state_dir, "wfp")))
-           .drop("bucket")
-           .filter(F.col("doc_id") != _WFP_DIMS_ID))
-    pending = os.path.join(state_dir, "wfp_pending")
-    if store_exists(pending):
-        pend = spark.read.parquet(live_store(pending)).drop("bucket")
-        wfp = (wfp.join(pend.select("doc_id").distinct(), "doc_id",
-                        "left_anti")
-               .unionByName(pend))
-    return wfp
-
-
-def _wfp_recover(spark, state_dir: str) -> None:
-    """Heal a crash inside :func:`_wfp_append_delta`'s append step.
-    A surviving ``wfp_pending/`` sidecar (always swap-committed, so
-    either absent or complete) means the append into ``wfp/`` may have
-    landed only SOME of its task files: rewrite ``wfp/`` as
-    (wfp minus sidecar doc_ids) ∪ sidecar — idempotent, so a crash
-    anywhere in this recovery just re-runs it — then drop the sidecar.
-    Called by every state-mutating op right after
-    :func:`_recover_swaps`, before anything reads or appends wfp/."""
-    pending = os.path.join(state_dir, "wfp_pending")
-    if not store_exists(pending):
-        return
-    wfp_dir = os.path.join(state_dir, "wfp")
-    if store_exists(wfp_dir):
-        pend = spark.read.parquet(live_store(pending)).drop("bucket")
-        _swap_write_bucketed(
-            spark.read.parquet(live_store(wfp_dir)).drop("bucket")
-            .join(pend.select("doc_id").distinct(), "doc_id",
-                  "left_anti")
-            .unionByName(pend), wfp_dir)
-    _drop_store(pending)
-
-
-def _ensure_wfp_store(spark, state_dir: str, k: int = WFP_K,
-                      w: int = WFP_W) -> None:
-    """One-time migration for pre-wfp state dirs (one corpus
-    fingerprint pass); on maintained dirs verifies the
-    BOOTSTRAP-PINNED (k, w) — fingerprints of mixed geometry never
-    match each other, so a mismatch is a refusal, not a merge. A
-    sentinel-less dir is a partial write → rebuild (same policy as
-    the sketch stores)."""
-    wfp_dir = os.path.join(state_dir, "wfp")
-    if store_exists(wfp_dir):
-        rows = (spark.read.parquet(live_store(wfp_dir))
-                .filter(F.col("doc_id") == _WFP_DIMS_ID)
-                .select("fp").collect())
-        if rows and int(rows[0]["fp"]) != k * 1000 + w:
-            got = int(rows[0]["fp"])
-            raise StateLockError(
-                f"wfp store at {wfp_dir!r} was bootstrapped with "
-                f"(k={got // 1000}, w={got % 1000}) but this ingest is "
-                f"configured for (k={k}, w={w}) — the fingerprint "
-                f"geometry is pinned at bootstrap (mixed-geometry "
-                f"fingerprints are silently incomparable); use the "
-                f"stored geometry or rebuild the store.")
-        if rows:
-            return
-        _drop_store(wfp_dir)
-    corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    _swap_write_bucketed(_wfp_frame(spark, corpus, k, w), wfp_dir)
-
-
-def _wfp_append_delta(spark, state_dir: str, delta: DataFrame,
-                      k: int = WFP_K, w: int = WFP_W) -> None:
-    """Append the delta's fingerprints, guarded by an id anti-join on
-    the store (the deleted/-ledger idiom): a crash after this append
-    but before the corpus commit redelivers the identical delta, whose
-    doc_ids are already present — the replay appends nothing, so
-    at-least-once delivery cannot duplicate fingerprint rows.
-
-    The append itself commits through a SWAP-WRITTEN ``wfp_pending/``
-    sidecar (round-10 advice): a plain parquet append moves task files
-    into the store one rename at a time, so a crash mid-commit could
-    leave SOME of a document's fingerprint rows visible — and the id
-    replay guard would then skip that doc_id forever, leaving it with
-    permanently incomplete fingerprints. Sequence: (1) the delta's
-    complete fingerprint set is swap-written to the sidecar (atomic:
-    either absent or whole); (2) the store append runs FROM the
-    sidecar; (3) the sidecar is removed. A crash inside (2) or before
-    (3) leaves the sidecar in place, and :func:`_wfp_recover` — run by
-    every state op before touching wfp/ — rewrites the store from it;
-    :func:`read_wfp` overlays it read-only in the meantime. At every
-    instant wfp/ is complete or the sidecar holds the rows to make it
-    so."""
-    wfp_dir = os.path.join(state_dir, "wfp")
-    pending = os.path.join(state_dir, "wfp_pending")
-    existing = (spark.read.parquet(live_store(wfp_dir)).select("doc_id")
-                .distinct())
-    _swap_write(dedup.winnow_fingerprints(delta, k=k, w=w)
-                .join(existing, "doc_id", "left_anti"), pending)
-    _append_id_store(spark.read.parquet(live_store(pending)), wfp_dir)
-    _drop_store(pending)
-
-
-# dhash/ store: maintained perceptual image fingerprints (extension
-# E72+, round-10 verdict item 6) — the image-fingerprint sibling of
-# wfp/: an id-keyed TABLE (doc_id, dhash, real), one row per document,
-# appended per batch behind an id anti-join, takedown an exact row
-# delete. Because every doc contributes EXACTLY ONE row, the
-# partial-append hazard wfp/ needs its pending sidecar for is absent
-# by construction: a crash mid-append leaves some docs' single rows
-# visible and others' absent, and the redelivered batch's anti-join
-# appends exactly the missing ones — no doc can be half-fingerprinted.
-# The pinned invariant is the dHash grid geometry (hashes from a
-# different grid are silently incomparable), recorded like wfp's
-# (k, w) sentinel.
-_DHASH_DIMS_ID = -2  # sentinel row: dhash = grid_w * 1000 + grid_h
+_FP_SENTINEL_ID = -2
 
 
 def _dhash_geometry() -> int:
@@ -988,158 +891,130 @@ def _dhash_geometry() -> int:
     return mm._DHASH_GRID_W * 1000 + mm._DHASH_GRID_H
 
 
-def _dhash_frame(spark, docs: DataFrame) -> DataFrame:
-    """(doc_id, dhash, real) perceptual hashes of the docs' payload
-    bytes (text cast to binary — the test-adapter payload; a real
-    media corpus feeds its binary column through the same kernel) via
-    the three-tier decode ladder (sources/multimodal.py:image_dhash),
-    plus the geometry sentinel row."""
-    from cati_database_feeder_spark.sources import multimodal as mm
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-        F.lit("image").alias("media_type"),
-        F.lit(None).cast(
-            "struct<width:int,height:int,sample_rate:int,n_frames:int>")
-        .alias("meta"))
-    hashes = (mm.image_dhash(media)
-              .select(F.col("media_id").alias("doc_id"), "dhash", "real"))
-    dims = local_frame(
-        spark, [(_DHASH_DIMS_ID, _dhash_geometry(), False)],
-        "doc_id long, dhash long, real boolean")
-    return hashes.unionByName(dims)
-
-
-def read_dhash(spark, state_dir: str) -> DataFrame:
-    """The maintained perceptual-hash table, sentinel stripped."""
-    return (spark.read.parquet(live_store(os.path.join(state_dir, "dhash")))
-            .drop("bucket")
-            .filter(F.col("doc_id") != _DHASH_DIMS_ID))
-
-
-def _ensure_dhash_store(spark, state_dir: str) -> None:
-    """One-time migration for pre-dhash state dirs (one corpus decode
-    pass); on maintained dirs verifies the BOOTSTRAP-PINNED grid
-    geometry — mixed-geometry hashes never match each other, so a
-    mismatch is a refusal, not a merge. A sentinel-less dir is a
-    partial write → rebuild (the sketch-store policy)."""
-    dhash_dir = os.path.join(state_dir, "dhash")
-    geom = _dhash_geometry()
-    if store_exists(dhash_dir):
-        rows = (spark.read.parquet(live_store(dhash_dir))
-                .filter(F.col("doc_id") == _DHASH_DIMS_ID)
-                .select("dhash").collect())
-        if rows and int(rows[0]["dhash"]) != geom:
-            got = int(rows[0]["dhash"])
-            raise StateLockError(
-                f"dhash store at {dhash_dir!r} was bootstrapped with "
-                f"grid ({got // 1000}×{got % 1000}) but this ingest is "
-                f"configured for ({geom // 1000}×{geom % 1000}) — the "
-                f"hash geometry is pinned at bootstrap (mixed-geometry "
-                f"hashes are silently incomparable); use the stored "
-                f"grid or rebuild the store.")
-        if rows:
-            return
-        _drop_store(dhash_dir)
-    corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    _swap_write_bucketed(_dhash_frame(spark, corpus), dhash_dir)
-
-
-def _dhash_append_delta(spark, state_dir: str, delta: DataFrame) -> None:
-    """Append the delta's hashes behind the id anti-join replay guard.
-    One row per doc, so the plain append IS crash-safe (see the store
-    comment above) — no pending sidecar needed."""
-    dhash_dir = os.path.join(state_dir, "dhash")
-    existing = (spark.read.parquet(live_store(dhash_dir)).select("doc_id")
-                .distinct())
-    _append_id_store(_dhash_frame(spark, delta)
-                     .filter(F.col("doc_id") != _DHASH_DIMS_ID)
-                     .join(existing, "doc_id", "left_anti"), dhash_dir)
-
-
-# afp/ store: maintained audio fingerprints (E83+) — the third
-# modality's id-keyed fingerprint table, structurally IDENTICAL to
-# dhash/: one (doc_id, ahash, real) row per document, plain append
-# crash-safe behind the id anti-join (one row per doc — no
-# half-fingerprinted doc is possible), takedown an exact row delete,
-# hash geometry pinned at bootstrap via a negative-id sentinel. The
-# modality-generic store discipline: winnowing fps (text), dHash
-# (image), envelope hash (audio) all maintain the same shape, and
-# hamming_near_dup_pairs serves any of them.
-_AFP_DIMS_ID = -2  # sentinel row: ahash = fingerprint bit width
-
-
 def _afp_geometry() -> int:
     from cati_database_feeder_spark.sources import multimodal as mm
     return mm.AUDIO_HASH_BITS
 
 
-def _afp_frame(spark, docs: DataFrame) -> DataFrame:
-    """(doc_id, ahash, real) envelope fingerprints of the docs'
+def _media_hash(docs: DataFrame, media_type: str, col: str) -> DataFrame:
+    """(doc_id, ``col``, real): one perceptual hash per doc of its
     payload bytes (text cast to binary — the test-adapter payload; a
-    real audio corpus feeds its binary column through the same
-    kernel) via the three-tier decode ladder
-    (sources/multimodal.py:audio_fingerprint), plus the geometry
-    sentinel row."""
+    real media corpus feeds its binary column through the same kernel)
+    via the three-tier decode ladder of sources/multimodal.py
+    (image_dhash for images, audio_fingerprint for audio)."""
     from cati_database_feeder_spark.sources import multimodal as mm
+    kernel = {"image": mm.image_dhash,
+              "audio": mm.audio_fingerprint}[media_type]
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         F.col("text").cast("binary").alias("payload"),
-        F.lit("audio").alias("media_type"),
+        F.lit(media_type).alias("media_type"),
         F.lit(None).cast(
             "struct<width:int,height:int,sample_rate:int,n_frames:int>")
         .alias("meta"))
-    hashes = (mm.audio_fingerprint(media)
-              .select(F.col("media_id").alias("doc_id"), "ahash", "real"))
-    dims = local_frame(
-        spark, [(_AFP_DIMS_ID, _afp_geometry(), False)],
-        "doc_id long, ahash long, real boolean")
-    return hashes.unionByName(dims)
+    return kernel(media).select(F.col("media_id").alias("doc_id"), col,
+                                "real")
+
+
+def _wfp_of(docs: DataFrame) -> DataFrame:
+    return dedup.winnow_fingerprint_sets(docs, k=WFP_K, w=WFP_W)
+
+
+def _dhash_of(docs: DataFrame) -> DataFrame:
+    return _media_hash(docs, "image", "dhash")
+
+
+def _afp_of(docs: DataFrame) -> DataFrame:
+    return _media_hash(docs, "audio", "ahash")
+
+
+_FP_STORES = {
+    "wfp": (_wfp_of, "doc_id long, fps array<bigint>",
+            lambda: (_FP_SENTINEL_ID, [WFP_K * 1000 + WFP_W])),
+    "dhash": (_dhash_of, "doc_id long, dhash long, real boolean",
+              lambda: (_FP_SENTINEL_ID, _dhash_geometry(), False)),
+    "afp": (_afp_of, "doc_id long, ahash long, real boolean",
+            lambda: (_FP_SENTINEL_ID, _afp_geometry(), False)),
+}
+
+
+def _fp_frame(spark, docs: DataFrame, name: str) -> DataFrame:
+    """The ``name`` store's rows for ``docs`` plus its geometry
+    sentinel — what a bootstrap or a rebuild swap-writes whole."""
+    rows_of, ddl, sentinel = _FP_STORES[name]
+    return rows_of(docs).unionByName(local_frame(spark, [sentinel()], ddl))
+
+
+def _read_fp(spark, state_dir: str, name: str) -> DataFrame:
+    return (spark.read.parquet(live_store(os.path.join(state_dir, name)))
+            .drop("bucket")
+            .filter(F.col("doc_id") != _FP_SENTINEL_ID))
+
+
+def read_wfp(spark, state_dir: str) -> DataFrame:
+    """The maintained winnowing fingerprints as (doc_id, fp) rows —
+    dedup.winnow_fingerprints over the live corpus (a doc shorter than
+    one window stores an empty set and serves no row)."""
+    return (_read_fp(spark, state_dir, "wfp")
+            .select("doc_id", F.explode("fps").alias("fp")))
+
+
+def read_dhash(spark, state_dir: str) -> DataFrame:
+    """The maintained perceptual-hash table (doc_id, dhash, real)."""
+    return _read_fp(spark, state_dir, "dhash")
 
 
 def read_afp(spark, state_dir: str) -> DataFrame:
-    """The maintained audio-fingerprint table, sentinel stripped."""
-    return (spark.read.parquet(live_store(os.path.join(state_dir, "afp")))
-            .drop("bucket")
-            .filter(F.col("doc_id") != _AFP_DIMS_ID))
+    """The maintained audio-fingerprint table (doc_id, ahash, real)."""
+    return _read_fp(spark, state_dir, "afp")
 
 
-def _ensure_afp_store(spark, state_dir: str) -> None:
-    """One-time migration for pre-afp state dirs (one corpus decode
-    pass); on maintained dirs verifies the BOOTSTRAP-PINNED bit width
-    — mixed-width fingerprints never compare, so a mismatch refuses.
-    A sentinel-less dir is a partial write → rebuild."""
-    afp_dir = os.path.join(state_dir, "afp")
-    geom = _afp_geometry()
-    if store_exists(afp_dir):
-        rows = (spark.read.parquet(live_store(afp_dir))
-                .filter(F.col("doc_id") == _AFP_DIMS_ID)
-                .select("ahash").collect())
-        if rows and int(rows[0]["ahash"]) != geom:
-            raise StateLockError(
-                f"afp store at {afp_dir!r} was bootstrapped with a "
-                f"{int(rows[0]['ahash'])}-bit fingerprint but this "
-                f"ingest is configured for {geom} bits — the geometry "
-                f"is pinned at bootstrap (mixed-width fingerprints are "
-                f"silently incomparable); use the stored width or "
-                f"rebuild the store.")
-        if rows:
-            return
-        _drop_store(afp_dir)
+def _ensure_fp_store(spark, state_dir: str, name: str) -> None:
+    """One-time migration for a state dir without a current ``name``
+    store (one corpus fingerprint pass); on maintained dirs verifies
+    the BOOTSTRAP-PINNED geometry — the stored sentinel row must equal
+    the one this ingest would write, since mixed-geometry fingerprints
+    never match each other: a mismatch is a refusal, not a merge. A
+    store without a sentinel (a partial write) or in an older column
+    layout (the one-row-per-fingerprint wfp/ with its ``_pending``
+    sidecar) is dropped, sidecar included, and rebuilt — the sketch
+    stores' policy."""
+    _, ddl, sentinel = _FP_STORES[name]
+    d = os.path.join(state_dir, name)
+    want = sentinel()
+    if store_exists(d):
+        stored = spark.read.parquet(live_store(d)).drop("bucket")
+        if stored.columns == local_frame(spark, [], ddl).columns:
+            rows = (stored.filter(F.col("doc_id") == _FP_SENTINEL_ID)
+                    .collect())
+            if rows and list(rows[0]) != list(want):
+                raise StateLockError(
+                    f"{name} store at {d!r} was bootstrapped with "
+                    f"geometry {tuple(rows[0])[1:]} but this ingest is "
+                    f"configured for {want[1:]} — the fingerprint "
+                    f"geometry is pinned at bootstrap (mixed-geometry "
+                    f"fingerprints are silently incomparable); use the "
+                    f"stored geometry or rebuild the store.")
+            if rows:
+                return
+        _drop_store(d)
+    _drop_store(d + "_pending")
     corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    _swap_write_bucketed(_afp_frame(spark, corpus), afp_dir)
+    _swap_write_bucketed(_fp_frame(spark, corpus, name), d)
 
 
-def _afp_append_delta(spark, state_dir: str, delta: DataFrame) -> None:
-    """Append the delta's fingerprints behind the id anti-join replay
-    guard — one row per doc, crash-safe plain append (the dhash
-    argument)."""
-    afp_dir = os.path.join(state_dir, "afp")
-    existing = (spark.read.parquet(live_store(afp_dir)).select("doc_id")
+def _fp_append_delta(spark, state_dir: str, delta: DataFrame,
+                     name: str) -> None:
+    """Append the delta's ``name`` rows behind the id anti-join replay
+    guard (the deleted/-ledger idiom): a redelivered delta's ids are
+    already stored and append nothing, and after a crash mid-append
+    the redelivery appends exactly the docs whose rows did not land
+    (family comment above)."""
+    d = os.path.join(state_dir, name)
+    existing = (spark.read.parquet(live_store(d)).select("doc_id")
                 .distinct())
-    _append_id_store(_afp_frame(spark, delta)
-                     .filter(F.col("doc_id") != _AFP_DIMS_ID)
-                     .join(existing, "doc_id", "left_anti"), afp_dir)
+    _append_id_store(_FP_STORES[name][0](delta)
+                     .join(existing, "doc_id", "left_anti"), d)
 
 
 def _sk_ensure_store(spark, state_dir: str, name: str, cells_of,
@@ -1435,7 +1310,6 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
                          num_hashes: int, bands: int,
                          batch_id: int | None = None) -> None:
     _recover_swaps(state_dir)
-    _wfp_recover(spark, state_dir)
     _check_no_pending_delete(state_dir, "ingest_batch")
     corpus_dir = os.path.join(state_dir, "corpus")
     labels_dir = os.path.join(state_dir, "labels")
@@ -1538,15 +1412,11 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
             _tracked("hll", _swap_write,
                      _hll_frame(spark, batch).coalesce(1),
                      os.path.join(state_dir, "hll")),
-            _tracked("wfp", _swap_write_bucketed,
-                     _wfp_frame(spark, batch, WFP_K, WFP_W),
-                     os.path.join(state_dir, "wfp")),
-            _tracked("dhash", _swap_write_bucketed,
-                     _dhash_frame(spark, batch),
-                     os.path.join(state_dir, "dhash")),
-            _tracked("afp", _swap_write_bucketed,
-                     _afp_frame(spark, batch),
-                     os.path.join(state_dir, "afp")),
+        ] + [
+            _tracked(fp_name, _swap_write_bucketed,
+                     _fp_frame(spark, batch, fp_name),
+                     os.path.join(state_dir, fp_name))
+            for fp_name in _FP_STORES
         ]
         # persisted: the expansion, the closure's star edges, and the
         # pairs-store write all read it
@@ -1618,9 +1488,8 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
     for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
         _sk_ensure_store(spark, state_dir, sk_name, sk_cells, sd1, sd2)
     _ensure_hll_store(spark, state_dir)
-    _ensure_wfp_store(spark, state_dir)
-    _ensure_dhash_store(spark, state_dir)
-    _ensure_afp_store(spark, state_dir)
+    for fp_name in _FP_STORES:
+        _ensure_fp_store(spark, state_dir, fp_name)
     fr = _incremental_frames(spark, state_dir, batch, threshold,
                              num_hashes, bands)
     # persist the per-batch frames every downstream branch consumes;
@@ -1685,17 +1554,12 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
             _sk_merge_delta(spark, state_dir, sk_name, delta, sk_cells,
                             sd1, sd2)
         _hll_merge_delta(spark, state_dir, delta)
-        # wfp append at the same slot: reads only wfp/ (its replay
-        # guard) + the delta, so it is recacheByPath-safe here, and a
-        # crash before the marker redelivers a delta whose ids the
-        # guard already excludes
-        _wfp_append_delta(spark, state_dir, delta)
-        # dhash append: same slot, same replay-guard argument (reads
-        # only dhash/ + the delta); one row per doc makes the plain
-        # append crash-safe without a sidecar
-        _dhash_append_delta(spark, state_dir, delta)
-        # afp append: the third modality, same argument
-        _afp_append_delta(spark, state_dir, delta)
+        # fingerprint appends at the same slot: each reads only its own
+        # store (the replay guard) + the delta, so it is
+        # recacheByPath-safe here, and a crash before the marker
+        # redelivers a delta whose landed ids the guard excludes
+        for fp_name in _FP_STORES:
+            _fp_append_delta(spark, state_dir, delta, fp_name)
         # metrics BEFORE the corpus commit marker (same argument as the
         # bootstrap branch): a crash in between replays the batch and
         # appends a duplicate batch_id row — at-least-once — where the
@@ -1807,7 +1671,6 @@ def _compact_state_locked(spark, state_dir: str,
                           target_files: int | None,
                           prune_buckets: bool) -> None:
     _recover_swaps(state_dir)
-    _wfp_recover(spark, state_dir)
     _check_no_pending_delete(state_dir, "compact_state")
     corpus_dir = os.path.join(state_dir, "corpus")
     buckets_dir = os.path.join(state_dir, "buckets")
@@ -1819,11 +1682,10 @@ def _compact_state_locked(spark, state_dir: str,
     # metrics/ grows one tiny file per batch like the id stores —
     # compact it with them (append-only, so the swap discipline holds);
     # one row per batch → one file, not n near-empty ones
-    id_bucketed = {"members": "id", "wfp": "doc_id",
-                   "dhash": "doc_id", "afp": "doc_id"}
+    id_bucketed = {"members": "id", **dict.fromkeys(_FP_STORES, "doc_id")}
     for name, parts in (("members", n), ("reps", n), ("metrics", 1),
                         ("pairs", n), ("deleted", 1), ("hll", 1),
-                        ("wfp", n), ("dhash", n), ("afp", n)):
+                        *((fp_name, n) for fp_name in _FP_STORES)):
         d = os.path.join(state_dir, name)
         if not store_exists(d):
             continue
@@ -1941,7 +1803,6 @@ def _delete_docs_locked(spark, state_dir: str, doc_ids,
                         bands: int,
                         sketch_takedown: str = "subtract") -> None:
     _recover_swaps(state_dir)
-    _wfp_recover(spark, state_dir)
     corpus_dir = os.path.join(state_dir, "corpus")
     if not store_exists(corpus_dir):
         raise ValueError(
@@ -2081,21 +1942,12 @@ def _delete_docs_locked(spark, state_dir: str, doc_ids,
             _swap_write(_hll_frame(
                 spark, corpus.join(tomb, "doc_id", "left_anti"))
                 .coalesce(1), os.path.join(state_dir, "hll"))
-        # wfp takedown is an exact row delete — the id-keyed table
-        # needs no subtraction algebra and no ledger (the sentinel's
-        # negative id can never match a tombstone)
-        wfp_dir = os.path.join(state_dir, "wfp")
-        if store_exists(wfp_dir):
-            _tomb_pruned_rewrite(spark, wfp_dir, tomb)
-        # dhash takedown: the same exact row delete (id-keyed table;
-        # the sentinel's negative id can never match a tombstone)
-        dhash_dir = os.path.join(state_dir, "dhash")
-        if store_exists(dhash_dir):
-            _tomb_pruned_rewrite(spark, dhash_dir, tomb)
-        # afp takedown: identical exact row delete
-        afp_dir = os.path.join(state_dir, "afp")
-        if store_exists(afp_dir):
-            _tomb_pruned_rewrite(spark, afp_dir, tomb)
+        # fingerprint takedown is an exact row delete — id-keyed
+        # tables need no subtraction algebra and no ledger
+        for fp_name in _FP_STORES:
+            fp_dir = os.path.join(state_dir, fp_name)
+            if store_exists(fp_dir):
+                _tomb_pruned_rewrite(spark, fp_dir, tomb)
         _swap_write(corpus.join(tomb, "doc_id", "left_anti"), corpus_dir)
     except BaseException:
         raise  # marker stays: the refusal gate routes to a retry

@@ -1,8 +1,4 @@
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from cati_database_feeder_spark.session import get_session
 

@@ -4,9 +4,6 @@ stay under budget for the CURRENT query registry and keep the headline
 total intact while eliding only cheap per-query entries."""
 
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import bench
 from cati_database_feeder_spark import queryset

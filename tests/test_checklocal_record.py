@@ -5,11 +5,6 @@ of the Spark count — this pins that contract on synthetic
 agreements and disagreements, so a checklocal row can never again
 assert less than the driver row shape it mimics."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
 import duckdb
 
 from check import compare_query_record

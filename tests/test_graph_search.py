@@ -1,9 +1,5 @@
 """Connected components (operators/graph.py) and BM25 (operators/search.py)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F

@@ -1842,7 +1842,8 @@ def test_wfp_store_crash_replay_no_duplicate_rows(spark, tmp_path):
     assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
 
 
-def test_wfp_store_takedown_and_geometry_pin(spark, tmp_path):
+def test_wfp_store_takedown_and_geometry_pin(spark, tmp_path,
+                                             monkeypatch):
     """Takedown on the fingerprint table is an exact row delete
     (post-delete ≡ recompute over survivors); a re-ingest configured
     for a different (k, w) refuses on the bootstrap-pinned geometry
@@ -1855,8 +1856,9 @@ def test_wfp_store_takedown_and_geometry_pin(spark, tmp_path):
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 3]
     assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
+    monkeypatch.setattr(ing, "WFP_K", 5)
     with pytest.raises(ing.StateLockError, match="geometry"):
-        ing._ensure_wfp_store(spark, state, k=5, w=4)
+        ing._ensure_fp_store(spark, state, "wfp")
 
 
 def _retrain_fixture(spark, tmp_path):
@@ -1971,51 +1973,88 @@ def test_retrain_centroids_crash_fence_and_resume(spark, tmp_path):
     assert not os.path.exists(os.path.join(state, ie._CENTS_NEXT))
 
 
-def test_wfp_partial_append_crash_heals_and_serves_complete(
-        spark, tmp_path):
-    """Round-10 advice (medium): a plain parquet append commits task
-    files one rename at a time, so a crash mid-append can leave SOME
-    of a document's fingerprint rows visible — and the doc_id replay
-    guard would then skip the doc forever. The fix stages each delta's
-    complete fingerprint set in a swap-committed ``wfp_pending/``
-    sidecar. This test reconstructs the exact crash window (store
-    holds a strict subset of a doc's rows, sidecar holds the complete
-    set) and pins both halves of the contract: ``read_wfp`` serves the
-    COMPLETE table read-only through the overlay, and the next
-    state-mutating op heals the store on disk and drops the sidecar."""
+def _crash_mid_append(monkeypatch, store):
+    """Patch the fingerprint append so the ``store`` append lands the
+    first delta doc's row only and then crashes — the state a crash
+    part-way through a plain parquet append leaves (some task files
+    renamed in, the rest not); every other store appends normally."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    real = ing._fp_append_delta
+
+    def partial_then_crash(spark_, state_, delta, name):
+        if name != store:
+            return real(spark_, state_, delta, name)
+        real(spark_, state_, delta.orderBy("doc_id").limit(1), name)
+        raise RuntimeError(f"injected crash inside {store} append")
+
+    monkeypatch.setattr(ing, "_fp_append_delta", partial_then_crash)
+
+
+def test_wfp_partial_append_heals_on_redelivery(
+        spark, tmp_path, monkeypatch):
+    """A crash MID-APPEND into wfp/ lands whole rows for some docs and
+    nothing for the rest: each row holds a doc's complete fingerprint
+    set, so no served doc ever has a partial set, and the redelivered
+    batch's id anti-join appends exactly the missing docs — the store
+    then equals a recompute. The wfp twin of
+    test_dhash_partial_append_heals_on_redelivery."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
+    batch = spark.createDataFrame(
+        [(10, "ten eleven twelve thirteen fourteen fifteen sixteen "
+              "seventeen"),
+         (11, "completely different fresh words here and there again "
+              "later")],
+        ["doc_id", "text"])
+    _crash_mid_append(monkeypatch, "wfp")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ing.ingest_batch(spark, batch, state, batch_id=1)
+    monkeypatch.undo()
+    # crash landed doc 10's row but not doc 11's, corpus marker unwritten
+    want = _wfp_recompute(spark, batch.unionByName(spark.read.parquet(
+        L(os.path.join(state, "corpus")))))
+    served = _wfp_rows(spark, state)
+    served_ids = {d for d, _ in served}
+    assert 10 in served_ids and 11 not in served_ids
+    # every served doc carries its COMPLETE fingerprint set
+    assert served == [r for r in want if r[0] in served_ids]
+    # redelivery appends exactly the missing doc; store ≡ recompute
+    ing.ingest_batch(spark, batch, state, batch_id=1)
+    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
+    assert _wfp_rows(spark, state) == want == _wfp_recompute(spark, corpus)
+
+
+def test_wfp_old_layout_dir_migrates_on_next_batch(spark, tmp_path):
+    """A wfp/ written in the older one-row-per-fingerprint layout
+    ((doc_id, fp), no ``fps`` column), with a leftover ``wfp_pending/``
+    sidecar of that layout beside it, is dropped and rebuilt from the
+    corpus by the next batch: read_wfp then equals a recompute, the
+    store holds one row per doc, and the sidecar is gone."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    state = str(tmp_path / "state")
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
+    wfp_dir = os.path.join(state, "wfp")
+    pend_dir = os.path.join(state, "wfp_pending")
+    old = (dedup.winnow_fingerprints(spark.read.parquet(
+        L(os.path.join(state, "corpus"))), k=ing.WFP_K, w=ing.WFP_W)
+        .unionByName(spark.createDataFrame(
+            [(-2, ing.WFP_K * 1000 + ing.WFP_W)], "doc_id long, fp long")))
+    ing._swap_write_bucketed(old, wfp_dir)
+    ing._swap_write(old.filter(F.col("doc_id") == 2), pend_dir)
+    assert "fp" in spark.read.parquet(L(wfp_dir)).columns
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    want = _wfp_recompute(spark, corpus)
-    assert _wfp_rows(spark, state) == want
-
-    wfp_dir = os.path.join(state, "wfp")
-    pend_dir = os.path.join(state, "wfp_pending")
-    stored = spark.read.parquet(L(wfp_dir)).drop("bucket")
-    doc4 = stored.filter(F.col("doc_id") == 4).persist()
-    n4 = doc4.count()
-    assert n4 >= 2, "fixture needs a multi-fingerprint doc"
-    # crash window: sidecar complete, store holding only ONE of
-    # doc 4's rows (a partially committed append)
-    ing._swap_write(doc4, pend_dir)
-    keep_fp = doc4.agg(F.min("fp")).collect()[0][0]
-    ing._swap_write(stored.filter((F.col("doc_id") != 4)
-                                  | (F.col("fp") == keep_fp)), wfp_dir)
-    doc4.unpersist()
-    # (a) serving overlays the sidecar — complete, without mutating
-    assert _wfp_rows(spark, state) == want
-    assert store_exists(pend_dir)
-    # (b) the next state op heals the store and drops the sidecar
-    ing.compact_state(spark, state)
+    assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
+    ids = [r["doc_id"] for r in
+           spark.read.parquet(L(wfp_dir)).select("doc_id").collect()]
+    assert sorted(ids) == sorted(
+        [r["doc_id"] for r in corpus.collect()] + [ing._FP_SENTINEL_ID])
     assert not store_exists(pend_dir)
-    assert sorted(map(tuple, (spark.read.parquet(L(wfp_dir))
-                              .drop("bucket")
-                              .filter(F.col("doc_id") != ing._WFP_DIMS_ID)
-                              .collect()))) == want
+    assert not any(n.startswith("wfp_pending") for n in os.listdir(state))
 
 
 def test_id_stores_bucketed_and_takedown_relinks_untouched(
@@ -2108,10 +2147,7 @@ def test_hll_store_all_short_docs_reads_zero_and_recovers(
 
 def _dhash_recompute(spark, docs):
     from cati_database_feeder_spark.streaming import ingest as ing
-    return sorted(map(tuple, (ing._dhash_frame(spark, docs)
-                              .filter(F.col("doc_id")
-                                      != ing._DHASH_DIMS_ID)
-                              .collect())))
+    return sorted(map(tuple, ing._dhash_of(docs).collect()))
 
 
 def test_dhash_store_multi_batch_equals_recompute_and_replays(
@@ -2121,7 +2157,7 @@ def test_dhash_store_multi_batch_equals_recompute_and_replays(
     from-scratch dhash pass over the final corpus; re-ingesting the
     identical batch changes nothing (id anti-join guard). One row per
     doc — the structural property that makes the plain append
-    crash-safe without wfp's pending sidecar."""
+    crash-safe (shared by the whole fingerprint family)."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -2154,7 +2190,7 @@ def test_dhash_store_takedown_geometry_pin_and_migration(
         == _dhash_recompute(spark, corpus)
     with pytest.raises(ing.StateLockError, match="geometry"):
         monkeypatch.setattr(ing, "_dhash_geometry", lambda: 9009)
-        ing._ensure_dhash_store(spark, state)
+        ing._ensure_fp_store(spark, state, "dhash")
     monkeypatch.undo()
     # legacy migration: drop the store, next batch rebuilds it whole
     _drop_store(os.path.join(state, "dhash"))
@@ -2178,13 +2214,7 @@ def test_dhash_partial_append_heals_on_redelivery(
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    real = ing._dhash_append_delta
-
-    def partial_then_crash(spark_, state_, delta):
-        real(spark_, state_, delta.orderBy("doc_id").limit(1))
-        raise RuntimeError("injected crash inside dhash append")
-
-    monkeypatch.setattr(ing, "_dhash_append_delta", partial_then_crash)
+    _crash_mid_append(monkeypatch, "dhash")
     batch = spark.createDataFrame(
         [(10, "ten eleven twelve thirteen fourteen"),
          (11, "completely different fresh words here")],
@@ -2383,10 +2413,7 @@ def test_cdc_missing_op_column_refuses(spark, tmp_path):
 
 def _afp_recompute(spark, docs):
     from cati_database_feeder_spark.streaming import ingest as ing
-    return sorted(map(tuple, (ing._afp_frame(spark, docs)
-                              .filter(F.col("doc_id")
-                                      != ing._AFP_DIMS_ID)
-                              .collect())))
+    return sorted(map(tuple, ing._afp_of(docs).collect()))
 
 
 def test_afp_store_multi_batch_equals_recompute_and_replays(
@@ -2427,7 +2454,7 @@ def test_afp_store_takedown_geometry_pin_and_migration(
         == _afp_recompute(spark, corpus)
     with pytest.raises(ing.StateLockError, match="pinned at bootstrap"):
         monkeypatch.setattr(ing, "_afp_geometry", lambda: 48)
-        ing._ensure_afp_store(spark, state)
+        ing._ensure_fp_store(spark, state, "afp")
     monkeypatch.undo()
     _drop_store(os.path.join(state, "afp"))
     ing.ingest_batch(spark, spark.createDataFrame(

@@ -9,11 +9,7 @@ so a query sitting past the external budget is still value-checked on
 every pytest run, not just operator-checked.
 """
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 from tools.check import compare_query, oracle_connection

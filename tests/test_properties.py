@@ -9,10 +9,6 @@ Examples are deliberately few and small: each example round-trips
 through Spark, so the budget goes to shape diversity, not volume.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F

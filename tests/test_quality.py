@@ -1,9 +1,5 @@
 """Bigram-LM familiarity (operators/quality.py, extension E52)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from cati_database_feeder_spark.operators.quality import bigram_familiarity

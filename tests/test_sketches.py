@@ -3,12 +3,8 @@ Bloom no-false-negatives / effective rejection, count-min
 overestimation / exactness-without-collisions / mergeability, and the
 Bloom-gated decontamination query's equivalence to the exact path."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from cati_database_feeder_spark.functions import sketches
 
@@ -215,3 +211,40 @@ def test_counting_bloom_subtract_preserves_shared_keys(spark):
     b_keys = df.filter(F.col("doc") == "B").select("k")
     assert b_keys.filter(~sketches.bloom_might_contain(
         F.col("k"), words, m, k=2)).count() == 0
+
+
+def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
+    """The ingest fingerprint family (streaming/ingest.py _FP_STORES):
+    after a bootstrap, each of wfp/, dhash/ and afp/ holds exactly one
+    row per document plus one geometry sentinel — a doc shorter than
+    one winnowing window included — read_wfp serves exactly
+    winnow_fingerprints over the docs, and a geometry change refuses
+    for every store."""
+    import os
+    from cati_database_feeder_spark.operators.dedup import (
+        winnow_fingerprints)
+    from cati_database_feeder_spark.streaming import ingest as ing
+    short = "too short"
+    assert len(short.split()) < ing.WFP_K + ing.WFP_W - 1
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+         (2, "one two three alpha beta gamma delta epsilon iota"),
+         (3, short)], ["doc_id", "text"])
+    state = str(tmp_path / "state")
+    ing.ingest_batch(spark, docs, state, batch_id=0)
+    for name in ing._FP_STORES:
+        ids = [r["doc_id"] for r in spark.read.parquet(
+            ing.live_store(os.path.join(state, name)))
+            .select("doc_id").collect()]
+        assert sorted(ids) == [ing._FP_SENTINEL_ID, 1, 2, 3], name
+    assert (sorted(map(tuple, ing.read_wfp(spark, state).collect()))
+            == sorted(map(tuple, winnow_fingerprints(
+                docs, k=ing.WFP_K, w=ing.WFP_W).collect())))
+    for name, attr, value in (("wfp", "WFP_W", ing.WFP_W + 1),
+                              ("dhash", "_dhash_geometry", lambda: 9009),
+                              ("afp", "_afp_geometry", lambda: 48)):
+        with monkeypatch.context() as m:
+            m.setattr(ing, attr, value)
+            with pytest.raises(ing.StateLockError,
+                               match="geometry.*pinned at bootstrap"):
+                ing._ensure_fp_store(spark, state, name)

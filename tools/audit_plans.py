@@ -16,9 +16,10 @@ Usage: python tools/audit_plans.py [sf_dir] [prefix]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cati_database_feeder_spark.session import get_session
 from cati_database_feeder_spark import queryset

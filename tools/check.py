@@ -13,11 +13,12 @@ Usage: python tools/check.py [sf_dir] [only_query_prefix]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -32,7 +32,7 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from check import compare_query_record, oracle_connection, plain_session  # noqa: E402
