@@ -75,14 +75,14 @@ late GC); production maps it onto the table format's own commit:
   merge is NOT idempotent, so a crash between the cms swap and the
   corpus commit marker would double-count the redelivered delta; the
   retry sees its delta's fingerprint already stored and skips the
-  merge. Takedown rebuilds the sketch from the surviving corpus (the
-  idempotent form the re-apply-full-tombstone-set contract needs; at
-  100 TB a SMALL delete would instead SUBTRACT the deleted docs'
-  sketch — linearity gives deletion for free — but subtraction
-  re-applied on a crash retry would double-subtract). ``cbloom/``
-  (the counting-Bloom decontamination gate) shares this discipline,
-  ``cms_pending/`` and ``cbloom_pending/`` included; ``hll/`` (distinct
-  shingle count) merges by register max and needs neither.
+  merge. ``cbloom/`` (the counting-Bloom decontamination gate) shares
+  this discipline; ``hll/`` (distinct shingle count) merges by
+  register max and needs no fingerprint. Takedown REBUILDS all three
+  from the surviving corpus: deletion already rewrites the whole
+  corpus, so a recount adds no new cost class, needs no recorded
+  state to be crash-correct (a retry recounts the same survivors),
+  and resets the fingerprint so a redelivered in-flight delta merges
+  onto a corpus-true base.
 - ``wfp/``, ``dhash/``, ``afp/`` — the fingerprint family (text
   winnowing sets, image and audio perceptual hashes): id-keyed tables
   with ONE row per document, appended per batch behind an id
@@ -138,8 +138,8 @@ from cati_database_feeder_spark.operators.graph import (
     components_from_rep_pairs, connected_components, incremental_components)
 
 _STORES = ("labels", "corpus", "buckets", "members", "reps", "metrics",
-           "pairs", "deleted", "cms", "cbloom", "cms_pending",
-           "cbloom_pending", "hll", "wfp", "dhash", "afp")
+           "pairs", "deleted", "cms", "cbloom", "hll", "wfp", "dhash",
+           "afp")
 
 _LOCK_NAME = "_LOCK"
 _DELETE_PENDING = "_DELETE_PENDING"
@@ -625,13 +625,14 @@ CBLOOM_M = 65536   # counting-Bloom cells (= bits of the served bitmap)
 CBLOOM_K = 2       # hash functions — matches the E60 gate's k
 _CMS_FP_ROW = -1    # sentinel: bucket = delta id-hash sum, cnt = delta rows
 _CMS_DIMS_ROW = -2  # sentinel: bucket = d1, cnt = d2
-_CMS_SUBT_ROW = -3  # takedown ledger: bucket = hash64(doc_id) whose counts
-#                     this sketch no longer contains (reflected deletions)
-_CMS_IDS_ROW = -4   # sidecar only: bucket = hash64(doc_id) of the delta
 _CMS_NO_FP = (-1, -1)  # "no last-merged delta" (bootstrap/migration/delete)
+# State dirs written by older code may still hold r=-3/-4 bookkeeping
+# rows and a <name>_pending/ sidecar per sketch: the rows never count
+# as cells (readers keep r >= 0) and vanish at the next merge or
+# takedown; _sk_ensure_store and _sk_takedown drop the sidecar.
 
 # The two ingest-maintained linear sketches share one store discipline
-# (frame shape, sentinels, per-batch sidecar, takedown): the count-min
+# (frame shape, sentinels, merge, takedown by rebuild): the count-min
 # token-frequency table (E61+) and the counting-Bloom decontamination
 # gate over 5-token shingles (E60 at ingest, round-9 verdict item 5).
 # Registered as (store name, cells builder, default dims).
@@ -662,9 +663,8 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
 def _cbloom_of(docs: DataFrame, m_cells: int = CBLOOM_M,
                k: int = CBLOOM_K) -> DataFrame:
     """(r=0, bucket=cell, cnt) counting-Bloom cells over the docs'
-    per-doc DISTINCT 5-token shingles — counted per (doc, shingle) so
-    subtracting one document's cells leaves every shingle it SHARED
-    with a surviving document positive
+    per-doc DISTINCT 5-token shingles — counted per (doc, shingle), so
+    the cells of a corpus are the cell-wise sum of its batches' cells
     (functions/sketches.py:counting_bloom_cells)."""
     return (sketches.counting_bloom_cells(_doc_shingles(docs),
                                           "shingle", m_cells, k)
@@ -704,35 +704,18 @@ def _cms_fp(delta: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _doc_id_hashes(docs: DataFrame) -> DataFrame:
-    """One (bucket = hash64(doc_id)) row per doc — the id identity used
-    by the sidecar's committed-check and the takedown ledger. Full
-    60-bit hashes (not mod P): a collision here silently skips a
-    subtraction, so the accident class is kept at ~2^-60 per pair."""
-    return docs.select(text_fns.hash64(F.col("doc_id").cast("string"))
-                       .alias("bucket"))
-
-
 def _cms_store_frame(spark, table: DataFrame, fp: tuple[int, int],
-                     d1: int, d2: int,
-                     extra_rows: DataFrame | None = None) -> DataFrame:
-    """Data rows + the two sentinel rows (+ optional bookkeeping rows:
-    the takedown ledger in the main store, the delta id-hashes in a
-    sidecar), ONE frame so one swap commits all of it — fp, dims and
-    ledgers must never drift from the cells they describe."""
+                     d1: int, d2: int) -> DataFrame:
+    """Data rows + the two sentinel rows, ONE frame so one swap commits
+    all of it — fp and dims must never drift from the cells they
+    describe."""
     sent = local_frame(
         spark, [(_CMS_FP_ROW, fp[1], fp[0]), (_CMS_DIMS_ROW, d1, d2)],
         "r INT, bucket BIGINT, cnt BIGINT")
-    out = (table.select(F.col("r").cast("int"),
-                        F.col("bucket").cast("bigint"),
-                        F.col("cnt").cast("bigint"))
-           .unionByName(sent))
-    if extra_rows is not None:
-        out = out.unionByName(
-            extra_rows.select(F.col("r").cast("int"),
-                              F.col("bucket").cast("bigint"),
-                              F.col("cnt").cast("bigint")))
-    return out
+    return (table.select(F.col("r").cast("int"),
+                         F.col("bucket").cast("bigint"),
+                         F.col("cnt").cast("bigint"))
+            .unionByName(sent))
 
 
 def read_cms(spark, state_dir: str) -> DataFrame:
@@ -758,8 +741,8 @@ def cbloom_gate(spark, state_dir: str):
     :func:`functions.sketches.bloom_might_contain` — test any incoming
     benchmark/eval shingle set against the LIVE corpus in a
     zero-shuffle codegen projection, no corpus tokenize. No false
-    negatives for surviving documents' shingles (the counting cells
-    subtract exactly on takedown); false positives go to the usual
+    negatives for surviving documents' shingles (takedown recounts the
+    cells over the survivors); false positives go to the usual
     exact verify join. Dims come from the bootstrap-pinned sentinel."""
     stored = spark.read.parquet(live_store(os.path.join(state_dir, "cbloom")))
     dims = stored.filter(F.col("r") == _CMS_DIMS_ROW).collect()
@@ -780,11 +763,9 @@ def cbloom_gate(spark, state_dir: str):
 # (built-in JVM: hll_sketch_agg / hll_union_agg — no custom code, no
 # Python) is register-MAX state: merging is idempotent and
 # order/partition-free BY ALGEBRA, so unlike the counting sketches this
-# store needs NO replay fingerprint and NO sidecar — an at-least-once
-# redelivery re-maxes the same registers into place. The price of that
-# algebra: registers cannot be subtracted, so takedown REBUILDS from
-# the surviving corpus (documented, tested) — the one sketch in the
-# store family where rebuild is not a fallback but the only sound form.
+# store needs NO replay fingerprint — an at-least-once redelivery
+# re-maxes the same registers into place. Takedown rebuilds it from the
+# surviving corpus, as it does the counting sketches.
 # ---------------------------------------------------------------------
 
 HLL_LGK = 12  # 2^12 registers → ~1.6% standard error; pinned at bootstrap
@@ -837,7 +818,7 @@ def _hll_merge_delta(spark, state_dir: str, delta: DataFrame) -> None:
     fingerprint guard, on purpose: HLL registers merge by MAX, so
     re-merging the identical delta after a crash-window redelivery is
     a no-op by algebra — the idempotence the counting sketches have to
-    buy with sentinels comes free here."""
+    buy with a fingerprint sentinel comes free here."""
     hll_dir = os.path.join(state_dir, "hll")
     stored = spark.read.parquet(live_store(hll_dir)).select("sk")
     # NULL sketches (all-short-doc bootstrap or delta — zero shingle
@@ -861,7 +842,7 @@ def _hll_merge_delta(spark, state_dir: str, delta: DataFrame) -> None:
 # doc's whole winnowing set as one ``fps`` array
 # (dedup.winnow_fingerprint_sets; empty for a doc shorter than one
 # window) and :func:`read_wfp` explodes it. One row per doc makes
-# every hazard the linear sketches buy off with sentinels and sidecars
+# every hazard the linear sketches buy off with a replay fingerprint
 # structural here:
 #
 # - crash mid-append: a plain parquet append moves task files into the
@@ -1017,29 +998,42 @@ def _fp_append_delta(spark, state_dir: str, delta: DataFrame,
                      .join(existing, "doc_id", "left_anti"), d)
 
 
+def _sk_sentinels(spark, sk_dir: str) -> dict[int, tuple[int, int]]:
+    """The ``sk_dir`` sketch store's sentinel rows as {r: (bucket,
+    cnt)} — the dims at r=-2, the last merged delta's fingerprint at
+    r=-1 — in one collect."""
+    return {int(row["r"]): (int(row["bucket"]), int(row["cnt"]))
+            for row in (spark.read.parquet(live_store(sk_dir))
+                        .filter(F.col("r").isin(_CMS_FP_ROW, _CMS_DIMS_ROW))
+                        .collect())}
+
+
 def _sk_ensure_store(spark, state_dir: str, name: str, cells_of,
-                     d1: int, d2: int) -> None:
+                     d1: int, d2: int) -> tuple[int, int]:
     """One-time migration for state dirs predating the ``name`` sketch
     store (one corpus pass, the same policy as the other ensure fns);
     on maintained dirs this only verifies the BOOTSTRAP-PINNED dims —
     merging a table built with different dims would silently corrupt
     every cell, so a mismatch is a descriptive refusal, not a
-    rebuild."""
+    rebuild. Returns the stored fingerprint of the last merged delta
+    (the replay guard of :func:`_sk_merge_delta`), read in the same
+    collect as the dims. Drops a ``<name>_pending`` sidecar left by
+    older code."""
     sk_dir = os.path.join(state_dir, name)
+    _drop_store(sk_dir + "_pending")
     if store_exists(sk_dir):
-        dims = (spark.read.parquet(live_store(sk_dir))
-                .filter(F.col("r") == _CMS_DIMS_ROW).collect())
-        if dims and (int(dims[0]["bucket"]), int(dims[0]["cnt"])) \
-                != (d1, d2):
+        sent = _sk_sentinels(spark, sk_dir)
+        dims = sent.get(_CMS_DIMS_ROW)
+        if dims and dims != (d1, d2):
             raise StateLockError(
                 f"{name} store at {sk_dir!r} was bootstrapped with "
-                f"dims ({int(dims[0]['bucket'])}, "
-                f"{int(dims[0]['cnt'])}) but this ingest is configured "
+                f"dims {dims} but this ingest is configured "
                 f"for ({d1}, {d2}) — dims are pinned at bootstrap "
                 f"(merging mismatched tables corrupts every cell); use "
                 f"the stored dims or rebuild the store.")
         if dims:
-            return
+            h, n = sent.get(_CMS_FP_ROW, _CMS_NO_FP)
+            return n, h
         # a sketch dir WITHOUT the dims sentinel is a partially written
         # store (every complete writer — bootstrap, merge, delete,
         # this migration — commits data + sentinels in one frame):
@@ -1055,187 +1049,55 @@ def _sk_ensure_store(spark, state_dir: str, name: str, cells_of,
     # one — never a sentinel-less partial (review finding)
     _swap_write(_cms_store_frame(spark, cells_of(corpus, d1, d2),
                                  _CMS_NO_FP, d1, d2), sk_dir)
-
-
-def _ensure_cms_store(spark, state_dir: str,
-                      depth: int = CMS_DEPTH,
-                      width: int = CMS_WIDTH) -> None:
-    _sk_ensure_store(spark, state_dir, "cms", _cms_of, depth, width)
+    return _CMS_NO_FP
 
 
 def _sk_merge_delta(spark, state_dir: str, name: str, delta: DataFrame,
-                    cells_of, d1: int, d2: int) -> None:
+                    cells_of, d1: int, d2: int, fp: tuple[int, int],
+                    stored_fp: tuple[int, int]) -> None:
     """Fold one delta into the ``name`` sketch store: cell-wise ADD
-    (the linear-sketch merge), swap-replaced. Replay-guarded:
-    foreachBatch is at-least-once, the merge is not idempotent, and a
-    crash AFTER this swap but BEFORE the corpus commit marker
-    redelivers the identical delta — whose fingerprint then matches
-    the stored sentinel and the merge is skipped.
-
-    SIDECAR (round-10, the safe-subtract enabler — SURVEY.md's open
-    thread 2): before the merge, the delta's own aggregated cells +
-    fp + id-hashes are swap-written to ``{name}_pending/``. The
-    sidecar makes takedown's subtraction well-defined across the
-    merge→corpus-commit crash window: a takedown finding a sidecar
-    whose fp matches the store's AND whose ids are not all in the
-    corpus knows the store contains a merged-but-uncommitted delta
-    and can subtract exactly it (:func:`_sk_takedown`). Write order
-    is load-bearing: sidecar BEFORE the store swap, so a crash
-    between them leaves sidecar.fp != store.fp (takedown ignores it,
-    the replayed batch overwrites it). The sidecar is garbage-
-    collected after the corpus commit (:func:`_sk_gc_pending`); a
-    stale committed sidecar (crash in that last window) is detected
-    by the ids⊆corpus check and GC'd without subtraction. Plans here
-    read only the sketch dirs + the delta, so the call is
+    (the linear-sketch merge), swap-replaced together with the delta's
+    fingerprint ``fp`` (:func:`_cms_fp`). Replay-guarded: foreachBatch
+    is at-least-once, the merge is not idempotent, and a crash AFTER
+    this swap but BEFORE the corpus commit marker redelivers the
+    identical delta — whose fingerprint then equals ``stored_fp``
+    (from :func:`_sk_ensure_store`) and the merge is skipped. Plans
+    here read only the sketch dir + the delta, so the call is
     recacheByPath-safe anywhere before the corpus append."""
-    sk_dir = os.path.join(state_dir, name)
-    pend_dir = os.path.join(state_dir, name + "_pending")
-    stored = spark.read.parquet(live_store(sk_dir))
-    fp = _cms_fp(delta)
-    prev = stored.filter(F.col("r") == _CMS_FP_ROW).collect()
-    if prev and (int(prev[0]["cnt"]), int(prev[0]["bucket"])) == fp:
+    if fp == stored_fp:
         return  # crash-window replay: this delta is already merged
-    ids = (_doc_id_hashes(delta)
-           .select(F.lit(_CMS_IDS_ROW).alias("r"), "bucket",
-                   F.lit(1).alias("cnt")))
-    _swap_write(_cms_store_frame(spark, cells_of(delta, d1, d2), fp,
-                                 d1, d2, extra_rows=ids), pend_dir)
-    # merge reads the delta's cells BACK FROM the sidecar — the
-    # aggregation was paid by the sidecar write, so the merge itself
-    # is one bounded-cardinality union + groupBy; the takedown ledger
-    # rows (r=-3) are carried over verbatim
-    pend_cells = (spark.read.parquet(live_store(pend_dir))
-                  .filter(F.col("r") >= 0))
-    ledger = stored.filter(F.col("r") == _CMS_SUBT_ROW)
-    merged = (stored.filter(F.col("r") >= 0)
-              .unionByName(pend_cells)
+    sk_dir = os.path.join(state_dir, name)
+    merged = (spark.read.parquet(live_store(sk_dir))
+              .filter(F.col("r") >= 0)
+              .unionByName(cells_of(delta, d1, d2))
               .groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt")))
     # NO coalesce(1) here: coalesce collapses the whole upstream plan
     # into one serial task (measured 4.5 s vs 0.6 s for this write —
     # SCALING.md round 9); AQE already shrinks the tiny shuffle, and
     # compact_state owns the file count (sketches compact to 1 file)
-    _swap_write(_cms_store_frame(spark, merged, fp, d1, d2,
-                                 extra_rows=ledger), sk_dir)
-
-
-def _sk_gc_pending(state_dir: str, name: str) -> None:
-    """Drop the ``name`` sidecar after the corpus commit marker: its
-    delta is now corpus-true, so takedown no longer needs it (the
-    ids⊆corpus check would classify it committed anyway — this is
-    hygiene, not correctness)."""
-    _drop_store(os.path.join(state_dir, name + "_pending"))
+    _swap_write(_cms_store_frame(spark, merged, fp, d1, d2), sk_dir)
 
 
 def _sk_takedown(spark, state_dir: str, name: str, cells_of,
-                 d1_default: int, d2_default: int, corpus: DataFrame,
-                 tomb: DataFrame, mode: str) -> None:
-    """Reflect the FULL tombstone set in the ``name`` sketch store,
-    before the corpus swap (both modes read the OLD corpus text).
-
-    ``mode="rebuild"``: recount from the surviving corpus — one corpus
-    pass, immune to everything, the round-9 shipped form.
-
-    ``mode="subtract"`` (round-10, SURVEY.md open thread 2 closed):
-    linear-sketch subtraction, cost bounded by the DELETED documents —
-    the 100 TB small-delete path. Correct across every crash window
-    via two pieces of recorded state:
-
-    * the r=-3 LEDGER rows in the store (hash64 of every tombstone the
-      cells already reflect) make the subtraction idempotent — a retry
-      after a crash between the sketch swap and the corpus swap
-      subtracts nothing twice, and a later delete with more ids
-      subtracts only the new ones even if the earlier corpus swap
-      never landed;
-    * the per-batch SIDECAR (:func:`_sk_merge_delta`) resolves the
-      merged-but-uncommitted delta: if the sidecar's fp matches the
-      store's and its ids are NOT all in the corpus, the store
-      contains exactly that delta's cells with no corpus rows behind
-      them — subtract the sidecar's cells wholesale and reset fp, so
-      the redelivered (tombstone-filtered) delta re-merges onto a
-      corpus-true base. A sidecar whose fp mismatches was never
-      merged; one whose ids are all present is committed (GC'd, not
-      subtracted).
-
-    Both modes end with fp = NO_FP (safe: committed deltas are
-    replay-protected by the corpus anti-join, and any pending delta
-    was just subtracted or rebuilt away) and the ledger equal to the
-    full tombstone hash set. Cells driven negative — impossible unless
-    the store was hand-edited — are a descriptive refusal pointing at
-    the rebuild mode."""
+                 d1_default: int, d2_default: int,
+                 survivors: DataFrame) -> None:
+    """Reflect the FULL tombstone set in the ``name`` sketch store by
+    recounting it over ``survivors`` (the old corpus minus every
+    tombstone), before the corpus swap. No recorded state is needed
+    to be crash-correct: a retry recounts the same survivors. The
+    fingerprint resets to NO_FP, so the delta of a batch that crashed
+    between its merge and its corpus commit — whose counts the recount
+    just dropped — merges again on redelivery instead of being skipped
+    as a replay. The dims keep their bootstrap pin; a ``<name>_pending``
+    sidecar left by older code is dropped."""
     sk_dir = os.path.join(state_dir, name)
     if not store_exists(sk_dir):
         return
-    pend_dir = os.path.join(state_dir, name + "_pending")
-    stored = spark.read.parquet(live_store(sk_dir))
-    dims = stored.filter(F.col("r") == _CMS_DIMS_ROW).collect()
-    d1, d2 = ((int(dims[0]["bucket"]), int(dims[0]["cnt"])) if dims
-              else (d1_default, d2_default))
-    tomb_hash_rows = (_doc_id_hashes(tomb).distinct()
-                      .select(F.lit(_CMS_SUBT_ROW).alias("r"), "bucket",
-                              F.lit(1).alias("cnt")))
-    if mode == "rebuild":
-        _swap_write(_cms_store_frame(
-            spark, cells_of(corpus.join(tomb, "doc_id", "left_anti"),
-                            d1, d2),
-            _CMS_NO_FP, d1, d2, extra_rows=tomb_hash_rows), sk_dir)
-        _sk_gc_pending(state_dir, name)
-        return
-    if mode != "subtract":
-        raise ValueError(
-            f"sketch takedown mode must be 'subtract' or 'rebuild', "
-            f"got {mode!r}")
-    ledger = stored.filter(F.col("r") == _CMS_SUBT_ROW).select("bucket")
-    to_sub_docs = (corpus.join(tomb, "doc_id", "left_semi")
-                   .withColumn("__h", text_fns.hash64(
-                       F.col("doc_id").cast("string")))
-                   .join(ledger.withColumnRenamed("bucket", "__h"),
-                         "__h", "left_anti")
-                   .drop("__h"))
-    neg = cells_of(to_sub_docs, d1, d2).withColumn(
-        "cnt", -F.col("cnt"))
-    parts = [stored.filter(F.col("r") >= 0), neg]
-    prev_fp = stored.filter(F.col("r") == _CMS_FP_ROW).collect()
-    store_fp = ((int(prev_fp[0]["cnt"]), int(prev_fp[0]["bucket"]))
-                if prev_fp else _CMS_NO_FP)
-    if store_exists(pend_dir):
-        pend = spark.read.parquet(live_store(pend_dir))
-        pfp_rows = pend.filter(F.col("r") == _CMS_FP_ROW).collect()
-        pend_fp = ((int(pfp_rows[0]["cnt"]), int(pfp_rows[0]["bucket"]))
-                   if pfp_rows else _CMS_NO_FP)
-        if pend_fp == store_fp and pend_fp != _CMS_NO_FP:
-            pend_ids = (pend.filter(F.col("r") == _CMS_IDS_ROW)
-                        .select("bucket"))
-            n_uncommitted = (pend_ids
-                             .join(_doc_id_hashes(
-                                 corpus.select("doc_id")),
-                                 "bucket", "left_anti")
-                             .limit(1).count())
-            if n_uncommitted:
-                parts.append(pend.filter(F.col("r") >= 0)
-                             .withColumn("cnt", -F.col("cnt")))
-    new_cells = parts[0]
-    for p in parts[1:]:
-        new_cells = new_cells.unionByName(p)
-    new_cells = (new_cells.groupBy("r", "bucket")
-                 .agg(F.sum("cnt").alias("cnt")).persist())
-    try:
-        if new_cells.filter(F.col("cnt") < 0).limit(1).count():
-            raise StateLockError(
-                f"{name} takedown subtraction drove a cell negative — "
-                f"the store does not contain the counts being removed "
-                f"(hand-edited store or unsupported legacy state). "
-                f"Re-run delete_docs with sketch_takedown='rebuild'.")
-        new_ledger = (ledger
-                      .unionByName(tomb_hash_rows.select("bucket"))
-                      .distinct()
-                      .select(F.lit(_CMS_SUBT_ROW).alias("r"), "bucket",
-                              F.lit(1).alias("cnt")))
-        _swap_write(_cms_store_frame(
-            spark, new_cells.filter(F.col("cnt") > 0),
-            _CMS_NO_FP, d1, d2, extra_rows=new_ledger), sk_dir)
-    finally:
-        new_cells.unpersist()
-    _sk_gc_pending(state_dir, name)
+    d1, d2 = _sk_sentinels(spark, sk_dir).get(
+        _CMS_DIMS_ROW, (d1_default, d2_default))
+    _swap_write(_cms_store_frame(spark, cells_of(survivors, d1, d2),
+                                 _CMS_NO_FP, d1, d2), sk_dir)
+    _drop_store(sk_dir + "_pending")
 
 
 def _check_no_pending_delete(state_dir: str, op: str) -> None:
@@ -1472,7 +1334,7 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # after the marker) had a silent LOSS window instead (crash
         # after the marker → the replay's pure-replay return skips the
         # metrics write forever)
-        n = batch.count()
+        n = boot_fp[0]
         _append_metrics(spark, state_dir, batch_id, n, n,
                         pairs.count(), False, True)
         _swap_write(batch, corpus_dir)
@@ -1485,8 +1347,9 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
 
     _ensure_membership_stores(spark, state_dir)
     _ensure_pairs_store(spark, state_dir, threshold, num_hashes, bands)
-    for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
-        _sk_ensure_store(spark, state_dir, sk_name, sk_cells, sd1, sd2)
+    sk_fps = {sk_name: _sk_ensure_store(spark, state_dir, sk_name,
+                                        sk_cells, sd1, sd2)
+              for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES}
     _ensure_hll_store(spark, state_dir)
     for fp_name in _FP_STORES:
         _ensure_fp_store(spark, state_dir, fp_name)
@@ -1517,7 +1380,10 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # delta.count() after the corpus append would see the batch's
         # own docs in the corpus and report 0
         m_rows_in = batch.count()
-        m_delta = delta.count()
+        # one aggregate yields the metrics row's delta count and the
+        # sketch merges' replay fingerprint
+        delta_fp = _cms_fp(delta)
+        m_delta = delta_fp[0]
         m_pairs = 0 if quiet else new_pairs.count()
         # commit order: labels swap first (reads old labels — must
         # complete before anything changes), then the append-only
@@ -1548,11 +1414,11 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # sketch merges BEFORE the corpus commit marker (their replay
         # guard assumes a crash here redelivers the identical delta,
         # which holds only while the marker is unwritten); each reads
-        # its own dirs + the delta only, so the calls are
+        # its own dir + the delta only, so the calls are
         # recacheByPath-safe at this slot
         for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
             _sk_merge_delta(spark, state_dir, sk_name, delta, sk_cells,
-                            sd1, sd2)
+                            sd1, sd2, delta_fp, sk_fps[sk_name])
         _hll_merge_delta(spark, state_dir, delta)
         # fingerprint appends at the same slot: each reads only its own
         # store (the replay guard) + the delta, so it is
@@ -1570,9 +1436,6 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         _append_metrics(spark, state_dir, batch_id, m_rows_in, m_delta,
                         m_pairs, quiet, False)
         delta.write.mode("append").parquet(live_store(corpus_dir))
-        # past the commit marker: the sidecars' deltas are corpus-true
-        for sk_name, _, _ in _SKETCH_STORES:
-            _sk_gc_pending(state_dir, sk_name)
     finally:
         new_pairs.unpersist()
         dmemb.unpersist()
@@ -1649,13 +1512,10 @@ def compact_state(spark, state_dir: str, target_files: int | None = None,
     removes legacy rows from pre-membership-store state dirs, where
     min-id gids could supersede a rep).
 
-    The linear-sketch stores additionally get their r=-3 takedown-
-    reflection ledgers pruned: a ledger row only matters while its
-    tombstoned doc is still in corpus/ (the mid-delete crash window),
-    and compaction runs strictly behind the pending-delete fence, so
-    rows for fully-committed deletes — in the steady state, all of
-    them — are dropped. This bounds the ledger by the IN-FLIGHT
-    delete, not by lifetime delete volume.
+    The swap-replaced sketch stores (cms/, cbloom/, hll/) are
+    rewritten to one file each. The fingerprint family is first
+    brought to its current layout (:func:`_ensure_fp_store`), so a
+    store written by older code leaves compaction readable.
 
     One writer per state dir, ENFORCED: this takes the same fencing
     lock as ``ingest_batch``, so compacting against a live ingest (the
@@ -1679,12 +1539,15 @@ def _compact_state_locked(spark, state_dir: str,
         _swap_write(spark.read.parquet(live_store(corpus_dir)).repartition(n),
                     corpus_dir)
         _ensure_membership_stores(spark, state_dir)
+        for fp_name in _FP_STORES:
+            _ensure_fp_store(spark, state_dir, fp_name)
     # metrics/ grows one tiny file per batch like the id stores —
     # compact it with them (append-only, so the swap discipline holds);
     # one row per batch → one file, not n near-empty ones
     id_bucketed = {"members": "id", **dict.fromkeys(_FP_STORES, "doc_id")}
     for name, parts in (("members", n), ("reps", n), ("metrics", 1),
                         ("pairs", n), ("deleted", 1), ("hll", 1),
+                        ("cms", 1), ("cbloom", 1),
                         *((fp_name, n) for fp_name in _FP_STORES)):
         d = os.path.join(state_dir, name)
         if not store_exists(d):
@@ -1698,38 +1561,6 @@ def _compact_state_locked(spark, state_dir: str,
                         writer=_bucketed_writer)
         else:
             _swap_write(df.repartition(parts), d)
-    # linear-sketch stores: compact to one file AND prune the r=-3
-    # takedown-reflection ledger (SURVEY.md open thread: ledger
-    # compaction). A ledger row exists solely so a retried/extended
-    # delete cannot subtract a tombstone's counts twice WHILE the doc
-    # is still in corpus/ (the sketch-swap → corpus-swap crash
-    # window). compact_state runs behind _check_no_pending_delete, so
-    # every recorded delete completed its corpus swap: the subtract
-    # path's `corpus semi-join tombstones` already excludes every
-    # ledgered doc and the rows are dead weight growing one-per-
-    # deleted-doc forever. Pruned CONSERVATIVELY — keep exactly the
-    # rows whose hash64(doc_id) is still reachable via
-    # corpus ∩ deleted (normally none) — so the rewrite stays correct
-    # even if the no-pending invariant ever weakens. deleted/ itself
-    # is NOT prunable: tombstones guard against at-least-once
-    # redelivery arbitrarily far in the future.
-    tomb_dir = os.path.join(state_dir, "deleted")
-    for name in ("cms", "cbloom"):
-        d = os.path.join(state_dir, name)
-        if not store_exists(d):
-            continue
-        stored = spark.read.parquet(live_store(d))
-        ledger = stored.filter(F.col("r") == _CMS_SUBT_ROW)
-        if store_exists(corpus_dir) and store_exists(tomb_dir):
-            live = _doc_id_hashes(
-                spark.read.parquet(live_store(corpus_dir)).join(
-                    spark.read.parquet(live_store(tomb_dir)).select("doc_id"),
-                    "doc_id", "left_semi"))
-            ledger = ledger.join(live, "bucket", "left_semi")
-        else:
-            ledger = ledger.limit(0)
-        _swap_write(stored.filter(F.col("r") != _CMS_SUBT_ROW)
-                    .unionByName(ledger).repartition(1), d)
     if store_exists(buckets_dir):
         buckets = spark.read.parquet(live_store(buckets_dir))
         reps_dir = os.path.join(state_dir, "reps")
@@ -1742,8 +1573,7 @@ def _compact_state_locked(spark, state_dir: str,
 
 def delete_docs(spark, state_dir: str, doc_ids,
                 threshold: float = 0.7, num_hashes: int = 16,
-                bands: int = 4,
-                sketch_takedown: str = "subtract") -> None:
+                bands: int = 4) -> None:
     """Takedown/retraction for the ingest stores (round-8 verdict
     item 2): remove a doc_id set from EVERY store — the path a
     production corpus needs for copyright/PII deletion requests, which
@@ -1775,6 +1605,11 @@ def delete_docs(spark, state_dir: str, doc_ids,
       tests/test_incremental_e2e.py). Untouched components keep their
       rows; per-deletion cost scales with the touched components, not
       the corpus.
+    - ``cms/``, ``cbloom/``, ``hll/`` — recounted over the surviving
+      corpus (one corpus pass, the same order of cost as the corpus
+      rewrite itself), with the replay fingerprint reset so a batch
+      redelivered after the delete merges onto the recount.
+    - ``wfp/``, ``dhash/``, ``afp/`` — deleted rows removed.
 
     Crash safety: the ``_DELETE_PENDING`` marker is written first and
     cleared last; every mutating op refuses while it exists
@@ -1784,24 +1619,15 @@ def delete_docs(spark, state_dir: str, doc_ids,
     after a crash completes the interrupted deletion; per-store swap
     crashes heal through the usual :func:`_recover_swaps`.
 
-    ``doc_ids``: an iterable of ids or a single-column DataFrame.
-
-    ``sketch_takedown``: how the linear-sketch stores (cms/, cbloom/)
-    reflect the deletion — ``"subtract"`` (default; cost bounded by
-    the deleted docs — the 100 TB small-delete path, made crash-safe
-    by the r=-3 reflection ledger + the per-batch sidecar, see
-    :func:`_sk_takedown`) or ``"rebuild"`` (recount from the
-    surviving corpus — one corpus pass, the round-9 form, kept as the
-    fallback)."""
+    ``doc_ids``: an iterable of ids or a single-column DataFrame."""
     with _state_lock(state_dir, "delete_docs"):
         _delete_docs_locked(spark, state_dir, doc_ids, threshold,
-                            num_hashes, bands, sketch_takedown)
+                            num_hashes, bands)
 
 
 def _delete_docs_locked(spark, state_dir: str, doc_ids,
                         threshold: float, num_hashes: int,
-                        bands: int,
-                        sketch_takedown: str = "subtract") -> None:
+                        bands: int) -> None:
     _recover_swaps(state_dir)
     corpus_dir = os.path.join(state_dir, "corpus")
     if not store_exists(corpus_dir):
@@ -1924,31 +1750,25 @@ def _delete_docs_locked(spark, state_dir: str, doc_ids,
         _swap_write(new_buckets, buckets_dir)
         _swap_write(surv_pairs, pairs_dir)
         _swap_write_bucketed(new_members, members_dir, "id")
-        # linear-sketch stores reflect the full tombstone set (reads
-        # the old corpus/ + deleted/, so both modes must run before
-        # the corpus swap). Default is the round-10 SUBTRACT path —
-        # deleted-doc-bounded, idempotent via the r=-3 reflection
-        # ledger, pending-batch-safe via the merge sidecar; "rebuild"
-        # recounts from survivors (the round-9 form, kept as the
-        # fallback). Either way fp resets to the no-delta sentinel so
-        # any in-flight batch redelivered after the delete merges
-        # normally (_sk_takedown).
+        # sketch stores are recounted over the survivors, read from the
+        # old corpus/, so they run before the corpus swap; the counting
+        # sketches' fp resets to the no-delta sentinel so any in-flight
+        # batch redelivered after the delete merges normally
+        # (_sk_takedown)
+        survivors = corpus.join(tomb, "doc_id", "left_anti")
         for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
             _sk_takedown(spark, state_dir, sk_name, sk_cells, sd1, sd2,
-                         corpus, tomb, sketch_takedown)
-        # hll takedown is ALWAYS a rebuild from survivors — register-max
-        # state cannot be subtracted (the price of the fp-free merge)
+                         survivors)
         if store_exists(os.path.join(state_dir, "hll")):
-            _swap_write(_hll_frame(
-                spark, corpus.join(tomb, "doc_id", "left_anti"))
-                .coalesce(1), os.path.join(state_dir, "hll"))
-        # fingerprint takedown is an exact row delete — id-keyed
-        # tables need no subtraction algebra and no ledger
+            _swap_write(_hll_frame(spark, survivors).coalesce(1),
+                        os.path.join(state_dir, "hll"))
+        # fingerprint takedown is an exact row delete of the
+        # tombstoned ids
         for fp_name in _FP_STORES:
             fp_dir = os.path.join(state_dir, fp_name)
             if store_exists(fp_dir):
                 _tomb_pruned_rewrite(spark, fp_dir, tomb)
-        _swap_write(corpus.join(tomb, "doc_id", "left_anti"), corpus_dir)
+        _swap_write(survivors, corpus_dir)
     except BaseException:
         raise  # marker stays: the refusal gate routes to a retry
     else:

@@ -1376,8 +1376,10 @@ def test_cms_store_dims_pinned_at_bootstrap(spark, tmp_path):
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         [(1, "alpha")], ["doc_id", "text"]), state, batch_id=0)
+    name, cells_of, _ = ing._SKETCH_STORES[0]
+    assert name == "cms"
     with pytest.raises(ing.StateLockError, match="pinned at bootstrap"):
-        ing._ensure_cms_store(spark, state, depth=2, width=64)
+        ing._sk_ensure_store(spark, state, name, cells_of, 2, 64)
 
 
 def test_cms_store_legacy_dir_migrates_once(spark, tmp_path):
@@ -1421,7 +1423,7 @@ def test_cms_store_sentinelless_dir_rebuilt_not_trusted(spark, tmp_path):
 
 # ---------------------------------------------------------------------
 # cbloom/ store: the maintained counting-Bloom decontamination gate
-# (round 10, verdict item 5) + safe sketch subtraction (verdict item 6)
+# (round 10, verdict item 5) + sketch takedown across crash windows
 # ---------------------------------------------------------------------
 
 def _cbloom_cells(spark, state):
@@ -1478,75 +1480,82 @@ def test_cbloom_store_multi_batch_gate_no_false_negatives(spark, tmp_path):
 def test_cbloom_store_delete_equals_survivor_rebuild(spark, tmp_path):
     """Takedown on the gate (round-9 verdict item 5 'Done' bar): after
     delete_docs the counting cells EQUAL a from-scratch count over the
-    survivors — for BOTH takedown modes — so a shingle shared with a
-    surviving doc stays positive while a deleted-only shingle's cells
-    drop to zero, and the served gate keeps the no-false-negative
-    contract on the surviving corpus."""
+    survivors, so a shingle shared with a surviving doc stays positive
+    while a deleted-only shingle's cells drop to zero, and the served
+    gate keeps the no-false-negative contract on the surviving
+    corpus."""
     from cati_database_feeder_spark.functions import sketches
-    from cati_database_feeder_spark.streaming import ingest as ing
-    for mode in ("subtract", "rebuild"):
-        state = str(tmp_path / f"state_{mode}")
-        ing.ingest_batch(spark, spark.createDataFrame(
-            _CB_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-        ing.delete_docs(spark, state, [2, 3], sketch_takedown=mode)
-        corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-        assert sorted(r["doc_id"] for r in corpus.collect()) == [1]
-        assert (_cbloom_cells(spark, state)
-                == _cbloom_recompute(spark, corpus)), mode
-        words, m, k = ing.cbloom_gate(spark, state)
-        surv_sh = _corpus_shingles(corpus)
-        assert surv_sh.filter(~sketches.bloom_might_contain(
-            F.col("shingle"), words, m, k)).count() == 0
-        # idempotent retry (re-read corpus: the retry swaps the dir)
-        ing.delete_docs(spark, state, [], sketch_takedown=mode)
-        corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-        assert (_cbloom_cells(spark, state)
-                == _cbloom_recompute(spark, corpus)), mode
-
-
-def test_sketch_subtract_pending_crashed_batch_equals_rebuild(
-        spark, tmp_path):
-    """THE hazard SURVEY.md's open thread 2 documented as unshippable
-    without a sidecar, now shipped (round-10 verdict item 6 'Done'
-    bar): a batch crashes BETWEEN the sketch merges and the corpus
-    commit marker, a takedown then tombstones one of that delta's
-    docs, and the batch is redelivered. The naive subtract could never
-    remove the tombstoned doc's counts (corpus ∩ tombstones never
-    contained it) and the fp-mismatched replay would double-count the
-    rest; the sidecar lets the takedown subtract the ENTIRE pending
-    delta and reset fp, so the replayed (tombstone-filtered) delta
-    re-merges onto a corpus-true base. Both sketch stores must end
-    cell-identical to a from-scratch pass over the final corpus —
-    i.e. subtract ≡ rebuild even across the crash window."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         _CB_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    batch = spark.createDataFrame(
-        [(4, "eight nine ten eleven twelve"),
-         (5, "alpha beta gamma delta DOOMED")], ["doc_id", "text"])
-    real_append = ing._append_metrics
-    crashed = []
-
-    def crash_at_metrics(*a, **kw):
-        if not crashed:
-            crashed.append(True)
-            raise RuntimeError("injected crash before commit marker")
-        real_append(*a, **kw)
-
-    ing._append_metrics = crash_at_metrics
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            ing.ingest_batch(spark, batch, state, batch_id=1)
-        # takedown of doc 5 — a doc whose counts are ONLY in the
-        # sketches (merged) and the sidecar, never in the corpus
-        ing.delete_docs(spark, state, [5], sketch_takedown="subtract")
-        # redelivery: the tombstone-filtered delta (doc 4) merges
-        ing.ingest_batch(spark, batch, state, batch_id=1)
-    finally:
-        ing._append_metrics = real_append
+    ing.delete_docs(spark, state, [2, 3])
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
+    assert sorted(r["doc_id"] for r in corpus.collect()) == [1]
+    assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
+    words, m, k = ing.cbloom_gate(spark, state)
+    surv_sh = _corpus_shingles(corpus)
+    assert surv_sh.filter(~sketches.bloom_might_contain(
+        F.col("shingle"), words, m, k)).count() == 0
+    # idempotent retry (re-read corpus: the retry swaps the dir)
+    ing.delete_docs(spark, state, [])
+    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
+    assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
+
+
+def test_sketch_subtract_pending_crashed_batch_equals_rebuild(
+        spark, tmp_path):
+    """A batch crashes BETWEEN the sketch merges and the corpus commit
+    marker — the sketches hold a delta the corpus does not — and a
+    takedown runs before the batch is redelivered. The takedown
+    recounts the sketches over the surviving corpus, which drops the
+    pending delta, and resets the replay fingerprint, so the
+    redelivered (tombstone-filtered) delta merges onto a corpus-true
+    base. Two legs: the first takedown tombstones one of the pending
+    delta's own docs; the second tombstones only a committed doc, so
+    the redelivered delta is IDENTICAL to the pending one and a
+    fingerprint left in place would skip its merge. Both sketch
+    stores must end cell-identical to a from-scratch pass over the
+    final corpus."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    state = str(tmp_path / "state")
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _CB_DOCS0, ["doc_id", "text"]), state, batch_id=0)
+    real_append = ing._append_metrics
+
+    def crash_delete_redeliver(rows, ids, batch_id):
+        batch = spark.createDataFrame(rows, ["doc_id", "text"])
+        crashed = []
+
+        def crash_at_metrics(*a, **kw):
+            if not crashed:
+                crashed.append(True)
+                raise RuntimeError("injected crash before commit marker")
+            real_append(*a, **kw)
+
+        ing._append_metrics = crash_at_metrics
+        try:
+            with pytest.raises(RuntimeError, match="injected crash"):
+                ing.ingest_batch(spark, batch, state, batch_id=batch_id)
+            ing.delete_docs(spark, state, ids)
+            ing.ingest_batch(spark, batch, state, batch_id=batch_id)
+        finally:
+            ing._append_metrics = real_append
+        return spark.read.parquet(L(os.path.join(state, "corpus")))
+
+    # takedown of doc 5 — a doc whose counts are ONLY in the sketches
+    # (merged), never in the corpus; the redelivered delta is doc 4
+    corpus = crash_delete_redeliver(
+        [(4, "eight nine ten eleven twelve"),
+         (5, "alpha beta gamma delta DOOMED")], [5], 1)
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 2, 3, 4]
+    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
+    assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
+    # takedown of committed doc 1 only: the whole delta is redelivered
+    corpus = crash_delete_redeliver(
+        [(6, "six seven eight nine ten eleven"),
+         (7, "alpha beta gamma delta epsilon zeta eta")], [1], 2)
+    assert sorted(r["doc_id"] for r in corpus.collect()) == [2, 3, 4, 6, 7]
     assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
 
@@ -1554,10 +1563,11 @@ def test_sketch_subtract_pending_crashed_batch_equals_rebuild(
 def test_sketch_subtract_mid_delete_crash_no_double_subtract(
         spark, tmp_path):
     """A crash INSIDE delete_docs after the sketch swaps but before the
-    corpus swap: the retry re-applies the full tombstone set against
-    the OLD corpus (which still contains the tombstoned rows) — the
-    r=-3 reflection ledger must keep the second subtraction a no-op or
-    every deleted doc's cells go negative/doubly-removed."""
+    corpus swap: the pending-delete fence refuses other writers, and
+    the retry re-applies the full tombstone set against the OLD corpus
+    (which still contains the tombstoned rows) — the sketches must
+    equal a recount over the survivors, with no deleted doc's counts
+    removed twice."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1575,13 +1585,13 @@ def test_sketch_subtract_mid_delete_crash_no_double_subtract(
     ing._swap_write = crash_at_corpus_swap
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            ing.delete_docs(spark, state, [2], sketch_takedown="subtract")
+            ing.delete_docs(spark, state, [2])
         # the pending-delete fence routes every other op to a retry
         with pytest.raises(ing.StateLockError, match="interrupted"):
             ing.ingest_batch(spark, spark.createDataFrame(
                 [(9, "x y z w v")], ["doc_id", "text"]), state,
                 batch_id=2)
-        ing.delete_docs(spark, state, [], sketch_takedown="subtract")
+        ing.delete_docs(spark, state, [])
     finally:
         ing._swap_write = real_swap
     corpus = spark.read.parquet(L(corpus_dir))
@@ -1592,41 +1602,31 @@ def test_sketch_subtract_mid_delete_crash_no_double_subtract(
 
 def test_compact_state_prunes_sketch_ledger_and_keeps_takedown_safe(
         spark, tmp_path):
-    """Ledger compaction (SURVEY.md round-11 open thread 3): the r=-3
-    reflection ledger grows one row per deleted doc and only matters
-    while a tombstoned doc is still in corpus/ — compact_state runs
-    behind the pending-delete fence, so it prunes the ledger to zero.
-    The prune must not break any takedown property: a RE-delete of the
-    pruned ids stays a no-op (the corpus semi-join excludes them), and
-    a NEW subtract-mode delete after compaction still equals a
-    from-scratch recount over the survivors, for both sketch stores."""
+    """compact_state rewrites each sketch store to one file without
+    breaking any takedown property: the compacted cells still equal a
+    from-scratch recount, a RE-delete of an already-deleted id changes
+    nothing, and a NEW delete after compaction still equals a recount
+    over the survivors, for both sketch stores."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         _CB_DOCS0, ["doc_id", "text"]), state, batch_id=0)
     ing.ingest_batch(spark, spark.createDataFrame(
         _CB_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-    ing.delete_docs(spark, state, [2], sketch_takedown="subtract")
-
-    def ledger_rows(name):
-        return (spark.read.parquet(L(os.path.join(state, name)))
-                .filter(F.col("r") == ing._CMS_SUBT_ROW).count())
-
-    assert ledger_rows("cms") == 1 and ledger_rows("cbloom") == 1
+    ing.delete_docs(spark, state, [2])
     ing.compact_state(spark, state, target_files=2)
-    assert ledger_rows("cms") == 0 and ledger_rows("cbloom") == 0
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert (_cbloom_cells(spark, state)
             == _cbloom_recompute(spark, corpus))
-    # re-delete of the pruned id: no double subtraction without the
-    # ledger row — the doc is gone from corpus/, so nothing to subtract
-    # (re-read corpus: every delete swaps the dir)
-    ing.delete_docs(spark, state, [2], sketch_takedown="subtract")
+    # re-delete of an already-deleted id: the doc is gone from corpus/,
+    # so the recount is unchanged (re-read corpus: every delete swaps
+    # the dir)
+    ing.delete_docs(spark, state, [2])
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     # a NEW delete after compaction still ≡ rebuild from survivors
-    ing.delete_docs(spark, state, [3], sketch_takedown="subtract")
+    ing.delete_docs(spark, state, [3])
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 4]
     assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
@@ -2026,6 +2026,23 @@ def test_wfp_partial_append_heals_on_redelivery(
     assert _wfp_rows(spark, state) == want == _wfp_recompute(spark, corpus)
 
 
+def _plant_old_layout_wfp(spark, state):
+    """Rewrite wfp/ in the older one-row-per-fingerprint layout
+    ((doc_id, fp), no ``fps`` column) with a leftover ``wfp_pending/``
+    sidecar of that layout beside it; returns (wfp dir, sidecar dir)."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    wfp_dir = os.path.join(state, "wfp")
+    pend_dir = os.path.join(state, "wfp_pending")
+    old = (dedup.winnow_fingerprints(spark.read.parquet(
+        L(os.path.join(state, "corpus"))), k=ing.WFP_K, w=ing.WFP_W)
+        .unionByName(spark.createDataFrame(
+            [(-2, ing.WFP_K * 1000 + ing.WFP_W)], "doc_id long, fp long")))
+    ing._swap_write_bucketed(old, wfp_dir)
+    ing._swap_write(old.filter(F.col("doc_id") == 2), pend_dir)
+    assert "fp" in spark.read.parquet(L(wfp_dir)).columns
+    return wfp_dir, pend_dir
+
+
 def test_wfp_old_layout_dir_migrates_on_next_batch(spark, tmp_path):
     """A wfp/ written in the older one-row-per-fingerprint layout
     ((doc_id, fp), no ``fps`` column), with a leftover ``wfp_pending/``
@@ -2036,15 +2053,7 @@ def test_wfp_old_layout_dir_migrates_on_next_batch(spark, tmp_path):
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    wfp_dir = os.path.join(state, "wfp")
-    pend_dir = os.path.join(state, "wfp_pending")
-    old = (dedup.winnow_fingerprints(spark.read.parquet(
-        L(os.path.join(state, "corpus"))), k=ing.WFP_K, w=ing.WFP_W)
-        .unionByName(spark.createDataFrame(
-            [(-2, ing.WFP_K * 1000 + ing.WFP_W)], "doc_id long, fp long")))
-    ing._swap_write_bucketed(old, wfp_dir)
-    ing._swap_write(old.filter(F.col("doc_id") == 2), pend_dir)
-    assert "fp" in spark.read.parquet(L(wfp_dir)).columns
+    wfp_dir, pend_dir = _plant_old_layout_wfp(spark, state)
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
@@ -2055,6 +2064,67 @@ def test_wfp_old_layout_dir_migrates_on_next_batch(spark, tmp_path):
         [r["doc_id"] for r in corpus.collect()] + [ing._FP_SENTINEL_ID])
     assert not store_exists(pend_dir)
     assert not any(n.startswith("wfp_pending") for n in os.listdir(state))
+
+
+def test_wfp_old_layout_dir_migrates_on_compact(spark, tmp_path):
+    """compact_state brings an older-layout wfp/ (and its leftover
+    sidecar) to the current layout before compacting it, so read_wfp
+    serves the store afterwards instead of raising on the missing
+    ``fps`` column."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    state = str(tmp_path / "state")
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
+    wfp_dir, pend_dir = _plant_old_layout_wfp(spark, state)
+    ing.compact_state(spark, state, target_files=2)
+    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
+    assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
+    assert "fps" in spark.read.parquet(L(wfp_dir)).columns
+    assert not store_exists(pend_dir)
+
+
+def test_sketch_old_layout_leftovers_dropped_by_batch_and_delete(
+        spark, tmp_path):
+    """A state dir written by older code holds a ``<name>_pending/``
+    sidecar beside each counting sketch (cms/, cbloom/) and r=-3
+    takedown-ledger rows inside it. The next ingest_batch, and later
+    the next delete_docs, each leave cells equal to a from-scratch
+    recount, remove the sidecars, and rewrite the stores without the
+    ledger rows."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    state = str(tmp_path / "state")
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _CB_DOCS0, ["doc_id", "text"]), state, batch_id=0)
+    row = "r INT, bucket BIGINT, cnt BIGINT"
+
+    def plant():
+        for name, _, _ in ing._SKETCH_STORES:
+            d = os.path.join(state, name)
+            stored = spark.read.parquet(L(d))
+            ing._swap_write(stored.filter(F.col("r") >= -2).unionByName(
+                spark.createDataFrame([(-4, 77, 1)], row)), d + "_pending")
+            ing._swap_write(stored.unionByName(
+                spark.createDataFrame([(-3, 12345, 1)], row)), d)
+            assert store_exists(d + "_pending")
+
+    def check():
+        corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
+        assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
+        assert (_cbloom_cells(spark, state)
+                == _cbloom_recompute(spark, corpus))
+        for name, _, _ in ing._SKETCH_STORES:
+            assert not any(n.startswith(name + "_pending")
+                           for n in os.listdir(state)), name
+            assert spark.read.parquet(L(os.path.join(state, name))).filter(
+                F.col("r") < ing._CMS_DIMS_ROW).count() == 0, name
+
+    plant()
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _CB_DOCS1, ["doc_id", "text"]), state, batch_id=1)
+    check()
+    plant()
+    ing.delete_docs(spark, state, [2])
+    check()
 
 
 def test_id_stores_bucketed_and_takedown_relinks_untouched(

@@ -248,3 +248,52 @@ def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
             with pytest.raises(ing.StateLockError,
                                match="geometry.*pinned at bootstrap"):
                 ing._ensure_fp_store(spark, state, name)
+
+
+def test_ingest_sketch_family_contract(spark, tmp_path):
+    """The ingest sketch stores (streaming/ingest.py: cms/ and cbloom/
+    from _SKETCH_STORES, plus hll/) across a bootstrap, one batch, one
+    delete and a redelivery of that batch: every store equals a
+    from-scratch count over the final corpus, takedown resets the
+    counting sketches' replay fingerprint to the no-delta sentinel,
+    and no per-batch ``*_pending`` sidecar is ever left in the state
+    dir."""
+    import os
+    from cati_database_feeder_spark.streaming import ingest as ing
+    state = str(tmp_path / "state")
+    docs0 = [(1, "alpha beta gamma delta epsilon zeta"),
+             (2, "alpha beta gamma delta epsilon"),
+             (3, "one two three four five six seven")]
+    batch = spark.createDataFrame(
+        [(4, "eight nine ten eleven twelve"), (5, "one two three four")],
+        ["doc_id", "text"])
+    ing.ingest_batch(spark, spark.createDataFrame(
+        docs0, ["doc_id", "text"]), state, batch_id=0)
+    ing.ingest_batch(spark, batch, state, batch_id=1)
+    ing.delete_docs(spark, state, [2])
+
+    def fp_rows():
+        return {name: [tuple(r) for r in spark.read.parquet(
+            ing.live_store(os.path.join(state, name)))
+            .filter(F.col("r") == ing._CMS_FP_ROW)
+            .select("cnt", "bucket").collect()]
+            for name, _, _ in ing._SKETCH_STORES}
+
+    assert fp_rows() == {name: [ing._CMS_NO_FP]
+                         for name, _, _ in ing._SKETCH_STORES}
+    ing.ingest_batch(spark, batch, state, batch_id=1)   # redelivery
+    corpus = spark.read.parquet(ing.live_store(os.path.join(state,
+                                                            "corpus")))
+    assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 3, 4, 5]
+    for name, cells_of, dims in ing._SKETCH_STORES:
+        stored = sorted(map(tuple, spark.read.parquet(ing.live_store(
+            os.path.join(state, name))).filter(F.col("r") >= 0)
+            .select("r", "bucket", "cnt").collect()))
+        fresh = sorted(map(tuple, cells_of(corpus, *dims).select(
+            F.col("r").cast("int"), F.col("bucket").cast("bigint"),
+            F.col("cnt").cast("bigint")).collect()))
+        assert stored and stored == fresh, name
+    fresh_hll = (ing._hll_frame(spark, corpus)
+                 .select(F.hll_sketch_estimate("sk")).collect()[0][0])
+    assert ing.read_hll(spark, state) == (fresh_hll, ing.HLL_LGK)
+    assert not [n for n in os.listdir(state) if "_pending" in n]
