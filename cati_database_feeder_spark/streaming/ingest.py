@@ -57,8 +57,7 @@ late GC); production maps it onto the table format's own commit:
 - ``pairs/``   — (id_a, id_b) verified near-dup EDGE set, append-only.
   Labels alone cannot be repaired after a node deletion; the stored
   edges are what lets :func:`delete_docs` recompute only the touched
-  components. Maintained per batch; legacy dirs get a one-time
-  migration (:func:`_ensure_pairs_store`).
+  components. Maintained per batch.
 - ``deleted/`` — (doc_id) TOMBSTONE ledger, append-only: takedown
   requests (:func:`delete_docs`). A redelivered deleted doc is dropped
   by the delta filter forever — the tombstone wins over the corpus
@@ -67,11 +66,9 @@ late GC); production maps it onto the table format's own commit:
 - ``cms/``     — the corpus-wide count-min token-frequency sketch
   (functions/sketches.py), maintained per batch by CELL-WISE ADD (a
   count-min table is a LINEAR sketch — merging shards is addition),
-  swap-replaced like labels. Two sentinel rows ride the same parquet
-  so the swap stays atomic for data + bookkeeping: r=-2 pins the
-  (depth, width) dims at bootstrap (merging mismatched dims silently
-  corrupts every cell → descriptive refusal), r=-1 carries the LAST
-  MERGED DELTA's fingerprint — foreachBatch is at-least-once and the
+  swap-replaced like labels. One sentinel row rides the same parquet
+  so the swap stays atomic for data + bookkeeping: r=-1 carries the
+  LAST MERGED DELTA's fingerprint — foreachBatch is at-least-once and the
   merge is NOT idempotent, so a crash between the cms swap and the
   corpus commit marker would double-count the redelivered delta; the
   retry sees its delta's fingerprint already stored and skips the
@@ -87,9 +84,18 @@ late GC); production maps it onto the table format's own commit:
   winnowing sets, image and audio perceptual hashes): id-keyed tables
   with ONE row per document, appended per batch behind an id
   anti-join, so a crash mid-append leaves whole docs or nothing and
-  the redelivery appends exactly the missing ones. A sentinel row pins
-  the hash geometry at bootstrap. One table (``_FP_STORES``) drives
-  their bootstrap, migration, append, compaction and takedown.
+  the redelivery appends exactly the missing ones. One table
+  (``_FP_STORES``) drives their bootstrap, append, compaction and
+  takedown.
+- ``_LAYOUT`` — a small JSON stamp, written by bootstrap before its
+  commit marker: the store kind plus every value the stores silently
+  depend on (sketch dims, HLL lgk, fingerprint geometry, id-bucket
+  count). Every mutating entry checks it before it writes
+  (:func:`_check_layout`, driver-side, no Spark job) and refuses with
+  :class:`StateLockError` when it is missing or any pin differs from
+  this code's configuration: there is ONE store layout, and a state
+  dir of any other is rebuilt from its corpus, never migrated in
+  place.
 
 ``foreachBatch`` is the right harness because each micro-batch runs
 arbitrary BATCH DataFrame code with exactly-once-per-batch-id
@@ -123,6 +129,7 @@ detection; plain directories get this explicit arbiter.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import socket
@@ -293,10 +300,9 @@ def live_store(target: str) -> str:
     """Resolve a logical store path to the physical dir a reader (or
     appender) should use RIGHT NOW. Swap-replaced stores live in
     epoch-suffixed dirs (``<target>__e000007``) selected by an
-    atomically-replaced pointer file (``<target>.ptr``); stores that
-    have never been swap-replaced (append-only stores, pre-epoch
-    legacy dirs, sidecars) have no pointer and resolve to the plain
-    path. EVERY store access goes through this resolver — readers
+    atomically-replaced pointer file (``<target>.ptr``); a store that
+    has never been swap-replaced (``metrics/`` until its first
+    compaction) has no pointer and resolves to the plain path. EVERY store access goes through this resolver — readers
     resolve ONCE at plan time and the epoch dir their plan lists is
     never renamed or deleted until a full swap later (grace = one
     epoch), which is what closes the round-12 serve-during-swap
@@ -314,14 +320,14 @@ def live_store(target: str) -> str:
 
 
 def store_exists(target: str) -> bool:
-    """Does the logical store exist (pointer committed, or a plain /
-    legacy dir on disk)?"""
+    """Does the logical store exist (pointer committed, or a plain dir
+    on disk)?"""
     target = target.rstrip("/")
     return os.path.exists(target + _PTR_SUFFIX) or os.path.exists(target)
 
 
 def _epoch_num(path: str) -> int:
-    """``.../labels__e000007`` → 7; plain (pre-epoch) dirs → 0."""
+    """``.../labels__e000007`` → 7; plain (never swapped) dirs → 0."""
     base = os.path.basename(path.rstrip("/"))
     if "__e" not in base:
         return 0
@@ -333,8 +339,8 @@ def _epoch_num(path: str) -> int:
 
 def _gc_epochs(target: str, keep: set[str]) -> None:
     """Remove every epoch dir of ``target`` whose basename is not in
-    ``keep`` — and the legacy plain dir once it has aged out of the
-    grace set. Runs AFTER a pointer commit, so everything removed is
+    ``keep`` — and the plain dir of a store's first swap once it has
+    aged out of the grace set. Runs AFTER a pointer commit, so everything removed is
     at least one full swap old: the only reader that can lose files
     planned before the PREVIOUS swap and is still executing — the
     documented grace bound (production: time-based GC)."""
@@ -351,26 +357,72 @@ def _gc_epochs(target: str, keep: set[str]) -> None:
         shutil.rmtree(target, ignore_errors=True)
 
 
-def _drop_store(target: str) -> None:
-    """Remove EVERY physical artifact of a logical store: the legacy
-    plain dir, all epoch dirs, and the pointer (+ pointer tmps). The
-    inverse of _swap_write — used for sidecar GC and
-    rebuild-from-scratch heals; plain rmtree(target) would leave a
-    pointered store resurrectable."""
-    target = target.rstrip("/")
-    shutil.rmtree(target, ignore_errors=True)
-    d = os.path.dirname(target) or "."
-    base = os.path.basename(target)
+_LAYOUT_NAME = "_LAYOUT"
+
+
+def _text_layout() -> dict:
+    """The text state dir's layout stamp: the store kind plus every
+    value its stores silently depend on, read from the configuration
+    at call time. Merging sketches of other dims or lgk corrupts or
+    degrades every cell, fingerprints of another geometry never match,
+    and takedown computes the buckets a tombstone touches from
+    N_ID_BUCKETS — so each is pinned at bootstrap, not rediscovered."""
+    from cati_database_feeder_spark.sources import multimodal as mm
+    return {"kind": "text",
+            "cms": [CMS_DEPTH, CMS_WIDTH],
+            "cbloom": [CBLOOM_M, CBLOOM_K],
+            "hll_lgk": HLL_LGK,
+            "wfp": [WFP_K, WFP_W],
+            "dhash_grid": [mm._DHASH_GRID_W, mm._DHASH_GRID_H],
+            "afp_bits": mm.AUDIO_HASH_BITS,
+            "n_id_buckets": N_ID_BUCKETS}
+
+
+def _replace_file(path: str, text: str) -> None:
+    """Atomically replace the small file ``path`` with ``text``
+    (sidecar tmp + ``os.replace``): readers see the old or the new
+    content, never a partial one."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def _write_layout(state_dir: str, layout: dict) -> None:
+    """Stamp ``state_dir`` with ``layout``. Bootstrap calls it before
+    its commit marker, so a committed state dir always carries one."""
+    _replace_file(os.path.join(state_dir, _LAYOUT_NAME),
+                  json.dumps(layout, sort_keys=True))
+
+
+def _check_layout(state_dir: str, layout: dict, op: str) -> None:
+    """Refuse ``op`` unless ``state_dir``'s stamp equals ``layout``.
+    Reads only the driver-side stamp file, so it runs no Spark job;
+    every mutating entry calls it before its first write, and the
+    serving readers before their first read."""
+    path = os.path.join(state_dir, _LAYOUT_NAME)
     try:
-        names = os.listdir(d)
-    except OSError:
-        return
-    for n in names:
-        if n.startswith(base + "__e"):
-            shutil.rmtree(os.path.join(d, n), ignore_errors=True)
-        elif n.startswith(base + _PTR_SUFFIX):
-            with contextlib.suppress(OSError):
-                os.unlink(os.path.join(d, n))
+        with open(path) as fh:
+            stored = json.load(fh)
+    except (OSError, ValueError):  # missing, unreadable or not JSON
+        raise StateLockError(
+            f"state dir {state_dir!r} has no readable layout stamp "
+            f"({_LAYOUT_NAME}): it was not bootstrapped by this code "
+            f"and its stores may be in a layout this code no longer "
+            f"reads. Refusing {op!r}; rebuild the state dir by "
+            f"bootstrapping a fresh one from its corpus.") from None
+    diff = sorted(k for k in stored.keys() | layout.keys()
+                  if stored.get(k) != layout.get(k))
+    if diff:
+        raise StateLockError(
+            f"state dir {state_dir!r} was bootstrapped with geometry "
+            + ", ".join(f"{k}={stored.get(k)}" for k in diff)
+            + " but this code is configured for "
+            + ", ".join(f"{k}={layout.get(k)}" for k in diff)
+            + f" — the geometry is pinned at bootstrap (stores merged "
+            f"or compared across geometries are silently wrong). "
+            f"Refusing {op!r}; use the stored values or rebuild the "
+            f"state dir.")
 
 
 # id-keyed store bucketing (round-12 verdict, missing #4): the
@@ -381,9 +433,9 @@ def _drop_store(target: str) -> None:
 # untouched buckets pass through as a partition-pruned scan with no
 # join and no store-side Exchange, and the join input shrinks from
 # |store| to |touched buckets|. At 100 TB, size N_ID_BUCKETS so a
-# typical takedown touches a small fraction. Readers drop the column
-# (df.drop is a no-op on legacy unbucketed dirs, which keep working
-# and are re-bucketed on their next full rewrite).
+# typical takedown touches a small fraction. Readers drop the column.
+# The bucket count is pinned at bootstrap (_text_layout): takedown
+# recomputes a tombstone's bucket from it.
 N_ID_BUCKETS = 64
 
 
@@ -426,22 +478,12 @@ def _swap_write_bucketed(df: DataFrame, target: str,
 
 def _append_id_store(frame: DataFrame, store_dir: str,
                      id_col: str = "doc_id") -> None:
-    """Append rows to an id-keyed store, matching the LIVE layout: a
-    bucketed store gets a partitioned append (the new files land in
-    their bucket=N dirs), a legacy flat dir gets a plain append (a
-    mixed layout would break partition discovery) until its next full
-    rewrite re-buckets it."""
-    live = live_store(store_dir)
-    try:
-        bucketed = any(n.startswith("bucket=") for n in os.listdir(live))
-    except OSError:
-        bucketed = False
-    if bucketed:
-        (_with_id_bucket(frame.drop("bucket"), id_col)
-         .repartition("bucket")
-         .write.mode("append").partitionBy("bucket").parquet(live))
-    else:
-        frame.write.mode("append").parquet(live)
+    """Append rows to a bucketed id-keyed store: the new files land in
+    their bucket=N dirs, one file per touched bucket."""
+    (_with_id_bucket(frame.drop("bucket"), id_col)
+     .repartition("bucket")
+     .write.mode("append").partitionBy("bucket")
+     .parquet(live_store(store_dir)))
 
 
 def _tomb_pruned_rewrite(spark, store_dir: str, tomb: DataFrame,
@@ -456,14 +498,9 @@ def _tomb_pruned_rewrite(spark, store_dir: str, tomb: DataFrame,
     strand them (link count). The local miniature of how a
     Delta/Iceberg DELETE commits: rewrite the files a predicate
     touches, carry every other file into the new snapshot by
-    reference. Legacy flat dirs fall back to the whole-store
-    anti-join (and come out bucketed)."""
+    reference."""
     store = spark.read.parquet(live_store(store_dir))
     tomb = tomb.select(F.col(tomb.columns[0]).alias(id_col))
-    if "bucket" not in store.columns:
-        _swap_write_bucketed(store.join(tomb, id_col, "left_anti"),
-                             store_dir, id_col)
-        return
     touched = {int(r["bucket"]) for r in
                _with_id_bucket(tomb, id_col)
                .select("bucket").distinct().collect()}
@@ -521,46 +558,22 @@ def _swap_write(df: DataFrame, target: str, writer=None) -> None:
         df.write.mode("overwrite").parquet(new)
     else:
         writer(df, new)
-    ptr = target + _PTR_SUFFIX
-    tmp = f"{ptr}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        fh.write(os.path.basename(new))
-    os.replace(tmp, ptr)
+    _replace_file(target + _PTR_SUFFIX, os.path.basename(new))
     _gc_epochs(target, keep={os.path.basename(new),
                              os.path.basename(cur)})
 
 
 def _recover_swaps(state_dir: str, stores: tuple[str, ...] = _STORES) -> None:
-    """Heal crash leftovers before reading state.
-
-    Epoch scheme (current :func:`_swap_write`): the pointer flip is
-    the single commit point, so the only crash artifacts are (a) an
-    epoch dir NEWER than the pointed one (written, never committed —
-    the batch retry rewrites it) and (b) a stale ``.ptr.tmp.*``
-    sidecar — both dropped here. Committed epochs at or below the
-    pointer are left alone (the newest-but-one is the reader grace;
-    older ones are trimmed by the next swap's GC).
-
-    Legacy scheme (pre-epoch ``__tmp``/``__old`` rename dance, still
-    found in state dirs written by older code): (a) tmp written,
-    target untouched — drop the tmp; (b) target renamed aside, tmp
-    not yet renamed in — rename the old dir back (restoring
-    pre-batch state; the retry redoes the swap); (c) swap complete,
-    old not yet deleted — drop the old. Restoring OLD in (b) keeps
-    the invariant that state only advances via a COMPLETED state
-    operation."""
+    """Heal crash leftovers before reading state. The pointer flip of
+    :func:`_swap_write` is the single commit point, so the only crash
+    artifacts are (a) an epoch dir NEWER than the pointed one
+    (written, never committed — the batch retry rewrites it) and (b) a
+    stale ``.ptr.tmp.*`` sidecar — both dropped here. Committed epochs
+    at or below the pointer are left alone (the newest-but-one is the
+    reader grace; older ones are trimmed by the next swap's GC)."""
     for name in stores:
         target = os.path.join(state_dir, name)
-        # --- legacy __tmp/__old windows (pointer-less dirs only) ---
-        old, tmp = target + "__old", target + "__tmp"
         ptr = target + _PTR_SUFFIX
-        if (not os.path.exists(ptr) and not os.path.exists(target)
-                and os.path.exists(old)):
-            os.rename(old, target)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.exists(target) or os.path.exists(ptr):
-            shutil.rmtree(old, ignore_errors=True)
-        # --- epoch windows ---
         d = os.path.dirname(target)
         base = os.path.basename(target)
         try:
@@ -580,62 +593,19 @@ def _recover_swaps(state_dir: str, stores: tuple[str, ...] = _STORES) -> None:
                                   ignore_errors=True)
 
 
-def _ensure_membership_stores(spark, state_dir: str) -> None:
-    """One-time migration for state dirs created before the membership
-    store existed (corpus/buckets/labels only): derive members/ and
-    reps/ from the corpus text. Costs one corpus tokenize pass — the
-    very pass the stores exist to retire — so it runs once per legacy
-    dir, never per batch."""
-    members_dir = os.path.join(state_dir, "members")
-    reps_dir = os.path.join(state_dir, "reps")
-    if store_exists(members_dir) and store_exists(reps_dir):
-        return
-    memb = dedup.tokset_groups(spark.read.parquet(
-        live_store(os.path.join(state_dir, "corpus"))))
-    _swap_write(memb.filter(F.col("id") == F.col("gid"))
-                .select("gid", "toks",
-                        dedup.tokset_key(F.col("toks")).alias("key")),
-                reps_dir)
-    _swap_write_bucketed(memb.select("id", "gid"), members_dir, "id")
-
-
-def _ensure_pairs_store(spark, state_dir: str, threshold: float,
-                        num_hashes: int, bands: int) -> None:
-    """One-time migration for state dirs created before the pairs
-    store existed: materialize the verified near-dup EDGE set of the
-    current corpus as ``pairs/`` ((id_a, id_b), append-only). The
-    edge store is what makes takedown (:func:`delete_docs`) able to
-    recompute only the components a deletion touches — labels alone
-    cannot be repaired after removing a node without the edges. Costs
-    one corpus tokenize pass, once per legacy dir (the same policy as
-    :func:`_ensure_membership_stores`); on maintained dirs every
-    batch appends its own new pairs and this is a no-op."""
-    pairs_dir = os.path.join(state_dir, "pairs")
-    if store_exists(pairs_dir):
-        return
-    corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    _swap_write(dedup.near_dup_pairs(corpus, threshold=threshold,
-                                     num_hashes=num_hashes, bands=bands)
-                .select("id_a", "id_b"), pairs_dir)
-
-
 CMS_DEPTH = 4
 CMS_WIDTH = 2048
 CBLOOM_M = 65536   # counting-Bloom cells (= bits of the served bitmap)
 CBLOOM_K = 2       # hash functions — matches the E60 gate's k
 _CMS_FP_ROW = -1    # sentinel: bucket = delta id-hash sum, cnt = delta rows
-_CMS_DIMS_ROW = -2  # sentinel: bucket = d1, cnt = d2
-_CMS_NO_FP = (-1, -1)  # "no last-merged delta" (bootstrap/migration/delete)
-# State dirs written by older code may still hold r=-3/-4 bookkeeping
-# rows and a <name>_pending/ sidecar per sketch: the rows never count
-# as cells (readers keep r >= 0) and vanish at the next merge or
-# takedown; _sk_ensure_store and _sk_takedown drop the sidecar.
+_CMS_NO_FP = (-1, -1)  # "no last-merged delta" (after a takedown)
 
 # The two ingest-maintained linear sketches share one store discipline
-# (frame shape, sentinels, merge, takedown by rebuild): the count-min
-# token-frequency table (E61+) and the counting-Bloom decontamination
-# gate over 5-token shingles (E60 at ingest, round-9 verdict item 5).
-# Registered as (store name, cells builder, default dims).
+# (frame shape, replay sentinel, merge, takedown by rebuild): the
+# count-min token-frequency table (E61+) and the counting-Bloom
+# decontamination gate over 5-token shingles (E60 at ingest, round-9
+# verdict item 5). Registered as (store name, cells builder, dims); the
+# dims are pinned by the layout stamp (_text_layout).
 
 
 def _cms_of(docs: DataFrame, depth: int = CMS_DEPTH,
@@ -684,10 +654,13 @@ _SKETCH_STORES = (("cms", _cms_of, (CMS_DEPTH, CMS_WIDTH)),
 BOOT_PHASE_SECONDS: dict[str, float] = {}
 
 
-def _boot_lap(marks: list, name: str) -> None:
+def _boot_lap(phases: dict, marks: list, name: str) -> None:
+    """Record in ``phases`` the wall seconds since ``marks[0]`` as
+    ``name``'s lap and restart the clock — the text and embeddings
+    bootstraps each pass their own BOOT_PHASE_SECONDS."""
     import time
     now = time.time()
-    BOOT_PHASE_SECONDS[name] = round(now - marks[0], 3)
+    phases[name] = round(now - marks[0], 3)
     marks[0] = now
 
 
@@ -704,13 +677,13 @@ def _cms_fp(delta: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _cms_store_frame(spark, table: DataFrame, fp: tuple[int, int],
-                     d1: int, d2: int) -> DataFrame:
-    """Data rows + the two sentinel rows, ONE frame so one swap commits
-    all of it — fp and dims must never drift from the cells they
-    describe."""
+def _cms_store_frame(spark, table: DataFrame,
+                     fp: tuple[int, int]) -> DataFrame:
+    """Data rows + the replay-fingerprint row, ONE frame so one swap
+    commits both — the fp must never drift from the cells it
+    describes."""
     sent = local_frame(
-        spark, [(_CMS_FP_ROW, fp[1], fp[0]), (_CMS_DIMS_ROW, d1, d2)],
+        spark, [(_CMS_FP_ROW, fp[1], fp[0])],
         "r INT, bucket BIGINT, cnt BIGINT")
     return (table.select(F.col("r").cast("int"),
                          F.col("bucket").cast("bigint"),
@@ -720,7 +693,7 @@ def _cms_store_frame(spark, table: DataFrame, fp: tuple[int, int],
 
 def read_cms(spark, state_dir: str) -> DataFrame:
     """The maintained count-min table (r, bucket, cnt) of the live
-    corpus, sentinel bookkeeping rows stripped — feed it to
+    corpus, the fingerprint row stripped — feed it to
     :func:`functions.sketches.cms_estimate` for point-frequency
     estimates without any corpus scan."""
     return (spark.read.parquet(live_store(os.path.join(state_dir, "cms")))
@@ -729,7 +702,7 @@ def read_cms(spark, state_dir: str) -> DataFrame:
 
 def read_cbloom(spark, state_dir: str) -> DataFrame:
     """The maintained counting-Bloom cells (cell, cnt) of the live
-    corpus's 5-token shingles, sentinels stripped."""
+    corpus's 5-token shingles, the fingerprint row stripped."""
     return (spark.read.parquet(live_store(os.path.join(state_dir, "cbloom")))
             .filter(F.col("r") >= 0)
             .select(F.col("bucket").alias("cell"), "cnt"))
@@ -743,15 +716,12 @@ def cbloom_gate(spark, state_dir: str):
     zero-shuffle codegen projection, no corpus tokenize. No false
     negatives for surviving documents' shingles (takedown recounts the
     cells over the survivors); false positives go to the usual
-    exact verify join. Dims come from the bootstrap-pinned sentinel."""
-    stored = spark.read.parquet(live_store(os.path.join(state_dir, "cbloom")))
-    dims = stored.filter(F.col("r") == _CMS_DIMS_ROW).collect()
-    m, k = ((int(dims[0]["bucket"]), int(dims[0]["cnt"])) if dims
-            else (CBLOOM_M, CBLOOM_K))
-    words = sketches.counting_bloom_words(
-        stored.filter(F.col("r") >= 0)
-        .select(F.col("bucket").alias("cell"), "cnt"), m)
-    return words, m, k
+    exact verify join. Dims are the configured ones, checked against
+    the bootstrap-pinned layout stamp first."""
+    _check_layout(state_dir, _text_layout(), "cbloom_gate")
+    words = sketches.counting_bloom_words(read_cbloom(spark, state_dir),
+                                          CBLOOM_M)
+    return words, CBLOOM_M, CBLOOM_K
 
 
 # ---------------------------------------------------------------------
@@ -789,28 +759,6 @@ def read_hll(spark, state_dir: str) -> tuple[int, int]:
            .select(F.hll_sketch_estimate("sk").alias("est"), "lgk")
            .collect())[0]
     return (0 if row["est"] is None else int(row["est"])), int(row["lgk"])
-
-
-def _ensure_hll_store(spark, state_dir: str) -> None:
-    """One-time migration for pre-hll state dirs (one corpus shingle
-    pass); on maintained dirs verifies the BOOTSTRAP-PINNED lgk —
-    unioning sketches of different lgk silently degrades to the
-    smaller, so a mismatch refuses."""
-    hll_dir = os.path.join(state_dir, "hll")
-    if store_exists(hll_dir):
-        rows = spark.read.parquet(live_store(hll_dir)).select("lgk").collect()
-        if rows and int(rows[0]["lgk"]) != HLL_LGK:
-            raise StateLockError(
-                f"hll store at {hll_dir!r} was bootstrapped with "
-                f"lgk={int(rows[0]['lgk'])} but this ingest is "
-                f"configured for {HLL_LGK} — lgk is pinned at bootstrap "
-                f"(a union would silently degrade precision); use the "
-                f"stored lgk or rebuild the store.")
-        if rows:
-            return
-        _drop_store(hll_dir)
-    corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    _swap_write(_hll_frame(spark, corpus).coalesce(1), hll_dir)
 
 
 def _hll_merge_delta(spark, state_dir: str, delta: DataFrame) -> None:
@@ -851,30 +799,16 @@ def _hll_merge_delta(spark, state_dir: str, delta: DataFrame) -> None:
 #   and the redelivered batch's id anti-join appends exactly the
 #   missing docs;
 # - redelivery: the same anti-join makes the append idempotent;
-# - takedown: an exact row delete (the sentinel's negative id can
-#   never match a tombstone);
+# - takedown: an exact row delete;
 # - the one pinned invariant is the hash geometry — fingerprints of a
 #   different (k, w), grid or bit width are silently incomparable — so
-#   each store carries a sentinel row at doc_id = _FP_SENTINEL_ID,
-#   written at bootstrap and checked by :func:`_ensure_fp_store`.
+#   the layout stamp pins it at bootstrap (_text_layout).
 #
 # One table drives every step, as _SKETCH_STORES drives cms/ and
-# cbloom/: name → (rows builder over (doc_id, text) docs, row DDL,
-# sentinel row). Builders and sentinels read the geometry at call time.
+# cbloom/: name → rows builder over (doc_id, text) docs.
 # ---------------------------------------------------------------------
 WFP_K = 4
 WFP_W = 4
-_FP_SENTINEL_ID = -2
-
-
-def _dhash_geometry() -> int:
-    from cati_database_feeder_spark.sources import multimodal as mm
-    return mm._DHASH_GRID_W * 1000 + mm._DHASH_GRID_H
-
-
-def _afp_geometry() -> int:
-    from cati_database_feeder_spark.sources import multimodal as mm
-    return mm.AUDIO_HASH_BITS
 
 
 def _media_hash(docs: DataFrame, media_type: str, col: str) -> DataFrame:
@@ -909,27 +843,12 @@ def _afp_of(docs: DataFrame) -> DataFrame:
     return _media_hash(docs, "audio", "ahash")
 
 
-_FP_STORES = {
-    "wfp": (_wfp_of, "doc_id long, fps array<bigint>",
-            lambda: (_FP_SENTINEL_ID, [WFP_K * 1000 + WFP_W])),
-    "dhash": (_dhash_of, "doc_id long, dhash long, real boolean",
-              lambda: (_FP_SENTINEL_ID, _dhash_geometry(), False)),
-    "afp": (_afp_of, "doc_id long, ahash long, real boolean",
-            lambda: (_FP_SENTINEL_ID, _afp_geometry(), False)),
-}
-
-
-def _fp_frame(spark, docs: DataFrame, name: str) -> DataFrame:
-    """The ``name`` store's rows for ``docs`` plus its geometry
-    sentinel — what a bootstrap or a rebuild swap-writes whole."""
-    rows_of, ddl, sentinel = _FP_STORES[name]
-    return rows_of(docs).unionByName(local_frame(spark, [sentinel()], ddl))
+_FP_STORES = {"wfp": _wfp_of, "dhash": _dhash_of, "afp": _afp_of}
 
 
 def _read_fp(spark, state_dir: str, name: str) -> DataFrame:
     return (spark.read.parquet(live_store(os.path.join(state_dir, name)))
-            .drop("bucket")
-            .filter(F.col("doc_id") != _FP_SENTINEL_ID))
+            .drop("bucket"))
 
 
 def read_wfp(spark, state_dir: str) -> DataFrame:
@@ -950,40 +869,6 @@ def read_afp(spark, state_dir: str) -> DataFrame:
     return _read_fp(spark, state_dir, "afp")
 
 
-def _ensure_fp_store(spark, state_dir: str, name: str) -> None:
-    """One-time migration for a state dir without a current ``name``
-    store (one corpus fingerprint pass); on maintained dirs verifies
-    the BOOTSTRAP-PINNED geometry — the stored sentinel row must equal
-    the one this ingest would write, since mixed-geometry fingerprints
-    never match each other: a mismatch is a refusal, not a merge. A
-    store without a sentinel (a partial write) or in an older column
-    layout (the one-row-per-fingerprint wfp/ with its ``_pending``
-    sidecar) is dropped, sidecar included, and rebuilt — the sketch
-    stores' policy."""
-    _, ddl, sentinel = _FP_STORES[name]
-    d = os.path.join(state_dir, name)
-    want = sentinel()
-    if store_exists(d):
-        stored = spark.read.parquet(live_store(d)).drop("bucket")
-        if stored.columns == local_frame(spark, [], ddl).columns:
-            rows = (stored.filter(F.col("doc_id") == _FP_SENTINEL_ID)
-                    .collect())
-            if rows and list(rows[0]) != list(want):
-                raise StateLockError(
-                    f"{name} store at {d!r} was bootstrapped with "
-                    f"geometry {tuple(rows[0])[1:]} but this ingest is "
-                    f"configured for {want[1:]} — the fingerprint "
-                    f"geometry is pinned at bootstrap (mixed-geometry "
-                    f"fingerprints are silently incomparable); use the "
-                    f"stored geometry or rebuild the store.")
-            if rows:
-                return
-        _drop_store(d)
-    _drop_store(d + "_pending")
-    corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    _swap_write_bucketed(_fp_frame(spark, corpus, name), d)
-
-
 def _fp_append_delta(spark, state_dir: str, delta: DataFrame,
                      name: str) -> None:
     """Append the delta's ``name`` rows behind the id anti-join replay
@@ -994,93 +879,39 @@ def _fp_append_delta(spark, state_dir: str, delta: DataFrame,
     d = os.path.join(state_dir, name)
     existing = (spark.read.parquet(live_store(d)).select("doc_id")
                 .distinct())
-    _append_id_store(_FP_STORES[name][0](delta)
+    _append_id_store(_FP_STORES[name](delta)
                      .join(existing, "doc_id", "left_anti"), d)
 
 
-def _sk_sentinels(spark, sk_dir: str) -> dict[int, tuple[int, int]]:
-    """The ``sk_dir`` sketch store's sentinel rows as {r: (bucket,
-    cnt)} — the dims at r=-2, the last merged delta's fingerprint at
-    r=-1 — in one collect."""
-    return {int(row["r"]): (int(row["bucket"]), int(row["cnt"]))
-            for row in (spark.read.parquet(live_store(sk_dir))
-                        .filter(F.col("r").isin(_CMS_FP_ROW, _CMS_DIMS_ROW))
-                        .collect())}
-
-
-def _sk_ensure_store(spark, state_dir: str, name: str, cells_of,
-                     d1: int, d2: int) -> tuple[int, int]:
-    """One-time migration for state dirs predating the ``name`` sketch
-    store (one corpus pass, the same policy as the other ensure fns);
-    on maintained dirs this only verifies the BOOTSTRAP-PINNED dims —
-    merging a table built with different dims would silently corrupt
-    every cell, so a mismatch is a descriptive refusal, not a
-    rebuild. Returns the stored fingerprint of the last merged delta
-    (the replay guard of :func:`_sk_merge_delta`), read in the same
-    collect as the dims. Drops a ``<name>_pending`` sidecar left by
-    older code."""
-    sk_dir = os.path.join(state_dir, name)
-    _drop_store(sk_dir + "_pending")
-    if store_exists(sk_dir):
-        sent = _sk_sentinels(spark, sk_dir)
-        dims = sent.get(_CMS_DIMS_ROW)
-        if dims and dims != (d1, d2):
-            raise StateLockError(
-                f"{name} store at {sk_dir!r} was bootstrapped with "
-                f"dims {dims} but this ingest is configured "
-                f"for ({d1}, {d2}) — dims are pinned at bootstrap "
-                f"(merging mismatched tables corrupts every cell); use "
-                f"the stored dims or rebuild the store.")
-        if dims:
-            h, n = sent.get(_CMS_FP_ROW, _CMS_NO_FP)
-            return n, h
-        # a sketch dir WITHOUT the dims sentinel is a partially written
-        # store (every complete writer — bootstrap, merge, delete,
-        # this migration — commits data + sentinels in one frame):
-        # treating it as valid would serve a permanently under-counted
-        # sketch. Rebuild from the corpus (review finding); safe
-        # w.r.t. a crashed in-flight batch because the corpus marker
-        # for that batch is unwritten, so its redelivered delta merges
-        # against this rebuild normally.
-        _drop_store(sk_dir)
-    corpus = spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-    # _swap_write (not a plain overwrite): a crash mid-migration must
-    # leave either no sketch dir (retry re-enters here) or a complete
-    # one — never a sentinel-less partial (review finding)
-    _swap_write(_cms_store_frame(spark, cells_of(corpus, d1, d2),
-                                 _CMS_NO_FP, d1, d2), sk_dir)
-    return _CMS_NO_FP
-
-
 def _sk_merge_delta(spark, state_dir: str, name: str, delta: DataFrame,
-                    cells_of, d1: int, d2: int, fp: tuple[int, int],
-                    stored_fp: tuple[int, int]) -> None:
+                    cells_of, d1: int, d2: int,
+                    fp: tuple[int, int]) -> None:
     """Fold one delta into the ``name`` sketch store: cell-wise ADD
     (the linear-sketch merge), swap-replaced together with the delta's
     fingerprint ``fp`` (:func:`_cms_fp`). Replay-guarded: foreachBatch
     is at-least-once, the merge is not idempotent, and a crash AFTER
     this swap but BEFORE the corpus commit marker redelivers the
-    identical delta — whose fingerprint then equals ``stored_fp``
-    (from :func:`_sk_ensure_store`) and the merge is skipped. Plans
-    here read only the sketch dir + the delta, so the call is
-    recacheByPath-safe anywhere before the corpus append."""
-    if fp == stored_fp:
-        return  # crash-window replay: this delta is already merged
+    identical delta — whose fingerprint then equals the stored one
+    (the r=-1 row) and the merge is skipped. Plans here read only the
+    sketch dir + the delta, so the call is recacheByPath-safe anywhere
+    before the corpus append."""
     sk_dir = os.path.join(state_dir, name)
-    merged = (spark.read.parquet(live_store(sk_dir))
-              .filter(F.col("r") >= 0)
+    stored = spark.read.parquet(live_store(sk_dir))
+    row = stored.filter(F.col("r") == _CMS_FP_ROW).collect()[0]
+    if fp == (int(row["cnt"]), int(row["bucket"])):
+        return  # crash-window replay: this delta is already merged
+    merged = (stored.filter(F.col("r") >= 0)
               .unionByName(cells_of(delta, d1, d2))
               .groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt")))
     # NO coalesce(1) here: coalesce collapses the whole upstream plan
     # into one serial task (measured 4.5 s vs 0.6 s for this write —
     # SCALING.md round 9); AQE already shrinks the tiny shuffle, and
     # compact_state owns the file count (sketches compact to 1 file)
-    _swap_write(_cms_store_frame(spark, merged, fp, d1, d2), sk_dir)
+    _swap_write(_cms_store_frame(spark, merged, fp), sk_dir)
 
 
 def _sk_takedown(spark, state_dir: str, name: str, cells_of,
-                 d1_default: int, d2_default: int,
-                 survivors: DataFrame) -> None:
+                 d1: int, d2: int, survivors: DataFrame) -> None:
     """Reflect the FULL tombstone set in the ``name`` sketch store by
     recounting it over ``survivors`` (the old corpus minus every
     tombstone), before the corpus swap. No recorded state is needed
@@ -1088,16 +919,11 @@ def _sk_takedown(spark, state_dir: str, name: str, cells_of,
     fingerprint resets to NO_FP, so the delta of a batch that crashed
     between its merge and its corpus commit — whose counts the recount
     just dropped — merges again on redelivery instead of being skipped
-    as a replay. The dims keep their bootstrap pin; a ``<name>_pending``
-    sidecar left by older code is dropped."""
-    sk_dir = os.path.join(state_dir, name)
-    if not store_exists(sk_dir):
-        return
-    d1, d2 = _sk_sentinels(spark, sk_dir).get(
-        _CMS_DIMS_ROW, (d1_default, d2_default))
+    as a replay. The dims are the configured ones, which the layout
+    stamp has checked against the bootstrap pin."""
     _swap_write(_cms_store_frame(spark, cells_of(survivors, d1, d2),
-                                 _CMS_NO_FP, d1, d2), sk_dir)
-    _drop_store(sk_dir + "_pending")
+                                 _CMS_NO_FP),
+                os.path.join(state_dir, name))
 
 
 def _check_no_pending_delete(state_dir: str, op: str) -> None:
@@ -1171,9 +997,12 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
                          id_col: str, text_col: str, threshold: float,
                          num_hashes: int, bands: int,
                          batch_id: int | None = None) -> None:
-    _recover_swaps(state_dir)
     _check_no_pending_delete(state_dir, "ingest_batch")
     corpus_dir = os.path.join(state_dir, "corpus")
+    bootstrap = not store_exists(corpus_dir)
+    if not bootstrap:
+        _check_layout(state_dir, _text_layout(), "ingest_batch")
+    _recover_swaps(state_dir)
     labels_dir = os.path.join(state_dir, "labels")
     buckets_dir = os.path.join(state_dir, "buckets")
     members_dir = os.path.join(state_dir, "members")
@@ -1190,7 +1019,7 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
                           F.col(text_col).alias("text"))
              .dropDuplicates(["doc_id"]))
 
-    if not store_exists(corpus_dir):
+    if bootstrap:
         # bootstrap: the first batch IS the corpus snapshot. The corpus
         # write goes LAST as the commit marker: a retry of a partially
         # committed bootstrap (foreachBatch is at-least-once) must
@@ -1267,7 +1096,7 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         sketch_futs = [
             _tracked(sk_name, _swap_write,
                      _cms_store_frame(spark, sk_cells(batch, sd1, sd2),
-                                      boot_fp, sd1, sd2),
+                                      boot_fp),
                      os.path.join(state_dir, sk_name))
             for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES
         ] + [
@@ -1275,10 +1104,9 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
                      _hll_frame(spark, batch).coalesce(1),
                      os.path.join(state_dir, "hll")),
         ] + [
-            _tracked(fp_name, _swap_write_bucketed,
-                     _fp_frame(spark, batch, fp_name),
+            _tracked(fp_name, _swap_write_bucketed, fp_of(batch),
                      os.path.join(state_dir, fp_name))
-            for fp_name in _FP_STORES
+            for fp_name, fp_of in _FP_STORES.items()
         ]
         # persisted: the expansion, the closure's star edges, and the
         # pairs-store write all read it
@@ -1310,12 +1138,12 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         _swap_write(labels, labels_dir)
         for fut in store_futs:
             fut.result()
-        _boot_lap(_marks, "membership")
+        _boot_lap(BOOT_PHASE_SECONDS, _marks, "membership")
         # join the overlapped sketch-store futures (submitted above);
         # a bootstrap retry redoes these overwrites with identical
-        # content (idempotent), and the fp sentinels record the batch
-        # so a partial-crash redelivery that somehow reaches the
-        # incremental path still skips
+        # content (idempotent), and the sketches' fp sentinels record
+        # the batch so a partial-crash redelivery that somehow reaches
+        # the incremental path still skips
         for fut in sketch_futs:
             fut.result()
         pool.shutdown()
@@ -1337,22 +1165,17 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         n = boot_fp[0]
         _append_metrics(spark, state_dir, batch_id, n, n,
                         pairs.count(), False, True)
+        # the layout stamp goes in just before the marker: a committed
+        # corpus always has one, and a bootstrap retry rewrites it
+        _write_layout(state_dir, _text_layout())
         _swap_write(batch, corpus_dir)
-        _boot_lap(_marks, "corpus")
+        _boot_lap(BOOT_PHASE_SECONDS, _marks, "corpus")
         pairs.unpersist()
         rep_pairs.unpersist()
         bb.unpersist()
         memb.unpersist()
         return
 
-    _ensure_membership_stores(spark, state_dir)
-    _ensure_pairs_store(spark, state_dir, threshold, num_hashes, bands)
-    sk_fps = {sk_name: _sk_ensure_store(spark, state_dir, sk_name,
-                                        sk_cells, sd1, sd2)
-              for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES}
-    _ensure_hll_store(spark, state_dir)
-    for fp_name in _FP_STORES:
-        _ensure_fp_store(spark, state_dir, fp_name)
     fr = _incremental_frames(spark, state_dir, batch, threshold,
                              num_hashes, bands)
     # persist the per-batch frames every downstream branch consumes;
@@ -1418,7 +1241,7 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # recacheByPath-safe at this slot
         for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
             _sk_merge_delta(spark, state_dir, sk_name, delta, sk_cells,
-                            sd1, sd2, delta_fp, sk_fps[sk_name])
+                            sd1, sd2, delta_fp)
         _hll_merge_delta(spark, state_dir, delta)
         # fingerprint appends at the same slot: each reads only its own
         # store (the replay guard) + the delta, so it is
@@ -1495,27 +1318,20 @@ def _incremental_frames(spark, state_dir: str, batch: DataFrame,
     }
 
 
-def compact_state(spark, state_dir: str, target_files: int | None = None,
-                  prune_buckets: bool = True) -> None:
+def compact_state(spark, state_dir: str,
+                  target_files: int | None = None) -> None:
     """Maintenance for the append-only stores: every ingest batch adds
     one small parquet file to each store, and at production batch
     cadence the file count — not the byte count — is what degrades scan
     planning (per-file open cost, tiny row groups). Rewrites corpus/,
-    buckets/, members/ and reps/ into ``target_files`` balanced files
-    via the same write-to-temp + rename swap the labels update uses.
+    buckets/, members/, reps/, pairs/ and the fingerprint family into
+    ``target_files`` balanced files (the id-keyed stores one file per
+    bucket) via the same epoch swap the labels update uses.
     ``labels/`` is swap-written whole each batch and never needs
-    compaction.
-
-    ``prune_buckets`` drops banding rows whose id is not a current
-    group rep, READ FROM THE REPS STORE — no corpus tokenize pass
-    (under stable gids new rows can never go stale, so this only ever
-    removes legacy rows from pre-membership-store state dirs, where
-    min-id gids could supersede a rep).
-
-    The swap-replaced sketch stores (cms/, cbloom/, hll/) are
-    rewritten to one file each. The fingerprint family is first
-    brought to its current layout (:func:`_ensure_fp_store`), so a
-    store written by older code leaves compaction readable.
+    compaction. The swap-replaced sketch stores (cms/, cbloom/, hll/)
+    and the one-row-per-call ledgers (metrics/, deleted/) are
+    rewritten to one file each. A state dir with no committed corpus
+    has nothing to compact (a bootstrap retry rewrites every store).
 
     One writer per state dir, ENFORCED: this takes the same fencing
     lock as ``ingest_batch``, so compacting against a live ingest (the
@@ -1523,57 +1339,36 @@ def compact_state(spark, state_dir: str, target_files: int | None = None,
     reads and appends) raises :class:`StateLockError` naming the live
     holder instead of proceeding."""
     with _state_lock(state_dir, "compact_state"):
-        _compact_state_locked(spark, state_dir, target_files,
-                              prune_buckets)
+        _compact_state_locked(spark, state_dir, target_files)
 
 
 def _compact_state_locked(spark, state_dir: str,
-                          target_files: int | None,
-                          prune_buckets: bool) -> None:
-    _recover_swaps(state_dir)
+                          target_files: int | None) -> None:
     _check_no_pending_delete(state_dir, "compact_state")
-    corpus_dir = os.path.join(state_dir, "corpus")
-    buckets_dir = os.path.join(state_dir, "buckets")
+    if not store_exists(os.path.join(state_dir, "corpus")):
+        return
+    _check_layout(state_dir, _text_layout(), "compact_state")
+    _recover_swaps(state_dir)
     n = target_files or spark.sparkContext.defaultParallelism
-    if store_exists(corpus_dir):
-        _swap_write(spark.read.parquet(live_store(corpus_dir)).repartition(n),
-                    corpus_dir)
-        _ensure_membership_stores(spark, state_dir)
-        for fp_name in _FP_STORES:
-            _ensure_fp_store(spark, state_dir, fp_name)
-    # metrics/ grows one tiny file per batch like the id stores —
-    # compact it with them (append-only, so the swap discipline holds);
-    # one row per batch → one file, not n near-empty ones
     id_bucketed = {"members": "id", **dict.fromkeys(_FP_STORES, "doc_id")}
-    for name, parts in (("members", n), ("reps", n), ("metrics", 1),
-                        ("pairs", n), ("deleted", 1), ("hll", 1),
-                        ("cms", 1), ("cbloom", 1),
+    for name, parts in (("corpus", n), ("buckets", n), ("members", n),
+                        ("reps", n), ("pairs", n), ("metrics", 1),
+                        ("deleted", 1), ("hll", 1), ("cms", 1),
+                        ("cbloom", 1),
                         *((fp_name, n) for fp_name in _FP_STORES)):
         d = os.path.join(state_dir, name)
-        if not store_exists(d):
-            continue
+        if name == "deleted" and not store_exists(d):
+            continue  # written by the first delete_docs
         df = spark.read.parquet(live_store(d))
         if name in id_bucketed:
-            # preserve (or adopt) the bucketed layout; the bucketed
-            # writer repartitions on the key -> one file per bucket
-            _swap_write(_with_id_bucket(df.drop("bucket"),
-                                        id_bucketed[name]), d,
-                        writer=_bucketed_writer)
+            # the bucketed writer repartitions on the key -> one file
+            # per bucket
+            _swap_write_bucketed(df, d, id_bucketed[name])
         else:
             _swap_write(df.repartition(parts), d)
-    if store_exists(buckets_dir):
-        buckets = spark.read.parquet(live_store(buckets_dir))
-        reps_dir = os.path.join(state_dir, "reps")
-        if prune_buckets and store_exists(reps_dir):
-            cur = (spark.read.parquet(live_store(reps_dir))
-                   .select(F.col("gid").alias("id")))
-            buckets = buckets.join(cur, "id", "left_semi")
-        _swap_write(buckets.repartition(n), buckets_dir)
 
 
-def delete_docs(spark, state_dir: str, doc_ids,
-                threshold: float = 0.7, num_hashes: int = 16,
-                bands: int = 4) -> None:
+def delete_docs(spark, state_dir: str, doc_ids) -> None:
     """Takedown/retraction for the ingest stores (round-8 verdict
     item 2): remove a doc_id set from EVERY store — the path a
     production corpus needs for copyright/PII deletion requests, which
@@ -1621,22 +1416,18 @@ def delete_docs(spark, state_dir: str, doc_ids,
 
     ``doc_ids``: an iterable of ids or a single-column DataFrame."""
     with _state_lock(state_dir, "delete_docs"):
-        _delete_docs_locked(spark, state_dir, doc_ids, threshold,
-                            num_hashes, bands)
+        _delete_docs_locked(spark, state_dir, doc_ids)
 
 
-def _delete_docs_locked(spark, state_dir: str, doc_ids,
-                        threshold: float, num_hashes: int,
-                        bands: int) -> None:
-    _recover_swaps(state_dir)
+def _delete_docs_locked(spark, state_dir: str, doc_ids) -> None:
     corpus_dir = os.path.join(state_dir, "corpus")
     if not store_exists(corpus_dir):
         raise ValueError(
             f"delete_docs: {state_dir!r} has no corpus store — nothing "
             f"to delete from (bootstrap a corpus with ingest_batch "
             f"first)")
-    _ensure_membership_stores(spark, state_dir)
-    _ensure_pairs_store(spark, state_dir, threshold, num_hashes, bands)
+    _check_layout(state_dir, _text_layout(), "delete_docs")
+    _recover_swaps(state_dir)
     deleted_dir = os.path.join(state_dir, "deleted")
     marker = os.path.join(state_dir, _DELETE_PENDING)
     with open(marker, "w") as fh:
@@ -1759,15 +1550,13 @@ def _delete_docs_locked(spark, state_dir: str, doc_ids,
         for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
             _sk_takedown(spark, state_dir, sk_name, sk_cells, sd1, sd2,
                          survivors)
-        if store_exists(os.path.join(state_dir, "hll")):
-            _swap_write(_hll_frame(spark, survivors).coalesce(1),
-                        os.path.join(state_dir, "hll"))
+        _swap_write(_hll_frame(spark, survivors).coalesce(1),
+                    os.path.join(state_dir, "hll"))
         # fingerprint takedown is an exact row delete of the
         # tombstoned ids
         for fp_name in _FP_STORES:
-            fp_dir = os.path.join(state_dir, fp_name)
-            if store_exists(fp_dir):
-                _tomb_pruned_rewrite(spark, fp_dir, tomb)
+            _tomb_pruned_rewrite(spark, os.path.join(state_dir, fp_name),
+                                 tomb)
         _swap_write(survivors, corpus_dir)
     except BaseException:
         raise  # marker stays: the refusal gate routes to a retry
@@ -1784,8 +1573,8 @@ def start_incremental_ingest(stream: DataFrame, state_dir: str,
                              available_now: bool = True):
     """Attach :func:`ingest_batch` to a document stream via
     ``foreachBatch`` and start it. Returns the StreamingQuery; state
-    appears under ``state_dir`` (corpus/, labels/, buckets/, members/,
-    reps/)."""
+    appears under ``state_dir`` (the stores of ``_STORES`` and the
+    ``_LAYOUT`` stamp)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch(batch_df.sparkSession, batch_df, state_dir,

@@ -43,10 +43,14 @@ concurrency contract):
   pinned-at-bootstrap contract as the centroids): every batch
   quantizes against the stored range, out-of-range elements clamp
   (quantize_int8's contract), so the code store is one consistent
-  quantization. Legacy dirs migrate on first post-upgrade ingest
-  (:func:`_ensure_derived_stores`).
+  quantization. ``planes/`` (the JL plane matrix) and ``pqbooks/``
+  (the PQ codebooks behind the ``pq`` column) are pinned the same way.
 - ``labels/``   — (id, component) SemDeDup closure labeling, replaced
   per batch via the atomic directory swap.
+- ``_LAYOUT``   — the layout stamp (streaming/ingest.py), written by
+  bootstrap before the vectors commit marker; every mutating entry
+  and serving reader checks it first, so a state dir of another
+  layout or kind is refused, never migrated in place.
 
 The corpus text-ingest path and this one share no state; run each on
 its own ``state_dir``.
@@ -66,25 +70,22 @@ from cati_database_feeder_spark.session import local_frame
 from cati_database_feeder_spark.operators.similarity import (
     assign_cells, incremental_semdedup_pairs, semdedup_pairs)
 from cati_database_feeder_spark.streaming.ingest import (
-    _DELETE_PENDING, _append_metrics, _check_no_pending_delete,
-    _drop_store, _pin_dedup, _recover_swaps, _state_lock, _swap_write,
-    live_store, store_exists)
+    _DELETE_PENDING, StateLockError, _append_metrics, _boot_lap,
+    _check_layout, _check_no_pending_delete, _pin_dedup, _recover_swaps,
+    _state_lock, _swap_write, _write_layout, live_store, store_exists)
 
 _EMB_STORES = ("labels", "vectors", "centroids", "metrics", "deleted",
                "quant", "planes", "pqbooks")
+# The embeddings layout stamp: the stores' pinned parameters
+# (centroids, quantizer range, planes, codebooks) are data in their own
+# stores, so the stamp pins the kind alone.
+_EMB_LAYOUT = {"kind": "embeddings"}
 
 
 # Per-sub-store wall seconds of the LAST bootstrap in this process —
 # the embeddings twin of streaming/ingest.py:BOOT_PHASE_SECONDS;
 # bench.py reads it to split "boot:emb_serving_store" per store.
 BOOT_PHASE_SECONDS: dict[str, float] = {}
-
-
-def _boot_lap(marks: list, name: str) -> None:
-    import time
-    now = time.time()
-    BOOT_PHASE_SECONDS[name] = round(now - marks[0], 3)
-    marks[0] = now
 
 # defaults for the JL projected-vector store (E59's serving tier off
 # maintained state): projection width and the seed of the Gaussian
@@ -189,10 +190,8 @@ def _pq_m_for_dim(dim: int) -> int:
 
 
 def _pqbooks_from_cents(cents) -> list[list[list[float]]]:
-    """PQ codebooks derived from the pinned centroid vectors (their
-    subspace slices) — a DERIVABLE parameter store like the plane
-    matrix (regenerable from state that already exists), which is what
-    lets :func:`_heal_or_load` rebuild it after a partial write. A
+    """PQ codebooks derived from the bootstrap centroid vectors (their
+    subspace slices), pinned in ``pqbooks/`` like the plane matrix. A
     production deployment trains its own
     (operators/similarity.py:train_pq_codebooks) and pins the result
     the same way."""
@@ -212,8 +211,6 @@ def _pqbooks_frame(spark, books):
 def _load_pqbooks(spark, state_dir: str):
     rows = (spark.read.parquet(live_store(os.path.join(state_dir, "pqbooks")))
             .collect())
-    if not rows:
-        return None
     acc: dict[int, dict[int, list[float]]] = {}
     for r in rows:
         acc.setdefault(int(r["s"]), {})[int(r["j"])] = list(r["code"])
@@ -225,121 +222,23 @@ def _with_pq(frame, books):
     return pq_encode(frame, books, vec_col="embedding", out_col="pq")
 
 
-def _heal_or_load(spark, path: str, loader, regenerate):
-    """Load a tiny pinned-parameter store, healing a partial write: a
-    dir that exists but cannot be read back as committed rows is a
-    crash inside its original (pre-swap-discipline) overwrite — every
-    complete writer leaves committed parquet, so an unreadable or
-    empty dir is rebuilt via ``regenerate()`` (pure/derivable values)
-    and swap-written so the heal itself cannot recreate the wound
-    (review finding: os.path.exists alone wedged the store forever)."""
-    import shutil as _sh
-    if store_exists(path):
-        try:
-            got = loader()
-            if got is not None:
-                return got
-        except Exception:
-            pass
-        # drop EVERY physical artifact of the wounded store (plain
-        # dir, epoch dirs, pointer) — the rebuild below recreates it
-        # via a clean epoch commit
-        _drop_store(path)
-    frame = regenerate()
-    _swap_write(frame.coalesce(1), path)
-    return loader()
-
-
-def _ensure_derived_stores(spark, state_dir: str, dim: int):
-    """One-time migration for state dirs predating the derived columns
-    (int8 ``codes`` under the pinned quant range; JL ``proj`` under the
-    pinned plane matrix): pin whichever parameter store is missing —
-    healing partial writes (:func:`_heal_or_load`) — and rewrite
-    vectors/ ONCE adding every missing column (two back-to-back full
-    rewrites for a doubly-legacy store would double the one-time
-    migration I/O; review finding). Idempotent: keyed on the columns'
-    absence. Returns ``((lo, hi), planes)`` so the caller pays no
-    second read of the parameter stores."""
-    vec_dir = os.path.join(state_dir, "vectors")
-    store = spark.read.parquet(live_store(vec_dir))
-
-    def _load_q():
-        rows = spark.read.parquet(live_store(os.path.join(state_dir, "quant"))).collect()
-        return (float(rows[0]["lo"]), float(rows[0]["hi"])) if rows else None
-
-    def _regen_q():
-        lo, hi = _corpus_range(store)
-        return local_frame(spark, [(lo, hi)], "lo double, hi double")
-
-    def _load_p():
-        rows = spark.read.parquet(live_store(os.path.join(state_dir, "planes"))).collect()
-        return ([list(r["plane"]) for r in
-                 sorted(rows, key=lambda r: int(r["idx"]))]
-                if rows else None)
-
-    def _regen_p():
-        return local_frame(
-            spark, [(i, p) for i, p in enumerate(_default_planes(dim))],
-            "idx int, plane array<double>")
-
-    def _load_b():
-        return _load_pqbooks(spark, state_dir)
-
-    def _regen_b():
-        return _pqbooks_frame(
-            spark, _pqbooks_from_cents(_load_centroids(spark, state_dir)))
-
-    lo_hi = _heal_or_load(spark, os.path.join(state_dir, "quant"),
-                          _load_q, _regen_q)
-    planes = _heal_or_load(spark, os.path.join(state_dir, "planes"),
-                           _load_p, _regen_p)
-    # Unlike quant (pure function of the stored data) and planes (pure
-    # function of dim + a fixed seed), regenerated pqbooks derive from
-    # the CURRENT centroids — which a retrain may have replaced since
-    # bootstrap. A healed pqbooks store is therefore only consistent
-    # with pq codes recomputed under it: detect the regeneration and
-    # force the column rewrite below, or a post-retrain heal would
-    # silently serve old codes against new books.
-    books_were_valid = False
-    if store_exists(os.path.join(state_dir, "pqbooks")):
-        try:
-            books_were_valid = _load_b() is not None
-        except Exception:
-            books_were_valid = False
-    books = _heal_or_load(spark, os.path.join(state_dir, "pqbooks"),
-                          _load_b, _regen_b)
-    missing = [c for c in ("codes", "proj", "pq")
-               if c not in store.columns]
-    if not books_were_valid and "pq" in store.columns:
-        store = store.drop("pq")
-        missing.append("pq")
-    if missing:
-        out = store
-        if "codes" in missing:
-            out = _with_codes(out, *lo_hi)
-        if "proj" in missing:
-            out = _with_proj(out, planes)
-        if "pq" in missing:
-            out = _with_pq(out, books)
-        _swap_write_by_cell(out.repartition("cell"), vec_dir)
-    return lo_hi, planes, books
-
-
-
 def _ingest_embeddings_locked(spark, batch, state_dir, centroid_rows,
                               threshold, by, id_col, vec_col,
                               batch_id=None) -> None:
-    _recover_swaps(state_dir, _EMB_STORES)
     _check_no_pending_delete(state_dir, "ingest_embeddings_batch")
     _check_no_pending_migration(state_dir, "ingest_embeddings_batch")
     vec_dir = os.path.join(state_dir, "vectors")
+    bootstrap = not store_exists(vec_dir)
+    if not bootstrap:
+        _check_layout(state_dir, _EMB_LAYOUT, "ingest_embeddings_batch")
+    _recover_swaps(state_dir, _EMB_STORES)
     lab_dir = os.path.join(state_dir, "labels")
     cen_dir = os.path.join(state_dir, "centroids")
     batch = _pin_dedup(batch.select(F.col(id_col).alias("vec_id"),
                                     F.col(vec_col).alias("embedding")),
                        "vec_id")
 
-    if not store_exists(vec_dir):
+    if bootstrap:
         # bootstrap — the vectors write goes LAST as the commit marker
         # (same argument as the text path: a retried partial bootstrap
         # must re-enter this branch, not probe half-built state)
@@ -393,11 +292,11 @@ def _ingest_embeddings_locked(spark, batch, state_dir, centroid_rows,
         ]
         labels = connected_components(pairs.select("id_a", "id_b"))
         _swap_write(labels, lab_dir)
-        _boot_lap(_marks, "closure")
+        _boot_lap(BOOT_PHASE_SECONDS, _marks, "closure")
         for fut in param_futs:
             fut.result()
         pool.shutdown()
-        _boot_lap(_marks, "params")
+        _boot_lap(BOOT_PHASE_SECONDS, _marks, "params")
         # metrics BEFORE the vectors commit marker (the text path's
         # argument, streaming/ingest.py): crash in between → the replay
         # re-enters bootstrap and appends a duplicate batch_id row
@@ -406,16 +305,18 @@ def _ingest_embeddings_locked(spark, batch, state_dir, centroid_rows,
         n = batch.count()
         _append_metrics(spark, state_dir, batch_id, n, n,
                         pairs.count(), False, True)
+        _write_layout(state_dir, _EMB_LAYOUT)
         _swap_write_by_cell(_with_pq(_with_proj(_with_codes(
             assign_cells(batch, cents, "embedding", by), lo, hi), planes),
             books), vec_dir)
-        _boot_lap(_marks, "vectors")
+        _boot_lap(BOOT_PHASE_SECONDS, _marks, "vectors")
         pairs.unpersist()
         return
 
     cents = _load_centroids(spark, state_dir)
-    (lo, hi), planes, books = _ensure_derived_stores(
-        spark, state_dir, dim=len(cents[0][1]))
+    lo, hi = _load_quant(spark, state_dir)
+    planes = _load_planes(spark, state_dir)
+    books = _load_pqbooks(spark, state_dir)
     store = spark.read.parquet(live_store(vec_dir))
     delta = batch.join(store.select("vec_id"), "vec_id", "left_anti")
     deleted_dir = os.path.join(state_dir, "deleted")
@@ -473,12 +374,13 @@ def compact_embeddings_state(spark, state_dir: str,
     against a live ingest raises :class:`StateLockError` instead of
     corrupting the store."""
     with _state_lock(state_dir, "compact_embeddings_state"):
-        _recover_swaps(state_dir, _EMB_STORES)
         _check_no_pending_delete(state_dir, "compact_embeddings_state")
         _check_no_pending_migration(state_dir, "compact_embeddings_state")
         vec_dir = os.path.join(state_dir, "vectors")
         if not store_exists(vec_dir):
             return
+        _check_layout(state_dir, _EMB_LAYOUT, "compact_embeddings_state")
+        _recover_swaps(state_dir, _EMB_STORES)
         vectors = spark.read.parquet(live_store(vec_dir))
         if target_files_per_cell <= 1:
             # hash by cell: every cell lands in exactly one task → one
@@ -523,13 +425,14 @@ def delete_embeddings(spark, state_dir: str, vec_ids,
 
 def _delete_embeddings_locked(spark, state_dir: str, vec_ids,
                               threshold: float, by: str) -> None:
-    _recover_swaps(state_dir, _EMB_STORES)
     _check_no_pending_migration(state_dir, "delete_embeddings")
     vec_dir = os.path.join(state_dir, "vectors")
     if not store_exists(vec_dir):
         raise ValueError(
             f"delete_embeddings: {state_dir!r} has no vector store — "
             f"bootstrap with ingest_embeddings_batch first")
+    _check_layout(state_dir, _EMB_LAYOUT, "delete_embeddings")
+    _recover_swaps(state_dir, _EMB_STORES)
     deleted_dir = os.path.join(state_dir, "deleted")
     lab_dir = os.path.join(state_dir, "labels")
     marker = os.path.join(state_dir, _DELETE_PENDING)
@@ -591,18 +494,11 @@ def quantized_serving_frames(spark, state_dir: str):
     straight off the maintained store:
     ``(codes_frame, float_frame, centroid_rows, lo, hi)`` — the coarse
     tier scans only (vec_id, codes, cell), floats are fetched by id
-    for the rerank survivors. Read-only: no lock taken, no migration
-    performed — a pre-codes store raises with the recipe (any ingest
-    batch migrates it) instead of silently serving floats."""
+    for the rerank survivors. Read-only: no lock taken; a state dir
+    without this code's layout stamp is refused."""
     _check_no_pending_migration(state_dir, "quantized_serving_frames")
-    vec_dir = os.path.join(state_dir, "vectors")
-    store = spark.read.parquet(live_store(vec_dir))
-    if "codes" not in store.columns or not store_exists(
-            os.path.join(state_dir, "quant")):
-        raise ValueError(
-            f"quantized_serving_frames: {state_dir!r} predates the "
-            f"codes store — run one ingest_embeddings_batch (the "
-            f"_ensure_derived_stores migration) before serving quantized")
+    _check_layout(state_dir, _EMB_LAYOUT, "quantized_serving_frames")
+    store = spark.read.parquet(live_store(os.path.join(state_dir, "vectors")))
     lo, hi = _load_quant(spark, state_dir)
     return (store.select("vec_id", "codes", "cell"),
             store.select("vec_id", "embedding"),
@@ -615,19 +511,11 @@ def projected_serving_frames(spark, state_dir: str):
     the coarse tier scans only (vec_id, proj, cell) (d'=32 doubles
     instead of the full embedding width; 30-100× narrower on
     production 1k-4k-dim embeddings), floats fetched by id for the
-    exact rerank. Read-only, no lock, no migration — a pre-projection
-    store raises with the recipe (any ingest batch migrates it)
-    instead of silently projecting at serve time."""
+    exact rerank. Read-only: no lock taken; a state dir without this
+    code's layout stamp is refused."""
     _check_no_pending_migration(state_dir, "projected_serving_frames")
-    vec_dir = os.path.join(state_dir, "vectors")
-    store = spark.read.parquet(live_store(vec_dir))
-    if "proj" not in store.columns or not store_exists(
-            os.path.join(state_dir, "planes")):
-        raise ValueError(
-            f"projected_serving_frames: {state_dir!r} predates the "
-            f"projected store — run one ingest_embeddings_batch (the "
-            f"_ensure_derived_stores migration) before serving off "
-            f"projections")
+    _check_layout(state_dir, _EMB_LAYOUT, "projected_serving_frames")
+    store = spark.read.parquet(live_store(os.path.join(state_dir, "vectors")))
     return (store.select("vec_id", "proj", "cell"),
             store.select("vec_id", "embedding"),
             _load_planes(spark, state_dir))
@@ -641,18 +529,11 @@ def pq_serving_frames(spark, state_dir: str):
     cell), the m-byte code column written at ingest under the
     bootstrap-pinned codebooks (32-512× fewer bytes than the float
     column at production dims), floats fetched by id for the exact
-    rerank. Read-only: no lock, no migration — a pre-pq store raises
-    with the recipe (any ingest batch migrates it) instead of silently
-    encoding at serve time."""
+    rerank. Read-only: no lock taken; a state dir without this code's
+    layout stamp is refused."""
     _check_no_pending_migration(state_dir, "pq_serving_frames")
-    vec_dir = os.path.join(state_dir, "vectors")
-    store = spark.read.parquet(live_store(vec_dir))
-    if "pq" not in store.columns or not store_exists(
-            os.path.join(state_dir, "pqbooks")):
-        raise ValueError(
-            f"pq_serving_frames: {state_dir!r} predates the PQ code "
-            f"store — run one ingest_embeddings_batch (the "
-            f"_ensure_derived_stores migration) before serving ADC")
+    _check_layout(state_dir, _EMB_LAYOUT, "pq_serving_frames")
+    store = spark.read.parquet(live_store(os.path.join(state_dir, "vectors")))
     return (store.select("vec_id", "pq", "cell"),
             store.select("vec_id", "embedding"),
             _load_pqbooks(spark, state_dir),
@@ -667,7 +548,8 @@ def start_embedding_ingest(stream: DataFrame, state_dir: str,
                            available_now: bool = True):
     """Attach :func:`ingest_embeddings_batch` to a vector stream via
     ``foreachBatch`` and start it. Returns the StreamingQuery; state
-    appears under ``state_dir`` (centroids/, vectors/, labels/)."""
+    appears under ``state_dir`` (the stores of ``_EMB_STORES`` and the
+    ``_LAYOUT`` stamp)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         ingest_embeddings_batch(batch_df.sparkSession, batch_df, state_dir,
@@ -699,7 +581,6 @@ def _check_no_pending_migration(state_dir: str, op: str) -> None:
     (probes would assign queries under one epoch and join partitions
     of the other). The marker turns that window into a descriptive
     refusal, the delete-fence pattern applied to migration."""
-    from cati_database_feeder_spark.streaming.ingest import StateLockError
     if os.path.exists(os.path.join(state_dir, _MIGRATE_PENDING)):
         raise StateLockError(
             f"state dir {state_dir!r} has an interrupted centroid "
@@ -712,8 +593,9 @@ def _check_no_pending_migration(state_dir: str, op: str) -> None:
 def _complete_migration(spark, state_dir: str, by: str) -> None:
     """Finish an in-flight migration from the staged next-centroids:
     idempotent (reassignment under the staged centroids is
-    deterministic; both swaps heal through the tmp/old discipline), so
-    any crash inside re-enters here on the retry."""
+    deterministic, and both stores are replaced by epoch swaps whose
+    uncommitted epochs _recover_swaps drops), so any crash inside
+    re-enters here on the retry."""
     vec_dir = os.path.join(state_dir, "vectors")
     cen_dir = os.path.join(state_dir, "centroids")
     next_dir = os.path.join(state_dir, _CENTS_NEXT)
@@ -761,27 +643,32 @@ def retrain_embeddings_centroids(spark, state_dir: str,
     results across a migration — pinned in pytest — while IVF probes
     see the new, better-balanced cells.
 
-    Crash safety: next-centroids are staged (swap-written) and the
-    ``_MIGRATE_PENDING`` marker is held across the two store swaps;
-    every embedding op refuses while it exists, and re-running this
-    function completes the migration idempotently from the staging
-    (the delete_docs fence pattern). Holds the state dir's fencing
-    lock; refuses behind a pending delete."""
+    Crash safety: next-centroids are staged by a plain overwrite of
+    ``centroids__next/``, which is safe because the
+    ``_MIGRATE_PENDING`` marker is written only after it: a crash
+    mid-staging leaves no marker, so nothing reads the partial staging
+    and the next retrain overwrites it. The marker is then held across
+    the two store swaps; every embedding op refuses while it exists,
+    and re-running this function completes the migration idempotently
+    from the staging (the delete_docs fence pattern). Holds the state
+    dir's fencing lock; refuses behind a pending delete."""
     from cati_database_feeder_spark.operators.similarity import (
         train_ivf_centroids)
     with _state_lock(state_dir, "retrain_embeddings_centroids"):
-        _recover_swaps(state_dir, _EMB_STORES + (_CENTS_NEXT,))
         _check_no_pending_delete(state_dir, "retrain_embeddings_centroids")
-        marker = os.path.join(state_dir, _MIGRATE_PENDING)
-        if os.path.exists(marker):
-            _complete_migration(spark, state_dir, by)
-            return
         vec_dir = os.path.join(state_dir, "vectors")
         if not store_exists(vec_dir):
             raise ValueError(
                 f"retrain_embeddings_centroids: {state_dir!r} has no "
                 f"vector store — bootstrap with "
                 f"ingest_embeddings_batch first")
+        _check_layout(state_dir, _EMB_LAYOUT,
+                      "retrain_embeddings_centroids")
+        _recover_swaps(state_dir, _EMB_STORES + (_CENTS_NEXT,))
+        marker = os.path.join(state_dir, _MIGRATE_PENDING)
+        if os.path.exists(marker):
+            _complete_migration(spark, state_dir, by)
+            return
         old = _load_centroids(spark, state_dir)
         k = n_cells or len(old)
         corpus = spark.read.parquet(live_store(vec_dir)).select("vec_id", "embedding")

@@ -25,7 +25,7 @@ from cati_database_feeder_spark.operators.graph import (
     connected_components, incremental_components)
 from cati_database_feeder_spark.streaming import events as stream_ops
 from cati_database_feeder_spark.streaming.ingest import (
-    _drop_store, live_store as L, store_exists)
+    live_store as L, store_exists)
 
 
 def test_stream_ingest_to_incremental_closure_equals_full_recompute(
@@ -85,9 +85,11 @@ def test_ingest_batch_api_with_compaction(spark, tmp_path):
     10 (a rep never changes after its group is created), so no banding
     row ever goes stale, the members store maps 1 → 10, compaction is
     a rewrite-not-a-prune, and the final labeling still equals a full
-    recompute (rep choice is invisible in the pair/label output)."""
+    recompute (rep choice is invisible in the pair/label output). A
+    later delete of rep 10 promotes the group's gid, and a compaction
+    after it again leaves the banding rows unchanged."""
     from cati_database_feeder_spark.streaming.ingest import (
-        compact_state, ingest_batch)
+        compact_state, delete_docs, ingest_batch)
 
     rows = [
         (10, "alpha beta gamma delta"),
@@ -132,6 +134,21 @@ def test_ingest_batch_api_with_compaction(spark, tmp_path):
     assert len(want) > 0
     assert got == want
 
+    # deleting rep 10 promotes its group's gid to 1, relabeling the
+    # group's band rows; every band row still belongs to a current rep,
+    # so compaction leaves the banding row set exactly as it was
+    delete_docs(spark, state, [10])
+    promoted = sorted(map(tuple,
+                          spark.read.parquet(L(buckets_dir)).collect()))
+    assert any(r[0] == 1 for r in promoted)
+    assert not any(r[0] == 10 for r in promoted)
+    rep_gids = {r["gid"] for r in spark.read.parquet(
+        L(os.path.join(state, "reps"))).collect()}
+    assert {r[0] for r in promoted} <= rep_gids
+    compact_state(spark, state, target_files=2)
+    assert sorted(map(tuple, spark.read.parquet(
+        L(buckets_dir)).collect())) == promoted
+
 
 def test_ingest_batch_retry_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: redelivering a batch — including
@@ -169,8 +186,13 @@ def test_ingest_batch_retry_is_idempotent(spark, tmp_path):
     # fully. Under the epoch scheme "missing" = the pointer never
     # flipped: drop every physical artifact of the corpus store.
     s1 = snapshot()
-    from cati_database_feeder_spark.streaming import ingest as _ing
-    _ing._drop_store(os.path.join(state, "corpus"))
+    for name in os.listdir(state):
+        if name.startswith("corpus"):   # corpus.ptr, corpus__e*
+            path = os.path.join(state, name)
+            if os.path.isdir(path):
+                sh.rmtree(path)
+            else:
+                os.unlink(path)
     ingest_batch(spark, b1, state)
     assert snapshot() == s1
     # straight redelivery of a completed bootstrap batch
@@ -245,58 +267,14 @@ def test_incremental_path_reads_no_corpus_text(spark, tmp_path):
                     f"frame {name!r} reads corpus text: {line}")
 
 
-def test_legacy_state_dir_migration(spark, tmp_path):
-    """A state dir created before the membership store existed
-    (corpus/labels/buckets only — the round-6 layout) must be migrated
-    once by _ensure_membership_stores on the next ingest_batch: the
-    derived members/reps appear, the batch lands incrementally, and
-    the final labeling equals a full recompute."""
-    from cati_database_feeder_spark.streaming.ingest import ingest_batch
-
-    rows = [(10, "alpha beta gamma delta"),
-            (11, "alpha beta gamma delta epsilon"),
-            (40, "foo bar baz qux"),
-            (41, "foo bar baz qux quux"),
-            (70, "delta gamma beta alpha")]   # same set as 10
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    corpus = df.filter(F.col("doc_id") < 42)
-    state = str(tmp_path / "state")
-    # hand-build the PRE-membership-store layout
-    memb = dedup.tokset_groups(corpus)
-    labels = connected_components(
-        dedup.near_dup_pairs(corpus, threshold=0.7).select("id_a", "id_b"))
-    labels.write.parquet(os.path.join(state, "labels"))
-    dedup.rep_band_buckets(memb).write.parquet(os.path.join(state, "buckets"))
-    corpus.write.parquet(os.path.join(state, "corpus"))
-
-    ingest_batch(spark, df.filter(F.col("doc_id") == 70), state)
-    for store in ("members", "reps"):
-        assert store_exists(os.path.join(state, store))
-    members = spark.read.parquet(L(os.path.join(state, "members")))
-    assert [r["gid"] for r in
-            members.filter(F.col("id") == 70).collect()] == [10]
-    got = {(r["id"], r["component"]) for r in
-           spark.read.parquet(L(os.path.join(state, "labels"))).collect()}
-    want = {(r["id"], r["component"]) for r in
-            connected_components(
-                dedup.near_dup_pairs(df, threshold=0.7)
-                .select("id_a", "id_b")).collect()}
-    assert len(want) > 0
-    assert got == want
-
-
 def test_swap_crash_recovery(spark, tmp_path):
-    """Crash-window healing across BOTH store layouts. Epoch scheme
-    (what _swap_write writes today): the pointer flip is the commit
-    point, so the only artifacts a crash can leave are an epoch dir
-    NEWER than the pointer (written, never committed) and a stale
-    .ptr.tmp sidecar — the next state op drops both and the pointed
-    state serves unchanged. Legacy scheme (pre-epoch __tmp/__old
-    rename dance, still on disk in old state dirs): all three rename
-    windows heal exactly as before."""
+    """Crash-window healing: the pointer flip of _swap_write is the
+    commit point, so the only artifacts a crash can leave are an epoch
+    dir NEWER than the pointer (written, never committed) and a stale
+    .ptr.tmp sidecar — the next state op drops both, the pointed state
+    serves unchanged, and later batches keep the closure exact."""
     import shutil as sh
 
-    from cati_database_feeder_spark.streaming import ingest as ing
     from cati_database_feeder_spark.streaming.ingest import ingest_batch
 
     rows = [(10, "alpha beta gamma delta"), (40, "foo bar baz qux"),
@@ -315,39 +293,9 @@ def test_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(orphan)
     assert not os.path.exists(labels + ".ptr.tmp.99999")
 
-    # --- legacy windows: rebuild labels as a pre-epoch plain dir ---
-    stash = str(tmp_path / "legacy_labels")
-    sh.copytree(L(labels), stash)
-    ing._drop_store(labels)
-    sh.move(stash, labels)
-    assert L(labels) == labels  # no pointer → plain layout
-
-    # window (a): tmp written, target untouched — tmp dropped
-    sh.copytree(labels, labels + "__tmp")
-    ing._recover_swaps(state)
-    assert not os.path.exists(labels + "__tmp")
-    assert os.path.exists(labels)
-
-    # window (b): target renamed aside, tmp present — worst case:
-    # the old dir is renamed back (state only advances via a
-    # COMPLETED state op)
-    sh.copytree(labels, labels + "__tmp")
-    os.rename(labels, labels + "__old")
-    ing._recover_swaps(state)
-    assert os.path.exists(labels)
-    assert not os.path.exists(labels + "__old")
-    assert not os.path.exists(labels + "__tmp")
-
-    # window (c): swap complete, old not yet deleted — old dropped
-    sh.copytree(labels, labels + "__old")
-    ing._recover_swaps(state)
-    assert not os.path.exists(labels + "__old")
-
-    # the healed legacy dir keeps serving and the next NON-QUIET
-    # batch (doc 41 near-dups doc 40 → new pair → labels swap) moves
-    # it onto the epoch scheme with the right closure
+    # the next NON-QUIET batch (doc 41 near-dups doc 40 → new pair →
+    # labels swap) lands on the healed state with the right closure
     ingest_batch(spark, df.filter(F.col("doc_id") == 41), state)
-    assert L(labels) != labels
     got = {(r["id"], r["component"]) for r in
            spark.read.parquet(L(labels)).collect()}
     want = {(r["id"], r["component"]) for r in
@@ -730,17 +678,13 @@ def test_embedding_ingest_multi_batch_equals_full_recompute(
 
 def test_embedding_ingest_swap_crash_recovery(spark, tmp_path):
     """The embedding state dir heals the same crash windows as the
-    text path, across BOTH layouts: an orphan (uncommitted) epoch dir
-    plus a stale pointer tmp under the epoch scheme, and the legacy
-    __tmp/__old rename windows on a pre-epoch plain dir — final
-    labeling equal to the full recompute."""
+    text path — an orphan (uncommitted) epoch dir plus a stale pointer
+    tmp — with the final labeling equal to the full recompute."""
     import shutil as sh
 
     from cati_database_feeder_spark.operators import similarity
     from cati_database_feeder_spark.operators.graph import (
         connected_components as cc)
-    from cati_database_feeder_spark.streaming import (
-        ingest as ing, ingest_embeddings as ie)
     from cati_database_feeder_spark.streaming.ingest_embeddings import (
         ingest_embeddings_batch)
 
@@ -761,28 +705,6 @@ def test_embedding_ingest_swap_crash_recovery(spark, tmp_path):
                             state, threshold=0.8)
     assert not os.path.exists(orphan)
     assert not os.path.exists(labels + ".ptr.tmp.99999")
-
-    # --- legacy windows on a pre-epoch plain labels dir ---
-    stash = str(tmp_path / "legacy_emb_labels")
-    sh.copytree(L(labels), stash)
-    ing._drop_store(labels)
-    sh.move(stash, labels)
-    assert L(labels) == labels
-
-    sh.copytree(labels, labels + "__tmp")
-    ie._recover_swaps(state, ie._EMB_STORES)
-    assert not os.path.exists(labels + "__tmp")
-
-    sh.copytree(labels, labels + "__tmp")
-    os.rename(labels, labels + "__old")
-    ie._recover_swaps(state, ie._EMB_STORES)
-    assert os.path.exists(labels)
-    assert not os.path.exists(labels + "__old")
-    assert not os.path.exists(labels + "__tmp")
-
-    sh.copytree(labels, labels + "__old")
-    ie._recover_swaps(state, ie._EMB_STORES)
-    assert not os.path.exists(labels + "__old")
 
     ingest_embeddings_batch(spark, df.filter(F.col("vec_id") > 8), state,
                             threshold=0.8)
@@ -1237,44 +1159,6 @@ def test_embedding_ingest_maintains_quantized_codes(spark, tmp_path):
     assert len(hits) == 3
 
 
-def test_embedding_ingest_migrates_legacy_store_to_codes(spark, tmp_path):
-    """A state dir from before the codes column (simulated by
-    stripping codes/ and quant/) migrates on the next ingest: range
-    pinned from the CURRENT store, every row rewritten with codes,
-    serving accessor usable afterwards; a pre-migration serving call
-    refuses with the recipe."""
-    import pytest as _pytest
-    import shutil
-    from cati_database_feeder_spark.functions import vectors as V
-    from cati_database_feeder_spark.streaming import (
-        ingest_embeddings as ie)
-    cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
-    rows = [(i, [float(i % 3), 1.0, float(i % 2)]) for i in range(8)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    state = str(tmp_path / "emb_legacy")
-    ie.ingest_embeddings_batch(spark, df.filter(F.col("vec_id") < 6),
-                               state, centroid_rows=cents, threshold=0.8,
-                               batch_id=0)
-    # simulate the legacy layout
-    vec_dir = os.path.join(state, "vectors")
-    legacy = spark.read.parquet(L(vec_dir)).drop("codes").persist()
-    legacy.count()
-    ie._swap_write_by_cell(legacy.repartition("cell"), vec_dir)
-    _drop_store(os.path.join(state, "quant"))
-    with _pytest.raises(ValueError, match="predates the codes store"):
-        ie.quantized_serving_frames(spark, state)
-    ie.ingest_embeddings_batch(spark, df.filter(F.col("vec_id") >= 6),
-                               state, threshold=0.8, batch_id=1)
-    legacy.unpersist()
-    lo, hi = ie._load_quant(spark, state)
-    store = spark.read.parquet(L(vec_dir))
-    assert "codes" in store.columns and store.count() == 8
-    fresh = store.select(
-        "codes", V.quantize_int8(F.col("embedding"), F.lit(lo), F.lit(hi))
-        .alias("want"))
-    assert fresh.filter(F.col("codes") != F.col("want")).count() == 0
-
-
 # ---------------------------------------------------------------------
 # cms/ store: the maintained count-min sketch (round 9)
 # ---------------------------------------------------------------------
@@ -1369,56 +1253,20 @@ def test_cms_store_delete_docs_rebuilds_on_survivors(spark, tmp_path):
     assert _cms_cells(spark, state) == cells
 
 
-def test_cms_store_dims_pinned_at_bootstrap(spark, tmp_path):
+def test_cms_store_dims_pinned_at_bootstrap(spark, tmp_path,
+                                            monkeypatch):
     """Merging tables of different (depth, width) silently corrupts
-    every cell — a mismatched configuration must refuse loudly."""
+    every cell — a mismatched configuration must refuse loudly, at the
+    layout check, before the batch writes anything."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         [(1, "alpha")], ["doc_id", "text"]), state, batch_id=0)
-    name, cells_of, _ = ing._SKETCH_STORES[0]
-    assert name == "cms"
+    monkeypatch.setattr(ing, "CMS_DEPTH", 2)
+    monkeypatch.setattr(ing, "CMS_WIDTH", 64)
     with pytest.raises(ing.StateLockError, match="pinned at bootstrap"):
-        ing._sk_ensure_store(spark, state, name, cells_of, 2, 64)
-
-
-def test_cms_store_legacy_dir_migrates_once(spark, tmp_path):
-    """A pre-cms state dir gets the sketch derived from its corpus on
-    the next ingest (one corpus tokenize pass, once), then maintains
-    it incrementally."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma")], ["doc_id", "text"]),
-        state, batch_id=0)
-    _drop_store(os.path.join(state, "cms"))      # simulate legacy dir
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(3, "delta alpha")], ["doc_id", "text"]), state, batch_id=1)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
-
-
-def test_cms_store_sentinelless_dir_rebuilt_not_trusted(spark, tmp_path):
-    """A cms/ dir WITHOUT the dims sentinel is a partially written
-    store (every complete writer commits data + sentinels in one
-    frame): the ensure path must rebuild it from the corpus, never
-    merge into it — merging would serve a permanently under-counted
-    sketch (review finding)."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma alpha")], ["doc_id", "text"]),
-        state, batch_id=0)
-    cms_dir = os.path.join(state, "cms")
-    # simulate the partial write: data rows present, sentinels lost
-    partial = ing.read_cms(spark, state).limit(1).collect()
-    stripped = spark.createDataFrame(partial, "r INT, bucket BIGINT, cnt BIGINT")
-    _drop_store(cms_dir)
-    stripped.write.mode("overwrite").parquet(cms_dir)
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(3, "delta beta")], ["doc_id", "text"]), state, batch_id=1)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
+        ing.ingest_batch(spark, spark.createDataFrame(
+            [(2, "beta")], ["doc_id", "text"]), state, batch_id=1)
 
 
 # ---------------------------------------------------------------------
@@ -1606,7 +1454,8 @@ def test_compact_state_prunes_sketch_ledger_and_keeps_takedown_safe(
     breaking any takedown property: the compacted cells still equal a
     from-scratch recount, a RE-delete of an already-deleted id changes
     nothing, and a NEW delete after compaction still equals a recount
-    over the survivors, for both sketch stores."""
+    over the survivors, for both sketch stores. The compacted wfp/
+    still serves exactly the fingerprints of the corpus."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1619,6 +1468,7 @@ def test_compact_state_prunes_sketch_ledger_and_keeps_takedown_safe(
     assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert (_cbloom_cells(spark, state)
             == _cbloom_recompute(spark, corpus))
+    assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
     # re-delete of an already-deleted id: the doc is gone from corpus/,
     # so the recount is unchanged (re-read corpus: every delete swaps
     # the dir)
@@ -1668,7 +1518,7 @@ def test_hll_store_takedown_rebuilds_and_lgk_pinned(spark, tmp_path):
     """HLL registers cannot be subtracted — takedown must REBUILD the
     sketch from survivors (post-delete estimate tracks the survivors'
     exact count, not the pre-delete corpus); a mismatched lgk
-    configuration refuses at the ensure gate."""
+    configuration refuses at the layout check."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1678,12 +1528,13 @@ def test_hll_store_takedown_rebuilds_and_lgk_pinned(spark, tmp_path):
     n_exact = _corpus_shingles(corpus).distinct().count()
     est, _ = ing.read_hll(spark, state)
     assert abs(est - n_exact) <= max(1, int(0.05 * n_exact))
-    # lgk pin: a store claiming a different lgk refuses the merge path
+    # lgk pin: a different configured lgk refuses the next batch
     real = ing.HLL_LGK
     try:
         ing.HLL_LGK = real + 1
         with pytest.raises(ing.StateLockError, match="pinned at bootstrap"):
-            ing._ensure_hll_store(spark, state)
+            ing.ingest_batch(spark, spark.createDataFrame(
+                _CB_DOCS1, ["doc_id", "text"]), state, batch_id=1)
     finally:
         ing.HLL_LGK = real
 
@@ -1728,45 +1579,6 @@ def test_embedding_ingest_maintains_projected_vectors(spark, tmp_path):
         q, store.select("vec_id", "embedding"), planes, k=3,
         coarse_k=4).collect()))
     assert served == inplan
-
-
-def test_embedding_ingest_migrates_legacy_store_to_proj(spark, tmp_path):
-    """A pre-projection store (simulated by dropping planes/ and the
-    proj column) migrates on the next ingest: planes pinned from the
-    centroid dim, vectors rewritten once, stored proj ≡ fresh
-    projection; pre-migration serving refuses with the recipe."""
-    import pytest as _pytest
-    from cati_database_feeder_spark.operators.similarity import jl_project
-    from cati_database_feeder_spark.streaming import (
-        ingest_embeddings as ie)
-    cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
-    b1 = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0, float(i % 2)]) for i in range(5)],
-        "vec_id long, embedding array<double>")
-    state = str(tmp_path / "emb_leg")
-    ie.ingest_embeddings_batch(spark, b1, state, centroid_rows=cents,
-                               threshold=0.8, batch_id=0)
-    # simulate the legacy layout
-    vec_dir = os.path.join(state, "vectors")
-    legacy = (spark.read.parquet(L(vec_dir))
-              .select("vec_id", "embedding", "codes", "cell")
-              .repartition("cell").persist())
-    legacy.count()
-    _drop_store(os.path.join(state, "planes"))
-    _drop_store(vec_dir)
-    legacy.write.partitionBy("cell").mode("overwrite").parquet(vec_dir)
-    legacy.unpersist()
-    with _pytest.raises(ValueError, match="predates the projected store"):
-        ie.projected_serving_frames(spark, state)
-    b2 = spark.createDataFrame(
-        [(20, [0.2, 0.9, 0.1])], "vec_id long, embedding array<double>")
-    ie.ingest_embeddings_batch(spark, b2, state, threshold=0.8, batch_id=1)
-    planes = ie._load_planes(spark, state)
-    store = spark.read.parquet(L(vec_dir))
-    assert store.count() == 6 and "proj" in store.columns
-    fresh = (jl_project(store.select("vec_id", "embedding", "proj"),
-                        "embedding", planes, out_col="want"))
-    assert fresh.filter(F.col("proj") != F.col("want")).count() == 0
 
 
 def _wfp_rows(spark, state):
@@ -1846,8 +1658,8 @@ def test_wfp_store_takedown_and_geometry_pin(spark, tmp_path,
                                              monkeypatch):
     """Takedown on the fingerprint table is an exact row delete
     (post-delete ≡ recompute over survivors); a re-ingest configured
-    for a different (k, w) refuses on the bootstrap-pinned geometry
-    sentinel."""
+    for a different (k, w) refuses on the bootstrap-pinned layout
+    stamp."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1858,7 +1670,8 @@ def test_wfp_store_takedown_and_geometry_pin(spark, tmp_path,
     assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
     monkeypatch.setattr(ing, "WFP_K", 5)
     with pytest.raises(ing.StateLockError, match="geometry"):
-        ing._ensure_fp_store(spark, state, "wfp")
+        ing.ingest_batch(spark, spark.createDataFrame(
+            _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
 
 
 def _retrain_fixture(spark, tmp_path):
@@ -2026,107 +1839,6 @@ def test_wfp_partial_append_heals_on_redelivery(
     assert _wfp_rows(spark, state) == want == _wfp_recompute(spark, corpus)
 
 
-def _plant_old_layout_wfp(spark, state):
-    """Rewrite wfp/ in the older one-row-per-fingerprint layout
-    ((doc_id, fp), no ``fps`` column) with a leftover ``wfp_pending/``
-    sidecar of that layout beside it; returns (wfp dir, sidecar dir)."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    wfp_dir = os.path.join(state, "wfp")
-    pend_dir = os.path.join(state, "wfp_pending")
-    old = (dedup.winnow_fingerprints(spark.read.parquet(
-        L(os.path.join(state, "corpus"))), k=ing.WFP_K, w=ing.WFP_W)
-        .unionByName(spark.createDataFrame(
-            [(-2, ing.WFP_K * 1000 + ing.WFP_W)], "doc_id long, fp long")))
-    ing._swap_write_bucketed(old, wfp_dir)
-    ing._swap_write(old.filter(F.col("doc_id") == 2), pend_dir)
-    assert "fp" in spark.read.parquet(L(wfp_dir)).columns
-    return wfp_dir, pend_dir
-
-
-def test_wfp_old_layout_dir_migrates_on_next_batch(spark, tmp_path):
-    """A wfp/ written in the older one-row-per-fingerprint layout
-    ((doc_id, fp), no ``fps`` column), with a leftover ``wfp_pending/``
-    sidecar of that layout beside it, is dropped and rebuilt from the
-    corpus by the next batch: read_wfp then equals a recompute, the
-    store holds one row per doc, and the sidecar is gone."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    wfp_dir, pend_dir = _plant_old_layout_wfp(spark, state)
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
-    ids = [r["doc_id"] for r in
-           spark.read.parquet(L(wfp_dir)).select("doc_id").collect()]
-    assert sorted(ids) == sorted(
-        [r["doc_id"] for r in corpus.collect()] + [ing._FP_SENTINEL_ID])
-    assert not store_exists(pend_dir)
-    assert not any(n.startswith("wfp_pending") for n in os.listdir(state))
-
-
-def test_wfp_old_layout_dir_migrates_on_compact(spark, tmp_path):
-    """compact_state brings an older-layout wfp/ (and its leftover
-    sidecar) to the current layout before compacting it, so read_wfp
-    serves the store afterwards instead of raising on the missing
-    ``fps`` column."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    wfp_dir, pend_dir = _plant_old_layout_wfp(spark, state)
-    ing.compact_state(spark, state, target_files=2)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
-    assert "fps" in spark.read.parquet(L(wfp_dir)).columns
-    assert not store_exists(pend_dir)
-
-
-def test_sketch_old_layout_leftovers_dropped_by_batch_and_delete(
-        spark, tmp_path):
-    """A state dir written by older code holds a ``<name>_pending/``
-    sidecar beside each counting sketch (cms/, cbloom/) and r=-3
-    takedown-ledger rows inside it. The next ingest_batch, and later
-    the next delete_docs, each leave cells equal to a from-scratch
-    recount, remove the sidecars, and rewrite the stores without the
-    ledger rows."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _CB_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    row = "r INT, bucket BIGINT, cnt BIGINT"
-
-    def plant():
-        for name, _, _ in ing._SKETCH_STORES:
-            d = os.path.join(state, name)
-            stored = spark.read.parquet(L(d))
-            ing._swap_write(stored.filter(F.col("r") >= -2).unionByName(
-                spark.createDataFrame([(-4, 77, 1)], row)), d + "_pending")
-            ing._swap_write(stored.unionByName(
-                spark.createDataFrame([(-3, 12345, 1)], row)), d)
-            assert store_exists(d + "_pending")
-
-    def check():
-        corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-        assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
-        assert (_cbloom_cells(spark, state)
-                == _cbloom_recompute(spark, corpus))
-        for name, _, _ in ing._SKETCH_STORES:
-            assert not any(n.startswith(name + "_pending")
-                           for n in os.listdir(state)), name
-            assert spark.read.parquet(L(os.path.join(state, name))).filter(
-                F.col("r") < ing._CMS_DIMS_ROW).count() == 0, name
-
-    plant()
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _CB_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-    check()
-    plant()
-    ing.delete_docs(spark, state, [2])
-    check()
-
-
 def test_id_stores_bucketed_and_takedown_relinks_untouched(
         spark, tmp_path):
     """Round-13 layout contract for the id-keyed stores (verdict
@@ -2244,12 +1956,12 @@ def test_dhash_store_multi_batch_equals_recompute_and_replays(
         == stored
 
 
-def test_dhash_store_takedown_geometry_pin_and_migration(
+def test_dhash_store_takedown_and_geometry_pin(
         spark, tmp_path, monkeypatch):
     """Takedown is an exact row delete (post-delete ≡ recompute over
     survivors); a re-ingest under a different dHash grid refuses on
-    the bootstrap-pinned geometry sentinel; a legacy dir (no dhash/)
-    migrates once from the corpus on the next batch."""
+    the bootstrap-pinned layout stamp."""
+    from cati_database_feeder_spark.sources import multimodal as mm
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -2259,16 +1971,9 @@ def test_dhash_store_takedown_geometry_pin_and_migration(
     assert sorted(map(tuple, ing.read_dhash(spark, state).collect())) \
         == _dhash_recompute(spark, corpus)
     with pytest.raises(ing.StateLockError, match="geometry"):
-        monkeypatch.setattr(ing, "_dhash_geometry", lambda: 9009)
-        ing._ensure_fp_store(spark, state, "dhash")
-    monkeypatch.undo()
-    # legacy migration: drop the store, next batch rebuilds it whole
-    _drop_store(os.path.join(state, "dhash"))
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-    corpus2 = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert sorted(map(tuple, ing.read_dhash(spark, state).collect())) \
-        == _dhash_recompute(spark, corpus2)
+        monkeypatch.setattr(mm, "_DHASH_GRID_W", 9)
+        ing.ingest_batch(spark, spark.createDataFrame(
+            _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
 
 
 def test_dhash_partial_append_heals_on_redelivery(
@@ -2343,46 +2048,6 @@ def test_embedding_ingest_maintains_pq_codes(spark, tmp_path):
                      out_col="codes"),
         books, k=3).collect()))
     assert served == inplan
-
-
-def test_embedding_ingest_migrates_legacy_store_to_pq(spark, tmp_path):
-    """A pre-PQ store (simulated by dropping pqbooks/ and the pq
-    column) migrates on the next ingest: books pinned from the stored
-    centroids, vectors rewritten once, stored codes ≡ fresh encoding;
-    pre-migration serving refuses with the recipe. A healed pqbooks
-    store also forces the code-column rewrite (the post-retrain
-    consistency rule in _ensure_derived_stores)."""
-    import pytest as _pytest
-    from cati_database_feeder_spark.operators.similarity import pq_encode
-    from cati_database_feeder_spark.streaming import (
-        ingest_embeddings as ie)
-    cents = [(0, [1.0, 0.0, 0.0, 0.1]), (1, [0.0, 1.0, 0.0, -0.1])]
-    b1 = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0, float(i % 2), 0.25]) for i in range(5)],
-        "vec_id long, embedding array<double>")
-    state = str(tmp_path / "emb_pqleg")
-    ie.ingest_embeddings_batch(spark, b1, state, centroid_rows=cents,
-                               threshold=0.8, batch_id=0)
-    vec_dir = os.path.join(state, "vectors")
-    legacy = (spark.read.parquet(L(vec_dir))
-              .select("vec_id", "embedding", "codes", "proj", "cell")
-              .repartition("cell").persist())
-    legacy.count()
-    _drop_store(os.path.join(state, "pqbooks"))
-    _drop_store(vec_dir)
-    legacy.write.partitionBy("cell").mode("overwrite").parquet(vec_dir)
-    legacy.unpersist()
-    with _pytest.raises(ValueError, match="predates the PQ code store"):
-        ie.pq_serving_frames(spark, state)
-    b2 = spark.createDataFrame(
-        [(20, [0.2, 0.9, 0.1, 0.0])], "vec_id long, embedding array<double>")
-    ie.ingest_embeddings_batch(spark, b2, state, threshold=0.8, batch_id=1)
-    books = ie._load_pqbooks(spark, state)
-    store = spark.read.parquet(L(vec_dir))
-    assert store.count() == 6 and "pq" in store.columns
-    fresh = pq_encode(store.select("vec_id", "embedding", "pq"),
-                      books, out_col="want")
-    assert fresh.filter(F.col("pq") != F.col("want")).count() == 0
 
 
 # ---------------------------------------------------------------------
@@ -2509,11 +2174,11 @@ def test_afp_store_multi_batch_equals_recompute_and_replays(
         == stored
 
 
-def test_afp_store_takedown_geometry_pin_and_migration(
+def test_afp_store_takedown_and_geometry_pin(
         spark, tmp_path, monkeypatch):
-    """Takedown = exact row delete; width mismatch refuses on the
-    pinned sentinel; a legacy dir (no afp/) migrates once from the
-    corpus on the next batch."""
+    """Takedown = exact row delete; a hash-width mismatch refuses on
+    the bootstrap-pinned layout stamp."""
+    from cati_database_feeder_spark.sources import multimodal as mm
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -2523,12 +2188,6 @@ def test_afp_store_takedown_geometry_pin_and_migration(
     assert sorted(map(tuple, ing.read_afp(spark, state).collect())) \
         == _afp_recompute(spark, corpus)
     with pytest.raises(ing.StateLockError, match="pinned at bootstrap"):
-        monkeypatch.setattr(ing, "_afp_geometry", lambda: 48)
-        ing._ensure_fp_store(spark, state, "afp")
-    monkeypatch.undo()
-    _drop_store(os.path.join(state, "afp"))
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-    corpus2 = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert sorted(map(tuple, ing.read_afp(spark, state).collect())) \
-        == _afp_recompute(spark, corpus2)
+        monkeypatch.setattr(mm, "AUDIO_HASH_BITS", 48)
+        ing.ingest_batch(spark, spark.createDataFrame(
+            _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)

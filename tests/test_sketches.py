@@ -216,13 +216,15 @@ def test_counting_bloom_subtract_preserves_shared_keys(spark):
 def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
     """The ingest fingerprint family (streaming/ingest.py _FP_STORES):
     after a bootstrap, each of wfp/, dhash/ and afp/ holds exactly one
-    row per document plus one geometry sentinel — a doc shorter than
-    one winnowing window included — read_wfp serves exactly
-    winnow_fingerprints over the docs, and a geometry change refuses
-    for every store."""
+    row per document — a doc shorter than one winnowing window
+    included — read_wfp serves exactly winnow_fingerprints over the
+    docs, the layout stamp pins each store's geometry, and a geometry
+    change refuses for every store."""
+    import json
     import os
     from cati_database_feeder_spark.operators.dedup import (
         winnow_fingerprints)
+    from cati_database_feeder_spark.sources import multimodal as mm
     from cati_database_feeder_spark.streaming import ingest as ing
     short = "too short"
     assert len(short.split()) < ing.WFP_K + ing.WFP_W - 1
@@ -236,18 +238,23 @@ def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
         ids = [r["doc_id"] for r in spark.read.parquet(
             ing.live_store(os.path.join(state, name)))
             .select("doc_id").collect()]
-        assert sorted(ids) == [ing._FP_SENTINEL_ID, 1, 2, 3], name
+        assert sorted(ids) == [1, 2, 3], name
     assert (sorted(map(tuple, ing.read_wfp(spark, state).collect()))
             == sorted(map(tuple, winnow_fingerprints(
                 docs, k=ing.WFP_K, w=ing.WFP_W).collect())))
-    for name, attr, value in (("wfp", "WFP_W", ing.WFP_W + 1),
-                              ("dhash", "_dhash_geometry", lambda: 9009),
-                              ("afp", "_afp_geometry", lambda: 48)):
+    with open(os.path.join(state, "_LAYOUT")) as fh:
+        stamp = json.load(fh)
+    assert (stamp["wfp"], stamp["dhash_grid"], stamp["afp_bits"]) == (
+        [ing.WFP_K, ing.WFP_W], [mm._DHASH_GRID_W, mm._DHASH_GRID_H],
+        mm.AUDIO_HASH_BITS)
+    for module, attr, value in ((ing, "WFP_W", ing.WFP_W + 1),
+                                (mm, "_DHASH_GRID_H", 9),
+                                (mm, "AUDIO_HASH_BITS", 48)):
         with monkeypatch.context() as m:
-            m.setattr(ing, attr, value)
+            m.setattr(module, attr, value)
             with pytest.raises(ing.StateLockError,
                                match="geometry.*pinned at bootstrap"):
-                ing._ensure_fp_store(spark, state, name)
+                ing.ingest_batch(spark, docs, state, batch_id=1)
 
 
 def test_ingest_sketch_family_contract(spark, tmp_path):
