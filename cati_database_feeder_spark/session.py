@@ -21,6 +21,13 @@ and later it is ``pyspark.daemon`` unchanged. Spark starts it as
 importable by the Python workers: from the working directory, from
 ``PYTHONPATH`` or as an installed package. The Arrow kernels need the
 same, since workers unpickle them by reference to package modules.
+
+One daemon serves the whole session, for SQL Python tasks
+(``mapInArrow``, ``mapInPandas``) and Python-RDD tasks
+(``createDataFrame(list)``, ``local_frame``) alike: the session turns off
+the simplified UDF traceback, the one worker environment variable that
+would split them into two daemons, each with its own cold workers (the
+comment at the conf gives the numbers).
 """
 
 from __future__ import annotations
@@ -84,6 +91,29 @@ def get_session(app_name: str = "cati-feeder-spark", master: str | None = None,
         # skips the per-task zip re-read (see the module docstring) ---
         .config("spark.python.daemon.module",
                 "cati_database_feeder_spark.pyworker")
+        # --- one daemon per session: Spark keeps one worker daemon per
+        # distinct set of worker env vars, and with this conf on (the
+        # default) the SQL Python runners (mapInArrow, mapInPandas) add
+        # SPARK_SIMPLIFIED_TRACEBACK=1 while the Python-RDD runner
+        # (createDataFrame(list), local_frame, parallelize) does not.
+        # A session using both then starts two daemons and two sets of
+        # cold workers: after one survey wave at local[2] on a 4-CPU
+        # host, 2 daemons with 2 workers each, and the first Python-RDD
+        # stage took 1.4 s (0.08 s warm); with it off, 1 daemon with 2
+        # workers, and that stage took 0.07-0.13 s. The cost: a Python
+        # UDF error in SQL carries the full worker traceback, not the
+        # shortened one; its message is unchanged ---
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled",
+                "false")
+        # --- no py4j stack capture per API call: while this is on (the
+        # default), every DataFrame and Column call walks the Python
+        # stack and makes about five py4j round trips to record its
+        # call site (pyspark.errors.utils._with_origin): a warm
+        # 2,000-doc dedup pass made 1,560-1,780 round trips with it on
+        # and 785-807 with it off. The cost: DataFrame errors lose the
+        # Python file:line in their query context; the error class and
+        # text are unchanged ---
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

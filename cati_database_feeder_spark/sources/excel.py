@@ -91,6 +91,22 @@ def _read_xlsx_minimal(payload: bytes) -> pd.DataFrame:
     return pd.DataFrame(data, columns=header, dtype="object")
 
 
+# Set by this worker process's first failed openpyxl import: from then
+# on its files go straight to the minimal parser, instead of failing
+# the import again on every file before falling back.
+_openpyxl_missing = False
+
+
+def _decode_xlsx(payload: bytes) -> pd.DataFrame:
+    global _openpyxl_missing
+    if not _openpyxl_missing:
+        try:
+            return pd.read_excel(io.BytesIO(payload), dtype=str)
+        except ImportError:  # openpyxl missing on this worker
+            _openpyxl_missing = True
+    return _read_xlsx_minimal(payload)
+
+
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: binaryFile rows (path, content) → long-form
     (path, sheet, row_idx, col_name, value) rows. Long form keeps the
@@ -110,10 +126,7 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         # reference semantics: first archive member is the data
                         # (feeder.py:120: namelist()[0])
                         payload = zf.read(zf.namelist()[0])
-                try:
-                    frame = pd.read_excel(io.BytesIO(payload), dtype=str)
-                except ImportError:  # openpyxl missing on executor
-                    frame = _read_xlsx_minimal(payload)
+                frame = _decode_xlsx(payload)
             except Exception as exc:
                 out.append(pd.DataFrame(
                     {"path": [path], "sheet": ["<error>"], "row_idx": [-1],

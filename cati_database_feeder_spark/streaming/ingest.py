@@ -95,7 +95,9 @@ late GC); production maps it onto the table format's own commit:
   :class:`StateLockError` when it is missing or any pin differs from
   this code's configuration: there is ONE store layout, and a state
   dir of any other is rebuilt from its corpus, never migrated in
-  place.
+  place. A bootstrap into a dir stamped for the other store kind
+  (text vs embeddings) is refused the same way
+  (:func:`_check_bootstrap_kind`).
 
 ``foreachBatch`` is the right harness because each micro-batch runs
 arbitrary BATCH DataFrame code with exactly-once-per-batch-id
@@ -422,6 +424,29 @@ def _check_layout(state_dir: str, layout: dict, op: str) -> None:
             + f" — the geometry is pinned at bootstrap (stores merged "
             f"or compared across geometries are silently wrong). "
             f"Refusing {op!r}; use the stored values or rebuild the "
+            f"state dir.")
+
+
+def _check_bootstrap_kind(state_dir: str, kind: str, op: str) -> None:
+    """Refuse a bootstrap ``op`` into a state dir stamped for another
+    store kind. Bootstrap runs whenever the kind's commit-marker store
+    is absent, and the text and embeddings markers differ (``corpus/``,
+    ``vectors/``), so without this check an embeddings bootstrap would
+    build its stores into a text dir and overwrite its stamp (and the
+    other way round). A stamp of the same kind without the marker is a
+    crashed bootstrap, which the retry completes."""
+    try:
+        with open(os.path.join(state_dir, _LAYOUT_NAME)) as fh:
+            stored = json.load(fh).get("kind")
+    except FileNotFoundError:
+        return
+    except (OSError, ValueError):  # unreadable or not JSON
+        stored = None
+    if stored != kind:
+        raise StateLockError(
+            f"state dir {state_dir!r} is stamped kind={stored} "
+            f"({_LAYOUT_NAME}) but {op!r} would bootstrap {kind} stores "
+            f"into it. Refusing {op!r}; keep each store kind in its own "
             f"state dir.")
 
 
@@ -1000,7 +1025,9 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
     _check_no_pending_delete(state_dir, "ingest_batch")
     corpus_dir = os.path.join(state_dir, "corpus")
     bootstrap = not store_exists(corpus_dir)
-    if not bootstrap:
+    if bootstrap:
+        _check_bootstrap_kind(state_dir, "text", "ingest_batch")
+    else:
         _check_layout(state_dir, _text_layout(), "ingest_batch")
     _recover_swaps(state_dir)
     labels_dir = os.path.join(state_dir, "labels")

@@ -71,8 +71,9 @@ from cati_database_feeder_spark.operators.similarity import (
     assign_cells, incremental_semdedup_pairs, semdedup_pairs)
 from cati_database_feeder_spark.streaming.ingest import (
     _DELETE_PENDING, StateLockError, _append_metrics, _boot_lap,
-    _check_layout, _check_no_pending_delete, _pin_dedup, _recover_swaps,
-    _state_lock, _swap_write, _write_layout, live_store, store_exists)
+    _check_bootstrap_kind, _check_layout, _check_no_pending_delete,
+    _pin_dedup, _recover_swaps, _state_lock, _swap_write, _write_layout,
+    live_store, store_exists)
 
 _EMB_STORES = ("labels", "vectors", "centroids", "metrics", "deleted",
                "quant", "planes", "pqbooks")
@@ -229,7 +230,10 @@ def _ingest_embeddings_locked(spark, batch, state_dir, centroid_rows,
     _check_no_pending_migration(state_dir, "ingest_embeddings_batch")
     vec_dir = os.path.join(state_dir, "vectors")
     bootstrap = not store_exists(vec_dir)
-    if not bootstrap:
+    if bootstrap:
+        _check_bootstrap_kind(state_dir, _EMB_LAYOUT["kind"],
+                              "ingest_embeddings_batch")
+    else:
         _check_layout(state_dir, _EMB_LAYOUT, "ingest_embeddings_batch")
     _recover_swaps(state_dir, _EMB_STORES)
     lab_dir = os.path.join(state_dir, "labels")

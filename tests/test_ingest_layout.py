@@ -136,3 +136,26 @@ def test_other_kind_stamp_refuses_every_embeddings_entry(spark, emb_state):
     finally:
         with open(path, "w") as fh:
             fh.write(kept)
+
+
+def test_bootstrap_over_other_kind_refuses(spark, text_state, emb_state):
+    """Bootstrap runs whenever the kind's commit-marker store is absent,
+    and a text dir has no ``vectors/`` (an embeddings dir no
+    ``corpus/``). A bootstrap of one kind into a dir stamped for the
+    other refuses before it writes, in both directions."""
+    emb_boot = {"ingest_embeddings_batch":
+                lambda s: ie.ingest_embeddings_batch(
+                    spark, spark.createDataFrame(
+                        [(0, [1.0, 0.0, 0.0])],
+                        "vec_id long, embedding array<double>"), s,
+                    centroid_rows=[(0, [1.0, 0.0, 0.0])], threshold=0.8,
+                    batch_id=0)}
+    _assert_every_entry_refuses(emb_boot, text_state,
+                                "stamped kind=text.*bootstrap embeddings")
+    text_boot = {"ingest_batch": lambda s: ing.ingest_batch(
+        spark, spark.createDataFrame([(1, "alpha beta gamma")],
+                                     ["doc_id", "text"]), s, batch_id=0)}
+    _assert_every_entry_refuses(text_boot, emb_state,
+                                "stamped kind=embeddings.*bootstrap text")
+    assert _read_stamp(text_state)["kind"] == "text"
+    assert _read_stamp(emb_state) == {"kind": "embeddings"}

@@ -579,3 +579,27 @@ def test_workers_fork_from_the_package_daemon(spark):
     expected = ("cati_database_feeder_spark.pyworker"
                 if sys.version_info < (3, 13) else "zipimport")
     assert row.m == expected
+
+
+def test_sql_and_rdd_tasks_share_one_daemon(spark):
+    """Spark keeps one worker daemon per distinct set of worker
+    environment variables: a SQL Python runner (mapInArrow) and the
+    plain Python-RDD runner fork from the same daemon only while the
+    session adds no runner-specific variable (session.get_session)."""
+    def ppid(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({"p": [os.getppid()] * b.num_rows})
+
+    (row,) = spark.range(1).mapInArrow(ppid, "p long").collect()
+    rdd = spark.sparkContext.parallelize([0], 1).map(lambda _: os.getppid())
+    assert rdd.collect() == [row.p]
+
+
+def test_worker_exception_message_surfaces(spark):
+    def boom(batches):
+        for b in batches:
+            raise ValueError(f"kernel refused batch of {b.num_rows} rows")
+        yield from ()
+
+    with pytest.raises(Exception, match="kernel refused batch of 1 rows"):
+        spark.range(1).mapInArrow(boom, "id long").collect()
