@@ -223,8 +223,9 @@ def cms_heavy_hitters(items: DataFrame, key_col: str, min_count: int,
     n_true_heavy + O(depth-collision survivors), not the vocabulary.
 
     Output: (key_col, true_cnt) for every key with true_cnt ≥
-    min_count. ``table`` injects a prebuilt/maintained sketch (e.g.
-    streaming.ingest.read_cms) — it MUST have been built with the same
+    min_count. ``table`` injects a prebuilt sketch (e.g. the cell-wise
+    sum of shard tables, as queryset.text_token_cms_store builds) — it
+    MUST have been built with the same
     (depth, width): a mismatch silently misses cells and coalesces
     estimates to 0, i.e. silent false negatives, so the catchable half
     of the contract (any stored r ≥ depth or bucket ≥ width) is

@@ -5227,9 +5227,9 @@ def text_distinct_shingles_hll(spark, sf_dir):
     representation differs — measured here: 23995 exact, equal-to-exact
     monolithic vs a union estimate a few counts off), which is exactly
     why the contract is an error BOUND, not equality; idempotence of
-    re-merging the SAME sketch still holds exactly and is what lets
-    the maintained hll/ ingest store skip the replay fingerprint
-    (streaming/ingest.py:_hll_merge_delta)."""
+    re-merging the SAME sketch still holds exactly. The hll/ ingest
+    view merges its base with the corpus tail the same way
+    (streaming/ingest.py:_hll_union)."""
     sh = _all_doc_shingles(spark, sf_dir)
     mono = sh.agg(F.hll_sketch_agg("shingle", 12).alias("sk")) \
         .select(F.hll_sketch_estimate("sk").alias("__em"))
@@ -5452,10 +5452,9 @@ def text_token_cms_store(spark, sf_dir):
     (docs split by doc_id parity) — the linear-sketch merge that makes
     the sketch the multi-shard/streaming answer, here driver-hash-gated
     against the monolithic oracle (shared SQL, the
-    _NEAR_DUP_INCR_SQL discipline). This is the query-side twin of the
-    ingest-maintained ``cms/`` store (streaming/ingest.py), whose
-    per-batch merge, crash-replay fingerprint guard, takedown rebuild
-    and dim pinning are pytest-verified in test_incremental_e2e.py."""
+    _NEAR_DUP_INCR_SQL discipline). The merge of shard tables is the
+    same cell-wise sum the ingest views of streaming/ingest.py use to
+    add a corpus tail to their base (counting-Bloom cells there)."""
     from cati_database_feeder_spark.functions import sketches
     d = T(spark, sf_dir, "documents")
     toks_of = lambda df: df.select(  # noqa: E731 - local plumbing
@@ -5816,9 +5815,8 @@ def _cms_toks_stage(spark, sf_dir):
 def _cms_table_stage(spark, sf_dir):
     """The 4x2048 count-min table over token occurrences, persisted
     once per session: text_token_cms's estimates and the heavy-hitter
-    prune read the SAME table (same seeds, same dims) — in production
-    the sketch is maintained by ingest (the cms/ store) and every
-    consumer reads it, never rebuilds it."""
+    prune read the SAME table (same seeds, same dims) — every consumer
+    reads it, never rebuilds it."""
     from cati_database_feeder_spark.functions import sketches
     return shared_stage(
         spark, f"q:cms_table:{sf_dir}",
@@ -6278,10 +6276,10 @@ HAVING COUNT(*) >= 2
 """)
 def text_winnow_overlap_store(spark, sf_dir):
     """E73+ store-backed serving twin: the overlap pairs computed from
-    the MAINTAINED ``wfp/`` fingerprint store (streaming/ingest.py —
-    one (doc_id, fps) row per document appended per batch behind an id
-    anti-join, exact-row takedown, geometry pinned at bootstrap;
-    ``read_wfp`` explodes it to (doc_id, fp)), reading NO document
+    the ``wfp/`` fingerprint view (streaming/ingest.py — one
+    (doc_id, fps) row per document, built when the corpus is rewritten
+    and served with the corpus tail added, geometry pinned at
+    bootstrap; ``read_wfp`` explodes it to (doc_id, fp)), reading NO document
     text at query time. The oracle replays the full tokenize→4-gram-hash→window-min
     pipeline over the store's corpus slice (doc_id % 40 != 0, the
     bench session's ingest bootstrap), so store CONTENT drift — not
@@ -6302,10 +6300,10 @@ FROM documents WHERE doc_id % 40 != 0
 """)
 def multimodal_dhash_store(spark, sf_dir):
     """E72+ store-backed serving twin (round-10 verdict item 6): the
-    perceptual-hash table read from the MAINTAINED ``dhash/`` store
-    (streaming/ingest.py — one row per doc appended per batch behind
-    an id anti-join, exact-row takedown, grid geometry pinned at
-    bootstrap), reading NO payload bytes at query time. The oracle
+    perceptual-hash table read from the ``dhash/`` view
+    (streaming/ingest.py — one row per doc, built when the corpus is
+    rewritten and served with the corpus tail added, grid geometry
+    pinned at bootstrap), reading NO payload bytes at query time. The oracle
     REPLAYS the hash from the payloads themselves (text bytes ride
     the deterministic fake tier = the engine's hash64 convention)
     over the store's corpus slice (doc_id % 40 != 0, the session's

@@ -63,33 +63,26 @@ late GC); production maps it onto the table format's own commit:
   by the delta filter forever — the tombstone wins over the corpus
   anti-join, which would otherwise re-admit it once its corpus row is
   gone.
-- ``cms/``     — the corpus-wide count-min token-frequency sketch
-  (functions/sketches.py), maintained per batch by CELL-WISE ADD (a
-  count-min table is a LINEAR sketch — merging shards is addition),
-  swap-replaced like labels. One sentinel row rides the same parquet
-  so the swap stays atomic for data + bookkeeping: r=-1 carries the
-  LAST MERGED DELTA's fingerprint — foreachBatch is at-least-once and the
-  merge is NOT idempotent, so a crash between the cms swap and the
-  corpus commit marker would double-count the redelivered delta; the
-  retry sees its delta's fingerprint already stored and skips the
-  merge. ``cbloom/`` (the counting-Bloom decontamination gate) shares
-  this discipline; ``hll/`` (distinct shingle count) merges by
-  register max and needs no fingerprint. Takedown REBUILDS all three
-  from the surviving corpus: deletion already rewrites the whole
-  corpus, so a recount adds no new cost class, needs no recorded
-  state to be crash-correct (a retry recounts the same survivors),
-  and resets the fingerprint so a redelivered in-flight delta merges
-  onto a corpus-true base.
-- ``wfp/``, ``dhash/``, ``afp/`` — the fingerprint family (text
-  winnowing sets, image and audio perceptual hashes): id-keyed tables
-  with ONE row per document, appended per batch behind an id
-  anti-join, so a crash mid-append leaves whole docs or nothing and
-  the redelivery appends exactly the missing ones. One table
-  (``_FP_STORES``) drives their bootstrap, append, compaction and
-  takedown.
+- ``cbloom/``, ``hll/``, ``wfp/``, ``dhash/``, ``afp/`` — VIEWS of
+  the corpus (``_VIEWS``): the counting-Bloom decontamination gate over
+  5-token shingles, the HLL distinct-shingle sketch, and the
+  fingerprint family (text winnowing sets, image and audio perceptual
+  hashes, one row per document). ``ingest_batch`` never writes them.
+  One function (:func:`_build_views`) writes each from the corpus
+  being committed, at the three places that rewrite the corpus —
+  bootstrap, :func:`compact_state` and :func:`delete_docs` — and
+  :func:`_commit_views` then records in the ``_VIEWS`` manifest the
+  corpus epoch dir and the part files the build covered. A reader
+  serves that base merged with the same view over the corpus files
+  appended since (the TAIL): a cell-wise sum, an HLL union, a row
+  union — exact, since all five are mergeable summaries. A missing
+  manifest, or one naming another corpus epoch, reads as "no base"
+  and the reader builds from the whole live corpus; a rebuild drops
+  the manifest before its first view write and writes it only after
+  the corpus commit, so every crash window reads that way.
 - ``_LAYOUT`` — a small JSON stamp, written by bootstrap before its
   commit marker: the store kind plus every value the stores silently
-  depend on (sketch dims, HLL lgk, fingerprint geometry, id-bucket
+  depend on (Bloom dims, HLL lgk, fingerprint geometry, id-bucket
   count). Every mutating entry checks it before it writes
   (:func:`_check_layout`, driver-side, no Spark job) and refuses with
   :class:`StateLockError` when it is missing or any pin differs from
@@ -147,8 +140,7 @@ from cati_database_feeder_spark.operators.graph import (
     components_from_rep_pairs, connected_components, incremental_components)
 
 _STORES = ("labels", "corpus", "buckets", "members", "reps", "metrics",
-           "pairs", "deleted", "cms", "cbloom", "hll", "wfp", "dhash",
-           "afp")
+           "pairs", "deleted", "cbloom", "hll", "wfp", "dhash", "afp")
 
 _LOCK_NAME = "_LOCK"
 _DELETE_PENDING = "_DELETE_PENDING"
@@ -365,13 +357,13 @@ _LAYOUT_NAME = "_LAYOUT"
 def _text_layout() -> dict:
     """The text state dir's layout stamp: the store kind plus every
     value its stores silently depend on, read from the configuration
-    at call time. Merging sketches of other dims or lgk corrupts or
-    degrades every cell, fingerprints of another geometry never match,
-    and takedown computes the buckets a tombstone touches from
-    N_ID_BUCKETS — so each is pinned at bootstrap, not rediscovered."""
+    at call time. Merging a view's base and tail built under other
+    Bloom dims or lgk corrupts or degrades every cell, fingerprints of
+    another geometry never match, and members/ files bucketed under
+    another N_ID_BUCKETS mix their id -> bucket maps — so each is
+    pinned at bootstrap, not rediscovered."""
     from cati_database_feeder_spark.sources import multimodal as mm
     return {"kind": "text",
-            "cms": [CMS_DEPTH, CMS_WIDTH],
             "cbloom": [CBLOOM_M, CBLOOM_K],
             "hll_lgk": HLL_LGK,
             "wfp": [WFP_K, WFP_W],
@@ -450,17 +442,11 @@ def _check_bootstrap_kind(state_dir: str, kind: str, op: str) -> None:
             f"state dir.")
 
 
-# id-keyed store bucketing (round-12 verdict, missing #4): the
-# fingerprint/membership tables (members/, wfp/, dhash/, afp/) are
-# written hash-bucketed on their id — bucket = pmod(hash64(id),
-# N_ID_BUCKETS), partitionBy("bucket") — so takedown's tombstone
-# anti-join prunes to the buckets a deletion actually touches: the
-# untouched buckets pass through as a partition-pruned scan with no
-# join and no store-side Exchange, and the join input shrinks from
-# |store| to |touched buckets|. At 100 TB, size N_ID_BUCKETS so a
-# typical takedown touches a small fraction. Readers drop the column.
-# The bucket count is pinned at bootstrap (_text_layout): takedown
-# recomputes a tombstone's bucket from it.
+# id-keyed store bucketing: members/ is written hash-bucketed on its
+# id — bucket = pmod(hash64(id), N_ID_BUCKETS), partitionBy("bucket"),
+# one file per bucket dir — and readers drop the column. The bucket
+# count is pinned at bootstrap (_text_layout), so every file of the
+# store agrees on which bucket an id lives in.
 N_ID_BUCKETS = 64
 
 
@@ -480,7 +466,7 @@ def _pin_dedup(df: DataFrame, id_col: str) -> DataFrame:
             .dropDuplicates([id_col]))
 
 
-def _with_id_bucket(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _with_id_bucket(df: DataFrame, id_col: str) -> DataFrame:
     return df.withColumn("bucket", F.pmod(
         text_fns.hash64(F.col(id_col).cast("string")),
         F.lit(N_ID_BUCKETS)).cast("int"))
@@ -495,64 +481,19 @@ def _bucketed_writer(df: DataFrame, path: str) -> None:
         .partitionBy("bucket").parquet(path)
 
 
-def _swap_write_bucketed(df: DataFrame, target: str,
-                         id_col: str = "doc_id") -> None:
+def _swap_write_bucketed(df: DataFrame, target: str, id_col: str) -> None:
     _swap_write(_with_id_bucket(df.drop("bucket"), id_col), target,
                 writer=_bucketed_writer)
 
 
 def _append_id_store(frame: DataFrame, store_dir: str,
-                     id_col: str = "doc_id") -> None:
+                     id_col: str) -> None:
     """Append rows to a bucketed id-keyed store: the new files land in
     their bucket=N dirs, one file per touched bucket."""
     (_with_id_bucket(frame.drop("bucket"), id_col)
      .repartition("bucket")
      .write.mode("append").partitionBy("bucket")
      .parquet(live_store(store_dir)))
-
-
-def _tomb_pruned_rewrite(spark, store_dir: str, tomb: DataFrame,
-                         id_col: str = "doc_id") -> None:
-    """Takedown rewrite of a bucketed id-keyed store with cost
-    proportional to the TOUCHED buckets, not the store: the
-    tombstones' bucket set (≤ N_ID_BUCKETS values) prunes the
-    anti-join scan to the touched partitions, only those buckets are
-    rewritten into the new epoch, and every untouched bucket's files
-    are re-manifested by hardlink from the current epoch — same
-    inodes, zero bytes copied, and epoch GC of the old dir cannot
-    strand them (link count). The local miniature of how a
-    Delta/Iceberg DELETE commits: rewrite the files a predicate
-    touches, carry every other file into the new snapshot by
-    reference."""
-    store = spark.read.parquet(live_store(store_dir))
-    tomb = tomb.select(F.col(tomb.columns[0]).alias(id_col))
-    touched = {int(r["bucket"]) for r in
-               _with_id_bucket(tomb, id_col)
-               .select("bucket").distinct().collect()}
-    cur = live_store(store_dir)
-    pruned = (store.filter(F.col("bucket").isin(sorted(touched)))
-              .join(tomb, id_col, "left_anti"))
-
-    def relink_writer(df: DataFrame, new_dir: str) -> None:
-        (df.repartition("bucket").write.mode("overwrite")
-         .partitionBy("bucket").parquet(new_dir))
-        for name in os.listdir(cur):
-            if not name.startswith("bucket="):
-                continue
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if b in touched:
-                continue
-            src = os.path.join(cur, name)
-            dst = os.path.join(new_dir, name)
-            os.makedirs(dst, exist_ok=True)
-            for f in os.listdir(src):
-                with contextlib.suppress(FileExistsError):
-                    os.link(os.path.join(src, f), os.path.join(dst, f))
-
-    _swap_write(pruned, store_dir, writer=relink_writer)
 
 
 def _swap_write(df: DataFrame, target: str, writer=None) -> None:
@@ -618,57 +559,11 @@ def _recover_swaps(state_dir: str, stores: tuple[str, ...] = _STORES) -> None:
                                   ignore_errors=True)
 
 
-CMS_DEPTH = 4
-CMS_WIDTH = 2048
 CBLOOM_M = 65536   # counting-Bloom cells (= bits of the served bitmap)
 CBLOOM_K = 2       # hash functions — matches the E60 gate's k
-_CMS_FP_ROW = -1    # sentinel: bucket = delta id-hash sum, cnt = delta rows
-_CMS_NO_FP = (-1, -1)  # "no last-merged delta" (after a takedown)
-
-# The two ingest-maintained linear sketches share one store discipline
-# (frame shape, replay sentinel, merge, takedown by rebuild): the
-# count-min token-frequency table (E61+) and the counting-Bloom
-# decontamination gate over 5-token shingles (E60 at ingest, round-9
-# verdict item 5). Registered as (store name, cells builder, dims); the
-# dims are pinned by the layout stamp (_text_layout).
-
-
-def _cms_of(docs: DataFrame, depth: int = CMS_DEPTH,
-            width: int = CMS_WIDTH) -> DataFrame:
-    """(r, bucket, cnt) count-min table over the docs' token
-    occurrences (functions/sketches.py:cms_table)."""
-    toks = docs.select(F.explode(
-        text_fns.tokens(F.col("text"))).alias("tok"))
-    return sketches.cms_table(toks, "tok", depth=depth, width=width)
-
-
-def _doc_shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) rows — each doc's DISTINCT 5-token shingles,
-    the E60 gate's key definition (docs under 5 tokens contribute
-    none). Shared by the counting-Bloom gate and the HLL cardinality
-    store so both sketch the identical key universe."""
-    return (docs.select("doc_id",
-                        text_fns.tokens(F.col("text")).alias("__tk"))
-            .filter(F.size("__tk") >= 5)
-            .select("doc_id", F.explode(F.array_distinct(
-                text_fns.shingles_from_tokens(F.col("__tk"), 5)))
-                .alias("shingle")))
-
-
-def _cbloom_of(docs: DataFrame, m_cells: int = CBLOOM_M,
-               k: int = CBLOOM_K) -> DataFrame:
-    """(r=0, bucket=cell, cnt) counting-Bloom cells over the docs'
-    per-doc DISTINCT 5-token shingles — counted per (doc, shingle), so
-    the cells of a corpus are the cell-wise sum of its batches' cells
-    (functions/sketches.py:counting_bloom_cells)."""
-    return (sketches.counting_bloom_cells(_doc_shingles(docs),
-                                          "shingle", m_cells, k)
-            .select(F.lit(0).alias("r"), F.col("cell").alias("bucket"),
-                    "cnt"))
-
-
-_SKETCH_STORES = (("cms", _cms_of, (CMS_DEPTH, CMS_WIDTH)),
-                  ("cbloom", _cbloom_of, (CBLOOM_M, CBLOOM_K)))
+HLL_LGK = 12  # 2^12 registers → ~1.6% standard error; pinned at bootstrap
+WFP_K = 4
+WFP_W = 4
 
 
 # Per-sub-store wall seconds of the LAST bootstrap in this process —
@@ -689,151 +584,90 @@ def _boot_lap(phases: dict, marks: list, name: str) -> None:
     marks[0] = now
 
 
-def _cms_fp(delta: DataFrame) -> tuple[int, int]:
-    """Replay fingerprint of a delta: (row count, sum of 60-bit doc-id
-    hashes mod P) — deterministic and order-free, so the at-least-once
-    redelivery of the SAME delta reproduces it exactly; a different
-    delta matching both values is a ~2^-31 accident."""
-    row = (delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(text_fns.hash64(F.col("doc_id").cast("string"))
-                         % F.lit(dedup.MINHASH_P)), F.lit(0)).alias("h"))
-        .collect())[0]
-    return int(row["n"]), int(row["h"])
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _cms_store_frame(spark, table: DataFrame,
-                     fp: tuple[int, int]) -> DataFrame:
-    """Data rows + the replay-fingerprint row, ONE frame so one swap
-    commits both — the fp must never drift from the cells it
-    describes."""
-    sent = local_frame(
-        spark, [(_CMS_FP_ROW, fp[1], fp[0])],
-        "r INT, bucket BIGINT, cnt BIGINT")
-    return (table.select(F.col("r").cast("int"),
-                         F.col("bucket").cast("bigint"),
-                         F.col("cnt").cast("bigint"))
-            .unionByName(sent))
+def _part_files(d: str) -> list[str]:
+    """Names of the parquet data files directly under ``d``."""
+    return sorted(n for n in os.listdir(d)
+                  if n.endswith(".parquet") and not n.startswith((".", "_")))
 
 
-def read_cms(spark, state_dir: str) -> DataFrame:
-    """The maintained count-min table (r, bucket, cnt) of the live
-    corpus, the fingerprint row stripped — feed it to
-    :func:`functions.sketches.cms_estimate` for point-frequency
-    estimates without any corpus scan."""
-    return (spark.read.parquet(live_store(os.path.join(state_dir, "cms")))
-            .filter(F.col("r") >= 0))
-
-
-def read_cbloom(spark, state_dir: str) -> DataFrame:
-    """The maintained counting-Bloom cells (cell, cnt) of the live
-    corpus's 5-token shingles, the fingerprint row stripped."""
-    return (spark.read.parquet(live_store(os.path.join(state_dir, "cbloom")))
-            .filter(F.col("r") >= 0)
-            .select(F.col("bucket").alias("cell"), "cnt"))
-
-
-def cbloom_gate(spark, state_dir: str):
-    """Serving handoff for the ingest-maintained decontamination gate:
-    ``(words, m_bits, k)`` ready for
-    :func:`functions.sketches.bloom_might_contain` — test any incoming
-    benchmark/eval shingle set against the LIVE corpus in a
-    zero-shuffle codegen projection, no corpus tokenize. No false
-    negatives for surviving documents' shingles (takedown recounts the
-    cells over the survivors); false positives go to the usual
-    exact verify join. Dims are the configured ones, checked against
-    the bootstrap-pinned layout stamp first."""
-    _check_layout(state_dir, _text_layout(), "cbloom_gate")
-    words = sketches.counting_bloom_words(read_cbloom(spark, state_dir),
-                                          CBLOOM_M)
-    return words, CBLOOM_M, CBLOOM_K
+def _read_store(spark, paths) -> DataFrame:
+    """``spark.read.parquet`` of a store dir (or of a list of its part
+    files) with the writer's schema passed in. Spark records the schema
+    it wrote in every parquet footer; reading it from one footer in
+    this process replaces the schema-inference job a bare read runs
+    (the file listing is unchanged). A dir with no data file reads
+    bare."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+    paths = [paths] if isinstance(paths, str) else list(paths)
+    first = paths[0]
+    for d, dirs, _ in os.walk(first):
+        dirs[:] = sorted(n for n in dirs if not n.startswith(("_", ".")))
+        parts = _part_files(d)
+        if parts:
+            first = os.path.join(d, parts[0])
+            break
+    reader = spark.read
+    if os.path.isfile(first):
+        meta = pq.read_schema(first).metadata or {}
+        if _SPARK_ROW_SCHEMA in meta:
+            reader = reader.schema(StructType.fromJson(
+                json.loads(meta[_SPARK_ROW_SCHEMA])))
+    return reader.parquet(*paths)
 
 
 # ---------------------------------------------------------------------
-# hll/ store: mergeable distinct-shingle cardinality (extension E67).
-# The sizing companion of the cbloom gate: "how many distinct shingles
-# does the live corpus hold" is exactly the number that decides m_cells
-# (bits per key) for the Bloom tier, and an exact distinct count at
-# web scale is a billions-row aggregate. The Datasketches HLL sketch
-# (built-in JVM: hll_sketch_agg / hll_union_agg — no custom code, no
-# Python) is register-MAX state: merging is idempotent and
-# order/partition-free BY ALGEBRA, so unlike the counting sketches this
-# store needs NO replay fingerprint — an at-least-once redelivery
-# re-maxes the same registers into place. Takedown rebuilds it from the
-# surviving corpus, as it does the counting sketches.
+# The views of the corpus (module docstring): every one is a function
+# of the corpus text alone and a MERGEABLE summary, so a base built
+# over some corpus files merged with the same view over the remaining
+# files equals the view of the whole corpus.
+#
+# - cbloom/ (E60 at ingest): counting-Bloom cells over each doc's
+#   DISTINCT 5-token shingles, counted per (doc, shingle), so the cells
+#   of a corpus are the cell-wise sum of its parts' cells;
+# - hll/ (E67): the Datasketches HLL sketch of the distinct shingles
+#   (built-in JVM hll_sketch_agg / hll_union_agg) — the Bloom tier's
+#   sizing input; registers merge by max;
+# - wfp/ (E73+), dhash/ (E72+), afp/ (E83+): the fingerprint family,
+#   ONE row per document (wfp/ stores a doc's whole winnowing set as
+#   one ``fps`` array; empty for a doc shorter than one window), so
+#   parts merge by row union.
+#
+# The geometry each depends on (Bloom dims, lgk, fingerprint (k, w),
+# grid and bit width) is pinned by the layout stamp (_text_layout): a
+# base and a tail of different geometries are silently incomparable.
 # ---------------------------------------------------------------------
 
-HLL_LGK = 12  # 2^12 registers → ~1.6% standard error; pinned at bootstrap
+def _doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows — each doc's DISTINCT 5-token shingles,
+    the E60 gate's key definition (docs under 5 tokens contribute
+    none). Shared by the counting-Bloom gate and the HLL cardinality
+    view so both sketch the identical key universe."""
+    return (docs.select("doc_id",
+                        text_fns.tokens(F.col("text")).alias("__tk"))
+            .filter(F.size("__tk") >= 5)
+            .select("doc_id", F.explode(F.array_distinct(
+                text_fns.shingles_from_tokens(F.col("__tk"), 5)))
+                .alias("shingle")))
 
 
-def _hll_frame(spark, docs: DataFrame) -> DataFrame:
+def _cbloom_of(docs: DataFrame) -> DataFrame:
+    """(cell, cnt) counting-Bloom cells over the docs' per-doc distinct
+    5-token shingles (functions/sketches.py:counting_bloom_cells)."""
+    return sketches.counting_bloom_cells(_doc_shingles(docs), "shingle",
+                                         CBLOOM_M, CBLOOM_K)
+
+
+def _hll_of(docs: DataFrame) -> DataFrame:
     """One-row (sk binary, lgk int) sketch of the docs' distinct
-    shingles."""
+    shingles. Docs all shorter than the shingle width aggregate ZERO
+    rows, and hll_sketch_agg then yields a NULL sketch."""
     return (_doc_shingles(docs)
             .agg(F.hll_sketch_agg("shingle", HLL_LGK).alias("sk"))
             .select("sk", F.lit(HLL_LGK).alias("lgk")))
-
-
-def read_hll(spark, state_dir: str) -> tuple[int, int]:
-    """(estimated distinct shingle count, lgk) off the maintained
-    store — no corpus scan. A NULL sketch (a corpus whose docs are all
-    shorter than the shingle width aggregates ZERO rows, so
-    hll_sketch_agg yields NULL) estimates 0, not a crash — the empty
-    corpus genuinely has zero distinct shingles (round-10 advice)."""
-    row = (spark.read.parquet(live_store(os.path.join(state_dir, "hll")))
-           .select(F.hll_sketch_estimate("sk").alias("est"), "lgk")
-           .collect())[0]
-    return (0 if row["est"] is None else int(row["est"])), int(row["lgk"])
-
-
-def _hll_merge_delta(spark, state_dir: str, delta: DataFrame) -> None:
-    """Union-merge one delta's shingle sketch into the store. No
-    fingerprint guard, on purpose: HLL registers merge by MAX, so
-    re-merging the identical delta after a crash-window redelivery is
-    a no-op by algebra — the idempotence the counting sketches have to
-    buy with a fingerprint sentinel comes free here."""
-    hll_dir = os.path.join(state_dir, "hll")
-    stored = spark.read.parquet(live_store(hll_dir)).select("sk")
-    # NULL sketches (all-short-doc bootstrap or delta — zero shingle
-    # rows aggregate to a NULL hll_sketch_agg) are dropped before the
-    # union: hll_union_agg(NULL-bearing input) is NULL, which would
-    # erase the live side's registers (round-10 advice). Both sides
-    # NULL leaves a NULL merged sketch, which read_hll reports as 0.
-    merged = (stored.unionByName(_hll_frame(spark, delta).select("sk"))
-              .filter(F.col("sk").isNotNull())
-              .agg(F.hll_union_agg("sk").alias("sk"))
-              .select("sk", F.lit(HLL_LGK).alias("lgk")))
-    _swap_write(merged.coalesce(1), hll_dir)
-
-
-# ---------------------------------------------------------------------
-# The fingerprint family: wfp/ (text winnowing, E73+), dhash/ (image
-# perceptual hash, E72+) and afp/ (audio envelope hash, E83+) — the
-# incremental contamination/overlap and media near-dup indexes, served
-# by hamming_near_dup_pairs and winnow_fingerprint_pairs. Each is an
-# id-keyed TABLE with exactly ONE row per document: wfp/ stores a
-# doc's whole winnowing set as one ``fps`` array
-# (dedup.winnow_fingerprint_sets; empty for a doc shorter than one
-# window) and :func:`read_wfp` explodes it. One row per doc makes
-# every hazard the linear sketches buy off with a replay fingerprint
-# structural here:
-#
-# - crash mid-append: a plain parquet append moves task files into the
-#   store one rename at a time, so a crash lands WHOLE rows for some
-#   docs and nothing for the rest — no doc is ever half-fingerprinted —
-#   and the redelivered batch's id anti-join appends exactly the
-#   missing docs;
-# - redelivery: the same anti-join makes the append idempotent;
-# - takedown: an exact row delete;
-# - the one pinned invariant is the hash geometry — fingerprints of a
-#   different (k, w), grid or bit width are silently incomparable — so
-#   the layout stamp pins it at bootstrap (_text_layout).
-#
-# One table drives every step, as _SKETCH_STORES drives cms/ and
-# cbloom/: name → rows builder over (doc_id, text) docs.
-# ---------------------------------------------------------------------
-WFP_K = 4
-WFP_W = 4
 
 
 def _media_hash(docs: DataFrame, media_type: str, col: str) -> DataFrame:
@@ -868,87 +702,133 @@ def _afp_of(docs: DataFrame) -> DataFrame:
     return _media_hash(docs, "audio", "ahash")
 
 
-_FP_STORES = {"wfp": _wfp_of, "dhash": _dhash_of, "afp": _afp_of}
+def _cell_sum(base: DataFrame, tail: DataFrame) -> DataFrame:
+    return (base.unionByName(tail).groupBy("cell")
+            .agg(F.sum("cnt").alias("cnt")))
 
 
-def _read_fp(spark, state_dir: str, name: str) -> DataFrame:
-    return (spark.read.parquet(live_store(os.path.join(state_dir, name)))
-            .drop("bucket"))
+def _hll_union(base: DataFrame, tail: DataFrame) -> DataFrame:
+    # NULL sketches (a side whose docs are all shorter than the shingle
+    # width) are dropped before the union: hll_union_agg over a
+    # NULL-bearing input is NULL, which would erase the other side's
+    # registers. Both sides NULL leave a NULL sketch, which read_hll
+    # reports as 0.
+    return (base.unionByName(tail).filter(F.col("sk").isNotNull())
+            .agg(F.hll_union_agg("sk").alias("sk"))
+            .select("sk", F.lit(HLL_LGK).alias("lgk")))
+
+
+# name -> (view of a docs frame, merge of a base with a tail's view)
+_VIEWS = {"cbloom": (_cbloom_of, _cell_sum),
+          "hll": (_hll_of, _hll_union),
+          "wfp": (_wfp_of, DataFrame.unionByName),
+          "dhash": (_dhash_of, DataFrame.unionByName),
+          "afp": (_afp_of, DataFrame.unionByName)}
+_MANIFEST = "_VIEWS"
+
+
+def _build_views(spark, state_dir: str, docs: DataFrame,
+                 submit=None) -> list:
+    """Write every view of ``docs`` — the corpus being committed — by
+    :func:`_swap_write`. The manifest is dropped first, so from the
+    first view write until :func:`_commit_views` runs after the corpus
+    commit every reader sees no valid base and builds from the corpus.
+    ``submit(name, fn, *args)`` runs each write (bootstrap passes its
+    thread pool's tracker and joins the returned futures); by default
+    they run inline."""
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(os.path.join(state_dir, _MANIFEST))
+    submit = submit or (lambda name, fn, *a: fn(*a))
+    return [submit(name, _swap_write, build(docs),
+                   os.path.join(state_dir, name))
+            for name, (build, _) in _VIEWS.items()]
+
+
+def _commit_views(state_dir: str) -> None:
+    """Record what the views just written cover — the live corpus
+    epoch and its part files — and which epoch of each view holds it.
+    Called after the corpus commit; the files named are then exactly
+    those the views were built from."""
+    corpus = live_store(os.path.join(state_dir, "corpus"))
+    _replace_file(os.path.join(state_dir, _MANIFEST), json.dumps({
+        "corpus": os.path.basename(corpus), "files": _part_files(corpus),
+        "views": {name: os.path.basename(
+            live_store(os.path.join(state_dir, name))) for name in _VIEWS},
+    }, sort_keys=True))
+
+
+def _read_view(spark, state_dir: str, name: str) -> DataFrame:
+    """The view ``name`` of the live corpus: the base the last rebuild
+    wrote, merged with the same view over the tail — the live epoch's
+    part files the manifest does not list. Without a manifest naming
+    the live corpus epoch (a crash window of a rebuild), it is built
+    from the whole corpus."""
+    build, merge = _VIEWS[name]
+    corpus = live_store(os.path.join(state_dir, "corpus"))
+    files = _part_files(corpus)
+    try:
+        with open(os.path.join(state_dir, _MANIFEST)) as fh:
+            manifest = json.load(fh)
+    except FileNotFoundError:
+        manifest = None
+    covered = set(manifest["files"]) if manifest else set()
+    if (manifest is None or manifest["corpus"] != os.path.basename(corpus)
+            or not covered <= set(files)):
+        return build(_read_store(spark, corpus))
+    base = _read_store(spark, os.path.join(state_dir,
+                                           manifest["views"][name]))
+    tail = [os.path.join(corpus, f) for f in files if f not in covered]
+    return merge(base, build(_read_store(spark, tail))) if tail else base
+
+
+def read_cbloom(spark, state_dir: str) -> DataFrame:
+    """The counting-Bloom cells (cell, cnt) of the live corpus's 5-token
+    shingles."""
+    return _read_view(spark, state_dir, "cbloom")
+
+
+def cbloom_gate(spark, state_dir: str):
+    """Serving handoff for the decontamination gate: ``(words, m_bits,
+    k)`` ready for :func:`functions.sketches.bloom_might_contain` —
+    test any incoming benchmark/eval shingle set against the LIVE
+    corpus in a zero-shuffle codegen projection, no tokenize of the
+    corpus base. No false negatives for surviving documents' shingles
+    (the view is a function of the live corpus); false positives go to
+    the usual exact verify join. Dims are the configured ones, checked
+    against the bootstrap-pinned layout stamp first."""
+    _check_layout(state_dir, _text_layout(), "cbloom_gate")
+    words = sketches.counting_bloom_words(read_cbloom(spark, state_dir),
+                                          CBLOOM_M)
+    return words, CBLOOM_M, CBLOOM_K
+
+
+def read_hll(spark, state_dir: str) -> tuple[int, int]:
+    """(estimated distinct shingle count, lgk) of the live corpus. A
+    NULL sketch (a corpus whose docs are all shorter than the shingle
+    width) estimates 0, not a crash — the empty corpus genuinely has
+    zero distinct shingles."""
+    row = (_read_view(spark, state_dir, "hll")
+           .select(F.hll_sketch_estimate("sk").alias("est"), "lgk")
+           .collect())[0]
+    return (0 if row["est"] is None else int(row["est"])), int(row["lgk"])
 
 
 def read_wfp(spark, state_dir: str) -> DataFrame:
-    """The maintained winnowing fingerprints as (doc_id, fp) rows —
+    """The winnowing fingerprints as (doc_id, fp) rows —
     dedup.winnow_fingerprints over the live corpus (a doc shorter than
-    one window stores an empty set and serves no row)."""
-    return (_read_fp(spark, state_dir, "wfp")
+    one window holds an empty set and serves no row)."""
+    return (_read_view(spark, state_dir, "wfp")
             .select("doc_id", F.explode("fps").alias("fp")))
 
 
 def read_dhash(spark, state_dir: str) -> DataFrame:
-    """The maintained perceptual-hash table (doc_id, dhash, real)."""
-    return _read_fp(spark, state_dir, "dhash")
+    """The perceptual-hash table (doc_id, dhash, real)."""
+    return _read_view(spark, state_dir, "dhash")
 
 
 def read_afp(spark, state_dir: str) -> DataFrame:
-    """The maintained audio-fingerprint table (doc_id, ahash, real)."""
-    return _read_fp(spark, state_dir, "afp")
-
-
-def _fp_append_delta(spark, state_dir: str, delta: DataFrame,
-                     name: str) -> None:
-    """Append the delta's ``name`` rows behind the id anti-join replay
-    guard (the deleted/-ledger idiom): a redelivered delta's ids are
-    already stored and append nothing, and after a crash mid-append
-    the redelivery appends exactly the docs whose rows did not land
-    (family comment above)."""
-    d = os.path.join(state_dir, name)
-    existing = (spark.read.parquet(live_store(d)).select("doc_id")
-                .distinct())
-    _append_id_store(_FP_STORES[name](delta)
-                     .join(existing, "doc_id", "left_anti"), d)
-
-
-def _sk_merge_delta(spark, state_dir: str, name: str, delta: DataFrame,
-                    cells_of, d1: int, d2: int,
-                    fp: tuple[int, int]) -> None:
-    """Fold one delta into the ``name`` sketch store: cell-wise ADD
-    (the linear-sketch merge), swap-replaced together with the delta's
-    fingerprint ``fp`` (:func:`_cms_fp`). Replay-guarded: foreachBatch
-    is at-least-once, the merge is not idempotent, and a crash AFTER
-    this swap but BEFORE the corpus commit marker redelivers the
-    identical delta — whose fingerprint then equals the stored one
-    (the r=-1 row) and the merge is skipped. Plans here read only the
-    sketch dir + the delta, so the call is recacheByPath-safe anywhere
-    before the corpus append."""
-    sk_dir = os.path.join(state_dir, name)
-    stored = spark.read.parquet(live_store(sk_dir))
-    row = stored.filter(F.col("r") == _CMS_FP_ROW).collect()[0]
-    if fp == (int(row["cnt"]), int(row["bucket"])):
-        return  # crash-window replay: this delta is already merged
-    merged = (stored.filter(F.col("r") >= 0)
-              .unionByName(cells_of(delta, d1, d2))
-              .groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt")))
-    # NO coalesce(1) here: coalesce collapses the whole upstream plan
-    # into one serial task (measured 4.5 s vs 0.6 s for this write —
-    # SCALING.md round 9); AQE already shrinks the tiny shuffle, and
-    # compact_state owns the file count (sketches compact to 1 file)
-    _swap_write(_cms_store_frame(spark, merged, fp), sk_dir)
-
-
-def _sk_takedown(spark, state_dir: str, name: str, cells_of,
-                 d1: int, d2: int, survivors: DataFrame) -> None:
-    """Reflect the FULL tombstone set in the ``name`` sketch store by
-    recounting it over ``survivors`` (the old corpus minus every
-    tombstone), before the corpus swap. No recorded state is needed
-    to be crash-correct: a retry recounts the same survivors. The
-    fingerprint resets to NO_FP, so the delta of a batch that crashed
-    between its merge and its corpus commit — whose counts the recount
-    just dropped — merges again on redelivery instead of being skipped
-    as a replay. The dims are the configured ones, which the layout
-    stamp has checked against the bootstrap pin."""
-    _swap_write(_cms_store_frame(spark, cells_of(survivors, d1, d2),
-                                 _CMS_NO_FP),
-                os.path.join(state_dir, name))
+    """The audio-fingerprint table (doc_id, ahash, real)."""
+    return _read_view(spark, state_dir, "afp")
 
 
 def _check_no_pending_delete(state_dir: str, op: str) -> None:
@@ -983,7 +863,10 @@ def ingest_batch(spark, batch: DataFrame, state_dir: str,
     the derived stores (members/reps/buckets/labels). Every store
     append is guarded by a left_anti on the store's key, so an
     at-least-once redelivery (foreachBatch's contract) appends nothing
-    twice and the whole call is idempotent. Holds the state dir's
+    twice and the whole call is idempotent. An incremental batch
+    writes only corpus/, members/, reps/, buckets/, labels/, pairs/
+    and metrics/: the views (cbloom/ … afp/) follow the corpus through
+    their readers, which add the corpus tail. Holds the state dir's
     fencing lock for the duration (module docstring, concurrency
     contract) — a concurrent ``compact_state`` or second ingest on the
     same dir raises :class:`StateLockError` instead of corrupting
@@ -1064,8 +947,10 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # 71 s at sf0.1 with this as the dominant term
         memb = dedup.tokset_groups(batch).persist()
         # materialize the cache with one cheap action so the concurrent
-        # consumers below read blocks instead of racing to compute them
-        memb.count()
+        # consumers below read blocks instead of racing to compute them;
+        # memb has one row per batch doc, so this is the metrics row's
+        # doc count too
+        n = memb.count()
         # the membership-derived stores (reps/members/buckets) and,
         # later, the pairs store depend on frames that are persisted by
         # the time their write is submitted — so the writes run as
@@ -1097,44 +982,28 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
                         members_dir, "id"),
             pool.submit(_swap_write, bb, buckets_dir),
         ]
-        # The sketch/fingerprint stores (cms/cbloom/hll/wfp/dhash/afp)
-        # depend only on `batch`, never on the membership machinery —
-        # submit them to the pool NOW so their jobs back-fill executor
-        # idle tails of the verify/closure critical path below (guide
-        # §2.6) instead of running as a sequential epilogue. Laps are
-        # recorded at COMPLETION in completion order (wall segments:
-        # the sum of all boot laps + :other still equals the
-        # bootstrap's true wall — a store that finished entirely
-        # inside another phase's segment records ~0, which is the
-        # honest number for overlapped capital). Crash-safety is
-        # unchanged: every future is joined before the metrics row
-        # and the corpus commit marker, so a failed write still
+        # The views (cbloom/hll/wfp/dhash/afp) depend only on `batch`,
+        # never on the membership machinery — submit them to the pool
+        # NOW so their jobs back-fill executor idle tails of the
+        # verify/closure critical path below (guide §2.6) instead of
+        # running as a sequential epilogue. Laps are recorded at
+        # COMPLETION in completion order (wall segments: the sum of
+        # all boot laps + :other still equals the bootstrap's true
+        # wall — a view that finished entirely inside another phase's
+        # segment records ~0, which is the honest number for
+        # overlapped capital). Every future is joined before the
+        # metrics row and the corpus commit marker, so a failed write
         # aborts the bootstrap before the marker and the retry redoes
         # every store.
-        boot_fp = _cms_fp(batch)
         _done_at: dict[str, float] = {}
 
-        def _tracked(name, fn, *a, **kw):
+        def _tracked(name, fn, *a):
             def run():
-                fn(*a, **kw)
+                fn(*a)
                 _done_at[name] = _time.time()
             return pool.submit(run)
 
-        sketch_futs = [
-            _tracked(sk_name, _swap_write,
-                     _cms_store_frame(spark, sk_cells(batch, sd1, sd2),
-                                      boot_fp),
-                     os.path.join(state_dir, sk_name))
-            for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES
-        ] + [
-            _tracked("hll", _swap_write,
-                     _hll_frame(spark, batch).coalesce(1),
-                     os.path.join(state_dir, "hll")),
-        ] + [
-            _tracked(fp_name, _swap_write_bucketed, fp_of(batch),
-                     os.path.join(state_dir, fp_name))
-            for fp_name, fp_of in _FP_STORES.items()
-        ]
+        view_futs = _build_views(spark, state_dir, batch, submit=_tracked)
         # persisted: the expansion, the closure's star edges, and the
         # pairs-store write all read it
         rep_pairs = dedup.near_dup_rep_pairs(
@@ -1166,12 +1035,9 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         for fut in store_futs:
             fut.result()
         _boot_lap(BOOT_PHASE_SECONDS, _marks, "membership")
-        # join the overlapped sketch-store futures (submitted above);
-        # a bootstrap retry redoes these overwrites with identical
-        # content (idempotent), and the sketches' fp sentinels record
-        # the batch so a partial-crash redelivery that somehow reaches
-        # the incremental path still skips
-        for fut in sketch_futs:
+        # join the overlapped view futures (submitted above); a
+        # bootstrap retry redoes these overwrites with identical content
+        for fut in view_futs:
             fut.result()
         pool.shutdown()
         # wall-segment laps in completion order: each store's entry is
@@ -1189,13 +1055,15 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # after the marker) had a silent LOSS window instead (crash
         # after the marker → the replay's pure-replay return skips the
         # metrics write forever)
-        n = boot_fp[0]
         _append_metrics(spark, state_dir, batch_id, n, n,
                         pairs.count(), False, True)
         # the layout stamp goes in just before the marker: a committed
         # corpus always has one, and a bootstrap retry rewrites it
         _write_layout(state_dir, _text_layout())
         _swap_write(batch, corpus_dir)
+        # the views were built from `batch`, which the new corpus epoch
+        # holds file for file
+        _commit_views(state_dir)
         _boot_lap(BOOT_PHASE_SECONDS, _marks, "corpus")
         pairs.unpersist()
         rep_pairs.unpersist()
@@ -1230,10 +1098,7 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # delta.count() after the corpus append would see the batch's
         # own docs in the corpus and report 0
         m_rows_in = batch.count()
-        # one aggregate yields the metrics row's delta count and the
-        # sketch merges' replay fingerprint
-        delta_fp = _cms_fp(delta)
-        m_delta = delta_fp[0]
+        m_delta = delta.count()
         m_pairs = 0 if quiet else new_pairs.count()
         # commit order: labels swap first (reads old labels — must
         # complete before anything changes), then the append-only
@@ -1261,21 +1126,6 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         fr["buckets_append"].write.mode("append").parquet(live_store(buckets_dir))
         _append_id_store(fr["members_append"], members_dir, "id")
         fr["reps_append"].write.mode("append").parquet(live_store(reps_dir))
-        # sketch merges BEFORE the corpus commit marker (their replay
-        # guard assumes a crash here redelivers the identical delta,
-        # which holds only while the marker is unwritten); each reads
-        # its own dir + the delta only, so the calls are
-        # recacheByPath-safe at this slot
-        for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
-            _sk_merge_delta(spark, state_dir, sk_name, delta, sk_cells,
-                            sd1, sd2, delta_fp)
-        _hll_merge_delta(spark, state_dir, delta)
-        # fingerprint appends at the same slot: each reads only its own
-        # store (the replay guard) + the delta, so it is
-        # recacheByPath-safe here, and a crash before the marker
-        # redelivers a delta whose landed ids the guard excludes
-        for fp_name in _FP_STORES:
-            _fp_append_delta(spark, state_dir, delta, fp_name)
         # metrics BEFORE the corpus commit marker (same argument as the
         # bootstrap branch): a crash in between replays the batch and
         # appends a duplicate batch_id row — at-least-once — where the
@@ -1304,14 +1154,15 @@ def _incremental_frames(spark, state_dir: str, batch: DataFrame,
     reads the doc_id column alone (tests/test_incremental_e2e.py).
     The batch tokenize inside ``delta_membership`` and the store
     probes are the only non-driver work here."""
-    corpus_ids = (spark.read.parquet(live_store(os.path.join(state_dir, "corpus")))
-                  .select("doc_id"))
-    members = (spark.read.parquet(
-        live_store(os.path.join(state_dir, "members"))).drop("bucket"))
-    reps = spark.read.parquet(live_store(os.path.join(state_dir, "reps")))
-    buckets = spark.read.parquet(live_store(os.path.join(state_dir, "buckets")))
-    labels = spark.read.parquet(live_store(os.path.join(state_dir, "labels")))
-    pairs_store = spark.read.parquet(live_store(os.path.join(state_dir, "pairs")))
+    def read(name):
+        return _read_store(spark, live_store(os.path.join(state_dir, name)))
+
+    corpus_ids = read("corpus").select("doc_id")
+    members = read("members").drop("bucket")
+    reps = read("reps")
+    buckets = read("buckets")
+    labels = read("labels")
+    pairs_store = read("pairs")
     delta = batch.join(corpus_ids, "doc_id", "left_anti")
     deleted_dir = os.path.join(state_dir, "deleted")
     if store_exists(deleted_dir):
@@ -1319,8 +1170,8 @@ def _incremental_frames(spark, state_dir: str, batch: DataFrame,
         # the corpus (takedown contract, delete_docs) — the corpus
         # anti-join alone would re-admit it, since deletion removed
         # its corpus row
-        delta = delta.join(spark.read.parquet(live_store(deleted_dir))
-                           .select("doc_id"), "doc_id", "left_anti")
+        delta = delta.join(read("deleted").select("doc_id"), "doc_id",
+                           "left_anti")
     dmemb = dedup.delta_membership(delta, reps)
     new_pairs, dmemb, new_reps = dedup.incremental_near_dup_pairs_from_store(
         delta, members, reps, buckets, threshold=threshold,
@@ -1351,14 +1202,15 @@ def compact_state(spark, state_dir: str,
     one small parquet file to each store, and at production batch
     cadence the file count — not the byte count — is what degrades scan
     planning (per-file open cost, tiny row groups). Rewrites corpus/,
-    buckets/, members/, reps/, pairs/ and the fingerprint family into
-    ``target_files`` balanced files (the id-keyed stores one file per
-    bucket) via the same epoch swap the labels update uses.
-    ``labels/`` is swap-written whole each batch and never needs
-    compaction. The swap-replaced sketch stores (cms/, cbloom/, hll/)
-    and the one-row-per-call ledgers (metrics/, deleted/) are
-    rewritten to one file each. A state dir with no committed corpus
-    has nothing to compact (a bootstrap retry rewrites every store).
+    buckets/, members/, reps/ and pairs/ into ``target_files``
+    balanced files (members/ one file per bucket) via the same epoch
+    swap the labels update uses, and the one-row-per-call ledgers
+    (metrics/, deleted/) to one file each. ``labels/`` is swap-written
+    whole each batch and never needs compaction. After the corpus swap
+    the views are rebuilt from the compacted corpus
+    (:func:`_build_views`), so their tail is empty again. A state dir
+    with no committed corpus has nothing to compact (a bootstrap retry
+    rewrites every store).
 
     One writer per state dir, ENFORCED: this takes the same fencing
     lock as ``ingest_batch``, so compacting against a live ingest (the
@@ -1377,22 +1229,22 @@ def _compact_state_locked(spark, state_dir: str,
     _check_layout(state_dir, _text_layout(), "compact_state")
     _recover_swaps(state_dir)
     n = target_files or spark.sparkContext.defaultParallelism
-    id_bucketed = {"members": "id", **dict.fromkeys(_FP_STORES, "doc_id")}
     for name, parts in (("corpus", n), ("buckets", n), ("members", n),
                         ("reps", n), ("pairs", n), ("metrics", 1),
-                        ("deleted", 1), ("hll", 1), ("cms", 1),
-                        ("cbloom", 1),
-                        *((fp_name, n) for fp_name in _FP_STORES)):
+                        ("deleted", 1)):
         d = os.path.join(state_dir, name)
         if name == "deleted" and not store_exists(d):
             continue  # written by the first delete_docs
-        df = spark.read.parquet(live_store(d))
-        if name in id_bucketed:
+        df = _read_store(spark, live_store(d))
+        if name == "members":
             # the bucketed writer repartitions on the key -> one file
             # per bucket
-            _swap_write_bucketed(df, d, id_bucketed[name])
+            _swap_write_bucketed(df, d, "id")
         else:
             _swap_write(df.repartition(parts), d)
+    _build_views(spark, state_dir, _read_store(
+        spark, live_store(os.path.join(state_dir, "corpus"))))
+    _commit_views(state_dir)
 
 
 def delete_docs(spark, state_dir: str, doc_ids) -> None:
@@ -1427,11 +1279,10 @@ def delete_docs(spark, state_dir: str, doc_ids) -> None:
       tests/test_incremental_e2e.py). Untouched components keep their
       rows; per-deletion cost scales with the touched components, not
       the corpus.
-    - ``cms/``, ``cbloom/``, ``hll/`` — recounted over the surviving
-      corpus (one corpus pass, the same order of cost as the corpus
-      rewrite itself), with the replay fingerprint reset so a batch
-      redelivered after the delete merges onto the recount.
-    - ``wfp/``, ``dhash/``, ``afp/`` — deleted rows removed.
+    - the views (``cbloom/``, ``hll/``, ``wfp/``, ``dhash/``,
+      ``afp/``) — rebuilt from the surviving corpus after the corpus
+      swap (:func:`_build_views`; one corpus pass, the same order of
+      cost as the corpus rewrite itself).
 
     Crash safety: the ``_DELETE_PENDING`` marker is written first and
     cleared last; every mutating op refuses while it exists
@@ -1439,7 +1290,9 @@ def delete_docs(spark, state_dir: str, doc_ids) -> None:
     it always re-applies the FULL tombstone set (existing ∪ new) to
     every store — so re-running ``delete_docs(spark, state_dir, [])``
     after a crash completes the interrupted deletion; per-store swap
-    crashes heal through the usual :func:`_recover_swaps`.
+    crashes heal through the usual :func:`_recover_swaps`. Until the
+    retry rewrites the ``_VIEWS`` manifest, view readers build from the
+    live corpus.
 
     ``doc_ids``: an iterable of ids or a single-column DataFrame."""
     with _state_lock(state_dir, "delete_docs"):
@@ -1562,29 +1415,17 @@ def _delete_docs_locked(spark, state_dir: str, doc_ids) -> None:
         # only after every frame that READS it has executed: labels
         # reads labels+pairs; reps/buckets read members (via the
         # promotion frames); members goes after both; pairs after
-        # labels; corpus reads only corpus+deleted.
+        # labels; corpus reads only corpus+deleted. The views are
+        # rebuilt last, from the committed survivors.
         _swap_write(new_labels, labels_dir)
         _swap_write(new_reps, reps_dir)
         _swap_write(new_buckets, buckets_dir)
         _swap_write(surv_pairs, pairs_dir)
         _swap_write_bucketed(new_members, members_dir, "id")
-        # sketch stores are recounted over the survivors, read from the
-        # old corpus/, so they run before the corpus swap; the counting
-        # sketches' fp resets to the no-delta sentinel so any in-flight
-        # batch redelivered after the delete merges normally
-        # (_sk_takedown)
-        survivors = corpus.join(tomb, "doc_id", "left_anti")
-        for sk_name, sk_cells, (sd1, sd2) in _SKETCH_STORES:
-            _sk_takedown(spark, state_dir, sk_name, sk_cells, sd1, sd2,
-                         survivors)
-        _swap_write(_hll_frame(spark, survivors).coalesce(1),
-                    os.path.join(state_dir, "hll"))
-        # fingerprint takedown is an exact row delete of the
-        # tombstoned ids
-        for fp_name in _FP_STORES:
-            _tomb_pruned_rewrite(spark, os.path.join(state_dir, fp_name),
-                                 tomb)
-        _swap_write(survivors, corpus_dir)
+        _swap_write(corpus.join(tomb, "doc_id", "left_anti"), corpus_dir)
+        _build_views(spark, state_dir,
+                     _read_store(spark, live_store(corpus_dir)))
+        _commit_views(state_dir)
     except BaseException:
         raise  # marker stays: the refusal gate routes to a retry
     else:
@@ -1600,8 +1441,8 @@ def start_incremental_ingest(stream: DataFrame, state_dir: str,
                              available_now: bool = True):
     """Attach :func:`ingest_batch` to a document stream via
     ``foreachBatch`` and start it. Returns the StreamingQuery; state
-    appears under ``state_dir`` (the stores of ``_STORES`` and the
-    ``_LAYOUT`` stamp)."""
+    appears under ``state_dir`` (the stores of ``_STORES``, the
+    ``_LAYOUT`` stamp and the ``_VIEWS`` manifest)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         ingest_batch(batch_df.sparkSession, batch_df, state_dir,

@@ -1160,118 +1160,8 @@ def test_embedding_ingest_maintains_quantized_codes(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------
-# cms/ store: the maintained count-min sketch (round 9)
-# ---------------------------------------------------------------------
-
-def _cms_cells(spark, state):
-    from cati_database_feeder_spark.streaming import ingest as ing
-    return sorted(map(tuple, ing.read_cms(spark, state).collect()))
-
-
-def _cms_recompute(spark, docs, depth=None, width=None):
-    from cati_database_feeder_spark.streaming import ingest as ing
-    t = ing._cms_of(docs, depth or ing.CMS_DEPTH, width or ing.CMS_WIDTH)
-    return sorted(map(tuple,
-                      t.select(F.col("r").cast("int"),
-                               F.col("bucket").cast("bigint"),
-                               F.col("cnt").cast("bigint")).collect()))
-
-
-def test_cms_store_multi_batch_equals_full_recompute(spark, tmp_path):
-    """The linear-sketch merge across bootstrap + two batches (with
-    replayed ids that die at exact dedup) lands on the IDENTICAL cell
-    set as one count-min pass over the final corpus store."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta beta")], ["doc_id", "text"])
-    b1 = spark.createDataFrame(
-        [(2, "REPLAYED ignored"), (3, "alpha alpha epsilon")],
-        ["doc_id", "text"])
-    b2 = spark.createDataFrame(
-        [(4, "zeta beta gamma gamma"), (1, "REPLAYED too")],
-        ["doc_id", "text"])
-    for i, b in enumerate((b0, b1, b2)):
-        ing.ingest_batch(spark, b, state, batch_id=i)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
-
-
-def test_cms_store_replay_after_commit_crash_does_not_double_count(
-        spark, tmp_path):
-    """foreachBatch is at-least-once and the cms merge is NOT
-    idempotent: a crash AFTER the cms swap but BEFORE the corpus
-    commit marker (injected at the metrics append, which sits between
-    them) redelivers the identical delta — the fingerprint sentinel
-    must skip the second merge or every cell the delta touched
-    double-counts."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(1, "alpha beta"), (2, "gamma delta")], ["doc_id", "text"]),
-        state, batch_id=0)
-    batch = spark.createDataFrame(
-        [(3, "alpha epsilon epsilon")], ["doc_id", "text"])
-    real_append = ing._append_metrics
-    crashed = []
-
-    def crash_at_metrics(*a, **kw):
-        if not crashed:
-            crashed.append(True)
-            raise RuntimeError("injected crash before commit marker")
-        real_append(*a, **kw)
-
-    ing._append_metrics = crash_at_metrics
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            ing.ingest_batch(spark, batch, state, batch_id=1)
-        # retry: delta recomputes identically (marker unwritten), the
-        # stored fp matches, the merge is skipped
-        ing.ingest_batch(spark, batch, state, batch_id=1)
-    finally:
-        ing._append_metrics = real_append
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert corpus.filter(F.col("doc_id") == 3).count() == 1
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
-
-
-def test_cms_store_delete_docs_rebuilds_on_survivors(spark, tmp_path):
-    """Takedown: the sketch equals a fresh count-min pass over the
-    surviving corpus (never retains deleted docs' counts), and the
-    idempotent empty-set retry changes nothing."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha alpha"),
-         (3, "delta epsilon")], ["doc_id", "text"]), state, batch_id=0)
-    ing.delete_docs(spark, state, [2])
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert corpus.filter(F.col("doc_id") == 2).count() == 0
-    cells = _cms_cells(spark, state)
-    assert cells == _cms_recompute(spark, corpus)
-    ing.delete_docs(spark, state, [])
-    assert _cms_cells(spark, state) == cells
-
-
-def test_cms_store_dims_pinned_at_bootstrap(spark, tmp_path,
-                                            monkeypatch):
-    """Merging tables of different (depth, width) silently corrupts
-    every cell — a mismatched configuration must refuse loudly, at the
-    layout check, before the batch writes anything."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        [(1, "alpha")], ["doc_id", "text"]), state, batch_id=0)
-    monkeypatch.setattr(ing, "CMS_DEPTH", 2)
-    monkeypatch.setattr(ing, "CMS_WIDTH", 64)
-    with pytest.raises(ing.StateLockError, match="pinned at bootstrap"):
-        ing.ingest_batch(spark, spark.createDataFrame(
-            [(2, "beta")], ["doc_id", "text"]), state, batch_id=1)
-
-
-# ---------------------------------------------------------------------
-# cbloom/ store: the maintained counting-Bloom decontamination gate
-# (round 10, verdict item 5) + sketch takedown across crash windows
+# cbloom/ view: the counting-Bloom decontamination gate (round 10,
+# verdict item 5) across takedowns and crash windows
 # ---------------------------------------------------------------------
 
 def _cbloom_cells(spark, state):
@@ -1281,9 +1171,7 @@ def _cbloom_cells(spark, state):
 
 def _cbloom_recompute(spark, docs):
     from cati_database_feeder_spark.streaming import ingest as ing
-    return sorted(map(tuple, ing._cbloom_of(docs)
-                      .select(F.col("bucket").cast("bigint"),
-                              F.col("cnt").cast("bigint")).collect()))
+    return sorted(map(tuple, ing._cbloom_of(docs).collect()))
 
 
 def _corpus_shingles(docs):
@@ -1303,7 +1191,7 @@ _CB_DOCS1 = [(4, "eight nine ten eleven twelve"),
 
 
 def test_cbloom_store_multi_batch_gate_no_false_negatives(spark, tmp_path):
-    """The maintained counting-Bloom gate across bootstrap + a batch:
+    """The counting-Bloom gate view across bootstrap + a batch:
     cells equal a fresh per-(doc, distinct-shingle) count over the
     final corpus, and EVERY corpus shingle tests positive through the
     served bitmap (bloom_might_contain over counting_bloom_words) —
@@ -1353,18 +1241,14 @@ def test_cbloom_store_delete_equals_survivor_rebuild(spark, tmp_path):
 
 def test_sketch_subtract_pending_crashed_batch_equals_rebuild(
         spark, tmp_path):
-    """A batch crashes BETWEEN the sketch merges and the corpus commit
-    marker — the sketches hold a delta the corpus does not — and a
-    takedown runs before the batch is redelivered. The takedown
-    recounts the sketches over the surviving corpus, which drops the
-    pending delta, and resets the replay fingerprint, so the
-    redelivered (tombstone-filtered) delta merges onto a corpus-true
-    base. Two legs: the first takedown tombstones one of the pending
-    delta's own docs; the second tombstones only a committed doc, so
-    the redelivered delta is IDENTICAL to the pending one and a
-    fingerprint left in place would skip its merge. Both sketch
-    stores must end cell-identical to a from-scratch pass over the
-    final corpus."""
+    """A batch crashes just before its corpus commit marker (after its
+    other stores landed), and a takedown runs before the batch is
+    redelivered. Two legs: the first takedown tombstones one of the
+    pending batch's own docs; the second tombstones only a committed
+    doc, so the redelivered delta is identical to the pending one. The
+    cbloom view must end cell-identical to a from-scratch pass over the
+    final corpus: it follows the corpus, which never held the crashed
+    batch."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1391,31 +1275,29 @@ def test_sketch_subtract_pending_crashed_batch_equals_rebuild(
             ing._append_metrics = real_append
         return spark.read.parquet(L(os.path.join(state, "corpus")))
 
-    # takedown of doc 5 — a doc whose counts are ONLY in the sketches
-    # (merged), never in the corpus; the redelivered delta is doc 4
+    # takedown of doc 5 — a doc of the crashed batch, never in the
+    # corpus; the redelivered delta is doc 4
     corpus = crash_delete_redeliver(
         [(4, "eight nine ten eleven twelve"),
          (5, "alpha beta gamma delta DOOMED")], [5], 1)
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 2, 3, 4]
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
     # takedown of committed doc 1 only: the whole delta is redelivered
     corpus = crash_delete_redeliver(
         [(6, "six seven eight nine ten eleven"),
          (7, "alpha beta gamma delta epsilon zeta eta")], [1], 2)
     assert sorted(r["doc_id"] for r in corpus.collect()) == [2, 3, 4, 6, 7]
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
 
 
 def test_sketch_subtract_mid_delete_crash_no_double_subtract(
         spark, tmp_path):
-    """A crash INSIDE delete_docs after the sketch swaps but before the
-    corpus swap: the pending-delete fence refuses other writers, and
-    the retry re-applies the full tombstone set against the OLD corpus
-    (which still contains the tombstoned rows) — the sketches must
-    equal a recount over the survivors, with no deleted doc's counts
-    removed twice."""
+    """A crash INSIDE delete_docs before the corpus swap: the
+    pending-delete fence refuses other writers, and the retry
+    re-applies the full tombstone set against the OLD corpus (which
+    still contains the tombstoned rows) — the cbloom view must equal a
+    recount over the survivors, with no deleted doc's counts removed
+    twice."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1444,18 +1326,16 @@ def test_sketch_subtract_mid_delete_crash_no_double_subtract(
         ing._swap_write = real_swap
     corpus = spark.read.parquet(L(corpus_dir))
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 3]
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert _cbloom_cells(spark, state) == _cbloom_recompute(spark, corpus)
 
 
 def test_compact_state_prunes_sketch_ledger_and_keeps_takedown_safe(
         spark, tmp_path):
-    """compact_state rewrites each sketch store to one file without
-    breaking any takedown property: the compacted cells still equal a
-    from-scratch recount, a RE-delete of an already-deleted id changes
-    nothing, and a NEW delete after compaction still equals a recount
-    over the survivors, for both sketch stores. The compacted wfp/
-    still serves exactly the fingerprints of the corpus."""
+    """compact_state rebuilds the views without breaking any takedown
+    property: the cbloom cells still equal a from-scratch recount, a
+    RE-delete of an already-deleted id changes nothing, and a NEW
+    delete after compaction still equals a recount over the survivors.
+    The rebuilt wfp/ serves exactly the fingerprints of the corpus."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1465,7 +1345,6 @@ def test_compact_state_prunes_sketch_ledger_and_keeps_takedown_safe(
     ing.delete_docs(spark, state, [2])
     ing.compact_state(spark, state, target_files=2)
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert (_cbloom_cells(spark, state)
             == _cbloom_recompute(spark, corpus))
     assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
@@ -1474,25 +1353,23 @@ def test_compact_state_prunes_sketch_ledger_and_keeps_takedown_safe(
     # the dir)
     ing.delete_docs(spark, state, [2])
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
+    assert (_cbloom_cells(spark, state)
+            == _cbloom_recompute(spark, corpus))
     # a NEW delete after compaction still ≡ rebuild from survivors
     ing.delete_docs(spark, state, [3])
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 4]
-    assert _cms_cells(spark, state) == _cms_recompute(spark, corpus)
     assert (_cbloom_cells(spark, state)
             == _cbloom_recompute(spark, corpus))
 
 
 def test_hll_store_multi_batch_tracks_exact_and_replays_idempotently(
         spark, tmp_path):
-    """The maintained HLL cardinality store (round 10, E67): across
-    bootstrap + two batches (with exact-dedup replays) the estimate
-    stays within the sketch's error bound of the TRUE distinct shingle
-    count, the lgk pin survives, and re-merging the SAME delta twice —
-    the at-least-once redelivery the counting sketches need a
-    fingerprint for — changes nothing, because HLL registers merge by
-    max (the fp-free idempotence the store's design note claims)."""
+    """The HLL cardinality view (round 10, E67): across bootstrap + two
+    batches (with exact-dedup replays) the estimate stays within the
+    sketch's error bound of the TRUE distinct shingle count, the lgk
+    pin survives, and redelivering the SAME batch twice (at-least-once)
+    changes nothing."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1504,12 +1381,13 @@ def test_hll_store_multi_batch_tracks_exact_and_replays_idempotently(
     est, lgk = ing.read_hll(spark, state)
     assert lgk == ing.HLL_LGK
     assert abs(est - n_exact) <= max(1, int(0.05 * n_exact))
-    # explicit double-merge of an identical delta: estimate unchanged
-    delta = spark.createDataFrame(
-        [(4, "eight nine ten eleven twelve")], ["doc_id", "text"])
-    ing._hll_merge_delta(spark, state, delta)
+    # double redelivery of an identical batch: estimate unchanged
+    batch = spark.createDataFrame(
+        [(8, "eight nine ten eleven twelve thirteen")], ["doc_id", "text"])
+    ing.ingest_batch(spark, batch, state, batch_id=2)
     est2, _ = ing.read_hll(spark, state)
-    ing._hll_merge_delta(spark, state, delta)
+    assert est2 > est
+    ing.ingest_batch(spark, batch, state, batch_id=2)
     est3, _ = ing.read_hll(spark, state)
     assert est3 == est2
 
@@ -1603,12 +1481,10 @@ _WFP_DOCS1 = [(4, "p q alpha beta gamma delta epsilon zeta r s"),
 
 def test_wfp_store_multi_batch_equals_recompute_and_replays(
         spark, tmp_path):
-    """The maintained winnowing-fingerprint store (E73+): across
-    bootstrap + a batch (with an exact-dedup replay inside it) the
-    store equals a from-scratch fingerprint pass over the final
-    corpus; re-ingesting the identical batch (at-least-once
-    redelivery) changes nothing — the id anti-join guard, not a
-    fingerprint sentinel, absorbs it."""
+    """The winnowing-fingerprint view (E73+): across bootstrap + a
+    batch (with an exact-dedup replay inside it) the view equals a
+    from-scratch fingerprint pass over the final corpus; re-ingesting
+    the identical batch (at-least-once redelivery) changes nothing."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1623,11 +1499,10 @@ def test_wfp_store_multi_batch_equals_recompute_and_replays(
 
 
 def test_wfp_store_crash_replay_no_duplicate_rows(spark, tmp_path):
-    """Crash AFTER the wfp append but BEFORE the corpus commit marker:
-    the redelivered delta's ids are already in the store, so the
-    replay appends nothing and the store still equals the recompute
-    (the hazard the sketch stores need fp sentinels for, absorbed
-    structurally by the id guard)."""
+    """Crash just BEFORE the corpus commit marker (at the metrics
+    append): the wfp view follows the corpus, which never held the
+    crashed batch, so after the redelivery it serves each doc once and
+    equals the recompute."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1786,117 +1661,41 @@ def test_retrain_centroids_crash_fence_and_resume(spark, tmp_path):
     assert not os.path.exists(os.path.join(state, ie._CENTS_NEXT))
 
 
-def _crash_mid_append(monkeypatch, store):
-    """Patch the fingerprint append so the ``store`` append lands the
-    first delta doc's row only and then crashes — the state a crash
-    part-way through a plain parquet append leaves (some task files
-    renamed in, the rest not); every other store appends normally."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    real = ing._fp_append_delta
-
-    def partial_then_crash(spark_, state_, delta, name):
-        if name != store:
-            return real(spark_, state_, delta, name)
-        real(spark_, state_, delta.orderBy("doc_id").limit(1), name)
-        raise RuntimeError(f"injected crash inside {store} append")
-
-    monkeypatch.setattr(ing, "_fp_append_delta", partial_then_crash)
-
-
-def test_wfp_partial_append_heals_on_redelivery(
-        spark, tmp_path, monkeypatch):
-    """A crash MID-APPEND into wfp/ lands whole rows for some docs and
-    nothing for the rest: each row holds a doc's complete fingerprint
-    set, so no served doc ever has a partial set, and the redelivered
-    batch's id anti-join appends exactly the missing docs — the store
-    then equals a recompute. The wfp twin of
-    test_dhash_partial_append_heals_on_redelivery."""
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    batch = spark.createDataFrame(
-        [(10, "ten eleven twelve thirteen fourteen fifteen sixteen "
-              "seventeen"),
-         (11, "completely different fresh words here and there again "
-              "later")],
-        ["doc_id", "text"])
-    _crash_mid_append(monkeypatch, "wfp")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ing.ingest_batch(spark, batch, state, batch_id=1)
-    monkeypatch.undo()
-    # crash landed doc 10's row but not doc 11's, corpus marker unwritten
-    want = _wfp_recompute(spark, batch.unionByName(spark.read.parquet(
-        L(os.path.join(state, "corpus")))))
-    served = _wfp_rows(spark, state)
-    served_ids = {d for d, _ in served}
-    assert 10 in served_ids and 11 not in served_ids
-    # every served doc carries its COMPLETE fingerprint set
-    assert served == [r for r in want if r[0] in served_ids]
-    # redelivery appends exactly the missing doc; store ≡ recompute
-    ing.ingest_batch(spark, batch, state, batch_id=1)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert _wfp_rows(spark, state) == want == _wfp_recompute(spark, corpus)
-
-
-def test_id_stores_bucketed_and_takedown_relinks_untouched(
+def test_members_store_bucketed_and_takedown_equals_recompute(
         spark, tmp_path):
-    """Round-13 layout contract for the id-keyed stores (verdict
-    missing #4): members/wfp/dhash/afp are written hash-bucketed on
-    their id (bucket=N partition dirs), and a takedown rewrites ONLY
-    the buckets the tombstones hash into — every untouched bucket's
-    parquet files are carried into the new epoch by hardlink (same
-    inode, zero bytes rewritten), the local miniature of a
-    Delta/Iceberg DELETE re-manifesting unchanged files."""
+    """Layout contract of the id-keyed members/ store: it is written
+    hash-bucketed on its id (bucket=N partition dirs, each holding
+    exactly the ids that hash to it), and after takedowns the store and
+    the fingerprint views still equal a from-scratch pass over the
+    survivors."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
     ing.ingest_batch(spark, spark.createDataFrame(
         _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-    # (a) layout: every id-keyed store is bucket-partitioned
-    for name in ("members", "wfp", "dhash", "afp"):
-        live = L(os.path.join(state, name))
-        assert any(n.startswith("bucket=") for n in os.listdir(live)), \
-            f"{name} not bucket-partitioned"
 
-    def inodes(live):
-        out = {}
-        for d in os.listdir(live):
-            if not d.startswith("bucket="):
-                continue
-            for f in os.listdir(os.path.join(live, d)):
-                if f.endswith(".parquet"):
-                    out[(d, f)] = os.stat(
-                        os.path.join(live, d, f)).st_ino
-        return out
+    def assert_members_bucketed(ids):
+        live = L(os.path.join(state, "members"))
+        assert any(n.startswith("bucket=") for n in os.listdir(live))
+        stored = spark.read.parquet(live)
+        assert sorted(r["id"] for r in stored.collect()) == ids
+        want = ing._with_id_bucket(stored.drop("bucket"), "id")
+        assert (sorted(map(tuple, stored.select("id", "bucket").collect()))
+                == sorted(map(tuple, want.select("id", "bucket")
+                              .collect())))
 
-    wfp_dir = os.path.join(state, "wfp")
-    before = inodes(L(wfp_dir))
-    tomb_bucket = ing._with_id_bucket(
-        spark.createDataFrame([(2,)], "doc_id long"),
-        "doc_id").collect()[0]["bucket"]
+    assert_members_bucketed([1, 2, 3, 4])
     ing.delete_docs(spark, state, [2])
-    live_after = L(wfp_dir)
-    after = inodes(live_after)
-    # (b) every untouched bucket file is the SAME inode (hardlink,
-    # not a rewrite); the touched bucket got fresh files
-    untouched_before = {k: v for k, v in before.items()
-                        if k[0] != f"bucket={tomb_bucket}"}
-    assert untouched_before, "fixture must span several buckets"
-    for k, ino in untouched_before.items():
-        assert after.get(k) == ino, f"untouched {k} was rewritten"
-    assert all(k[0] == f"bucket={tomb_bucket}"
-               or k in untouched_before for k in after)
-    # (c) values: store equals a from-scratch pass on the survivors
+    assert_members_bucketed([1, 3, 4])
     corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
     assert not any(r["doc_id"] == 2
                    for r in ing.read_dhash(spark, state).collect())
-    # (d) the old epoch GC cannot strand the linked files: a second
-    # takedown (forcing another swap + GC of the pre-delete epoch)
-    # leaves the store fully readable
+    # a second takedown (another swap + GC of the pre-delete epochs)
+    # leaves every store fully readable
     ing.delete_docs(spark, state, [3])
+    assert_members_bucketed([1, 4])
     corpus2 = spark.read.parquet(L(os.path.join(state, "corpus")))
     assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus2)
 
@@ -1927,6 +1726,65 @@ def test_hll_store_all_short_docs_reads_zero_and_recovers(
     assert est2 >= 5  # 10 tokens -> 6 distinct 5-shingles, ±1.6% err
 
 
+def test_view_rebuild_crash_reads_corpus_and_retry_restores_manifest(
+        spark, tmp_path, monkeypatch):
+    """A crash inside the view rebuild of compact_state and of
+    delete_docs, between the first view swap and the manifest write.
+    The rebuild dropped the ``_VIEWS`` manifest before its first view
+    write, so while the views are half rewritten every reader builds
+    from the live corpus and equals a recompute; the retry
+    (compact_state again, delete_docs with no new ids) writes the
+    manifest back, naming the live corpus epoch, and the readers still
+    equal a recompute."""
+    import json
+    from cati_database_feeder_spark.streaming import ingest as ing
+    state = str(tmp_path / "state")
+    corpus_dir = os.path.join(state, "corpus")
+    manifest = os.path.join(state, ing._MANIFEST)
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
+    ing.ingest_batch(spark, spark.createDataFrame(
+        _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
+    real_swap = ing._swap_write
+
+    def crash_after_view_swap(df, target, writer=None):
+        real_swap(df, target, writer)
+        if os.path.basename(target) in ing._VIEWS:
+            raise RuntimeError("injected crash after a view swap")
+
+    def assert_views_equal_recompute():
+        corpus = spark.read.parquet(L(corpus_dir))
+        assert _cbloom_cells(spark, state) == _cbloom_recompute(spark,
+                                                                corpus)
+        est = (ing._hll_of(corpus).select(F.hll_sketch_estimate("sk"))
+               .collect()[0][0])
+        assert ing.read_hll(spark, state)[0] == est
+        assert _wfp_rows(spark, state) == _wfp_recompute(spark, corpus)
+        assert sorted(map(tuple, ing.read_dhash(spark, state).collect())) \
+            == _dhash_recompute(spark, corpus)
+        assert sorted(map(tuple, ing.read_afp(spark, state).collect())) \
+            == _afp_recompute(spark, corpus)
+
+    for op, retry in (
+            (lambda: ing.compact_state(spark, state, target_files=2),
+             lambda: ing.compact_state(spark, state, target_files=2)),
+            (lambda: ing.delete_docs(spark, state, [2]),
+             lambda: ing.delete_docs(spark, state, []))):
+        monkeypatch.setattr(ing, "_swap_write", crash_after_view_swap)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            op()
+        monkeypatch.setattr(ing, "_swap_write", real_swap)
+        assert not os.path.exists(manifest)
+        assert_views_equal_recompute()
+        retry()
+        with open(manifest) as fh:
+            assert json.load(fh)["corpus"] == os.path.basename(
+                L(corpus_dir))
+        assert_views_equal_recompute()
+    assert sorted(r["doc_id"] for r in spark.read.parquet(
+        L(corpus_dir)).collect()) == [1, 3, 4]
+
+
 def _dhash_recompute(spark, docs):
     from cati_database_feeder_spark.streaming import ingest as ing
     return sorted(map(tuple, ing._dhash_of(docs).collect()))
@@ -1934,12 +1792,10 @@ def _dhash_recompute(spark, docs):
 
 def test_dhash_store_multi_batch_equals_recompute_and_replays(
         spark, tmp_path):
-    """The maintained perceptual-hash store (E72+): across bootstrap +
-    a batch (with an exact-dup replay inside it) the store equals a
-    from-scratch dhash pass over the final corpus; re-ingesting the
-    identical batch changes nothing (id anti-join guard). One row per
-    doc — the structural property that makes the plain append
-    crash-safe (shared by the whole fingerprint family)."""
+    """The perceptual-hash view (E72+): across bootstrap + a batch
+    (with an exact-dup replay inside it) the view equals a from-scratch
+    dhash pass over the final corpus, one row per doc; re-ingesting
+    the identical batch changes nothing."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(
@@ -1974,37 +1830,6 @@ def test_dhash_store_takedown_and_geometry_pin(
         monkeypatch.setattr(mm, "_DHASH_GRID_W", 9)
         ing.ingest_batch(spark, spark.createDataFrame(
             _WFP_DOCS1, ["doc_id", "text"]), state, batch_id=1)
-
-
-def test_dhash_partial_append_heals_on_redelivery(
-        spark, tmp_path, monkeypatch):
-    """The E72+ structural crash-safety claim, exercised rather than
-    argued: a crash MID-APPEND leaves whole rows for some docs and
-    nothing for the rest (one row per doc — there is no partial-doc
-    state), and the redelivered batch's id anti-join appends exactly
-    the missing docs. Simulated by an injected append that lands only
-    the first doc's row before crashing."""
-    import pytest as _pytest
-    from cati_database_feeder_spark.streaming import ingest as ing
-    state = str(tmp_path / "state")
-    ing.ingest_batch(spark, spark.createDataFrame(
-        _WFP_DOCS0, ["doc_id", "text"]), state, batch_id=0)
-    _crash_mid_append(monkeypatch, "dhash")
-    batch = spark.createDataFrame(
-        [(10, "ten eleven twelve thirteen fourteen"),
-         (11, "completely different fresh words here")],
-        ["doc_id", "text"])
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        ing.ingest_batch(spark, batch, state, batch_id=1)
-    monkeypatch.undo()
-    # crash landed doc 10's row but not doc 11's, corpus marker unwritten
-    stored = {r["doc_id"] for r in ing.read_dhash(spark, state).collect()}
-    assert 10 in stored and 11 not in stored
-    # redelivery appends exactly the missing doc; store ≡ recompute
-    ing.ingest_batch(spark, batch, state, batch_id=1)
-    corpus = spark.read.parquet(L(os.path.join(state, "corpus")))
-    assert sorted(map(tuple, ing.read_dhash(spark, state).collect())) \
-        == _dhash_recompute(spark, corpus)
 
 
 def test_embedding_ingest_maintains_pq_codes(spark, tmp_path):
@@ -2153,11 +1978,10 @@ def _afp_recompute(spark, docs):
 
 def test_afp_store_multi_batch_equals_recompute_and_replays(
         spark, tmp_path):
-    """The maintained audio-fingerprint store (E83+): across
-    bootstrap + a batch (with an exact-dup replay inside it) the store
-    equals a from-scratch fingerprint pass over the final corpus;
-    re-ingesting the identical batch changes nothing. One row per doc
-    — the dhash structural crash-safety property."""
+    """The audio-fingerprint view (E83+): across bootstrap + a batch
+    (with an exact-dup replay inside it) the view equals a from-scratch
+    fingerprint pass over the final corpus, one row per doc;
+    re-ingesting the identical batch changes nothing."""
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, spark.createDataFrame(

@@ -86,13 +86,13 @@ def _read_stamp(state):
 
 def test_bootstrap_writes_layout_stamps(text_state, emb_state):
     assert _read_stamp(text_state) == {
-        "kind": "text", "cms": [4, 2048], "cbloom": [65536, 2],
+        "kind": "text", "cbloom": [65536, 2],
         "hll_lgk": 12, "wfp": [4, 4], "dhash_grid": [7, 10],
         "afp_bits": 60, "n_id_buckets": 64}
     assert _read_stamp(emb_state) == {"kind": "embeddings"}
 
 
-_TEXT_PINS = [(ing, "CMS_WIDTH", 1024), (ing, "CBLOOM_K", 3),
+_TEXT_PINS = [(ing, "CBLOOM_K", 3),
               (ing, "HLL_LGK", 11), (ing, "WFP_K", 5),
               (mm, "_DHASH_GRID_W", 9), (mm, "AUDIO_HASH_BITS", 48),
               (ing, "N_ID_BUCKETS", 32)]

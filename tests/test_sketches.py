@@ -152,8 +152,8 @@ def test_cms_heavy_hitters_equals_exact_and_prunes(spark):
 
 
 def test_cms_heavy_hitters_injected_table(spark):
-    """A maintained sketch (streaming.ingest.read_cms shape) can be
-    injected; the result still equals the exact query."""
+    """A prebuilt sketch table can be injected; the result still equals
+    the exact query."""
     rows = [("a",)] * 9 + [("b",)] * 2
     items = spark.createDataFrame(rows, ["k"])
     t = sketches.cms_table(items, "k")
@@ -214,8 +214,8 @@ def test_counting_bloom_subtract_preserves_shared_keys(spark):
 
 
 def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
-    """The ingest fingerprint family (streaming/ingest.py _FP_STORES):
-    after a bootstrap, each of wfp/, dhash/ and afp/ holds exactly one
+    """The ingest fingerprint family (the wfp/, dhash/ and afp/ views of
+    streaming/ingest.py): after a bootstrap, each holds exactly one
     row per document — a doc shorter than one winnowing window
     included — read_wfp serves exactly winnow_fingerprints over the
     docs, the layout stamp pins each store's geometry, and a geometry
@@ -234,7 +234,7 @@ def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
          (3, short)], ["doc_id", "text"])
     state = str(tmp_path / "state")
     ing.ingest_batch(spark, docs, state, batch_id=0)
-    for name in ing._FP_STORES:
+    for name in ("wfp", "dhash", "afp"):
         ids = [r["doc_id"] for r in spark.read.parquet(
             ing.live_store(os.path.join(state, name)))
             .select("doc_id").collect()]
@@ -258,49 +258,91 @@ def test_ingest_fingerprint_family_contract(spark, tmp_path, monkeypatch):
 
 
 def test_ingest_sketch_family_contract(spark, tmp_path):
-    """The ingest sketch stores (streaming/ingest.py: cms/ and cbloom/
-    from _SKETCH_STORES, plus hll/) across a bootstrap, one batch, one
-    delete and a redelivery of that batch: every store equals a
-    from-scratch count over the final corpus, takedown resets the
-    counting sketches' replay fingerprint to the no-delta sentinel,
-    and no per-batch ``*_pending`` sidecar is ever left in the state
-    dir."""
+    """The views of the corpus (streaming/ingest.py ``_VIEWS``: cbloom/,
+    hll/, wfp/, dhash/, afp/) across a bootstrap, a batch, a delete, a
+    redelivery, a second batch and a compaction:
+
+    - an incremental batch writes files only under corpus/, members/,
+      reps/, buckets/, labels/, pairs/ and metrics/, so every view
+      dir's listing is unchanged by it, and a redelivery writes
+      nothing;
+    - every reader equals a from-scratch build over the live corpus,
+      with a non-empty tail (after each batch) and with an empty one
+      (after the bootstrap, the delete and compact_state, which
+      rebuild the views and rewrite the manifest)."""
+    import json
     import os
+    from cati_database_feeder_spark.operators.dedup import (
+        winnow_fingerprints)
     from cati_database_feeder_spark.streaming import ingest as ing
     state = str(tmp_path / "state")
-    docs0 = [(1, "alpha beta gamma delta epsilon zeta"),
-             (2, "alpha beta gamma delta epsilon"),
-             (3, "one two three four five six seven")]
-    batch = spark.createDataFrame(
-        [(4, "eight nine ten eleven twelve"), (5, "one two three four")],
-        ["doc_id", "text"])
+    corpus_dir = os.path.join(state, "corpus")
+    batch_stores = {"corpus", "members", "reps", "buckets", "labels",
+                    "pairs", "metrics"}
+
+    def listing():
+        return {os.path.relpath(os.path.join(d, f), state):
+                os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(state) for f in fs}
+
+    def stores_touched_by_ingest(rows, batch_id):
+        before = listing()
+        ing.ingest_batch(spark, spark.createDataFrame(
+            rows, ["doc_id", "text"]), state, batch_id=batch_id)
+        after = listing()
+        return {p.split(os.sep)[0].split("__e")[0].split(".")[0]
+                for p in before.keys() | after.keys()
+                if before.get(p) != after.get(p)}
+
+    def tail():
+        with open(os.path.join(state, ing._MANIFEST)) as fh:
+            manifest = json.load(fh)
+        live = ing.live_store(corpus_dir)
+        assert manifest["corpus"] == os.path.basename(live)
+        return set(ing._part_files(live)) - set(manifest["files"])
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def assert_views_equal_scratch():
+        corpus = spark.read.parquet(ing.live_store(corpus_dir))
+        cells = rows(ing.read_cbloom(spark, state))
+        assert cells and cells == rows(ing._cbloom_of(corpus))
+        est = (ing._hll_of(corpus).select(F.hll_sketch_estimate("sk"))
+               .collect()[0][0])
+        assert ing.read_hll(spark, state) == (est, ing.HLL_LGK)
+        assert rows(ing.read_wfp(spark, state)) == rows(
+            winnow_fingerprints(corpus, k=ing.WFP_K, w=ing.WFP_W))
+        assert rows(ing.read_dhash(spark, state)) \
+            == rows(ing._dhash_of(corpus))
+        assert rows(ing.read_afp(spark, state)) \
+            == rows(ing._afp_of(corpus))
+
+    batch1 = [(4, "eight nine ten eleven twelve thirteen"),
+              (5, "one two three four")]
     ing.ingest_batch(spark, spark.createDataFrame(
-        docs0, ["doc_id", "text"]), state, batch_id=0)
-    ing.ingest_batch(spark, batch, state, batch_id=1)
+        [(1, "alpha beta gamma delta epsilon zeta"),
+         (2, "alpha beta gamma delta epsilon"),
+         (3, "one two three four five six seven")],
+        ["doc_id", "text"]), state, batch_id=0)
+    assert not tail()
+    touched = stores_touched_by_ingest(batch1, 1)
+    assert "corpus" in touched and touched <= batch_stores
+    assert tail()
+    assert_views_equal_scratch()
     ing.delete_docs(spark, state, [2])
-
-    def fp_rows():
-        return {name: [tuple(r) for r in spark.read.parquet(
-            ing.live_store(os.path.join(state, name)))
-            .filter(F.col("r") == ing._CMS_FP_ROW)
-            .select("cnt", "bucket").collect()]
-            for name, _, _ in ing._SKETCH_STORES}
-
-    assert fp_rows() == {name: [ing._CMS_NO_FP]
-                         for name, _, _ in ing._SKETCH_STORES}
-    ing.ingest_batch(spark, batch, state, batch_id=1)   # redelivery
-    corpus = spark.read.parquet(ing.live_store(os.path.join(state,
-                                                            "corpus")))
-    assert sorted(r["doc_id"] for r in corpus.collect()) == [1, 3, 4, 5]
-    for name, cells_of, dims in ing._SKETCH_STORES:
-        stored = sorted(map(tuple, spark.read.parquet(ing.live_store(
-            os.path.join(state, name))).filter(F.col("r") >= 0)
-            .select("r", "bucket", "cnt").collect()))
-        fresh = sorted(map(tuple, cells_of(corpus, *dims).select(
-            F.col("r").cast("int"), F.col("bucket").cast("bigint"),
-            F.col("cnt").cast("bigint")).collect()))
-        assert stored and stored == fresh, name
-    fresh_hll = (ing._hll_frame(spark, corpus)
-                 .select(F.hll_sketch_estimate("sk")).collect()[0][0])
-    assert ing.read_hll(spark, state) == (fresh_hll, ing.HLL_LGK)
-    assert not [n for n in os.listdir(state) if "_pending" in n]
+    assert not tail()
+    assert_views_equal_scratch()
+    # redelivery of batch 1 and of the deleted doc: a pure replay
+    assert not stores_touched_by_ingest(
+        batch1 + [(2, "alpha beta gamma delta epsilon")], 1)
+    touched = stores_touched_by_ingest(
+        [(6, "alpha beta gamma delta epsilon zeta eta theta")], 2)
+    assert "corpus" in touched and touched <= batch_stores
+    assert tail()
+    assert_views_equal_scratch()
+    ing.compact_state(spark, state, target_files=2)
+    assert not tail()
+    assert_views_equal_scratch()
+    assert sorted(r["doc_id"] for r in spark.read.parquet(
+        ing.live_store(corpus_dir)).collect()) == [1, 3, 4, 5, 6]
