@@ -10341,9 +10341,10 @@ def excel_scan(spark, sf_dir):
     fixture dir picks up one bare .xlsx AND one .zip-wrapped .xlsx in
     a single binaryFile read; each file decodes where it lands via
     the Arrow mapInPandas ladder (pandas+openpyxl when present, the
-    dependency-free OOXML parser otherwise — sources/excel.py), the
-    long form re-widens with pivot_wave on the wave's dotted Cyrillic
-    headers, and the dotted headers are renamed to ASCII aliases (the
+    dependency-free OOXML parser otherwise — sources/excel.py) straight
+    to the wide rows of the wave's dotted Cyrillic headers (pivot_wave
+    re-plans the untouched scan: one stage, no shuffle), and the dotted
+    headers are renamed to ASCII aliases (the
     op-#14 rename applied to a real decoded workbook, reference
     feeder.py:124-137 semantics). Numeric cells (ids, quotas — typed
     in the sheet) come back as canonical strings, the blank cells as

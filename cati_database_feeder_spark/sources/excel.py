@@ -9,8 +9,16 @@ Engine shape: ``spark.read.format("binaryFile").load(glob)`` fans the
 *files* out across executors, and an Arrow-batched ``mapInPandas``
 decodes each archive where it lands — no driver bottleneck, no whole-
 dataset RAM spike; one task per file, which is the right granularity
-because xlsx is not splittable. The canonical pipeline converts to
-parquet once and every downstream query scans parquet (catalog.py).
+because xlsx is not splittable. ``read_excel_glob`` yields the long
+form (one row per cell), whose schema holds for any workbook;
+``pivot_wave`` widens it to a wave's column list. Handed the untouched
+``read_excel_glob`` frame, ``pivot_wave`` re-plans from the file scan
+and decodes each file straight to its wide rows, as the reference's
+one ``pd.read_excel`` per file does: one task per file, one stage per
+wave, no long form and no shuffle, so whatever the caller chains on
+(transform, broadcast anti-join, JDBC append) runs in that same stage.
+The canonical pipeline converts to parquet once and every downstream
+query scans parquet (catalog.py).
 
 openpyxl is an optional dependency (present in the reference's lockfile,
 absent in minimal clusters) — when missing, decode falls back to a
@@ -22,6 +30,7 @@ degrades to a clear error row.
 
 from __future__ import annotations
 
+import functools
 import io
 import zipfile
 from collections.abc import Iterator
@@ -29,6 +38,7 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 # xlsx sheets become string columns; schema-on-read like the reference
 # (feeder.py:121), but explicit here so the scan has a stable schema.
@@ -46,6 +56,24 @@ def _col_index(cell_ref: str) -> int:
             break
         idx = idx * 26 + (ord(ch.upper()) - 64)
     return idx - 1
+
+
+def _header_names(cells: dict[int, str | None], width: int) -> list[str]:
+    """Header row → column names the way ``pd.read_excel`` names them:
+    a blank cell is ``Unnamed: {i}``, a repeat of ``X`` is ``X.1``,
+    ``X.2``, … (skipping any name already taken)."""
+    names: list[str] = []
+    counts: dict[str, int] = {}
+    for i in range(width):
+        name = cells.get(i) or f"Unnamed: {i}"
+        n = counts.get(name, 0)
+        while n:
+            counts[name] = n + 1
+            name = f"{name}.{n}"
+            n = counts.get(name, 0)
+        counts[name] = 1
+        names.append(name)
+    return names
 
 
 def _read_xlsx_minimal(payload: bytes) -> pd.DataFrame:
@@ -86,7 +114,7 @@ def _read_xlsx_minimal(payload: bytes) -> pd.DataFrame:
     if not raw_rows:
         return pd.DataFrame()
     width = max((max(r) + 1 for r in raw_rows if r), default=0)
-    header = [raw_rows[0].get(i) or f"col{i}" for i in range(width)]
+    header = _header_names(raw_rows[0], width)
     data = [[r.get(i) for i in range(width)] for r in raw_rows[1:]]
     return pd.DataFrame(data, columns=header, dtype="object")
 
@@ -107,26 +135,31 @@ def _decode_xlsx(payload: bytes) -> pd.DataFrame:
     return _read_xlsx_minimal(payload)
 
 
+def _decode_file(path: str, content) -> pd.DataFrame:
+    """One binaryFile row → the workbook as a frame of string cells.
+    Raises on a payload that does not decode."""
+    payload = bytes(content)
+    # extension-only detection on purpose: xlsx files are ALSO zip
+    # archives (PK magic), so sniffing bytes would mis-unwrap them; the
+    # reference unwraps only *.zip (feeder.py:119, add_q5011_2t.py:112)
+    if path.endswith(".zip"):
+        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+            # reference semantics: first archive member is the data
+            # (feeder.py:120: namelist()[0])
+            payload = zf.read(zf.namelist()[0])
+    return _decode_xlsx(payload)
+
+
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: binaryFile rows (path, content) → long-form
     (path, sheet, row_idx, col_name, value) rows. Long form keeps the
     schema stable across heterogeneous workbooks; callers pivot with
-    groupBy().pivot() once they know the wave's columns."""
+    :func:`pivot_wave` once they know the wave's columns."""
     for pdf in batches:
         out = []
         for path, content in zip(pdf["path"], pdf["content"]):
             try:
-                payload = bytes(content)
-                # extension-only detection on purpose: xlsx files are
-                # ALSO zip archives (PK magic), so sniffing bytes would
-                # mis-unwrap them; the reference unwraps only *.zip
-                # (feeder.py:119, add_q5011_2t.py:112)
-                if path.endswith(".zip"):
-                    with zipfile.ZipFile(io.BytesIO(payload)) as zf:
-                        # reference semantics: first archive member is the data
-                        # (feeder.py:120: namelist()[0])
-                        payload = zf.read(zf.namelist()[0])
-                frame = _decode_xlsx(payload)
+                frame = _decode_file(path, content)
             except Exception as exc:
                 out.append(pd.DataFrame(
                     {"path": [path], "sheet": ["<error>"], "row_idx": [-1],
@@ -141,22 +174,64 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield from out or [pd.DataFrame(columns=["path", "sheet", "row_idx", "col_name", "value"])]
 
 
+def _decode_wide(columns: list[str],
+                 batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas worker: binaryFile rows → (path, row_idx, *columns)
+    rows, exactly the rows and values the generic pivot of the long form
+    gives: a column the workbook lacks is null, and a file that does not
+    decode, or holds none of ``columns``, has no cell left after the
+    pivot's filter and so gives no rows."""
+    for pdf in batches:
+        for path, content in zip(pdf["path"], pdf["content"]):
+            try:
+                frame = _decode_file(path, content)
+            except Exception:
+                continue
+            if not frame.columns.isin(columns).any():
+                continue
+            wide = frame.reindex(columns=columns).astype("string")
+            wide.insert(0, "row_idx", frame.index)
+            wide.insert(0, "path", path)
+            yield wide
+
+
 def read_excel_glob(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Ops #1-#3: distributed multi-file Excel/zip scan.
+    """Ops #1-#3: distributed multi-file Excel/zip scan, in long form.
 
     ``glob_path`` like ``/data/xlsx/*.zip`` or ``*.xlsx``; per-file
     semantics (the updaters' one-batch-per-file logic) come free from
-    the ``path`` column — group on it like ``input_file_name()``.
+    the ``path`` column — group on it like ``input_file_name()``. A file
+    that does not decode is one ``col_name = '__error__'`` row holding
+    the error. The frame remembers the file scan it was built from, so
+    that :func:`pivot_wave` can re-plan it untouched.
     """
     binary = (spark.read.format("binaryFile")
               .option("pathGlobFilter", glob_path.rsplit("/", 1)[-1])
               .load(glob_path.rsplit("/", 1)[0])
               .select("path", "content"))
-    return binary.mapInPandas(_decode_batches, schema=DECODED_SCHEMA)
+    decoded = binary.mapInPandas(_decode_batches, schema=DECODED_SCHEMA)
+    decoded._excel_scan = binary
+    return decoded
 
 
 def pivot_wave(decoded: DataFrame, columns: list[str]) -> DataFrame:
-    """Re-widen the long-form decode for a known wave layout."""
+    """Re-widen the long-form decode for a known wave layout:
+    ``(path, row_idx, *columns)`` string rows, one per sheet row of each
+    file holding any of ``columns``; a column the file lacks is null.
+
+    Given the frame :func:`read_excel_glob` returned, untouched, the
+    result is re-planned from its file scan: each file decodes straight
+    to its wide rows in one ``mapInPandas`` (one task per file, one stage
+    per wave, no shuffle). Any other long-form frame (filtered, unioned,
+    checkpointed) takes the generic filter + ``groupBy().pivot()``; both
+    give the same schema and rows."""
+    scan = vars(decoded).get("_excel_scan")
+    if scan is not None:
+        schema = StructType(
+            [StructField("path", StringType()), StructField("row_idx", LongType())]
+            + [StructField(c, StringType()) for c in columns])
+        return scan.mapInPandas(functools.partial(_decode_wide, list(columns)),
+                                schema=schema)
     from pyspark.sql import functions as F
     return (decoded.filter(F.col("col_name").isin(columns))
             .groupBy("path", "row_idx")

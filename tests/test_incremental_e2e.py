@@ -238,16 +238,33 @@ def test_store_backed_pairs_equal_reference_operator(spark, sf_dir):
     assert joined.filter(F.col("key") != F.col("k2")).count() == 0
 
 
+def _file_scans(plan) -> list[tuple[str, list[str]]]:
+    """(root paths, read fields) of every FileScan under a physical
+    plan, looking through AQE and cached relations. Read off the JVM
+    nodes, because the plan's text abbreviates a long ``Location``."""
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _file_scans(plan.inputPlan())
+    if kind == "InMemoryTableScanExec":
+        return _file_scans(plan.relation().cachedPlan())
+    if kind == "FileSourceScanExec":
+        return [(plan.relation().location().rootPaths().mkString(","),
+                 list(plan.requiredSchema().fieldNames()))]
+    children = plan.children()
+    return [scan for i in range(children.size())
+            for scan in _file_scans(children.apply(i))]
+
+
 def test_incremental_path_reads_no_corpus_text(spark, tmp_path):
     """THE round-7 contract: after bootstrap, every frame the
     incremental path builds — delta, membership, pairs, labels, store
-    appends — must not read the corpus text column. Walks each frame's
-    optimized plan: any scan of corpus/ may read doc_id alone; the
-    text column may appear only in scans of the BATCH input and the
-    reps store (rep token arrays are derived store content, not corpus
-    text)."""
+    appends — must not read the corpus text column. Walks the FileScan
+    nodes of each frame's executed plan: any scan of the live corpus
+    store may read doc_id alone; the text column may appear only in scans of the
+    BATCH input and the reps store (rep token arrays are derived store
+    content, not corpus text)."""
     from cati_database_feeder_spark.streaming.ingest import (
-        _incremental_frames, ingest_batch)
+        _incremental_frames, ingest_batch, live_store)
 
     rows = [(10, "alpha beta gamma delta"), (11, "alpha beta gamma x"),
             (40, "foo bar baz qux"), (41, "foo bar baz qux quux")]
@@ -257,14 +274,16 @@ def test_incremental_path_reads_no_corpus_text(spark, tmp_path):
 
     batch = df.filter(F.col("doc_id") >= 40)
     fr = _incremental_frames(spark, state, batch, 0.7, 16, 4)
-    corpus_path = os.path.join(state, "corpus")
+    corpus_dir = live_store(os.path.join(state, "corpus"))
+    corpus_scans = 0
     for name, frame in fr.items():
-        plan = frame._jdf.queryExecution().optimizedPlan().toString()
-        for line in plan.splitlines():
-            if "Relation" in line and corpus_path in line:
-                # relation line lists the read columns: doc_id only
-                assert "text" not in line, (
-                    f"frame {name!r} reads corpus text: {line}")
+        plan = frame._jdf.queryExecution().executedPlan()
+        for location, fields in _file_scans(plan):
+            if corpus_dir in location:
+                corpus_scans += 1
+                assert "text" not in fields, (
+                    f"frame {name!r} reads corpus text: {location} {fields}")
+    assert corpus_scans, "no frame scans corpus/"
 
 
 def test_swap_crash_recovery(spark, tmp_path):

@@ -57,6 +57,98 @@ def test_pivot_wave_rewiden(spark, xlsx_dir):
     assert {r["Result"] for r in wide} == {"Полное", "Брак"}
 
 
+def _generic_pivot(decoded, columns):
+    # a checkpoint of the decode is not read_excel_glob's own frame, so
+    # pivot_wave takes the groupBy-pivot over the long form
+    return excel.pivot_wave(decoded.localCheckpoint(), columns)
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_wide_equals_generic(spark, glob, columns):
+    decoded = excel.read_excel_glob(spark, glob)
+    wide = excel.pivot_wave(decoded, columns)
+    generic = _generic_pivot(decoded, columns)
+    assert wide.schema == generic.schema
+    got = _rows(wide)
+    assert got == _rows(generic)
+    return got
+
+
+def test_minimal_reader_names_headers_like_pandas(spark, tmp_path):
+    """A repeated header is mangled X, X.1, … and a blank one is
+    'Unnamed: {i}', as pd.read_excel names them, so the long form holds
+    one cell per (path, row_idx, col_name)."""
+    payload = excel.write_xlsx_bytes(
+        ["ID", "X", "X", None, "X.1", "Y"],
+        [("1", "a", "b", "c", "d", "e"), ("2", "f", "g", None, "h", "i")])
+    frame = excel._read_xlsx_minimal(payload)
+    assert list(frame.columns) == ["ID", "X", "X.1", "Unnamed: 3", "X.1.1", "Y"]
+    assert list(frame.iloc[0]) == ["1", "a", "b", "c", "d", "e"]
+    (tmp_path / "dup.xlsx").write_bytes(payload)
+    cells = [(r["row_idx"], r["col_name"]) for r in
+             excel.read_excel_glob(spark, f"{tmp_path}/*").collect()]
+    assert len(cells) == len(set(cells)) == 12
+    got = _assert_wide_equals_generic(spark, f"{tmp_path}/*", ["ID", "X", "X.1"])
+    assert [r[2:] for r in got] == [("1", "a", "b"), ("2", "f", "g")]
+
+
+def test_pivot_wave_wide_equals_generic(spark, xlsx_dir, tmp_path):
+    """The re-planned wide decode returns the generic pivot's schema
+    and rows on the bare .xlsx + .zip fixture and on the pinned excel
+    fixture (numeric cells, blanks, Cyrillic dotted headers)."""
+    got = _assert_wide_equals_generic(
+        spark, f"{xlsx_dir}/*", ["ID", "Phone", "Result"])
+    assert len(got) == 4
+    d = excel.ensure_excel_fixture(str(tmp_path / "xl"))
+    got = _assert_wide_equals_generic(spark, f"{d}/*", excel.EXCEL_WAVE_COLUMNS)
+    want = [(os.path.join(d, f), i, *r)
+            for f, rows in excel.excel_fixture_rows().items()
+            for i, r in enumerate(rows)]
+    assert sorted(((p.removeprefix("file:"), i, *r) for p, i, *r in got),
+                  key=repr) == sorted(want, key=repr)
+
+
+def test_pivot_wave_missing_column_is_null(spark, xlsx_dir):
+    got = _assert_wide_equals_generic(
+        spark, f"{xlsx_dir}/*", ["ID", "Absent", "Result"])
+    assert len(got) == 4
+    assert all(r[3] is None and r[2] in ("1", "2") for r in got)
+
+
+def test_pivot_wave_corrupt_file_gives_no_wide_rows(spark, tmp_path):
+    from conftest import make_xlsx
+    (tmp_path / "good.xlsx").write_bytes(
+        make_xlsx(["ID", "Result"], [["1", "Полное"]]))
+    with zipfile.ZipFile(tmp_path / "bad.zip", "w") as zf:
+        zf.writestr("export.xlsx", b"not really an xlsx")
+    errors = [r["path"] for r in
+              excel.read_excel_glob(spark, f"{tmp_path}/*").collect()
+              if r["col_name"] == "__error__"]
+    assert len(errors) == 1 and errors[0].endswith("bad.zip")
+    got = _assert_wide_equals_generic(spark, f"{tmp_path}/*", ["ID", "Result"])
+    assert [r[0].rsplit("/", 1)[-1] for r in got] == ["good.xlsx"]
+
+
+def test_pivot_wave_file_without_requested_columns_gives_no_rows(spark, tmp_path):
+    from conftest import make_xlsx
+    (tmp_path / "other.xlsx").write_bytes(make_xlsx(["A", "B"], [["1", "2"]]))
+    assert _assert_wide_equals_generic(spark, f"{tmp_path}/*", ["ID", "Result"]) == []
+
+
+def test_pivot_wave_plans_no_exchange(spark, xlsx_dir):
+    """Handed read_excel_glob's own frame, pivot_wave plans one
+    mapInPandas over the file scan and no shuffle; the generic pivot
+    needs one."""
+    decoded = excel.read_excel_glob(spark, f"{xlsx_dir}/*")
+    plan = lambda df: df._jdf.queryExecution().executedPlan().toString()
+    wide = plan(excel.pivot_wave(decoded, ["ID", "Phone", "Result"]))
+    assert "MapInPandas" in wide and "Exchange" not in wide, wide
+    assert "Exchange" in plan(_generic_pivot(decoded, ["ID", "Phone", "Result"]))
+
+
 def test_fetch_paginated_parallel(spark):
     def fake_fetch(url):
         page = int(url.split("PageNumber=")[1])
