@@ -2,25 +2,19 @@
 
 The missing last step of every near-dup pipeline: candidate pairs say
 "A~B" and "B~C", but a keep-one dedup needs the transitive closure
-{A,B,C} with one canonical survivor. This runs min-label propagation
-over the pair graph with DataFrame ops only:
+{A,B,C} with one canonical survivor, the component's minimum id.
+:func:`connected_components` has two tiers, split by edge count:
 
-- each node starts labeled with itself;
-- every round, a node's label becomes the min of its own and its
-  neighbors' labels (one shuffle: edges⋈labels, groupBy dst, min);
-- stop when no label changed (or after ``_PROPAGATION_ROUNDS`` rounds).
-
-Rounds needed = graph diameter. Dup clusters in a pretraining corpus
-are dense blobs (near-cliques around a template), so diameter is small
-— single digits even at 100 TB. Each round is ONE hash shuffle of the
-edge list, the same cost class as one groupBy over the pairs; state
-between rounds is persisted and the previous round unpersisted, so
-lineage stays O(1) deep. For adversarially long path-graphs the loop
-switches to large-star/small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14), which converges in
-O(log²n) rounds with the same per-round shuffle shape — so a
-pathological chain in a 100 TB pair set converges instead of
-hard-stopping the pipeline (:func:`_star_components`).
+- up to ``_DRIVER_EDGE_CAP`` edges with integral ids, one pull of the
+  edge list and a vectorized union-find on the driver
+  (:func:`_driver_union_find`);
+- above it, large-star/small-star rounds over DataFrame ops (Kiveris
+  et al., "Connected Components in MapReduce and Beyond", SoCC'14;
+  :func:`_star_components`). They converge in O(log²n) rounds whatever
+  the graph diameter, so a pathological chain in a 100 TB pair set
+  converges like a dense dup blob. A round's edge list is checkpointed
+  and the previous one released, so lineage stays O(1) deep; once a
+  round's edge count fits the cap, the driver finishes the closure.
 """
 
 from __future__ import annotations
@@ -31,9 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# Min-label propagation rounds before the diameter-independent star
-# fallback takes over (dup clusters converge in single digits).
-_PROPAGATION_ROUNDS = 50
 # Edge count up to which the closure is solved on the driver: 4M edges
 # ≈ 64 MB of Arrow longs, the bound class of the broadcast threshold.
 _DRIVER_EDGE_CAP = 4_000_000
@@ -100,17 +91,13 @@ def _large_star(e: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _star_components(edges_sym: DataFrame, max_rounds: int = 100) -> DataFrame:
-    """Connected components by alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the diameter-independent fallback for adversarial graphs
-    where min-label propagation (one round per hop) would need as many
-    rounds as the longest path. Each round is two groupBy-min shuffles
-    of the edge list (the same cost class as one propagation round) and
-    the round count is O(log²n) worst-case, ~log n in practice.
-
-    ``edges_sym`` is the symmetric self-loop-free adjacency. State is a
-    DIRECTED edge list (src > dst, pointing at smaller ids):
+def _star_components(e: DataFrame, driver_finish: bool,
+                     max_rounds: int = 100) -> DataFrame:
+    """(id, component) of the (src, dst) edges ``e``, read as undirected,
+    by alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14): the
+    closure above the driver cap. State is a DIRECTED edge list
+    (src > dst, pointing at smaller ids):
 
     - large-star: for each node u, connect every strictly larger
       neighbor to m = min(Γ(u) ∪ {u});
@@ -120,19 +107,46 @@ def _star_components(edges_sym: DataFrame, max_rounds: int = 100) -> DataFrame:
     Both steps preserve connectivity and only ever link nodes to
     smaller nodes in their own component; the fixpoint is a forest of
     stars rooted at each component's minimum, detected exactly (edge
-    set unchanged — count plus set-difference, two edge-list-sized jobs
-    a round, fine for a fallback). Per-round frames are eagerly
-    checkpointed and released like the main loop."""
-    sc = edges_sym.sparkSession.sparkContext
-    nodes = edges_sym.select(F.col("src").alias("id")).distinct()
-    e = (edges_sym.filter(F.col("src") != F.col("dst"))
-         .select(F.greatest("src", "dst").alias("src"),
-                 F.least("src", "dst").alias("dst"))
-         .distinct().localCheckpoint(eager=True))
-    e_rdds = _checkpointed_rdd_ids(e)
-    n_edges = e.count()
+    set unchanged: count plus set-difference). A round is a few
+    groupBy-min shuffles of the edge list, and the round count is
+    O(log²n) worst case, ~log n in practice, whatever the graph
+    diameter: an adversarial chain converges like a dense dup blob.
+
+    With ``driver_finish`` (integral ids) the edge list goes to
+    :func:`_driver_components` in one ``toArrow()`` pull as soon as its
+    count, taken every round anyway, fits ``_DRIVER_EDGE_CAP``. One
+    round collapses a dense near-clique blob, the dup-corpus shape that
+    produces over-cap edge counts, into a node-count-sized star, so the
+    distributed rounds usually stop there. Both finishes label the
+    same partition by its minimum.
+
+    The rounds drop self-loops, and with them a node whose only edge is
+    a self-loop; the anti-join against the node set (both endpoints of
+    ``e``) adds such a node back as its own component. ``e`` is read
+    twice (node set and first round), so callers pass it persisted."""
+    spark = e.sparkSession
+    sc = spark.sparkContext
+    nodes = (e.select(F.col("src").alias("id"))
+             .unionByName(e.select(F.col("dst").alias("id"))).distinct())
+    # localCheckpoint (eager), NOT persist: iterative self-joins double
+    # the logical plan every round, and caching short-circuits execution
+    # but not Catalyst analysis — without lineage truncation each round's
+    # planning time grows exponentially (measured: 4 rounds went
+    # 4s/6s/23s/46s with persist, constant ~2s with checkpoint). On a
+    # real cluster a reliable checkpoint dir gives the same truncation
+    # with executor-loss tolerance.
+    cur = (e.filter(F.col("src") != F.col("dst"))
+           .select(F.greatest("src", "dst").alias("src"),
+                   F.least("src", "dst").alias("dst"))
+           .distinct().localCheckpoint(eager=True))
+    cur_rdds = _checkpointed_rdd_ids(cur)
+    n_edges = cur.count()
     for _ in range(max_rounds):
-        large = _large_star(e)
+        if driver_finish and n_edges <= _DRIVER_EDGE_CAP:
+            labels = _driver_components(spark, cur.toArrow(),
+                                        e.schema[0].dataType)
+            break
+        large = _large_star(cur)
         smin = large.groupBy("src").agg(F.min("dst").alias("mn"))
         small = (large.join(smin, "src")
                  .select(F.explode(F.array(
@@ -145,25 +159,29 @@ def _star_components(edges_sym: DataFrame, max_rounds: int = 100) -> DataFrame:
         new_rdds = _checkpointed_rdd_ids(small)
         n_new = small.count()
         converged = (n_new == n_edges
-                     and small.subtract(e).limit(1).count() == 0)
-        _release_rdds(sc, e_rdds)
-        e, e_rdds, n_edges = small, new_rdds, n_new
+                     and small.subtract(cur).limit(1).count() == 0)
+        # the eager checkpoint above fully materialized small, so the
+        # previous round's frame is dead — release its storage now,
+        # keeping live edge state at <= 2 frames for any round count
+        _release_rdds(sc, cur_rdds)
+        cur, cur_rdds, n_edges = small, new_rdds, n_new
         if converged:
+            labels = (cur.select(F.col("src").alias("id"),
+                                 F.col("dst").alias("component"))
+                      .unionByName(cur.select(F.col("dst").alias("id"),
+                                              F.col("dst").alias("component")))
+                      .distinct())
             break
     else:
-        _release_rdds(sc, e_rdds)
+        _release_rdds(sc, cur_rdds)
         raise RuntimeError(
             f"large-star/small-star did not converge in {max_rounds} "
             f"rounds — at O(log^2 n) convergence this exceeds any "
             f"realizable graph; suspecting corrupt edge input")
-    labels = (e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-              .unionByName(e.select(F.col("dst").alias("id"),
-                                    F.col("dst").alias("component")))
-              .distinct())
     singles = (nodes.join(labels.select("id"), "id", "left_anti")
                .withColumn("component", F.col("id")))
     out = labels.unionByName(singles).localCheckpoint(eager=True)
-    _release_rdds(sc, e_rdds)
+    _release_rdds(sc, cur_rdds)
     return out
 
 
@@ -172,13 +190,14 @@ def _driver_union_find(srcs, dsts):
     numpy min-propagation along the edges plus pointer doubling until
     fixpoint. The fixpoint of 'label := min(own label, neighbors'
     labels)' is exactly the component MINIMUM, i.e. the same canonical
-    labeling the per-edge union-by-min loop produced and the
-    distributed propagation converges to — but each pass is O(E) numpy
-    kernel work instead of 2·E Python-level find() calls (measured
-    ~10× on the 1M-edge cap-sized graphs the bootstrap closure pulls
-    to the driver). Node ids map to dense indices via np.unique
-    (sorted, so index order == id order and the index minimum IS the
-    id minimum). Returns (nodes, labels): int64 arrays, nodes ascending."""
+    labeling the per-edge union-by-min loop produced and the star
+    rounds of :func:`_star_components` converge to — but each pass is
+    O(E) numpy kernel work instead of 2·E Python-level find() calls
+    (measured ~10× on the 1M-edge cap-sized graphs the bootstrap
+    closure pulls to the driver). Node ids map to dense indices via
+    np.unique (sorted, so index order == id order and the index minimum
+    IS the id minimum). Returns (nodes, labels): int64 arrays, nodes
+    ascending."""
     import numpy as np
 
     s = np.asarray(srcs, dtype=np.int64)
@@ -252,144 +271,42 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     dominate small-graph cost (measured ~6 s of fixed overhead for a
     sub-second graph at sf0.1); the labels return as an Arrow-built
     frame in the input id dtype. An over-cap pull moves cap+1 edges
-    for nothing (~64 MB at the default cap). Above the cap the edges
-    are first contracted by up to two large-star rounds
-    (:func:`_large_star`), each probed with ``limit(cap+1).count()``,
-    and the driver solves them if that brings them under the cap;
-    otherwise — and always for non-integral ids —
-    the distributed path runs. The cap bounds driver memory explicitly
-    (4M edges ≈ 64 MB of Arrow longs — the same bound class as the
-    session's broadcast threshold; the same bounded-driver-state class
-    as IVF centroids and the global-order bucket offsets), and the
-    DISTRIBUTED path remains the scale story: at 100 TB the pair graph
-    exceeds any cap and min-label propagation / star-contraction do the
-    work.
+    for nothing (~64 MB at the default cap). The cap bounds driver
+    memory explicitly (4M edges ≈ 64 MB of Arrow longs — the same
+    bound class as the session's broadcast threshold; the same
+    bounded-driver-state class as IVF centroids and the global-order
+    bucket offsets).
 
-    Distributed path: min-label propagation needs one round per hop of
-    graph diameter. Dup clusters in a pretraining corpus are dense
-    blobs (near-cliques around a template) that converge in single
-    digits, so propagation is the cheap common path; if labels are
-    still changing after ``_PROPAGATION_ROUNDS`` rounds (an adversarial
-    path-shaped graph), the computation switches to the
-    diameter-independent large-star/small-star algorithm
-    (:func:`_star_components`) instead of failing — same per-round
-    shuffle shape, O(log²n) rounds regardless of diameter."""
-    sc = pairs.sparkSession.sparkContext
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-
+    Above the cap, and always for non-integral ids (string or other
+    orderable types, which ``_driver_union_find``'s int64 arrays cannot
+    hold), the closure is :func:`_star_components`: large-star/
+    small-star rounds, O(log²n) of them whatever the graph diameter,
+    with the driver finishing integral ids once a round's edge count
+    fits the cap. At 100 TB the pair graph exceeds any cap and the star
+    rounds are the scale story."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    # persisted: an over-cap pull executes (part of) the upstream pair
+    # plan — typically an expensive dedup join — and the star rounds
+    # read the edges twice (node set and first round); without the
+    # cache each read would pay that plan again
+    e = pairs.select(F.col(id_a).alias("src"),
+                     F.col(id_b).alias("dst")).persist()
     id_type = e.schema[0].dataType
-    cap = _DRIVER_EDGE_CAP
-    # the driver fast path is gated on an integral id dtype:
-    # _driver_union_find's int64 arrays assume integral ids, and string/other
-    # orderable id types must keep working through the distributed path
-    # (they did before the fast path existed) rather than raising
-    star_rdds: set[int] = set()
-    if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        # persist around the pull: limit(cap+1) executes (part of) the
-        # upstream pair plan — typically an expensive dedup join — and
-        # without the cache an over-cap graph would pay that plan twice
-        # (once for the pull, once for the contraction). The cache is
-        # released once the first contraction round is checkpointed.
-        e = e.persist()
+    integral = isinstance(id_type, (ByteType, ShortType, IntegerType, LongType))
+    if integral:
         # the pull is the size probe: under the cap it is the driver's
         # input, so an under-cap closure is one job; a separate count
         # probe would add a job and its AQE stages
-        pulled = e.limit(cap + 1).toArrow()
-        if pulled.num_rows <= cap:
+        pulled = e.limit(_DRIVER_EDGE_CAP + 1).toArrow()
+        if pulled.num_rows <= _DRIVER_EDGE_CAP:
             out = _driver_components(e.sparkSession, pulled, id_type)
             e.unpersist()
             return out
         del pulled
-        # Over the cap: contract with large-star rounds before giving up
-        # on the driver path. One round is two shuffles of the edge list
-        # and collapses a dense near-clique blob — the dup corpus shape
-        # that produces over-cap edge counts in the first place — into a
-        # star, so the contracted graph is usually node-count-sized and
-        # finishes exactly on the driver. A large-star round preserves
-        # the component partition but drops self-loops, so a node whose
-        # only edge is a self-loop is carried over as that self-loop.
-        # Rounds that fail to get under the cap fall through to
-        # propagation on the CONTRACTED edges — never worse than the
-        # original graph.
-        for round_ in range(2):
-            contracted = (_large_star(e)
-                          .unionByName(e.filter(F.col("src") == F.col("dst"))
-                                       .distinct())
-                          .localCheckpoint(eager=True))
-            new_rdds = _checkpointed_rdd_ids(contracted)
-            if round_ == 0:
-                e.unpersist()
-            _release_rdds(sc, star_rdds)
-            e, star_rdds = contracted, new_rdds
-            if e.limit(cap + 1).count() <= cap:
-                out = _driver_components(e.sparkSession, e.toArrow(), id_type)
-                _release_rdds(sc, star_rdds)
-                return out
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-
-    # localCheckpoint (eager), NOT persist: iterative self-joins double
-    # the logical plan every round, and caching short-circuits execution
-    # but not Catalyst analysis — without lineage truncation each round's
-    # planning time grows exponentially (measured: 4 rounds went
-    # 4s/6s/23s/46s with persist, constant ~2s with checkpoint). On a
-    # real cluster a reliable checkpoint dir gives the same truncation
-    # with executor-loss tolerance.
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    # the eager checkpoint above materialized `edges` into its own cache,
-    # so the last contraction checkpoint (when the large-star rounds ran
-    # but stayed over the cap) is dead from here
-    _release_rdds(sc, star_rdds)
-    label_rdds = _checkpointed_rdd_ids(labels)
-
-    rounds = _PROPAGATION_ROUNDS
-    for _ in range(rounds):
-        nbr_min = (edges.join(labels.withColumnRenamed("id", "src"), "src")
-                   .groupBy("dst").agg(F.min("label").alias("nbr_label"))
-                   .withColumnRenamed("dst", "id"))
-        # the changed flag rides along in the same projection, so the
-        # convergence check is a filter-count over the checkpointed
-        # frame — no extra join against the previous state per round
-        new_labels = (labels.join(nbr_min, "id", "left")
-                      .select("id",
-                              F.least(F.col("label"),
-                                      F.coalesce("nbr_label", "label"))
-                               .alias("new_label"),
-                              (F.coalesce("nbr_label", "label") < F.col("label"))
-                               .alias("changed"))
-                      .withColumnRenamed("new_label", "label")
-                      .localCheckpoint(eager=True))
-        new_rdds = _checkpointed_rdd_ids(new_labels)
-        changed = new_labels.filter("changed").count()
-        # the eager checkpoint above fully materialized new_labels, so
-        # the previous round's frame is dead — release its storage now,
-        # keeping live label state at <= 2 frames for any round count
-        _release_rdds(sc, label_rdds)
-        label_rdds = new_rdds
-        labels = new_labels.drop("changed")
-        if changed == 0:
-            break
-    else:
-        # diameter > rounds: propagation would need one round per hop,
-        # so hand the edge set to the O(log²n) star algorithm
-        # (restarting loses at most `rounds` cheap rounds of progress
-        # and keeps the fallback's correctness argument self-contained)
-        warnings.warn(
-            f"connected_components: {changed} labels still changing "
-            f"after {rounds} propagation rounds (graph diameter > "
-            f"{rounds}) — switching to large-star/small-star",
-            RuntimeWarning)
-        _release_rdds(sc, label_rdds)
-        out = _star_components(edges)
-        edges.unpersist()
-        return out
-
-    edges.unpersist()
-    return labels.select(F.col("id"), F.col("label").alias("component"))
+    out = _star_components(e, driver_finish=integral)
+    e.unpersist()
+    return out
 
 
 def components_from_rep_pairs(rep_pairs: DataFrame,

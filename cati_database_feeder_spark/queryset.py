@@ -3818,9 +3818,10 @@ SELECT id, min(lab) AS component FROM reach GROUP BY id
 def dedup_cluster_components(spark, sf_dir):
     """E6/E7 keep-one dedup, final step: transitive closure of the
     verified near-dup pairs (token Jaccard >= 0.6, same AllPairs join
-    as dedup_token_jaccard_pairs) into connected components via
-    min-label propagation — (doc, component) where component is the
-    canonical survivor id. The oracle walks the same graph with a
+    as dedup_token_jaccard_pairs) into connected components (driver
+    union-find under the edge cap, large-star/small-star rounds above
+    it) — (doc, component) where component is the canonical survivor
+    id. The oracle walks the same graph with a
     recursive CTE (operators/graph.py:connected_components). The
     labeling is a session STAGE: three registered consumers read it
     (this query, keep-best, the impact report) — the materialized
@@ -3865,7 +3866,7 @@ def dedup_cluster_incremental(spark, sf_dir):
     the delta-touching pairs of a 1-in-50 ingest batch WITHOUT
     reprocessing the corpus graph (operators/graph.py:
     incremental_components — old components contract to super-nodes,
-    propagation runs on a graph bounded by the NEW edge count, labels
+    the closure runs on a graph bounded by the NEW edge count, labels
     expand back). The oracle is the full recursive-CTE closure over ALL
     pairs — the contraction argument says the incremental result must
     equal it exactly, and this row proves it does. Pairs come from the

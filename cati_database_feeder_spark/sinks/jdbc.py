@@ -41,8 +41,10 @@ def jdbc_read(spark: SparkSession, url: str, table: str, properties: dict | None
     if partition_column is not None:
         reader = (reader.option("partitionColumn", partition_column)
                   .option("numPartitions", str(num_partitions))
-                  .option("lowerBound", str(lower_bound or 0))
-                  .option("upperBound", str(upper_bound or 1_000_000)))
+                  .option("lowerBound",
+                          str(0 if lower_bound is None else lower_bound))
+                  .option("upperBound",
+                          str(1_000_000 if upper_bound is None else upper_bound)))
     return reader.load()
 
 

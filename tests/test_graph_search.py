@@ -9,6 +9,10 @@ from cati_database_feeder_spark.operators.graph import connected_components
 from cati_database_feeder_spark.operators.search import bm25_topk
 
 
+# K4 on {1..4} plus the pair {10, 11}: 7 edges
+_K4_AND_PAIR = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [(10, 11)]
+
+
 def test_connected_components_basic(spark):
     # two components: {1,2,3,4} via a chain, {10,11}; 20-20 self-pair-free
     pairs = spark.createDataFrame(
@@ -19,8 +23,8 @@ def test_connected_components_basic(spark):
 
 
 def test_connected_components_long_chain_converges(spark, monkeypatch):
-    # path graph 0-1-2-...-9: worst case for min-label propagation;
-    # must still converge within the default propagation rounds
+    # path graph 0-1-2-...-9: the longest diameter for its size, which
+    # the star rounds must still close to one component
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["id_a", "id_b"])
     # cap 0: this test pins the DISTRIBUTED path (the default cap would
@@ -44,8 +48,7 @@ def test_connected_components_large_star_contraction_path(spark, monkeypatch):
     # cap: K4 on {1..4} (6 edges) + {10,11} = 7 edges, cap 4. Round 1
     # emits {(2,1),(3,1),(4,1),(11,10)} = 4 edges → driver union-find
     # finishes; labels must equal the plain closure.
-    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    pairs = spark.createDataFrame(k4 + [(10, 11)], ["id_a", "id_b"])
+    pairs = spark.createDataFrame(_K4_AND_PAIR, ["id_a", "id_b"])
     monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 4)
     got = {r["id"]: r["component"]
            for r in connected_components(pairs).collect()}
@@ -55,8 +58,8 @@ def test_connected_components_large_star_contraction_path(spark, monkeypatch):
 def test_connected_components_contraction_preserves_chains(spark, monkeypatch):
     # a path graph is the adversarial shape for contraction (nothing
     # collapses to a star in one hop) — the rounds must stay
-    # component-exact whether they end under the cap or fall through
-    # to propagation
+    # component-exact whether the driver finishes them under the cap
+    # or they run to convergence
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], ["id_a", "id_b"])
     for cap in (3, 4, 5):
@@ -66,13 +69,24 @@ def test_connected_components_contraction_preserves_chains(spark, monkeypatch):
         assert got == {i: 0 for i in range(7)}, f"cap={cap}: {got}"
 
 
-@pytest.mark.parametrize("id_type", ["int", "bigint"])
-def test_connected_components_driver_labels_are_jvm_frame(spark, id_type):
+_UNDER_CAP = [(1, 2), (2, 3), (10, 11), (7, 3), (20, 21), (21, 22), (5, 30)]
+
+
+@pytest.mark.parametrize("id_type,edges,cap", [
+    ("int", _UNDER_CAP, graph._DRIVER_EDGE_CAP),
+    ("bigint", _UNDER_CAP, graph._DRIVER_EDGE_CAP),
+    # over the cap: one star round brings the 7 edges down to 4 and the
+    # driver finishes mid-star
+    ("int", _K4_AND_PAIR, 4),
+    ("bigint", _K4_AND_PAIR, 4)],
+    ids=["int", "bigint", "mid_star-int", "mid_star-bigint"])
+def test_connected_components_driver_labels_are_jvm_frame(
+        spark, monkeypatch, id_type, edges, cap):
     # the driver path's labels keep the input id dtype, equal the
     # union-find, and scanning them runs no Python worker
     from cati_database_feeder_spark.operators.graph import _driver_union_find
-    edges = [(1, 2), (2, 3), (10, 11), (7, 3), (20, 21), (21, 22), (5, 30)]
     pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", cap)
     out = connected_components(pairs)
     assert out.schema.simpleString() == (
         f"struct<id:{id_type},component:{id_type}>")
@@ -190,28 +204,23 @@ def test_chunk_documents_windows(spark):
     assert len(by_doc[3]) == 1 and by_doc[3][0]["chunk_text"] == ""
 
 
-def test_connected_components_star_fallback_on_long_path(spark, monkeypatch):
-    """Diameter > the propagation rounds no longer hard-stops:
-    propagation hands the edges to large-star/small-star (Kiveris et
-    al. SoCC'14), which converges in O(log²n) rounds on the adversarial
-    path graph — here a 121-hop chain under 3 propagation rounds."""
-    import pytest
+def test_connected_components_star_rounds_close_long_path(spark, monkeypatch):
+    """Above the cap the closure is large-star/small-star (Kiveris et
+    al. SoCC'14), which converges in O(log²n) rounds whatever the
+    diameter: here a 121-node chain with the driver finish off."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], ["id_a", "id_b"])
-    monkeypatch.setattr(graph, "_PROPAGATION_ROUNDS", 3)
     monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
-    with pytest.warns(RuntimeWarning, match="large-star"):
-        got = connected_components(pairs).collect()
+    got = connected_components(pairs).collect()
     assert len(got) == 121
     assert all(r["component"] == 0 for r in got)
 
 
-def test_connected_components_star_fallback_matches_propagation(
-        spark, monkeypatch):
-    """The fallback must agree with propagation exactly on a mixed
-    graph: several components, listed high-to-low, plus a self-loop
-    singleton."""
-    import pytest
+def test_connected_components_star_rounds_match_driver(spark, monkeypatch):
+    """Star rounds run to convergence (cap 0) or finished on the driver
+    after a round (caps 3, 6, 10) must agree with the under-cap driver
+    labels exactly on a mixed graph: several components, listed
+    high-to-low, plus a self-loop singleton."""
     import random
     rng = random.Random(6)
     edges = [(i, i + 1) for i in range(0, 8)]              # chain 0..8
@@ -221,16 +230,16 @@ def test_connected_components_star_fallback_matches_propagation(
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     want = {(r["id"], r["component"])
             for r in connected_components(pairs).collect()}
-    monkeypatch.setattr(graph, "_PROPAGATION_ROUNDS", 1)
-    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 0)
-    with pytest.warns(RuntimeWarning, match="large-star"):
+    assert (99, 99) in want
+    for cap in (0, 3, 6, 10):
+        monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", cap)
         got = {(r["id"], r["component"])
                for r in connected_components(pairs).collect()}
-    assert got == want and (99, 99) in got
+        assert got == want, f"cap={cap}"
 
 
 def test_connected_components_string_ids_distributed(spark):
-    # string ids never take the driver path: propagation over a mixed
+    # string ids never take the driver path: star rounds over a mixed
     # graph (chain, clique, self-loop singleton, pair) must equal a
     # Python union-find with the lexicographic minimum as the label
     edges = [("n3", "n1"), ("n1", "n2"), ("n2", "n0"),

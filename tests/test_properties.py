@@ -80,8 +80,8 @@ def _union_find_components(edges):
 def test_connected_components_equals_union_find(spark, edges):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     want = _union_find_components(edges)
-    # DISTRIBUTED path pinned by a zero cap (the default cap would
-    # route these small graphs to the driver fast path) ...
+    # DISTRIBUTED star rounds, run to convergence by a zero cap (the
+    # default cap would route these small graphs to the driver) ...
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(graph, "_DRIVER_EDGE_CAP", 0)
         got = {r["id"]: r["component"]

@@ -81,6 +81,15 @@ def test_jdbc_append_read_roundtrip_embedded_derby(spark):
     assert part.rdd.getNumPartitions() == 4
     assert part.count() == 200
 
+    # an upper bound of 0 is a bound, not "unset": a range over negative
+    # ids spreads over the partitions instead of landing in one
+    jdbc.jdbc_append(spark.range(-100, 0), url, "negtable", properties=props)
+    neg = jdbc.jdbc_read(spark, url, "negtable", properties=props,
+                         partition_column="id", num_partitions=4,
+                         lower_bound=-100, upper_bound=0)
+    sizes = [len(p) for p in neg.rdd.glom().collect()]
+    assert sum(sizes) == 100 and sum(1 for n in sizes if n) > 1, sizes
+
     # predicate pushdown reaches the remote SQL (op #7's whole point)
     filtered = back.filter("grp = 3")
     plan = filtered._jdf.queryExecution().executedPlan().toString()
