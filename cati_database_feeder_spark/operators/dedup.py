@@ -456,18 +456,9 @@ def sorted_neighborhood_pairs(documents: DataFrame, window: int = 4,
                               for d in range(1, window)])).alias("pos")))
     cand = (lead.join(ranked.select(F.col("id").alias("id_b"), "pos"),
                       "pos")
-            .select("id_a", "id_b"))
-    a = staged.select(F.col("id").alias("id_a"),
-                      F.col("toks").alias("__ta"))
-    b = staged.select(F.col("id").alias("id_b"),
-                      F.col("toks").alias("__tb"))
-    return (cand.join(a, "id_a").join(b, "id_b")
-            .withColumn("jaccard", F.round(
-                token_jaccard(F.col("__ta"), F.col("__tb")), 6))
-            .filter(F.col("jaccard") >= threshold)
             .select(F.least("id_a", "id_b").alias("id_a"),
-                    F.greatest("id_a", "id_b").alias("id_b"),
-                    "jaccard"))
+                    F.greatest("id_a", "id_b").alias("id_b")))
+    return _verified_rep_pairs(cand, staged, threshold)
 
 
 def tfidf_features(documents: DataFrame, max_df: int | None = None,
@@ -984,40 +975,14 @@ def simhash_near_dup_pairs(documents: DataFrame, id_col: str = "doc_id",
     MUST agree on at least one chunk. Candidates are equality on
     (chunk_idx, chunk_value) — an equi-join, no crossJoin — then exact
     Hamming verification. Same shape Google used for web-scale simhash
-    dedup (Manku, Jain & Sarma, WWW 2007)."""
-    if chunks <= max_hamming:
-        raise ValueError("need chunks > max_hamming for exact recall")
-    width = bits // chunks
+    dedup (Manku, Jain & Sarma, WWW 2007). The banding and verification
+    are :func:`hamming_near_dup_pairs` over the signature column, so
+    ``bits`` must be a multiple of ``chunks``."""
     hashed = documents.select(
         F.col(id_col).alias("id"),
         F.transform(T.tokens(F.col(text_col)), T.hash64).alias("th"))
     sig = hashed.select("id", simhash_from_hashes(F.col("th"), bits).alias("sig"))
-
-    # collapse identical signatures to one representative (exact-dup
-    # clusters would otherwise fill every chunk bucket with m ids —
-    # O(m²) candidates; see jaccard_similarity_join for the argument)
-    wg = Window.partitionBy("sig")
-    memb = sig.withColumn("gid", F.min("id").over(wg))
-    reps = (memb.filter(F.col("id") == F.col("gid"))
-            .select(F.col("gid").alias("id"), "sig"))
-
-    chunked = (reps.select("id", F.explode(F.array(*[
-        F.struct(F.lit(c).alias("chunk"),
-                 F.shiftright(F.col("sig"), c * width)
-                  .bitwiseAND(F.lit((1 << width) - 1)).alias("val"))
-        for c in range(chunks)])).alias("cb"))
-        .select("id", "cb.chunk", "cb.val"))
-    cands = _bucket_pairs(chunked, ["chunk", "val"], "id")
-    s_a = reps.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    s_b = reps.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    rep_pairs = (cands.join(s_a, "id_a").join(s_b, "id_b")
-                 .withColumn("hamming",
-                             simhash_hamming(F.col("sig_a"), F.col("sig_b"), bits).cast("bigint"))
-                 .filter(F.col("hamming") <= max_hamming)
-                 .select("id_a", "id_b", "hamming"))
-
-    return expand_group_pairs(rep_pairs, memb.select("gid", "id"),
-                              {"hamming": F.lit(0).cast("bigint")})
+    return hamming_near_dup_pairs(sig, "id", "sig", bits, max_hamming, chunks)
 
 
 def simhash_hamming(a: Column, b: Column, bits: int = 16) -> Column:
@@ -1095,8 +1060,8 @@ def hamming_near_dup_pairs(hashes: DataFrame, id_col: str = "media_id",
                            max_hamming: int = 3,
                            chunks: int = 4) -> DataFrame:
     """Near-dup pairs over any precomputed integer fingerprint column
-    (extension E72 — the perceptual-hash consumer; the text twin
-    computes its signature inline in simhash_near_dup_pairs): pairs
+    (extension E72 — the perceptual-hash consumer; simhash_near_dup_pairs
+    runs it over its text signatures): pairs
     within Hamming distance ``max_hamming``, found COMPLETELY by
     pigeonhole banding — with ``chunks > max_hamming`` two hashes
     within the bound must agree on at least one chunk, so the banded

@@ -877,13 +877,14 @@ def ingest_batch(spark, batch: DataFrame, state_dir: str,
     appends one row to ``metrics/`` — (batch_id, rows_in, delta_rows,
     new_pairs, quiet, bootstrap) — the per-batch ledger a production
     pipeline alerts on (dedup rate collapsing, pair volume spiking).
-    All counts come from frames the batch already persisted, so the
-    cost is driver-side. Metrics are operational at-least-once data:
-    a crash inside the commit sequence can replay a batch whose
-    stores partially landed, appending a second row with the same
-    batch_id — dashboards aggregate with last-write-wins on batch_id,
-    and the STORE commits themselves stay exactly-once via their
-    anti-join guards."""
+    The delta and pair counts are the actions that materialize the
+    frames the commit persists anyway (:func:`_commit_batch`), so the
+    ledger runs no extra pipeline. Metrics are operational
+    at-least-once data: a crash inside the commit sequence can replay
+    a batch whose stores partially landed, appending a second row with
+    the same batch_id — dashboards aggregate with last-write-wins on
+    batch_id, and the STORE commits themselves stay exactly-once via
+    their anti-join guards."""
     with _state_lock(state_dir, "ingest_batch"):
         _ingest_batch_locked(spark, batch, state_dir, id_col, text_col,
                              threshold, num_hashes, bands, batch_id)
@@ -899,6 +900,61 @@ def _append_metrics(spark, state_dir: str, batch_id, rows_in: int,
              "new_pairs long, quiet boolean, bootstrap boolean")
      .coalesce(1).write.mode("append")
      .parquet(live_store(os.path.join(state_dir, "metrics"))))
+
+
+def _commit_batch(spark, state_dir: str, batch_id, batch: DataFrame,
+                  delta: DataFrame, pairs: DataFrame, marker,
+                  appends=lambda quiet: None, cached=()) -> None:
+    """Commit one incremental batch of the text or the embedding
+    ingest: ``delta`` holds the batch's exact-dedup survivors, ``pairs``
+    their verified (id_a, id_b) near-dup pairs, ``appends(quiet)`` the
+    caller's store appends and ``marker()`` its commit-marker append.
+    ``delta``, ``cached`` and ``pairs`` are persisted in that order (so
+    each plan reads the ones before it from cache) and unpersisted at
+    the end. The order of the steps is load-bearing:
+
+    1. Counts before any write. A write to a path recaches every plan
+       that reads it (Spark's recacheByPath; ``persist()`` does not
+       protect, the cached frame is refreshed with the new file list),
+       so a ``delta`` count after the marker append would see the
+       batch's own rows in the store and report 0. Each frame is
+       counted once: an empty delta is a pure replay and returns
+       before any write; an empty pair set is a quiet batch, whose
+       closure is unchanged by construction (``incremental_components``
+       returns labels ∪ the new edges' endpoints), so it is not run.
+    2. Labels swap first: it reads the old labels and must complete
+       before any store changes.
+    3. The caller's appends, in dependency order: a store is appended
+       only after every frame that reads it has been written. Each is
+       guarded by an anti-join on its key, so a redelivered batch
+       appends nothing twice.
+    4. Metrics before the marker: a crash in between replays the batch
+       and appends a second row with the same batch_id (at-least-once,
+       which last-write-wins dashboards absorb); after the marker, the
+       replay would take the pure-replay return and lose the row. No
+       in-batch frame reads metrics/.
+    5. The marker last: a crash before it replays the whole batch,
+       after it the replay dedups to empty."""
+    frames = [f.persist() for f in (delta, *cached, pairs)]
+    try:
+        n_delta = delta.count()
+        if n_delta == 0:
+            return
+        n_pairs = pairs.count()
+        rows_in = batch.count()
+        quiet = n_pairs == 0
+        if not quiet:
+            labels_dir = os.path.join(state_dir, "labels")
+            _swap_write(incremental_components(
+                _read_store(spark, live_store(labels_dir)),
+                pairs.select("id_a", "id_b")), labels_dir)
+        appends(quiet)
+        _append_metrics(spark, state_dir, batch_id, rows_in, n_delta,
+                        n_pairs, quiet, False)
+        marker()
+    finally:
+        for f in frames:
+            f.unpersist()
 
 
 def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
@@ -1027,9 +1083,9 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
         # set (components_from_rep_pairs docstring) at a fraction of
         # the edges: the expanded set is quadratic in dup-cluster size
         # (4.17M edges at sf0.1, forcing the distributed loop), the
-        # rep-level one ~2.6× smaller, and connected_components' own
-        # large-star pre-contraction then collapses the dense blobs
-        # under the driver union-find cap
+        # rep-level one ~2.6× smaller, and connected_components' star
+        # rounds then contract the dense blobs until the driver
+        # union-find finishes under its cap
         labels = components_from_rep_pairs(rep_pairs, mem)
         _swap_write(labels, labels_dir)
         for fut in store_futs:
@@ -1073,87 +1129,36 @@ def _ingest_batch_locked(spark, batch: DataFrame, state_dir: str,
 
     fr = _incremental_frames(spark, state_dir, batch, threshold,
                              num_hashes, bands)
-    # persist the per-batch frames every downstream branch consumes;
-    # caching keys on the logical plan, so frames built from them
-    # inside _incremental_frames hit the cache too
-    delta, dmemb = fr["delta"].persist(), fr["dmemb"]
-    new_pairs = fr["new_pairs"]
-    try:
-        if delta.limit(1).count() == 0:
-            return  # pure replay — nothing survives exact dedup
-        dmemb.persist()
-        new_pairs.persist()
-        # quiet batch: no near-dup pair touches the delta, so the
-        # closure is unchanged BY CONSTRUCTION (incremental_components
-        # returns labels ∪ singletons(new-edge endpoints); with no new
-        # edges that is exactly the old labels) — skip the iterative
-        # relabel and the labels swap, whose per-round constants
-        # dominate full ingest_batch cost (tools/ingest_bench.py).
-        # The store/corpus commits below still run: the batch's docs,
-        # membership and band rows must land regardless.
-        quiet = new_pairs.limit(1).count() == 0
-        # metrics counts BEFORE any store write: the appends below
-        # recache every plan reading the written paths (the same
-        # recacheByPath hazard as the commit order itself) — a
-        # delta.count() after the corpus append would see the batch's
-        # own docs in the corpus and report 0
-        m_rows_in = batch.count()
-        m_delta = delta.count()
-        m_pairs = 0 if quiet else new_pairs.count()
-        # commit order: labels swap first (reads old labels — must
-        # complete before anything changes), then the append-only
-        # stores (each guarded for redelivery), corpus last (marker).
-        # WITHIN the appends, dependency order is LOAD-BEARING: a write
-        # to a path recaches/invalidates every plan reading that path
-        # (Spark's recacheByPath — persist() does NOT protect: the
-        # cached frame is refreshed with the new file list), so a store
-        # must be appended only AFTER every frame that reads it has
-        # been written. buckets/members read reps (via dmemb's key
-        # probe) → reps goes after them; everything reads corpus ids →
-        # corpus goes last (which the commit-marker role requires
-        # anyway). Appending reps first silently emptied new_reps —
-        # the delta's keys suddenly matched the store and every novel
-        # group lost its band rows (caught by the multi-batch e2e).
-        if not quiet:
-            _swap_write(fr["new_labels"], labels_dir)
-        # pairs append BEFORE the buckets/members/reps appends: its
-        # source frame (new_pairs) READS those stores, and a store
-        # write recaches every plan on the written path — appending
-        # them first would rebuild new_pairs over the already-appended
-        # state. Nothing else reads pairs/, so this slot is safe.
+
+    def appends(quiet: bool) -> None:
+        # dependency order (_commit_batch, step 3): pairs first, because
+        # its source frame new_pairs reads buckets, members and reps and
+        # nothing reads pairs/; reps after buckets and members, which
+        # read it through dmemb's key probe (reps appended first emptied
+        # new_reps, and every novel group lost its band rows)
         if not quiet:
             fr["pairs_append"].write.mode("append").parquet(live_store(pairs_dir))
         fr["buckets_append"].write.mode("append").parquet(live_store(buckets_dir))
         _append_id_store(fr["members_append"], members_dir, "id")
         fr["reps_append"].write.mode("append").parquet(live_store(reps_dir))
-        # metrics BEFORE the corpus commit marker (same argument as the
-        # bootstrap branch): a crash in between replays the batch and
-        # appends a duplicate batch_id row — at-least-once — where the
-        # old after-marker order lost the row forever (the replay takes
-        # the pure-replay early return before any metrics write). The
-        # metrics dir is read by no in-batch frame, so the append is
-        # recacheByPath-safe at this position.
-        _append_metrics(spark, state_dir, batch_id, m_rows_in, m_delta,
-                        m_pairs, quiet, False)
-        delta.write.mode("append").parquet(live_store(corpus_dir))
-    finally:
-        new_pairs.unpersist()
-        dmemb.unpersist()
-        delta.unpersist()
+
+    _commit_batch(
+        spark, state_dir, batch_id, batch, fr["delta"], fr["new_pairs"],
+        lambda: fr["delta"].write.mode("append").parquet(live_store(corpus_dir)),
+        appends, cached=(fr["dmemb"],))
 
 
 def _incremental_frames(spark, state_dir: str, batch: DataFrame,
                         threshold: float, num_hashes: int,
                         bands: int) -> dict:
-    """Build (without writing) every frame of the incremental path:
-    ``delta`` (exact-dedup survivors), ``dmemb`` (delta membership),
-    ``new_pairs``, ``new_labels``, and the three guarded store appends.
+    """Build (without writing or running) every frame of the
+    incremental path: ``delta`` (exact-dedup survivors), ``dmemb``
+    (delta membership), ``new_pairs`` and the four guarded store
+    appends; :func:`_commit_batch` runs them and updates the labels.
     Split out of :func:`ingest_batch` so the no-corpus-text contract is
     assertable on the PLANS themselves: tests walk every returned
     frame's executed plan and require that any scan of ``corpus/``
-    reads the doc_id column alone (tests/test_incremental_e2e.py).
-    The batch tokenize inside ``delta_membership`` and the store
-    probes are the only non-driver work here."""
+    reads the doc_id column alone (tests/test_incremental_e2e.py)."""
     def read(name):
         return _read_store(spark, live_store(os.path.join(state_dir, name)))
 
@@ -1161,7 +1166,6 @@ def _incremental_frames(spark, state_dir: str, batch: DataFrame,
     members = read("members").drop("bucket")
     reps = read("reps")
     buckets = read("buckets")
-    labels = read("labels")
     pairs_store = read("pairs")
     delta = batch.join(corpus_ids, "doc_id", "left_anti")
     deleted_dir = os.path.join(state_dir, "deleted")
@@ -1176,13 +1180,10 @@ def _incremental_frames(spark, state_dir: str, batch: DataFrame,
     new_pairs, dmemb, new_reps = dedup.incremental_near_dup_pairs_from_store(
         delta, members, reps, buckets, threshold=threshold,
         num_hashes=num_hashes, bands=bands, dmemb=dmemb)
-    new_labels = incremental_components(
-        labels, new_pairs.select("id_a", "id_b"))
     return {
         "delta": delta,
         "dmemb": dmemb,
         "new_pairs": new_pairs,
-        "new_labels": new_labels,
         "pairs_append": (new_pairs.select("id_a", "id_b")
                          .join(pairs_store, ["id_a", "id_b"],
                                "left_anti")),

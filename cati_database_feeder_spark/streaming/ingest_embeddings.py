@@ -63,8 +63,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cati_database_feeder_spark.operators.graph import (
-    connected_components, incremental_components)
+from cati_database_feeder_spark.operators.graph import connected_components
 from cati_database_feeder_spark.functions import vectors as V
 from cati_database_feeder_spark.session import local_frame
 from cati_database_feeder_spark.operators.similarity import (
@@ -72,8 +71,8 @@ from cati_database_feeder_spark.operators.similarity import (
 from cati_database_feeder_spark.streaming.ingest import (
     _DELETE_PENDING, StateLockError, _append_metrics, _boot_lap,
     _check_bootstrap_kind, _check_layout, _check_no_pending_delete,
-    _pin_dedup, _recover_swaps, _state_lock, _swap_write, _write_layout,
-    live_store, store_exists)
+    _commit_batch, _pin_dedup, _recover_swaps, _state_lock, _swap_write,
+    _write_layout, live_store, store_exists)
 
 _EMB_STORES = ("labels", "vectors", "centroids", "metrics", "deleted",
                "quant", "planes", "pqbooks")
@@ -123,8 +122,8 @@ def ingest_embeddings_batch(spark, batch: DataFrame, state_dir: str,
     and ignored afterwards (the stored quantizer wins — assignments
     must stay stable for the append-only vector store to stay
     correct). Idempotent under at-least-once redelivery: the exact
-    dedup anti-join empties a replayed batch, and the labels swap is
-    a fixed point for an empty pair delta. Holds the state dir's
+    dedup anti-join empties a replayed batch, and a batch with no new
+    pair leaves the labels untouched. Holds the state dir's
     fencing lock for the duration. Appends the same per-batch metrics
     ledger as the text path (streaming/ingest.py:ingest_batch)."""
     with _state_lock(state_dir, "ingest_embeddings_batch"):
@@ -330,40 +329,14 @@ def _ingest_embeddings_locked(spark, batch, state_dir, centroid_rows,
         # alone would re-admit it once its row is gone
         delta = delta.join(spark.read.parquet(live_store(deleted_dir))
                            .select("vec_id"), "vec_id", "left_anti")
-    delta = delta.persist()
-    try:
-        if delta.limit(1).count() == 0:
-            return  # pure replay
-        pairs = incremental_semdedup_pairs(
-            delta, store, cents, threshold=threshold, by=by).persist()
-        try:
-            quiet = pairs.limit(1).count() == 0
-            # counts BEFORE the vectors append (recacheByPath — see
-            # the text path's comment)
-            m_rows_in = batch.count()
-            m_delta = delta.count()
-            m_pairs = 0 if quiet else pairs.count()
-            if not quiet:
-                labels = spark.read.parquet(live_store(lab_dir))
-                _swap_write(incremental_components(
-                    labels, pairs.select("id_a", "id_b")), lab_dir)
-            # metrics BEFORE the vectors commit marker: a crash in
-            # between replays the batch and appends a duplicate
-            # batch_id row (at-least-once) instead of losing the row
-            # forever to the pure-replay early return
-            _append_metrics(spark, state_dir, batch_id, m_rows_in,
-                            m_delta, m_pairs, quiet, False)
-            # vectors append LAST — the commit marker: a crash before
-            # this line replays the whole batch (delta still absent
-            # from the store), after it the replay dedups to empty
-            (_with_pq(_with_proj(_with_codes(
-                assign_cells(delta, cents, "embedding", by), lo, hi),
-                planes), books)
-             .write.partitionBy("cell").mode("append").parquet(live_store(vec_dir)))
-        finally:
-            pairs.unpersist()
-    finally:
-        delta.unpersist()
+    _commit_batch(
+        spark, state_dir, batch_id, batch, delta,
+        incremental_semdedup_pairs(delta, store, cents,
+                                   threshold=threshold, by=by),
+        lambda: (_with_pq(_with_proj(_with_codes(
+            assign_cells(delta, cents, "embedding", by), lo, hi),
+            planes), books)
+            .write.partitionBy("cell").mode("append").parquet(live_store(vec_dir))))
 
 
 def compact_embeddings_state(spark, state_dir: str,

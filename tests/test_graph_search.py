@@ -43,18 +43,6 @@ def test_connected_components_deterministic_min_canonical(spark):
     assert got == {5: 5, 7: 5, 9: 5}
 
 
-def test_connected_components_large_star_contraction_path(spark, monkeypatch):
-    # over-cap graph whose ONE large-star round collapses it under the
-    # cap: K4 on {1..4} (6 edges) + {10,11} = 7 edges, cap 4. Round 1
-    # emits {(2,1),(3,1),(4,1),(11,10)} = 4 edges → driver union-find
-    # finishes; labels must equal the plain closure.
-    pairs = spark.createDataFrame(_K4_AND_PAIR, ["id_a", "id_b"])
-    monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", 4)
-    got = {r["id"]: r["component"]
-           for r in connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-
 def test_connected_components_contraction_preserves_chains(spark, monkeypatch):
     # a path graph is the adversarial shape for contraction (nothing
     # collapses to a star in one hop) — the rounds must stay
@@ -75,16 +63,26 @@ _UNDER_CAP = [(1, 2), (2, 3), (10, 11), (7, 3), (20, 21), (21, 22), (5, 30)]
 @pytest.mark.parametrize("id_type,edges,cap", [
     ("int", _UNDER_CAP, graph._DRIVER_EDGE_CAP),
     ("bigint", _UNDER_CAP, graph._DRIVER_EDGE_CAP),
-    # over the cap: one star round brings the 7 edges down to 4 and the
-    # driver finishes mid-star
+    # over the cap: one star round brings the 7 edges down to 4,
+    # {(2,1),(3,1),(4,1),(11,10)}, and the driver finishes mid-star
     ("int", _K4_AND_PAIR, 4),
     ("bigint", _K4_AND_PAIR, 4)],
     ids=["int", "bigint", "mid_star-int", "mid_star-bigint"])
 def test_connected_components_driver_labels_are_jvm_frame(
         spark, monkeypatch, id_type, edges, cap):
     # the driver path's labels keep the input id dtype, equal the
-    # union-find, and scanning them runs no Python worker
+    # union-find, and scanning them runs no Python worker. The lineage
+    # is read off the frame _driver_components returns: the star path
+    # checkpoints its output, which hides the finish's lineage
     from cati_database_feeder_spark.operators.graph import _driver_union_find
+    finishes = []
+
+    def recording(*a, **kw):
+        finishes.append(real(*a, **kw))
+        return finishes[-1]
+
+    real = graph._driver_components
+    monkeypatch.setattr(graph, "_driver_components", recording)
     pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
     monkeypatch.setattr(graph, "_DRIVER_EDGE_CAP", cap)
     out = connected_components(pairs)
@@ -93,7 +91,9 @@ def test_connected_components_driver_labels_are_jvm_frame(
     nodes, labels = _driver_union_find(*zip(*edges))
     assert {r["id"]: r["component"] for r in out.collect()} == dict(
         zip(nodes.tolist(), labels.tolist()))
-    assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
+    assert len(finishes) == 1
+    assert "PythonRDD" not in (
+        finishes[0]._jdf.queryExecution().toRdd().toDebugString())
 
 
 def test_connected_components_under_cap_runs_one_job(spark):

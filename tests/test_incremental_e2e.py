@@ -264,7 +264,7 @@ def test_incremental_path_reads_no_corpus_text(spark, tmp_path):
     BATCH input and the reps store (rep token arrays are derived store
     content, not corpus text)."""
     from cati_database_feeder_spark.streaming.ingest import (
-        _incremental_frames, ingest_batch, live_store)
+        _incremental_frames, _read_store, ingest_batch, live_store)
 
     rows = [(10, "alpha beta gamma delta"), (11, "alpha beta gamma x"),
             (40, "foo bar baz qux"), (41, "foo bar baz qux quux")]
@@ -274,6 +274,11 @@ def test_incremental_path_reads_no_corpus_text(spark, tmp_path):
 
     batch = df.filter(F.col("doc_id") >= 40)
     fr = _incremental_frames(spark, state, batch, 0.7, 16, 4)
+    # the labels update is built at commit time (_commit_batch), the
+    # same way: the stored labels plus the batch's new pairs
+    fr["new_labels"] = incremental_components(
+        _read_store(spark, live_store(os.path.join(state, "labels"))),
+        fr["new_pairs"].select("id_a", "id_b"))
     corpus_dir = live_store(os.path.join(state, "corpus"))
     corpus_scans = 0
     for name, frame in fr.items():
@@ -391,6 +396,54 @@ def test_ingest_metrics_ledger(spark, tmp_path):
     ingest_batch(spark, df, state, batch_id=2)
     assert spark.read.parquet(L(
         os.path.join(state, "metrics"))).count() == 2
+
+
+@pytest.mark.parametrize("kind", ["text", "embeddings"])
+def test_quiet_batch_runs_no_closure(spark, tmp_path, monkeypatch, kind):
+    """A batch whose docs have no near-dup partner is quiet: its pair
+    count is 0, so the commit neither runs the closure nor swaps
+    labels/, and the metrics row says so. The closure is patched to
+    raise, so any call to it fails the batch."""
+    from cati_database_feeder_spark.streaming import ingest as ing
+    from cati_database_feeder_spark.streaming.ingest_embeddings import (
+        ingest_embeddings_batch)
+
+    state = str(tmp_path / "state")
+    if kind == "text":
+        df = spark.createDataFrame(
+            [(10, "alpha beta gamma delta"),
+             (11, "alpha beta gamma delta epsilon"),   # J=0.8 vs 10
+             (40, "foo bar baz qux quux corge")], ["doc_id", "text"])
+
+        def ingest(frame, batch_id):
+            ing.ingest_batch(spark, frame, state, batch_id=batch_id)
+    else:
+        df = spark.createDataFrame(
+            [(10, [1.0, 0.0, 0.0]), (11, [0.99, 0.1, 0.0]),
+             (40, [0.0, 0.0, 1.0])], "doc_id long, embedding array<double>")
+        cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
+
+        def ingest(frame, batch_id):
+            ingest_embeddings_batch(
+                spark, frame, state, centroid_rows=cents, threshold=0.9,
+                id_col="doc_id", batch_id=batch_id)
+    ingest(df.filter(F.col("doc_id") < 40), 0)
+    ptr = os.path.join(state, "labels") + ing._PTR_SUFFIX
+    with open(ptr) as fh:
+        ptr_before = fh.read()
+
+    def no_closure(*a, **kw):
+        raise AssertionError("incremental_components ran on a quiet batch")
+
+    monkeypatch.setattr(ing, "incremental_components", no_closure)
+    ingest(df.filter(F.col("doc_id") == 40), 1)
+    with open(ptr) as fh:
+        assert fh.read() == ptr_before
+    m = {r["batch_id"]: r for r in
+         spark.read.parquet(L(os.path.join(state, "metrics"))).collect()}
+    assert m[0]["new_pairs"] == 1 and not m[0]["quiet"]
+    assert m[1]["quiet"] and m[1]["new_pairs"] == 0
+    assert m[1]["rows_in"] == 1 == m[1]["delta_rows"]
 
 
 def test_state_lock_refuses_compaction_during_live_ingest(spark, tmp_path):

@@ -132,8 +132,11 @@ def main() -> None:
             fr["new_pairs"].write.format("noop").mode("overwrite").save()
             pairs_store = time.time() - t0
 
-            # (2) the COMPLETE ingest_batch (pairs + closure + commits),
-            # for context — dominated by the iterative closure constants
+            # (2) the COMPLETE ingest_batch (pairs, closure unless the
+            # batch is quiet, store appends, metrics and the corpus
+            # marker), for context: most of its jobs are the near-dup
+            # pipeline over the store probes, run once by the pair
+            # count, and the store appends
             t0 = time.time()
             ingest_batch(spark, batch, state)
             full_batch = time.time() - t0
